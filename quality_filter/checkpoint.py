@@ -9,22 +9,33 @@ atomic; a task killed mid-write corrupts the resume point.
 
 Here the unit of work is a *bucket*: ``bucket = pmod(xxhash64(conv_id), B)``
 — conversations never straddle buckets, so per-conversation operators
-(trim windows, doc gates, reassembly) are complete within one.  A manifest
-table records finished buckets; a restart anti-joins the bucket list
-against the manifest (the P5 resume skip as a relational operation) and
-each bucket's output is written with dynamic partition overwrite, so
-re-running a partially-written bucket REPLACES it instead of duplicating.
+(trim windows, doc gates, reassembly) are complete within one.  Buckets
+run in batches of ``buckets_per_batch``.  For each batch the runner
+clears the batch's output partitions, writes the batch with a dynamic
+partition overwrite, and only after that write has committed creates one
+empty marker file per bucket at ``<manifest_path>/run_id=<id>/bucket=<b>``.
+A restart lists that directory and skips the marked buckets (the P5
+resume skip).  Markers and partition clearing go through the Hadoop
+FileSystem API, so neither launches a Spark job and resume works on any
+Hadoop scheme (plain paths, ``file://``, ``hdfs://``, ``s3a://``).
 
-Storage here is parquet + ``partitionOverwriteMode=dynamic`` (this sandbox
-has no Iceberg runtime); on an Iceberg catalog the writer maps 1:1 to
-``writeTo(tbl).overwritePartitions()`` with snapshot isolation and the
-manifest to an Iceberg audit table.
+A crash between a batch's commit and its markers leaves the batch
+unmarked, so the restart redoes it; the clear-then-overwrite write makes
+that replay replace the batch's partitions instead of duplicating them.
+
+``buckets_per_batch`` trades resume granularity against scans: a crash
+loses at most the batch in flight, so smaller batches keep more progress,
+but every batch re-filters and re-scans the whole input.
+
+Storage here is parquet + a per-write ``partitionOverwriteMode=dynamic``
+option, since the package bundles no Iceberg runtime.  On an Iceberg
+catalog the clear-then-write maps to ``overwrite(bucket IN batch)``, an
+explicit-predicate overwrite committed as one snapshot, and the markers
+to an audit table appended after that commit.
 """
 
 from __future__ import annotations
 
-import os
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,25 +51,36 @@ def with_bucket(df: DataFrame, n_buckets: int, conv_col: str = "conv_id") -> Dat
     )
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` on whatever scheme it names."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _marker_dir(manifest_path: str, run_id: str) -> str:
+    return f"{manifest_path.rstrip('/')}/run_id={run_id}"
+
+
 def completed_buckets(spark: SparkSession, manifest_path: str, run_id: str) -> set[int]:
-    if not os.path.exists(manifest_path):
+    """Buckets of ``run_id`` whose output has committed: a listing of the
+    run's marker directory, no Spark job."""
+    fs, run_dir = _hadoop_path(spark, _marker_dir(manifest_path, run_id))
+    if not fs.exists(run_dir):
         return set()
-    rows = (
-        spark.read.parquet(manifest_path)
-        .filter(F.col("run_id") == run_id)
-        .select(BUCKET_COL)
-        .collect()
-    )
-    return {r[BUCKET_COL] for r in rows}
+    prefix = f"{BUCKET_COL}="
+    names = (status.getPath().getName() for status in fs.listStatus(run_dir))
+    return {int(n.removeprefix(prefix)) for n in names if n.startswith(prefix)}
 
 
 def _append_manifest(
     spark: SparkSession, manifest_path: str, run_id: str, buckets: list[int]
 ) -> None:
-    rows = [(run_id, b, float(time.time())) for b in buckets]
-    spark.createDataFrame(
-        rows, f"run_id string, {BUCKET_COL} int, completed_unix double"
-    ).coalesce(1).write.mode("append").parquet(manifest_path)
+    """Mark ``buckets`` complete with one empty file each.  Call only after
+    their output has committed."""
+    run_dir = _marker_dir(manifest_path, run_id)
+    for b in buckets:
+        fs, marker = _hadoop_path(spark, f"{run_dir}/{BUCKET_COL}={b}")
+        fs.create(marker, True).close()
 
 
 def run_checkpointed(
@@ -73,12 +95,12 @@ def run_checkpointed(
 ) -> list[int]:
     """Run ``pipeline_fn`` over the source bucket-batch by bucket-batch,
     checkpointing after each batch.  Returns the buckets processed in THIS
-    invocation (already-completed ones are skipped via the manifest).
+    invocation (already-completed ones are skipped via their markers).
 
     Output layout: parquet partitioned by bucket; a re-run of a bucket
-    dynamically overwrites exactly that partition directory.
+    dynamically overwrites exactly that partition directory.  The
+    session's own ``partitionOverwriteMode`` is left as the caller set it.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     done = completed_buckets(spark, manifest_path, run_id)
     todo = [b for b in range(n_buckets) if b not in done]
     bucketed = with_bucket(source, n_buckets)
@@ -97,7 +119,12 @@ def run_checkpointed(
         # stale data.  (Iceberg mapping: ``overwrite(bucket IN chunk)``,
         # an explicit-predicate overwrite, has the same semantics.)
         _clear_partitions(spark, output_path, chunk)
-        result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(output_path)
+        (
+            result.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(BUCKET_COL)
+            .parquet(output_path)
+        )
         _append_manifest(spark, manifest_path, run_id, chunk)
         processed.extend(chunk)
     return processed
@@ -109,11 +136,7 @@ def _clear_partitions(
     """Delete the partition dirs for ``buckets`` via the Hadoop FileSystem
     API, so the stale-empty-partition guarantee holds on ANY supported
     scheme (file://, hdfs://, s3a://) — not just local paths."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     for b in buckets:
-        part = f"{output_path.rstrip('/')}/{BUCKET_COL}={b}"
-        jpath = jvm.org.apache.hadoop.fs.Path(part)
-        fs = jpath.getFileSystem(hconf)
+        fs, jpath = _hadoop_path(spark, f"{output_path.rstrip('/')}/{BUCKET_COL}={b}")
         if fs.exists(jpath):
             fs.delete(jpath, True)

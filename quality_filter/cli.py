@@ -23,9 +23,12 @@ can run the same jobs here:
 ``--data-path`` accepts parquet dirs or ``*.jsonl[.zst]``
 (``src/classifier_inference_pipeline.py:144-151`` polymorphism);
 ``--save-path`` is written as parquet unless it ends in ``.jsonl``.
-Resume is bucket-manifest based: pass ``--manifest-path`` and ``--run-id``
-to make re-runs idempotent (replaces the output-line-count resume of
-``src/classifier_inference_pipeline.py:133-139``).
+Resume is bucket based: pass ``--manifest-path`` (the root of the
+per-bucket marker files, any Hadoop path or URI) and ``--run-id`` to run in
+hashed conversation buckets.  Each bucket gets a marker once its output has
+committed; a re-run with the same run id lists the markers, skips those
+buckets and overwrites the rest idempotently (replaces the output-line-count
+resume of ``src/classifier_inference_pipeline.py:133-139``).
 """
 
 from __future__ import annotations

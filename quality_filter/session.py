@@ -55,11 +55,14 @@ def get_spark(
     # Shuffle/spill scratch on tmpfs when available: local-mode shuffles are
     # loopback disk I/O otherwise, which adds variance and serializes on the
     # virtio queue.  (On a real cluster this is the NVMe-backed local dir.)
-    if os.path.isdir("/dev/shm"):
+    # A caller's own choice, in ``extra_conf`` or SPARK_LOCAL_DIRS, wins.
+    extra_conf = extra_conf or {}
+    caller_dir = "spark.local.dir" in extra_conf or os.environ.get("SPARK_LOCAL_DIRS")
+    if not caller_dir and os.path.isdir("/dev/shm"):
         scratch = "/dev/shm/spark_local"
         os.makedirs(scratch, exist_ok=True)
         builder = builder.config("spark.local.dir", scratch)
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -118,7 +118,8 @@ def synth_transcripts(
     )
 
     mix = F.pmod(
-        F.col("cidx") * _MIX_A + F.col("turn_idx").cast("long") * _MIX_B + F.lit(seed) * 97,
+        F.col("cidx") * _MIX_A + F.col("turn_idx").cast("long") * _MIX_B
+        + F.lit(seed).cast("long") * 97,
         F.lit(1000),
     )
     # ~70 % of turns draw from the clean banks, the rest from defects.

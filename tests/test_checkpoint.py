@@ -1,6 +1,8 @@
-"""Checkpoint/resume semantics: manifest anti-join skip, partial-run
-resume completes exactly the remaining buckets, bucket re-run replaces
-instead of duplicating, and the final output equals a single-shot run."""
+"""Checkpoint/resume semantics: resume skips the buckets with markers,
+partial-run resume completes exactly the remaining buckets, a crash
+between a batch's write and its markers redoes that batch, bucket re-run
+replaces instead of duplicating, and the final output equals a
+single-shot run."""
 
 from __future__ import annotations
 
@@ -36,6 +38,11 @@ def _collect_keys(spark, path):
         (r["conv_id"], r["turn_idx"])
         for r in spark.read.parquet(path).select("conv_id", "turn_idx").collect()
     )
+
+
+def _rows(spark, path):
+    df = spark.read.parquet(path)
+    return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
 
 
 def test_resume_skips_completed_and_matches_single_shot(spark, transcripts, tmpdir):
@@ -96,6 +103,65 @@ def test_resume_skips_completed_and_matches_single_shot(spark, transcripts, tmpd
     )
     assert again == []
     assert _collect_keys(spark, out2) == _collect_keys(spark, out)
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_crash_between_write_and_marker_redoes_that_batch(
+    spark, transcripts, tmpdir, monkeypatch, scheme
+):
+    """A batch whose write committed but whose markers were never written
+    is redone on resume, and only that batch, on plain paths and on URIs."""
+    import quality_filter.checkpoint as ck
+
+    out, manifest = f"{scheme}{tmpdir}/out", f"{scheme}{tmpdir}/manifest"
+    orig, calls = ck._append_manifest, []
+
+    def crash_before_second_markers(spark_, path, run_id, buckets):
+        calls.append(buckets)
+        if len(calls) == 2:
+            raise RuntimeError("simulated crash before the markers")
+        orig(spark_, path, run_id, buckets)
+
+    monkeypatch.setattr(ck, "_append_manifest", crash_before_second_markers)
+    with pytest.raises(RuntimeError, match="before the markers"):
+        run_checkpointed(
+            spark, transcripts, _pipeline, out, manifest, "r",
+            n_buckets=4, buckets_per_batch=2,
+        )
+    monkeypatch.undo()
+    assert calls == [[0, 1], [2, 3]]
+    assert completed_buckets(spark, manifest, "r") == {0, 1}
+
+    resumed = run_checkpointed(
+        spark, transcripts, _pipeline, out, manifest, "r",
+        n_buckets=4, buckets_per_batch=2,
+    )
+    assert resumed == [2, 3]
+    assert completed_buckets(spark, manifest, "r") == {0, 1, 2, 3}
+
+    single = f"{tmpdir}/single"
+    run_checkpointed(
+        spark, transcripts, _pipeline, single, f"{tmpdir}/m_single", "one",
+        n_buckets=4, buckets_per_batch=4,
+    )
+    assert _rows(spark, out) == _rows(spark, single)
+
+
+def test_run_leaves_session_overwrite_mode_alone(spark, transcripts, tmpdir):
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        run_checkpointed(
+            spark, transcripts, _pipeline, f"{tmpdir}/out", f"{tmpdir}/manifest",
+            "s", n_buckets=4, buckets_per_batch=2,
+        )
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+    # the second batch's overwrite kept the first batch's partitions
+    written = spark.read.parquet(f"{tmpdir}/out").select(BUCKET_COL).distinct()
+    assert sorted(r[BUCKET_COL] for r in written.collect()) == [0, 1, 2, 3]
 
 
 def test_bucket_rerun_replaces_not_duplicates(spark, transcripts, tmpdir):

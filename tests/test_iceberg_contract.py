@@ -2,7 +2,7 @@
 
 This sandbox has no Iceberg runtime (no jars, no network), so the
 catalog-table surface is a parquet stand-in: partitioned writes with
-``partitionOverwriteMode=dynamic`` + a manifest table
+``partitionOverwriteMode=dynamic`` + per-bucket marker files
 (quality_filter/checkpoint.py, io.write_bucketed_table).  These tests pin
 the stand-in to the DOCUMENTED semantics of the Iceberg operations it
 maps to, clause by clause, so swapping the writer for
