@@ -92,9 +92,9 @@ def build_pretrain_corpus(
     if gate_impl == "arrow" and c4 and gopher:
         # 100-TB hot path: one fused Arrow pass computes the C4 clean +
         # both gate verdicts (the interpreted HOF chain measured 5.4×
-        # its wall time at identical survivors — BENCH/r7_gates_ab.json);
-        # the verdicts come back as columns, so per-stage accounting
-        # stays exact.
+        # its wall time at identical survivors — ``BENCH/r7_gates_ab.json``
+        # at b9e3436); the verdicts come back as columns, so per-stage
+        # accounting stays exact.
         from quality_filter.textstats import fused_gate_arrow
 
         g = fused_gate_arrow(cur, text_col, with_repetition=gopher_repetition)

@@ -290,8 +290,7 @@ def word_shingles_from_words(words_col, k: int = 3):
     """Array of k-word shingles from an already-split word-array column.
     Empty for docs with fewer than ``k`` words: ``sequence(1, 0)`` is
     DESCENDING in Spark (yields [1, 0] and the 0 start then crashes
-    ``slice``), so the short-doc case must be guarded explicitly —
-    DuckDB's ``range(0, n)`` is already empty for n <= 0.
+    ``slice``), so the short-doc case must be guarded explicitly.
 
     Pass a bound ATTRIBUTE (an array column materialized by its own
     projection under the consuming explode), not an inline ``split(...)``
@@ -304,13 +303,6 @@ def word_shingles_from_words(words_col, k: int = 3):
         F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
         lambda i: F.array_join(F.slice(words_col, i, k), " "),
     )).otherwise(F.array().cast("array<string>"))
-
-
-def word_shingles(text_col, k: int = 3):
-    """Array of k-word shingles of a text column — convenience wrapper;
-    hot paths should hoist the split into its own projection and use
-    ``word_shingles_from_words`` (see its docstring for why)."""
-    return word_shingles_from_words(F.split(text_col, " "), k)
 
 
 def minhash_signatures(
@@ -793,7 +785,7 @@ def paragraph_dedup(
     ``key`` picks the shuffle/join key:
 
     * ``"text"`` — the paragraph string itself: exact equality, the
-      oracle-checked default (both engines compare the same bytes).
+      default, checked by hand-computed fixtures.
     * ``"hash"`` — ``struct(xxhash64(p), xxhash64(p, 1))``: a 128-bit
       fingerprint, so the aggregate exchange carries 16 bytes per
       distinct paragraph instead of the paragraph, and the join

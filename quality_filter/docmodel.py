@@ -61,10 +61,6 @@ def explode_document(df: DataFrame, id_col: str = "id") -> DataFrame:
     )
 
 
-def _zip_fields(extra_arrays: dict[str, str]) -> list[str]:
-    return ["line", "label", "score"] + list(extra_arrays)
-
-
 def _zipped(df: DataFrame, extra_arrays: dict[str, str]) -> Column:
     """arrays_zip of lines + every parallel array, so one filter/slice
     keeps them aligned by construction."""

@@ -38,8 +38,8 @@ def eval_report(
     (``src/train_classifier.py:56-91``).
 
     Division guards are explicit CASE logic (0.0 when the denominator is
-    zero) so the values are engine-portable — Spark ANSI mode and DuckDB
-    disagree on x/0 otherwise."""
+    zero): under Spark ANSI mode x/0 raises, and SQL engines disagree
+    on it otherwise."""
     cm = confusion_matrix(df, label_col, pred_col)
     per_true = cm.groupBy(F.col("label").alias("class")).agg(
         F.sum("n").alias("support"),
@@ -90,10 +90,10 @@ def eval_summary(
     plain AVG over its rows.
 
     The macro averages are rounded to 9 decimals: floating-point AVG is
-    summation-order-sensitive and both Spark and DuckDB parallelize the
-    aggregate, so raw doubles drift by ±1 ulp run-to-run — rounding
-    makes the operator's output deterministic (accuracy is a ratio of
-    two exact integer sums and needs no rounding)."""
+    summation-order-sensitive and Spark parallelizes the aggregate, so
+    raw doubles drift by ±1 ulp run-to-run — rounding makes the
+    operator's output deterministic (accuracy is a ratio of two exact
+    integer sums and needs no rounding)."""
     rep = eval_report(df, label_col, pred_col)
     return rep.agg(
         (F.sum("tp").cast("double") / F.sum("support")).alias("accuracy"),
@@ -118,8 +118,7 @@ def cohen_kappa(
     scale this module targets, ``n * n`` and ``Σ support·predicted``
     overflow int64 past n ≈ 3e9 (wrong or negative κ); decimal keeps
     both exact up to n ≈ 9.2e18 (n² ≤ 8.5e37 < 10^38) before the final
-    lossless-in-relative-terms cast to double.  Oracle mirror: DuckDB
-    HUGEINT (int128)."""
+    lossless-in-relative-terms cast to double."""
     return kappa_from_report(eval_report(df, label_col, pred_col))
 
 

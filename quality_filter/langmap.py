@@ -92,12 +92,3 @@ def lang_name_expr(code: Column, default: str | None = "Unknown") -> Column:
     if default is None:
         return looked
     return F.coalesce(looked, F.lit(default))
-
-
-def lang_name_case_sql(code_expr: str, default: str = "Unknown") -> str:
-    """The DuckDB mirror as a CASE ladder generated from the same table."""
-    branches = "".join(
-        f"WHEN {code_expr} = '{code}' THEN '{LANGUAGE_NAMES[code]}' "
-        for code in LANGUAGE_CODES
-    )
-    return f"(CASE {branches}ELSE '{default}' END)"

@@ -1,15 +1,15 @@
 """Shared regex patterns for the heuristic rule engine and the PII scrubber.
 
-These constants are the single source of truth used by three consumers that
+These constants are the single source of truth used by two consumers that
 must agree byte-for-byte:
 
 1. Spark Catalyst expressions (Java ``java.util.regex``) in ``rules.py`` /
    ``scrub.py``;
-2. the pure-Python golden oracle in ``tests/oracle.py`` (``re``);
-3. generated DuckDB oracle SQL (RE2) in ``__spark_entry__.py``.
+2. the pure-Python golden oracle in ``tests/oracle.py`` (``re``).
 
-Therefore every pattern is written in the common subset of the three
-dialects: NO backreferences, NO lookaround, NO inline flags inside the
+Every pattern is written in the common subset of those two dialects and
+RE2 (so the rules also port to RE2 engines such as ``pyarrow.compute``):
+NO backreferences, NO lookaround, NO inline flags inside the
 pattern (Python ≥3.11 rejects mid-pattern ``(?i)``; use ``ci()`` to prefix
 the whole composed pattern instead), ``\\p{L}`` for Unicode letters (Java +
 RE2; the Python oracle counts letters via ``str.isalpha`` which matches the

@@ -65,10 +65,9 @@ def doc_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     if set(reserved) == set(feature_cols()):
         # Precomputed-feature fast path (r9): the caller already carries
         # the full prefixed feature set (e.g. it materialized them once
-        # and checkpointed before iterative training — see
-        # entry_queries.q_qmodel_train_score).  Recomputing here would
-        # re-run the whole metric projection (a dozen split/filter HOF
-        # evaluations per row) on EVERY downstream pass; the values are
+        # and checkpointed before iterative training).  Recomputing here
+        # would re-run the whole metric projection (a dozen split/filter
+        # HOF evaluations per row) on EVERY downstream pass; the values are
         # by construction the ones this function would produce.
         return df
     if reserved:

@@ -4,8 +4,8 @@ The reference splits over-long lines into sentences at ``(?<=[.!?])\\s+``
 and greedily packs consecutive sentences into segments of at most ~200
 chars (``src/label_lines_with_LLM.py:144-168``,
 ``split_long_line_into_segments``) before sending them to the labeling
-LLM.  Re-expressed as pure Catalyst: a sentinel-split (lookbehind-free so
-the DuckDB/RE2 oracle can mirror it) followed by an ``aggregate`` HOF fold
+LLM.  Re-expressed as pure Catalyst: a sentinel-split (lookbehind-free,
+so it also runs on RE2 engines) followed by an ``aggregate`` HOF fold
 that reproduces the reference's packing loop exactly, including its
 quirks:
 
@@ -31,9 +31,9 @@ from quality_filter import patterns as P
 
 MAX_SEGMENT_CHARS = 200  # src/label_lines_with_LLM.py:156
 # boundary: sentence-final punctuation followed by whitespace.  The
-# reference uses a lookbehind ``(?<=[.!?])\s+``; RE2 (DuckDB) has no
-# lookbehind, so both engines instead KEEP the punctuation via a capture
-# group and split on a sentinel byte — identical output.
+# reference uses a lookbehind ``(?<=[.!?])\s+``; RE2 has no lookbehind,
+# so the split instead KEEPS the punctuation via a capture group and
+# splits on a sentinel byte — identical output.
 _BOUNDARY = r"([.!?])" + P.WS_CLASS + "+"
 _SENTINEL = "\x01"
 
@@ -44,7 +44,7 @@ def sentences_expr(text: Column) -> Column:
     return F.split(marked, _SENTINEL, -1)
 
 
-# Python ``str.strip()`` strips ALL whitespace; Spark/DuckDB ``trim`` only
+# Python ``str.strip()`` strips ALL whitespace; Spark's ``trim`` only
 # strips spaces — use an anchored regex over the frozen WS class instead.
 _STRIP_RE = f"^{P.WS_CLASS}+|{P.WS_CLASS}+$"
 
@@ -87,34 +87,3 @@ def resegment(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         ),
     )
     return segs
-
-
-def resegment_sql(table: str = "documents", text_expr: str = "text") -> str:
-    """DuckDB oracle: identical sentinel split, packing loop as a recursive
-    CTE walking sentences per document (RE2 backreference ``\\1``)."""
-    ws = P.WS_CLASS.replace("'", "''")
-    strip = _STRIP_RE.replace("'", "''")
-    return f"""
-WITH RECURSIVE s AS (
-  SELECT doc_id,
-         string_split(regexp_replace({text_expr}, '([.!?]){ws}+', '\\1' || chr(1), 'g'), chr(1)) AS sents
-  FROM {table}
-), rec AS (
-  SELECT doc_id, sents, 1 AS i, CAST([] AS VARCHAR[]) AS segs, '' AS cur FROM s
-  UNION ALL
-  SELECT doc_id, sents, i + 1,
-    CASE WHEN length(cur) + length(sents[i]) + 1 > {MAX_SEGMENT_CHARS}
-         THEN list_append(segs, regexp_replace(cur, '{strip}', '', 'g')) ELSE segs END,
-    CASE WHEN length(cur) + length(sents[i]) + 1 > {MAX_SEGMENT_CHARS}
-         THEN sents[i] ELSE cur || ' ' || sents[i] END
-  FROM rec WHERE i <= len(sents)
-), fin AS (
-  SELECT doc_id,
-         CASE WHEN cur <> '' THEN list_append(segs, regexp_replace(cur, '{strip}', '', 'g')) ELSE segs END AS segs
-  FROM rec WHERE i = len(sents) + 1
-)
-SELECT doc_id, CAST(u.seg_idx AS INT) AS seg_idx, u.segment FROM (
-  SELECT doc_id, unnest(list_transform(range(1, len(segs) + 1),
-    j -> struct_pack(seg_idx := j - 1, segment := segs[j]))) AS u
-  FROM fin) t
-"""

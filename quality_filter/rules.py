@@ -10,9 +10,9 @@ rounding, matching ``round(score, 3)`` at
 
 Everything here is a single Catalyst projection — no UDFs, fully
 whole-stage-codegen'd, and trivially parallel at any scale (no shuffle).
-Rule precedence is frozen (first match wins); the same order is implemented
-by the Python golden oracle and the generated DuckDB oracle SQL, so the
-three implementations are bit-identical.
+Rule precedence is frozen (first match wins); the Python golden oracle
+(``tests/oracle.py``) implements the same order, and the two are
+bit-identical.
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ SYMBOL_RATIO_MAX = 0.3
 ALPHA_RATIO_MIN = 0.2
 MIN_CHARS_FOR_ALPHA_RULE = 4
 
-# clean_score formula weights (frozen; mirrored in oracle + DuckDB SQL).
+# clean_score formula weights (frozen; mirrored in tests/oracle.py).
 W_ALPHA, W_LEN, W_SYM = 0.6, 0.3, 0.1
 LEN_NORM = 120
 
@@ -185,52 +185,6 @@ def _defect_hit(text: Column, lowered: Column | None = None) -> Column:
     for _, rule_hit in _rule_hits(text, lowered):
         hit = hit | rule_hit
     return hit | text.rlike(P.SYMBOL_RUN)
-
-
-def label_expr(text: Column) -> Column:
-    """Per-turn label: frozen-precedence regex rules, then the ratio-based
-    formatting rule, else Clean.
-
-    Physical fast path: every rule regex sits behind its own sound
-    cheap guard (``_rule_hits``), so the ~70 % Clean majority pays only
-    lowercase substring probes + tiny regexes, and a guard-tripping row
-    pays exactly the tripped rules' regexes.  Label semantics are
-    identical — parity with the oracle is tested.
-    """
-    feats = feature_columns(text)
-    ratio_formatting = (
-        (feats["n_nonspace"] == 0)
-        | (feats["symbol_ratio"] > F.lit(SYMBOL_RATIO_MAX))
-        | (
-            (feats["n_chars"] >= F.lit(MIN_CHARS_FOR_ALPHA_RULE))
-            & (feats["alpha_ratio"] < F.lit(ALPHA_RATIO_MIN))
-        )
-    )
-    full = F.lit(LABELS[0])  # Clean (built innermost-out, so reversed below)
-    formatting = ratio_formatting | text.rlike(P.SYMBOL_RUN)
-    full = F.when(formatting, F.lit(FORMATTING_LABEL)).otherwise(full)
-    for label, hit in reversed(_rule_hits(text, F.lower(text))):
-        full = F.when(hit, F.lit(label)).otherwise(full)
-    return full
-
-
-def clean_score_expr(text: Column, label: Column) -> Column:
-    """Rule-based P(Clean) in [0,1], banker's-rounded to 3 decimals.
-
-    Non-Clean labels are damped by 0.4 so they land far below the salvage
-    threshold ``clean_score > 0.9`` (``src/salvage_low_quality_data.py:185``).
-    The expression tree (operand order included) is frozen for IEEE-754
-    bit-parity with the oracle and DuckDB SQL.
-    """
-    feats = feature_columns(text)
-    score_raw = (
-        F.lit(W_ALPHA) * feats["alpha_ratio"]
-        + F.lit(W_LEN)
-        * (F.least(feats["n_chars"], F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
-        + F.lit(W_SYM) * (F.lit(1.0) - feats["symbol_ratio"])
-    )
-    damped = F.when(label == F.lit(LABELS[0]), score_raw).otherwise(F.lit(0.4) * score_raw)
-    return F.bround(damped, 3)
 
 
 def _feature_cols_from(df: DataFrame, text: Column) -> DataFrame:

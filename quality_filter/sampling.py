@@ -7,8 +7,7 @@ Two families:
   (``src/sample_data.py:6``, ``src/prep_data_for_training.py:62-128``),
   reproducible per Spark seed but partitioning-sensitive.
 - *Deterministic arithmetic* (integer mixing on a key) — bit-stable across
-  engines, partitionings and reruns; the scale-safe default used by the
-  driver-contract queries.
+  engines, partitionings and reruns; the scale-safe default.
 """
 
 from __future__ import annotations
@@ -30,21 +29,10 @@ def deterministic_bucket(key, buckets: int = 1000):
     satisfy any ``< thr`` comparison — silently keeping every such row.
     Decimal keeps the product exact up to 10^38 (key ≤ ~9.2e18 × the
     constant ≈ 2.4e28), and ``pmod`` pins the result to [0, buckets)
-    for negative keys too.  Oracle-SQL mirror: DuckDB computes the same
-    value with a HUGEINT (int128) cast —
-    ``pmod(CAST(key AS HUGEINT) * 2654435761, buckets)``."""
+    for negative keys too."""
     k = F.col(key) if isinstance(key, str) else key
     return F.pmod(k.cast("decimal(38,0)") * F.lit(_MIX), F.lit(buckets)).cast(
         "bigint"
-    )
-
-
-def bucket_sql(key: str, buckets: int = 1000) -> str:
-    """DuckDB mirror of ``deterministic_bucket`` (same values, HUGEINT
-    instead of decimal for the overflow-free multiply)."""
-    return (
-        f"((CAST({key} AS HUGEINT) * {_MIX}) % {buckets}"
-        f" + {buckets}) % {buckets}"
     )
 
 

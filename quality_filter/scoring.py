@@ -21,41 +21,10 @@ from quality_filter import langid as L
 from quality_filter import perplexity as X
 
 
-def with_scores(
-    df: DataFrame, text_col: str = "text", langid_impl: str = "udf"
-) -> DataFrame:
-    """Append ``lang``, ``lang_prob``, ``logppl`` in a single UDF stage.
-
-    ``langid_impl``:
-
-    - ``'udf'`` (default) — the fused full n-gram langid + perplexity
-      Arrow pass (one serialize, both artifacts resident).
-    - ``'sql'`` — langid computed JVM-side (``textstats.
-      langid_sql_struct_expr``, marker-lexicon argmax inside whole-stage
-      codegen) and only perplexity crosses the Arrow boundary.  Halves
-      the Python-worker compute of the hot path, which is the measured
-      scaling bottleneck at high core counts (the Arrow *volume* is the
-      same — one text column either way — but per-batch numpy work
-      drops to the trigram-perplexity lookup alone).  The SQL langid is
-      a coarser classifier (marker lexicons vs hashed-trigram profiles);
-      use it when the downstream gate needs language only at
-      major-language granularity, the common case for web-scale
-      filtering."""
-    if langid_impl == "sql":
-        from quality_filter.perplexity import with_perplexity
-        from quality_filter.textstats import langid_sql_struct_expr
-
-        out = df.withColumn(
-            "_lid", langid_sql_struct_expr(F.coalesce(F.col(text_col), F.lit("")))
-        )
-        out = (
-            out.withColumn("lang", F.col("_lid.lang"))
-            .withColumn("lang_prob", F.col("_lid.lang_prob"))
-            .drop("_lid")
-        )
-        return with_perplexity(out, text_col)
-    if langid_impl != "udf":
-        raise ValueError(f"unknown langid_impl: {langid_impl!r}")
+def with_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Append ``lang``, ``lang_prob``, ``logppl`` in a single UDF stage:
+    the fused full n-gram langid + perplexity Arrow pass (one serialize,
+    both artifacts resident)."""
     spark = df.sparkSession
     from quality_filter.shipping import ensure_shipped
 

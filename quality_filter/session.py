@@ -36,8 +36,9 @@ def get_spark(
         # per-batch hash/gather working set L2-resident on typical cores
         # (~200 KB at web-text row sizes) — the r9 32-way probe measured
         # the fused scorer stage at +18 % vs 10k rows and ~2.4× vs 100k
-        # (BENCH/BASELINE.md batch table).  Cache-residency knob, not a
-        # cluster-size knob; env-overridable for other row shapes.
+        # (batch table of ``BENCH/BASELINE.md`` at b9e3436).
+        # Cache-residency knob, not a cluster-size knob; env-overridable
+        # for other row shapes.
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2500"),

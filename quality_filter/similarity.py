@@ -70,8 +70,15 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
     return rng.randn(n_bits, dim).astype(float).tolist()
 
 
+def _check_n_bits(n_bits: int) -> None:
+    # SRP bucket ids are bigint bit sets; up to 62 planes every id is a
+    # non-negative long
+    if not 1 <= n_bits <= 62:
+        raise ValueError(f"n_bits must be in 1..62, got {n_bits}")
+
+
 def srp_bucket(vec_col, planes: list[list[float]]):
-    """Sign-random-projection bucket id: one bit per hyperplane.
+    """Sign-random-projection bucket id (bigint): one bit per hyperplane.
 
     Tree-size note: each plane is a single ArrayType Literal node (not a
     dim-wide CreateArray) and the per-plane projections fold into one
@@ -86,10 +93,10 @@ def srp_bucket(vec_col, planes: list[list[float]]):
     bits = F.transform(
         projs,
         lambda p, i: F.when(
-            p >= 0, F.call_function("shiftleft", F.lit(1), i)
-        ).otherwise(F.lit(0)),
+            p >= 0, F.call_function("shiftleft", F.lit(1).cast("bigint"), i)
+        ).otherwise(F.lit(0).cast("bigint")),
     )
-    return F.aggregate(bits, F.lit(0), lambda acc, b: acc + b)
+    return F.aggregate(bits, F.lit(0).cast("bigint"), lambda acc, b: acc + b)
 
 
 def embedding_near_dups(
@@ -122,6 +129,7 @@ def embedding_near_dups(
     wire once per side it appears on, not once per collision)."""
     from quality_filter.dedup import bucket_pairs
 
+    _check_n_bits(n_bits)
     tables = [_hyperplanes(dim, n_bits, seed + 1000 * t) for t in range(n_tables)]
     renamed = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     parts = [
@@ -167,8 +175,7 @@ def semantic_dedup(
     Scale path: SRP-LSH bucketed candidate pairs (``embedding_near_dups``
     — sub-quadratic, near-identical vectors collide in every table so
     recall at high thresholds is ~1) → connected components →
-    ``cluster_dedup``'s keeper semi-join.  The exact all-pairs variant
-    for small/verification sets is the driver row's formulation."""
+    ``cluster_dedup``'s keeper semi-join."""
     from quality_filter.cluster import cluster_dedup
 
     pairs = embedding_near_dups(
@@ -210,6 +217,7 @@ def lsh_ann_topk(
     via one id-equi-join), so no shuffle ships a vector more than once."""
     from quality_filter.dedup import cap_bucket_occupancy
 
+    _check_n_bits(n_bits)
     tables = [
         _hyperplanes(dim, n_bits, seed + 1000 * t) for t in range(n_tables)
     ]
@@ -283,9 +291,6 @@ def ivf_topk(
     nprobe: int = 4,
     seed: int = 42,
     train_fraction: float = 1.0,
-    cos_round: int | None = None,
-    max_iter: int | None = None,
-    init_mode: str | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: KMeans partitions the corpus
     into ``nlist`` cells; each corpus vector lives in its nearest cell;
@@ -308,20 +313,7 @@ def ivf_topk(
     )
     if train_fraction < 1.0:
         train = train.sample(train_fraction, seed=seed)
-    km = KMeans(k=nlist, seed=seed)
-    if init_mode is not None:
-        # same centroid-invariance rationale as max_iter below: at
-        # nprobe=nlist the result does not depend on the fitted centers,
-        # so exactness-stamped callers skip k-means||'s multi-pass
-        # distributed seeding ('random' = one takeSample job)
-        km = km.setInitMode(init_mode)
-    if max_iter is not None:
-        # centroid quality only moves recall at nprobe<nlist; at
-        # nprobe=nlist the result is provably centroid-INVARIANT (every
-        # cell is probed), so exactness-stamped callers cap the iterative
-        # fit instead of paying Spark's default 20 jobs
-        km = km.setMaxIter(max_iter)
-    model = km.fit(train)
+    model = KMeans(k=nlist, seed=seed).fit(train)
     centers = [list(map(float, c)) for c in model.clusterCenters()]
 
     c = corpus.select(
@@ -340,10 +332,6 @@ def ivf_topk(
         .select("query_id", "qv", "neighbor_id", "cv")
     )
     cos = _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))
-    if cos_round is not None:
-        # rank on rounded cosine (+ id tiebreak) for cross-engine float
-        # stability when an exact oracle checks the ranking
-        cos = F.round(cos, cos_round)
     scored = cand.select("query_id", "neighbor_id", cos.alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -231,8 +231,7 @@ def fake_structured_teacher(prompts: list[str]) -> list[str]:
 
 def fake_teacher_label_expr(text: Column) -> Column:
     """The Catalyst statement of fake_structured_teacher's rule — what the
-    loop's output must equal for any input (used by tests and the DuckDB
-    oracle twin in entry_queries)."""
+    loop's output must equal for any input (used by tests)."""
     n = F.length(text)
     return F.when(
         n % _FAKE_INVALID_MOD == _FAKE_INVALID_RESIDUE, F.lit("Clean")

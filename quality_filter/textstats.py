@@ -1,6 +1,6 @@
 """Text-analysis operators: token counting, quality heuristics,
-document fingerprinting, and a SQL-only language guess — all pure
-Catalyst expressions over the text column.
+document fingerprinting, and the C4/Gopher corpus gates — pure Catalyst
+expressions over the text column, plus the fused Arrow gate.
 """
 
 from __future__ import annotations
@@ -101,157 +101,11 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# SQL-only language guess: stopword-lexicon hit counting per language —
-# the Catalyst-native fallback when the ngram UDF is unavailable (and an
-# oracle-SQL-expressible langid variant).
-LANG_MARKERS = {
-    "en": ["the", "and", "of", "to", "is"],
-    "de": ["der", "die", "und", "ist", "nicht"],
-    "fr": ["le", "la", "et", "est", "les"],
-    "es": ["el", "la", "que", "los", "es"],
-}
-
-
-_LANG_WORD_CLASS = "a-zçéàüöäñ"
-
-
-def _lang_hit_structs(text: Column) -> list[Column]:
-    """Per-language marker-word hit counts as (n, lang) structs.
-
-    Counted with one alternation regex per language (``regexp_count``
-    with boundary classes — equivalent to splitting on the non-letter
-    class and counting exact word matches, but whole-stage-codegen'd):
-    the earlier formulation, ``F.filter`` over a split array per
-    language, ran as interpreted higher-order functions and measured
-    ~4× slower than the langid pandas UDF at 10M turns — the regex form
-    is what makes a JVM-side langid competitive (same lesson as the
-    simhash grouped-vs-HOF layout)."""
-    lowered = F.lower(text)
-    counts = []
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        alt = "|".join(markers)
-        pat = (
-            f"(?:^|[^{_LANG_WORD_CLASS}])({alt})(?=$|[^{_LANG_WORD_CLASS}])"
-        )
-        counts.append(
-            F.struct(
-                F.regexp_count(lowered, F.lit(pat)).alias("n"),
-                F.lit(lang).alias("lang"),
-            )
-        )
-    return counts
-
-
-def langid_sql_expr(text: Column) -> Column:
-    """argmax over per-language marker-word hit counts; 'und' when no
-    marker hits."""
-    best = F.array_max(F.array(*_lang_hit_structs(text)))
-    return F.when(best["n"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def langid_sql_struct_expr(text: Column) -> Column:
-    """struct<lang, lang_prob> variant: lang as above, lang_prob = the
-    winning language's share of all marker hits (0.0 for 'und') — the
-    JVM-side confidence analog used when the hot path runs langid without
-    a Python worker (scoring.with_scores(langid_impl='sql'))."""
-    counts = _lang_hit_structs(text)
-    arr = F.array(*counts)
-    best = F.array_max(arr)
-    total = F.aggregate(arr, F.lit(0), lambda acc, s: acc + s["n"])
-    return F.struct(
-        F.when(best["n"] > 0, best["lang"]).otherwise(F.lit("und")).alias("lang"),
-        F.when(
-            best["n"] > 0,
-            F.bround(best["n"].cast("double") / total, 3),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("lang_prob"),
-    )
-
-
-FP_MOD = 1 << 52
-FP_SEED = 1125899906842597 % FP_MOD
-
-
-def fingerprint_md5_expr(text: Column) -> Column:
-    """Order-sensitive rolling document fingerprint in an oracle-portable
-    form: per-word base hash = first 12 hex chars of md5 (48 bits, exact
-    in both engines), folded as ``acc*31 + h (mod 2^52)`` — same
-    polynomial as ``fingerprint_expr`` but md5-based instead of xxhash64
-    (which DuckDB lacks).  All intermediates < 2^58, no overflow under
-    ANSI arithmetic."""
-    words = F.split(normalized_text(F.coalesce(text, F.lit(""))), " ")
-    m = F.lit(FP_MOD).cast("long")
-    h = lambda w: F.conv(F.substring(F.md5(F.encode(w, "UTF-8")), 1, 12), 16, 10).cast("long")  # noqa: E731
-    return F.aggregate(
-        words,
-        F.lit(FP_SEED).cast("long"),
-        lambda acc, w: F.pmod(acc * F.lit(31).cast("long") + h(w), m),
-    )
-
-
-def fingerprint_md5_sql(t: str) -> str:
-    """DuckDB mirror of ``fingerprint_md5_expr``: hex parsed positionally
-    with BIGINT power-of-16 literals, fold via list_reduce with the seed
-    prepended (DuckDB reduce uses element 1 as the initial accumulator)."""
-    norm = f"trim(regexp_replace(lower({t}), '[ \\t\\r\\n]+', ' ', 'g'))"
-    hexpos = " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5(w), {i}, 1)) - 1) * {16 ** (12 - i)}"
-        for i in range(1, 13)
-    )
-    hs = f"list_transform(string_split({norm}, ' '), w -> CAST({hexpos} AS BIGINT))"
-    return (
-        f"list_reduce(list_prepend(CAST({FP_SEED} AS BIGINT), {hs}), "
-        f"(acc, h) -> (acc * 31 + h) % {FP_MOD})"
-    )
-
-
-def select_top_quality(
-    df: DataFrame, frac: float = 0.25, text_col: str = "text",
-    exact: bool = True, materialize: bool = True,
-) -> DataFrame:
-    """Quality-threshold selection (FineWeb-style): keep the documents
-    whose heuristic quality score sits in the top ``frac`` of the corpus
-    distribution.  The cutoff is ONE scalar — computed in a single
-    aggregate pass and folded into a filter, so selection costs no sort
-    and no shuffle of the corpus (vs a global rank/ntile, which would).
-
-    ``exact=True`` uses the sort-based ``percentile`` aggregate —
-    deterministic, used by the oracle-bound driver query; at 10^12 rows
-    swap ``exact=False`` for ``approx_percentile`` (KLL sketch, bounded
-    memory, rank error ~1e-4) — the threshold then drifts within sketch
-    tolerance but the plan shape is identical.
-
-    A percentile cutoff inherently needs two passes over the scored rows
-    (one to find the threshold, one to filter).  ``materialize=True``
-    (default) caches the scored table between them via ``localCheckpoint``
-    — executor-storage-backed (MEMORY_AND_DISK), lineage-cut, and freed
-    by the ContextCleaner when the returned DataFrame is garbage
-    collected (no manual unpersist contract) — so the upstream scan and
-    the score expression run ONCE.  Pass ``materialize=False`` when the
-    input is a cheap re-scannable source and executor storage is tighter
-    than a second scan (the score recomputes on the filter pass).
-
-    Returns the kept rows with a ``quality_score`` column."""
-    q = 1.0 - frac
-    scored = df.withColumn(
-        "quality_score", quality_score_expr(F.coalesce(F.col(text_col), F.lit("")))
-    )
-    if materialize:
-        scored = scored.localCheckpoint(eager=True)
-    fn = F.percentile if exact else F.approx_percentile
-    args = (F.col("quality_score"), F.lit(q)) if exact else (
-        F.col("quality_score"), F.lit(q), F.lit(10000)
-    )
-    thr = scored.agg(fn(*args).alias("t")).collect()[0]["t"]
-    return scored.filter(F.col("quality_score") >= F.lit(thr))
-
-
 # ---------------------------------------------------------------------------
 # Gopher document-quality rules (Rae et al. 2021, "Scaling Language Models:
 # Methods, Analysis & Insights from Training Gopher", appendix A1.1) — the
-# standard pre-training corpus gate.  Frozen thresholds; the DuckDB oracle
-# is generated from these same constants so the two sides cannot drift.
+# standard pre-training corpus gate.  Frozen thresholds; the fused Arrow
+# gate below and its tests read these same constants, so they cannot drift.
 # ---------------------------------------------------------------------------
 
 GOPHER_MIN_WORDS = 50
@@ -296,7 +150,7 @@ def with_gopher_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     wc = F.size(words)
     wc1 = F.greatest(F.lit(1), wc).cast("double")
     # long accumulator: summed word lengths of a near-2GB document exceed
-    # int32; DuckDB's list_sum is already BIGINT, so the engines agree
+    # int32, so the fold accumulates in a long
     mean_wl = (
         F.aggregate(
             words, F.lit(0).cast("long"), lambda a, w: a + F.length(w)
@@ -397,8 +251,8 @@ def c4_line_filter(
 
 # Gopher repetition sub-rules (Rae et al. 2021 A1.1, "repetitious text"):
 # duplicate line / paragraph fractions by count and by character mass.
-# The top-n-gram char-fraction rules from the same table are covered by
-# the registered `repetition_stats` operator (entry_queries).
+# The top-n-gram char-fraction rules from the same table are not
+# implemented.
 GOPHER_MAX_DUP_LINE_FRAC = 0.30
 GOPHER_MAX_DUP_PARA_FRAC = 0.30
 GOPHER_MAX_DUP_LINE_CHAR_FRAC = 0.20
@@ -497,8 +351,8 @@ def tfidf_top_terms(
     ``log_idf=True`` uses the standard smoothed ``ln((N+1)/(df+1)) + 1``;
     ``log_idf=False`` uses the rational ``(N+1)/(df+1)`` — same ranking
     for any fixed df ordering and bit-identical across engines (exact-int
-    division, no libm), which is what the oracle-checked driver query
-    pins.  Returns (group, term, rnk, sum_tf, df, score)."""
+    division, no libm), so an exact expectation can pin the scores.
+    Returns (group, term, rnk, sum_tf, df, score)."""
     text = F.coalesce(F.col(text_col), F.lit(""))
     words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != F.lit(""))
     dt = (
@@ -530,22 +384,23 @@ def tfidf_top_terms(
 
 # ---------------------------------------------------------------------------
 # Fused Arrow gate: C4 line cleaning + Gopher quality + repetition rules in
-# ONE Arrow-batched pass (r7).  The HOF gates above are the oracle-checked
+# ONE Arrow-batched pass (r7).  The HOF gates above are the fixture-checked
 # reference; this is the 100-TB hot path for the composed corpus build —
-# the r7 A/B (BENCH/r7_gates_ab.json) measured the interpreted HOF chain
-# at 5.4× the fused gate's wall time at identical survivors on a 200k-doc
-# corpus at local[32], consistent with the r4 finding that Catalyst array
-# HOFs run interpreted.  Survivor sets and cleaned text are pinned
-# identical to the HOF path (tests/test_round7.py) on ASCII + the
-# adversarial-alphabet fixtures; Java-vs-Python regex semantics are
-# aligned by construction (explicit ASCII \s class, space-only trims,
-# str.isalpha == \p{L} on the letter categories the gates see).
+# the r7 A/B (``BENCH/r7_gates_ab.json`` at b9e3436) measured the
+# interpreted HOF chain at 5.4× the fused gate's wall time at identical
+# survivors on a 200k-doc corpus at local[32], consistent with the r4
+# finding that Catalyst array HOFs run interpreted.  Survivor sets and
+# cleaned text are pinned identical to the HOF path (tests/test_round7.py)
+# on ASCII + the adversarial-alphabet fixtures; Java-vs-Python regex
+# semantics are aligned by construction (explicit ASCII \s class,
+# space-only trims, str.isalpha == \p{L} on the letter categories the
+# gates see).
 #
 # r8 adds a second kernel behind the same plan node: _fused_gate_batch,
 # built on pyarrow.compute C++ kernels (no per-element Python on the fast
 # lane).  _fused_gate_row stays as the parity oracle; tests/test_round8.py
 # pins the two column-exact on adversarial corpora, and
-# BENCH/r8_gates_ab.json carries the measured A/B.
+# ``BENCH/r8_gates_ab.json`` at b9e3436 carries the measured A/B.
 # ---------------------------------------------------------------------------
 
 import re as _re
@@ -633,12 +488,12 @@ def _fused_gate_row(t: str, min_words_per_line: int, min_lines: int,
 
 
 # --- r8 Arrow-compute batch kernel ------------------------------------------
-# Per-kernel measurements that shaped it (BENCH/ROUND8_NOTES.md): RE2
-# class-star token patterns pay ~0.5 µs per MATCH, so counting every
-# token-with-a-letter is ~10× slower than scanning for the rare class
-# (letterless tokens); utf8_split_whitespace (non-regex C++) beats the
-# [\s]+ run-count regex ~3×; plain substring kernels (memchr) beat
-# single-char regex classes ~10×.  Docs containing non-ASCII Unicode
+# Per-kernel measurements that shaped it (``BENCH/ROUND8_NOTES.md`` at
+# b9e3436): RE2 class-star token patterns pay ~0.5 µs per MATCH, so
+# counting every token-with-a-letter is ~10× slower than scanning for the
+# rare class (letterless tokens); utf8_split_whitespace (non-regex C++)
+# beats the [\s]+ run-count regex ~3×; plain substring kernels (memchr)
+# beat single-char regex classes ~10×.  Docs containing non-ASCII Unicode
 # whitespace take the exact row-kernel lane — utf8_split_whitespace
 # splits on Unicode White_Space, the row kernel's \s is ASCII-only.
 
@@ -859,9 +714,9 @@ def fused_gate_arrow(
     Cannot evaluate expression) — a plan node cannot be collapsed into.
 
     ``impl``: 'batch' (default — the r8 Arrow-compute kernel,
-    BENCH/r8_gates_ab.json) or 'row' (the r7 per-doc kernel, kept as the
-    parity oracle).  Outputs are column-exact between the two
-    (tests/test_round8.py)."""
+    ``BENCH/r8_gates_ab.json`` at b9e3436) or 'row' (the r7 per-doc
+    kernel, kept as the parity oracle).  Outputs are column-exact between
+    the two (tests/test_round8.py)."""
     from quality_filter.shipping import ensure_shipped
 
     if impl not in ("batch", "row"):

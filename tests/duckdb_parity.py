@@ -1,13 +1,14 @@
-"""Driver-contract query registry: every operator exposed as a
-``(spark, sf_dir) -> DataFrame`` callable with (where SQL-expressible) a
-DuckDB oracle SQL string over the driver's pre-registered parquet views.
+"""Per-operator DuckDB parity cases for ``tests/test_entry_contract.py``:
+each library operator wrapped as a ``(spark, sf_dir) -> DataFrame`` case,
+paired with a DuckDB oracle SQL string over the sf parquet tables
+registered as views.
 
 The transcript-shaped queries derive a deterministic turn table from the
 ``documents`` parquet (8-word chunks — same derivation in Spark and in the
-generated DuckDB SQL, see sqlgen.TURNS_CTE), then run the *real* engine
+generated DuckDB SQL, see dsql.TURNS_CTE), then run the *real* engine
 operators on it.  Where a query needs labels/scores/langs as *inputs*
 (filter/trim/salvage semantics), they are derived with engine-agnostic
-integer arithmetic (sqlgen.synth_*) so both sides are bit-identical.
+integer arithmetic (dsql.synth_*) so both sides are bit-identical.
 
 Operator ids in docstrings refer to SURVEY.md §2.
 """
@@ -19,7 +20,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from quality_filter import sqlgen
 from quality_filter.labels import LABELS
 from quality_filter.pipeline import (
     apply_filter_mode,
@@ -32,22 +32,18 @@ from quality_filter.pipeline import (
 )
 from quality_filter.rules import score_turns
 from quality_filter.scrub import scrub_expr
-from quality_filter.sqlgen import WORDS_PER_TURN
+from tests import duckdb_sql as dsql
 
-W = WORDS_PER_TURN
+W = dsql.WORDS_PER_TURN
 
 
 def _spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive scan spread (r9): the testdata parquet is a single
-    file with one row group, so Spark's split planning yields 1-2 scan
-    partitions and every narrow projection above it runs on one core —
-    at sf1.0 the turn/gram queries were measured ~10× slower than their
-    available parallelism.  Round-robin repartition to the session's
-    parallelism ONLY when the scan is under it; a production corpus with
-    thousands of splits passes through untouched (no shuffle added at
-    scale).  Rows whose floats could be summation-order-sensitive are
-    already partition-robust by construction (exact integer co-moments,
-    round-6/bround-9 — see quality_corr / doc_quality_corr docstrings)."""
+    """Scale-adaptive scan spread: the testdata parquet is a single file
+    with one row group, so Spark's split planning yields 1-2 scan
+    partitions and every narrow projection above it runs on one core.
+    Round-robin repartition to the session's parallelism ONLY when the
+    scan is under it, so the cases also run their operators on more than
+    one partition."""
     p = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < p:
         return df.repartition(p)
@@ -66,12 +62,11 @@ def derive_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic doc→turn derivation (C1 analog: explode to line grain,
     ``posexplode(split(...))`` family).
 
-    ``split(text)`` is hoisted into its own projection under the explode
-    (r9): Catalyst re-evaluates a transform lambda's CAPTURED expressions
-    once per element, so the inline split was O(words²/W) per document —
-    the same bug class the r8 shingle hoist fixed (see _word_shingles3);
-    the Generate is the barrier that keeps CollapseProject from
-    re-inlining it."""
+    ``split(text)`` is hoisted into its own projection under the explode:
+    Catalyst re-evaluates a transform lambda's CAPTURED expressions once
+    per element, so an inline split is O(words²/W) per document (see
+    _word_shingles3); the Generate is the barrier that keeps
+    CollapseProject from re-inlining it."""
     docs = _docs(spark, sf_dir)
     pre = docs.select(
         F.col("doc_id").cast("string").alias("conv_id"),
@@ -105,17 +100,17 @@ def derive_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _synth_cols(t: DataFrame) -> DataFrame:
     """Engine-agnostic synthetic label / clean_score / lang columns
-    (mirrors sqlgen.synth_*_sql)."""
-    mixed = (F.col("doc_id") * 31 + F.col("turn_idx") * 7) % sqlgen.N_SYNTH_LABELS
-    label = F.when(mixed < sqlgen.SYNTH_CLEAN_BELOW, F.lit("Clean")).otherwise(
+    (mirrors dsql.synth_*_sql)."""
+    mixed = (F.col("doc_id") * 31 + F.col("turn_idx") * 7) % dsql.N_SYNTH_LABELS
+    label = F.when(mixed < dsql.SYNTH_CLEAN_BELOW, F.lit("Clean")).otherwise(
         F.element_at(
             F.array(*[F.lit(l) for l in LABELS[1:]]),
-            ((mixed - sqlgen.SYNTH_CLEAN_BELOW).cast("int") % 8) + 1,
+            ((mixed - dsql.SYNTH_CLEAN_BELOW).cast("int") % 8) + 1,
         )
     )
     score_k = (F.col("doc_id") * 131 + F.col("turn_idx") * 17) % 1001
     lang = F.element_at(
-        F.array(*[F.lit(l) for l in sqlgen.SYNTH_LANGS]),
+        F.array(*[F.lit(l) for l in dsql.SYNTH_LANGS]),
         ((F.col("doc_id") + F.col("turn_idx") * 3) % 5).cast("int") + 1,
     )
     return (
@@ -127,34 +122,32 @@ def _synth_cols(t: DataFrame) -> DataFrame:
 
 _SYNTH_SELECT = (
     f"SELECT conv_id, doc_id, doc_lang, turn_idx, text, "
-    f"{sqlgen.synth_label_sql()} AS label, "
-    f"{sqlgen.synth_score_k_sql()} / 1000.0 AS clean_score, "
-    f"{sqlgen.synth_turn_lang_sql()} AS lang FROM turns"
+    f"{dsql.synth_label_sql()} AS label, "
+    f"{dsql.synth_score_k_sql()} / 1000.0 AS clean_score, "
+    f"{dsql.synth_turn_lang_sql()} AS lang FROM turns"
 )
 
 
 def _with_turns(sql: str) -> str:
-    return f"WITH {sqlgen.TURNS_CTE}, scored AS ({_SYNTH_SELECT}) {sql}"
+    return f"WITH {dsql.TURNS_CTE}, scored AS ({_SYNTH_SELECT}) {sql}"
 
 
 # ---------------------------------------------------------------------------
-# the registry
+# the cases
 # ---------------------------------------------------------------------------
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
-def _register(name: str, sql: str | None = None):
+def _register(name: str, sql: str):
     def deco(fn):
         if name in QUERIES:
-            # A silent dict overwrite would REPLACE an already-verified
-            # query with an unstamped one (bit us in r5/r6 with shadowed
-            # langid_turns/perplexity_turns rows) — fail loudly instead.
+            # a silent dict overwrite would replace a case with another
+            # one under the same test id — fail loudly instead
             raise ValueError(f"duplicate query registration: {name!r}")
         QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
+        ORACLES[name] = sql
         return fn
 
     return deco
@@ -164,9 +157,9 @@ def _register(name: str, sql: str | None = None):
 
 @_register(
     "rules_score",
-    f"WITH {sqlgen.TURNS_CTE} SELECT doc_id, turn_idx, "
-    f"{sqlgen.label_sql('text')} AS label, "
-    f"{sqlgen.clean_score_sql('text', sqlgen.label_sql('text'))} AS clean_score "
+    f"WITH {dsql.TURNS_CTE} SELECT doc_id, turn_idx, "
+    f"{dsql.label_sql('text')} AS label, "
+    f"{dsql.clean_score_sql('text', dsql.label_sql('text'))} AS clean_score "
     f"FROM turns",
 )
 def q_rules_score(spark, sf_dir):
@@ -307,7 +300,7 @@ _PII_TEXT_EXPR = "(text || '" + _PII_SUFFIX + "')"
 
 @_register(
     "scrub_pii",
-    f"SELECT doc_id, {sqlgen.scrub_sql(_PII_TEXT_EXPR)} AS scrubbed_text FROM documents",
+    f"SELECT doc_id, {dsql.scrub_sql(_PII_TEXT_EXPR)} AS scrubbed_text FROM documents",
 )
 def q_scrub_pii(spark, sf_dir):
     """M7: regexp_replace PII scrub chain, byte-for-byte."""
@@ -318,40 +311,9 @@ def q_scrub_pii(spark, sf_dir):
     )
 
 
-# -- G aggregates -----------------------------------------------------------
-
-@_register(
-    "doc_quality_stats",
-    _with_turns(
-        "SELECT doc_id, count(*) AS n_turns, "
-        "CAST(sum(CAST((doc_id*131 + turn_idx*17) % 1001 AS BIGINT)) AS DOUBLE) / (1000.0 * count(*)) AS mean_score, "
-        "min((doc_id*131 + turn_idx*17) % 1001) / 1000.0 AS min_score, "
-        "CAST(sum(CASE WHEN label = 'Clean' THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS pct_clean "
-        "FROM scored GROUP BY doc_id"
-    ),
-)
-def q_doc_quality_stats(spark, sf_dir):
-    """G6: per-doc quality aggregates (quality_label_correlation notebook);
-    integer sums → one final division for float determinism."""
-    t = _synth_cols(derive_turns(spark, sf_dir))
-    k = (F.col("doc_id") * 131 + F.col("turn_idx") * 17) % 1001
-    return t.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        (
-            F.sum(k.cast("bigint")).cast("double")
-            / (F.lit(1000.0) * F.count(F.lit(1)))
-        ).alias("mean_score"),
-        (F.min(k) / F.lit(1000.0)).alias("min_score"),
-        (
-            F.sum(F.when(F.col("label") == "Clean", 1).otherwise(0)).cast("double")
-            / F.count(F.lit(1))
-        ).alias("pct_clean"),
-    )
-
-
 @_register(
     "label_freq",
-    f"WITH {sqlgen.TURNS_CTE} SELECT {sqlgen.label_sql('text')} AS label, "
+    f"WITH {dsql.TURNS_CTE} SELECT {dsql.label_sql('text')} AS label, "
     f"count(*) AS n FROM turns GROUP BY 1",
 )
 def q_label_freq(spark, sf_dir):
@@ -362,7 +324,7 @@ def q_label_freq(spark, sf_dir):
 
 @_register(
     "label_top3",
-    f"WITH {sqlgen.TURNS_CTE}, f AS (SELECT {sqlgen.label_sql('text')} AS label, "
+    f"WITH {dsql.TURNS_CTE}, f AS (SELECT {dsql.label_sql('text')} AS label, "
     f"count(*) AS n FROM turns GROUP BY 1) "
     f"SELECT label, n FROM f ORDER BY n DESC, label LIMIT 3",
 )
@@ -374,34 +336,6 @@ def q_label_top3(spark, sf_dir):
     return freq.orderBy(F.desc("n"), "label").limit(3)
 
 
-# -- dedup / similarity -----------------------------------------------------
-
-@_register(
-    "dedup_prefix_exact",
-    f"WITH {sqlgen.TURNS_CTE}, keyed AS ("
-    f" SELECT doc_id, turn_idx, md5(array_to_string(string_split(text,' ')[1:3], ' ')) AS fp"
-    f" FROM turns) "
-    f"SELECT fp, count(*) AS n_copies, min(doc_id*1000000 + turn_idx) AS keeper "
-    f"FROM keyed GROUP BY fp HAVING count(*) > 1",
-)
-def q_dedup_prefix_exact(spark, sf_dir):
-    """Exact dedup via hash-groupBy on a normalized fingerprint (3-word
-    prefix): duplicate groups with deterministic keeper."""
-    t = derive_turns(spark, sf_dir)
-    fp = F.md5(
-        F.encode(F.array_join(F.slice(F.split("text", " "), 1, 3), " "), "UTF-8")
-    )
-    keyed = t.select("doc_id", "turn_idx", fp.alias("fp"))
-    return (
-        keyed.groupBy("fp")
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.min(F.col("doc_id") * 1000000 + F.col("turn_idx")).alias("keeper"),
-        )
-        .filter(F.col("n_copies") > 1)
-    )
-
-
 def _word_shingles3(words_col):
     """3-word shingles from an ALREADY-SPLIT word-array column; empty for
     docs under 3 words (Spark sequence(0, -1) is DESCENDING and would
@@ -411,9 +345,8 @@ def _word_shingles3(words_col):
     Callers hoist ``split(text)`` into its own projection under the
     consuming explode and pass the bound attribute: Catalyst re-evaluates
     a transform lambda's CAPTURED expressions once per element, so an
-    inline split is O(words²) per document — the library twin
-    (dedup.word_shingles_from_words) measured the hoist 3× on the corpus
-    minhash stage.  The Generate under the second select is the barrier
+    inline split is O(words²) per document (the library twin is
+    dedup.word_shingles_from_words).  The Generate under the second select is the barrier
     that keeps CollapseProject from re-inlining the split."""
     n_sh = F.size(words_col) - 2
     return F.when(
@@ -423,50 +356,6 @@ def _word_shingles3(words_col):
             lambda i: F.array_join(F.slice(words_col, i + 1, 3), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-@_register(
-    "jaccard_near_dups",
-    "WITH sh AS (SELECT DISTINCT doc_id, unnest(list_transform(range(0, CAST(len(string_split(text,' ')) AS BIGINT) - 2),"
-    " i -> array_to_string(string_split(text,' ')[(i+1):(i+3)], ' '))) AS shingle"
-    " FROM documents WHERE doc_id < 200),"
-    "sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),"
-    "pairs AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS n_common"
-    " FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id"
-    " GROUP BY 1, 2) "
-    "SELECT p.a, p.b, p.n_common, sa.n AS n_a, sb.n AS n_b "
-    "FROM pairs p JOIN sizes sa ON p.a = sa.doc_id JOIN sizes sb ON p.b = sb.doc_id "
-    "WHERE CAST(p.n_common AS DOUBLE) / (sa.n + sb.n - p.n_common) >= 0.5",
-)
-def q_jaccard_near_dups(spark, sf_dir):
-    """n-gram Jaccard near-dup detection: 3-word shingles, shingle-join
-    candidate generation, Jaccard >= 0.5."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
-    words = docs.select("doc_id", F.split(F.col("text"), " ").alias("_w"))
-    sh = (
-        words.select("doc_id", F.explode(_word_shingles3(F.col("_w"))).alias("shingle"))
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("n_b"))
-    out = pairs.join(sa, "a").join(sb, "b")
-    return out.filter(
-        F.col("n_common").cast("double")
-        / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-        >= 0.5
-    ).select("a", "b", "n_common", "n_a", "n_b")
 
 
 _MERSENNE61 = (1 << 61) - 1
@@ -479,8 +368,8 @@ def _minhash_pair_ctes() -> str:
     # permutations (each s reorders shingles differently) WITHOUT the
     # chunk-min bias an earlier variant had (narrow chunk-mins concentrate
     # near 0 for long docs and blew the candidate join up 3.4×), and
-    # without r2's 8-independent-digests constant (8× md5 string hashing
-    # per shingle).  a + 7b < 8*2^60 = 2^63-8: no signed-64 overflow.
+    # without an 8-independent-digests construction (8× md5 string
+    # hashing per shingle).  a + 7b < 8*2^60 = 2^63-8: no signed-64 overflow.
     # Ends with a `cand` CTE so the near-dup clustering oracle can reuse
     # the identical pair construction.
     aggs = ", ".join(
@@ -503,24 +392,6 @@ def _minhash_pair_ctes() -> str:
         "cand AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b FROM bands a JOIN bands b"
         " ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)"
     )
-
-
-def _minhash_sql() -> str:
-    return f"WITH {_minhash_pair_ctes()} SELECT a, b FROM cand"
-
-
-@_register("minhash_candidates", _minhash_sql())
-def q_minhash_candidates(spark, sf_dir):
-    """MinHash+LSH candidate pairs: ONE md5 per shingle split into two
-    60-bit halves (a, b), 8 universal-hash permutations
-    h_s = (a + s*b) mod 2^61-1, 2 bands × 4 rows, band-collision detection
-    as an EQUI-join on (band_idx, band_hash) — the exploded-band layout
-    (one row per doc per band) keeps the join hash-partitionable; an OR of
-    band equalities would force a BroadcastNestedLoopJoin (O(n²) at
-    scale).  Same layout as dedup.lsh_candidates; the library path uses
-    seeded xxhash64 (dedup.py) — this query's md5 construction exists for
-    bit-exact DuckDB portability."""
-    return _minhash_pairs_df(_docs(spark, sf_dir))
 
 
 def _minhash_pairs_df(docs):
@@ -571,117 +442,7 @@ def _minhash_pairs_df(docs):
     )
 
 
-# -- text stats -------------------------------------------------------------
-
-@_register(
-    "token_stats",
-    "SELECT doc_id, len(string_split(text, ' ')) AS n_words, "
-    "CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct, "
-    "length(text) AS n_chars FROM documents",
-)
-def q_token_stats(spark, sf_dir):
-    """Token counting / text analysis over documents."""
-    docs = _docs(spark, sf_dir)
-    w = F.split("text", " ")
-    return docs.select(
-        "doc_id",
-        F.size(w).cast("int").alias("n_words"),
-        F.size(F.array_distinct(w)).cast("bigint").alias("n_distinct"),
-        F.length("text").alias("n_chars"),
-    )
-
-
-def _rep_stats_sql() -> str:
-    gram = (
-        "SELECT doc_id, {n} AS n, array_to_string(string_split(text,' ')"
-        "[(i+1):(i+{n})], ' ') AS g FROM documents, "
-        "unnest(range(0, CAST(len(string_split(text,' ')) AS BIGINT) - {m})) AS t(i)"
-    )
-    return (
-        f"WITH grams AS ({gram.format(n=2, m=1)} UNION ALL {gram.format(n=5, m=4)}), "
-        "counts AS (SELECT doc_id, n, g, count(*) AS c FROM grams GROUP BY 1, 2, 3), "
-        "stats AS (SELECT doc_id, "
-        " CAST(max(CASE WHEN n = 2 THEN c END) AS DOUBLE)"
-        "  / CAST(sum(CASE WHEN n = 2 THEN c END) AS DOUBLE) AS top2, "
-        " 1.0 - CAST(count(CASE WHEN n = 5 THEN 1 END) AS DOUBLE)"
-        "  / CAST(sum(CASE WHEN n = 5 THEN c END) AS DOUBLE) AS dup5 "
-        " FROM counts GROUP BY doc_id) "
-        "SELECT d.doc_id, coalesce(s.top2, 0.0) AS top2gram_frac, "
-        "coalesce(s.dup5, 0.0) AS dup5gram_frac, "
-        "coalesce(s.top2 > 0.20 OR s.dup5 > 0.15, false) AS repetitive "
-        "FROM documents d LEFT JOIN stats s ON d.doc_id = s.doc_id"
-    )
-
-
-@_register("repetition_stats", _rep_stats_sql())
-def q_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition quality signals (Rae et al. 2021 §A1.1
-    applied at word-n-gram grain): fraction of the doc's 2-grams covered
-    by its single most frequent 2-gram, and the fraction of duplicate
-    5-grams; ``repetitive`` flags docs past the Gopher-ish thresholds
-    (0.20 / 0.15).  One explode → one (doc, n, gram) count → one per-doc
-    aggregate: both aggs are map-side combinable and shuffle one row per
-    distinct gram — the standard layout that survives 100 TB (same shape
-    as the minhash signature pass)."""
-    docs = _docs(spark, sf_dir)
-    # hoist split(text) into its own projection under the explode (r9):
-    # the transform lambdas below capture the word array, and Catalyst
-    # re-evaluates captured expressions once per ELEMENT — the inline
-    # split was O(words²) per document (see _word_shingles3)
-    words = docs.select("doc_id", F.split("text", " ").alias("_w"))
-    w = F.col("_w")
-
-    def grams(n: int):
-        cnt = F.size(w) - (n - 1)
-        return F.when(
-            cnt >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
-                lambda i: F.struct(
-                    F.lit(n).alias("n"), F.array_join(F.slice(w, i, n), " ").alias("g")
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<n:int,g:string>>"))
-
-    exploded = words.select(
-        "doc_id", F.explode(F.concat(grams(2), grams(5))).alias("gr")
-    ).select(
-        "doc_id",
-        F.col("gr.n").alias("n"),
-        # shuffle the 64-bit gram hash, not the gram string: identical
-        # count classes absent an intra-doc xxhash64 collision (~5e-12
-        # for 10^4-gram docs) at 2-3× fewer shuffle bytes — the lever
-        # that matters when this runs over 100 TB of text
-        F.xxhash64(F.col("gr.g")).alias("gh"),
-    )
-    counts = exploded.groupBy("doc_id", "n", "gh").agg(F.count(F.lit(1)).alias("c"))
-    is2, is5 = F.col("n") == 2, F.col("n") == 5
-    stats = counts.groupBy("doc_id").agg(
-        (
-            F.max(F.when(is2, F.col("c"))).cast("double")
-            / F.sum(F.when(is2, F.col("c"))).cast("double")
-        ).alias("top2"),
-        (
-            F.lit(1.0)
-            - F.count(F.when(is5, F.lit(1))).cast("double")
-            / F.sum(F.when(is5, F.col("c"))).cast("double")
-        ).alias("dup5"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(stats, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("top2", F.lit(0.0)).alias("top2gram_frac"),
-            F.coalesce("dup5", F.lit(0.0)).alias("dup5gram_frac"),
-            F.coalesce(
-                (F.col("top2") > 0.20) | (F.col("dup5") > 0.15), F.lit(False)
-            ).alias("repetitive"),
-        )
-    )
-
-
-# -- sampling / splits / joins / windows ------------------------------------
+# -- sampling / splits ------------------------------------------------------
 
 @_register(
     "stratified_split",
@@ -707,77 +468,12 @@ def q_stratified_split(spark, sf_dir):
     )
 
 
-@_register(
-    "semi_join_purchasers",
-    "SELECT user_id, count(*) AS n_events FROM events e "
-    "WHERE EXISTS (SELECT 1 FROM events p WHERE p.user_id = e.user_id "
-    "AND p.event_type = 'purchase') GROUP BY user_id",
-)
-def q_semi_join_purchasers(spark, sf_dir):
-    """J1: left-semi join against an id set (src/sample_data.py:33-36) —
-    all events of users who ever purchased."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    purchasers = events.filter(F.col("event_type") == "purchase").select("user_id").distinct()
-    return (
-        events.join(F.broadcast(purchasers), "user_id", "left_semi")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-@_register(
-    "window_events",
-    "SELECT user_id, event_id, "
-    "row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn, "
-    "lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type "
-    "FROM events",
-)
-def q_window_events(spark, sf_dir):
-    """R7-family ordered windows: stable per-user event ordering."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.select(
-        "user_id",
-        "event_id",
-        F.row_number().over(w).alias("rn"),
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-
-
-@_register(
-    "tpch_pricing_summary",
-    "SELECT l_returnflag, l_linestatus, "
-    # DuckDB sum(BIGINT) returns HUGEINT (int128) — cast back to BIGINT so
-    # the driver's schema/value hash matches Spark's bigint
-    "CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty, "
-    "CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_base_price, "
-    "count(*) AS count_order FROM lineitem "
-    "WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00' "
-    "GROUP BY l_returnflag, l_linestatus",
-)
-def q_tpch_pricing_summary(spark, sf_dir):
-    """G-family groupBy aggregate with exact integer-domain sums."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"),
-            (
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint")).cast("double")
-                / F.lit(100.0)
-            ).alias("sum_base_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
 # -- full pipeline (C2+C3+M7+A3 composed) -----------------------------------
 
 _FULL_SQL = (
-    f"WITH {sqlgen.TURNS_CTE}, lab AS ("
-    f" SELECT conv_id, turn_idx, text, {sqlgen.label_sql('text')} AS label FROM turns) "
-    f"SELECT conv_id, string_agg({sqlgen.scrub_sql('text')}, chr(10) ORDER BY turn_idx) AS text, "
+    f"WITH {dsql.TURNS_CTE}, lab AS ("
+    f" SELECT conv_id, turn_idx, text, {dsql.label_sql('text')} AS label FROM turns) "
+    f"SELECT conv_id, string_agg({dsql.scrub_sql('text')}, chr(10) ORDER BY turn_idx) AS text, "
     f"count(*) AS n_turns FROM lab WHERE label = 'Clean' GROUP BY conv_id"
 )
 
@@ -797,13 +493,8 @@ def q_full_clean_reassemble(spark, sf_dir):
     return reassemble(scrubbed, "scrubbed_text").select("conv_id", "text", "n_turns")
 
 
-# (The former rows-only langid_turns/perplexity_turns registrations that
-# lived here were upgraded to arithmetic-oracle rows below; _register now
-# raises on duplicate names, so shadowing is impossible.)
-
-
 # ---------------------------------------------------------------------------
-# round-1 extension: dedup / simhash / ANN / text-analysis / sessionize
+# dedup / simhash / ANN / text analysis
 # ---------------------------------------------------------------------------
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '[ \\t\\r\\n]+', ' ', 'g'))"
@@ -850,8 +541,7 @@ def q_simhash16_docs(spark, sf_dir):
     Grouped layout (see dedup.simhash64_grouped): explode words, md5 once
     per token, extract the 4 leading hex nibbles once, 16 codegen'd
     conditional-sum aggregates — replaces 16 interpreted aggregate-HOF
-    passes that re-parsed the digest per bit (measured ~4× faster at
-    sf0.1).  Values identical; the DuckDB oracle is unchanged."""
+    passes that re-parsed the digest per bit.  Values identical."""
     from quality_filter.dedup import normalized_text
 
     docs = _docs(spark, sf_dir)
@@ -919,99 +609,6 @@ def q_ann_cosine_top5(spark, sf_dir):
 
 
 @_register(
-    "ann_ivf_top5",
-    # nprobe=nlist probes every cell → IVF degenerates to exact, so the
-    # brute-force oracle is valid; nprobe<nlist recall is pytest-bounded
-    # (tests/test_dedup_similarity.py)
-    "WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings), "
-    "q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 3), "
-    "p AS (SELECT q.query_id, v.vec_id AS neighbor_id, "
-    " round(list_sum(list_transform(range(1, 65), i -> qe[i] * e[i])) / "
-    " (sqrt(list_sum(list_transform(range(1, 65), i -> qe[i] * qe[i]))) * "
-    "  sqrt(list_sum(list_transform(range(1, 65), i -> e[i] * e[i])))), 6) AS cos "
-    " FROM v, q WHERE v.vec_id != q.query_id), "
-    "r AS (SELECT query_id, neighbor_id, "
-    " row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank "
-    " FROM p) "
-    "SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 5",
-)
-def q_ann_ivf_top5(spark, sf_dir):
-    """IVF ANN top-5 through the REAL scale path (similarity.ivf_topk:
-    KMeans cells, centroid literals folded into the plan, cell-id
-    equi-join) run at nprobe=nlist so every cell is probed and the result
-    is provably exact — the same brute-force oracle as ann_cosine_top5
-    then checks the whole machinery end-to-end.  The sub-exhaustive
-    nprobe<nlist setting has a pytest recall bound instead (recall is
-    data-dependent, not oracle-expressible)."""
-    from quality_filter.similarity import ivf_topk
-
-    emb = _embeddings(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 3)
-    # max_iter=2 / init_mode='random': at nprobe=nlist the output is
-    # centroid-invariant (see ivf_topk), so the KMeans fit needs only
-    # enough work to exercise the machinery — not Spark's default 20
-    # training jobs nor k-means||'s multi-pass distributed seeding
-    out = ivf_topk(
-        emb, queries, k=5, nlist=8, nprobe=8, seed=42, cos_round=6, max_iter=2,
-        init_mode="random",
-    )
-    return out.select("query_id", "neighbor_id", "rank")
-
-
-def _langid_sql_oracle() -> str:
-    from quality_filter.textstats import LANG_MARKERS
-
-    structs = []
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        arr = "[" + ", ".join(f"'{m}'" for m in markers) + "]"
-        n = (
-            f"len(list_filter(string_split_regex(lower(text), '[^a-zçéàüöäñ]+'), "
-            f"w -> list_contains({arr}, w)))"
-        )
-        structs.append(f"struct_pack(n := {n}, lang := '{lang}')")
-    best = f"list_max([{', '.join(structs)}])"
-    return (
-        f"SELECT doc_id, CASE WHEN ({best}).n > 0 THEN ({best}).lang "
-        f"ELSE 'und' END AS lang_guess FROM documents"
-    )
-
-
-@_register("langid_sql_docs", _langid_sql_oracle())
-def q_langid_sql_docs(spark, sf_dir):
-    """SQL-only language guess (marker-word lexicon argmax) — the
-    Catalyst-native langid fallback, fully oracle-checkable."""
-    from quality_filter.textstats import langid_sql_expr
-
-    docs = _docs(spark, sf_dir)
-    return docs.select("doc_id", langid_sql_expr(F.col("text")).alias("lang_guess"))
-
-
-@_register(
-    "lang_source_crosstab",
-    "SELECT lang, source, count(*) AS n FROM documents GROUP BY lang, source",
-)
-def q_lang_source_crosstab(spark, sf_dir):
-    """G8 crosstab as a two-key groupBy."""
-    return _docs(spark, sf_dir).groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-@_register(
-    "union_distinct_users",
-    "SELECT DISTINCT user_id FROM ("
-    " SELECT user_id FROM events WHERE event_type = 'click'"
-    " UNION ALL SELECT user_id FROM events WHERE event_type = 'purchase')",
-)
-def q_union_distinct_users(spark, sf_dir):
-    """U1/U2: unionByName + distinct."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    a = events.filter("event_type = 'click'").select("user_id")
-    b = events.filter("event_type = 'purchase'").select("user_id")
-    return a.unionByName(b).distinct()
-
-
-@_register(
     "shard_events",
     "SELECT event_id, user_id FROM events "
     "WHERE (CAST(event_id AS HUGEINT) * 2654435761) % 5 = 0",
@@ -1024,35 +621,6 @@ def q_shard_events(spark, sf_dir):
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     return events.filter(deterministic_bucket("event_id", 5) == 0).select(
         "event_id", "user_id"
-    )
-
-
-@_register(
-    "sessionize_events",
-    "WITH t AS (SELECT user_id, event_id, ts, epoch_us(ts) AS us, "
-    " lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us "
-    " FROM events) "
-    "SELECT user_id, event_id, "
-    # CAST: DuckDB's windowed sum over integers yields HUGEINT
-    " CAST(sum(CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000 THEN 1 ELSE 0 END)"
-    "  OVER (PARTITION BY user_id ORDER BY ts, event_id"
-    "        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id "
-    "FROM t",
-)
-def q_sessionize_events(spark, sf_dir):
-    """Gap-based sessionization (30-min inactivity): lag + running sum of
-    session-break flags — the batch analog of a session window."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # parquet ts is TIMESTAMP_NTZ; session TZ is UTC so the cast is exact
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap = us - F.lag(us).over(w)
-    brk = F.when(gap.isNull() | (gap > 1800 * 1000 * 1000), 1).otherwise(0)
-    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return events.select(
-        "user_id", "event_id", F.sum(brk).over(run).alias("session_id")
     )
 
 
@@ -1104,12 +672,12 @@ def q_class_weights(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# round-2 extension: A4 resegmentation, A9 lang map, G8 correlation,
-# oracle-bound UDF scorers, salvage end-to-end
+# A4 resegmentation, A9 lang map, oracle-bound UDF scorers, salvage
+# end-to-end
 # ---------------------------------------------------------------------------
 
 
-@_register("resegment_docs", None)  # oracle attached below (module import)
+@_register("resegment_docs", dsql.resegment_sql())
 def q_resegment_docs(spark, sf_dir):
     """A4: sentence-boundary resegmentation + greedy 200-char packing
     (src/label_lines_with_LLM.py:144-168) — aggregate-HOF fold, narrow."""
@@ -1118,24 +686,15 @@ def q_resegment_docs(spark, sf_dir):
     return resegment(_docs(spark, sf_dir))
 
 
-def _attach_reseg_oracle():
-    from quality_filter.reseg import resegment_sql
-
-    ORACLES["resegment_docs"] = resegment_sql()
-
-
-_attach_reseg_oracle()
-
-
 def _lang_code_names_sql() -> str:
-    from quality_filter.langmap import LANGUAGE_CODES, lang_name_case_sql
+    from quality_filter.langmap import LANGUAGE_CODES
 
     codes = LANGUAGE_CODES + ["xxx_Latn"]  # one unknown to exercise fallback
     arr = "[" + ", ".join(f"'{c}'" for c in codes) + "]"
     code = f"({arr}[CAST(doc_id % {len(codes)} AS INT) + 1])"
     return (
         f"SELECT doc_id, {code} AS code, "
-        f"{lang_name_case_sql(code)} AS language FROM documents"
+        f"{dsql.lang_name_case_sql(code)} AS language FROM documents"
     )
 
 
@@ -1155,43 +714,6 @@ def q_lang_code_names(spark, sf_dir):
         code.alias("code"),
         lang_name_expr(code).alias("language"),
     )
-
-
-_CORR_SQL = _with_turns(
-    "SELECT CAST(n*sxy - sx*sy AS DOUBLE) / "
-    "(sqrt(CAST(n*sxx - sx*sx AS DOUBLE)) * sqrt(CAST(n*syy - sy*sy AS DOUBLE))) "
-    "AS corr_score_clean FROM ("
-    " SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,"
-    "  CAST(sum(x*x) AS BIGINT) AS sxx, CAST(sum(y*y) AS BIGINT) AS syy,"
-    "  CAST(sum(x*y) AS BIGINT) AS sxy FROM ("
-    "  SELECT (doc_id*131 + turn_idx*17) % 1001 AS x,"
-    "   CASE WHEN label = 'Clean' THEN 1 ELSE 0 END AS y FROM scored))"
-)
-
-
-@_register("quality_corr", _CORR_SQL)
-def q_quality_corr(spark, sf_dir):
-    """G8: Pearson correlation between per-turn quality score and
-    cleanliness (quality_label_correlation notebook cell 2) — computed
-    from exact integer co-moment sums (one map-side-combinable aggregate),
-    so the double result is bit-identical across engines regardless of
-    partitioning or sum order."""
-    t = _synth_cols(derive_turns(spark, sf_dir))
-    x = ((F.col("doc_id") * 131 + F.col("turn_idx") * 17) % 1001).cast("bigint")
-    y = F.when(F.col("label") == "Clean", F.lit(1)).otherwise(F.lit(0)).cast("bigint")
-    s = t.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-        F.sum(x * y).alias("sxy"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = F.sqrt((F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")) * F.sqrt(
-        (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    )
-    return s.select((num / den).alias("corr_score_clean"))
 
 
 # -- deterministic seed-language text: lets the REAL pandas-UDF scorers be
@@ -1234,7 +756,7 @@ def q_langid_turns(spark, sf_dir):
     """M5: the real n-gram langid pandas UDF over deterministic
     known-language text (two seed sentences per doc).  The oracle states
     the expected language arithmetically; any misprediction or confidence
-    collapse by the actual model breaks the hash."""
+    collapse by the actual model breaks the match."""
     from quality_filter.langid import with_langid
 
     docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("text"))
@@ -1268,10 +790,10 @@ def q_perplexity_turns(spark, sf_dir):
 def _ppl_expected_sql() -> str:
     """Value-exact perplexity oracle: the seed text is a pure function of
     doc_id mod M (M = lcm(n_langs, per-language sentence counts)), so the
-    expected logppl of EVERY residue class can be computed once driver-
-    side with the same frozen artifact the UDF broadcasts, and stated as
-    literals — the driver row is then hash-exact on actual logppl values,
-    not just on a separation boolean."""
+    expected logppl of EVERY residue class can be computed once locally
+    with the same frozen artifact the UDF broadcasts, and stated as
+    literals — the case is then exact on actual logppl values, not just
+    on a separation boolean."""
     import math
 
     import pandas as pd
@@ -1304,7 +826,7 @@ def q_perplexity_values(spark, sf_dir):
     """M6 value parity: the REAL trigram-LM pandas UDF over deterministic
     seed text; the oracle states every expected logppl arithmetically
     (computed from the same frozen artifact), so any drift in hashing,
-    smoothing, rounding, or the Arrow path breaks the hash."""
+    smoothing, rounding, or the Arrow path breaks the match."""
     from quality_filter.perplexity import with_perplexity
 
     docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("text"))
@@ -1332,8 +854,8 @@ def _salvage_e2e_sql() -> str:
         + "]"
     )
     larr = "[" + ", ".join(f"'{l}'" for l in langs) + "]"
-    lbl = sqlgen.label_sql("text")
-    score = sqlgen.clean_score_sql("text", lbl)
+    lbl = dsql.label_sql("text")
+    score = dsql.clean_score_sql("text", lbl)
     return (
         f"WITH sl AS (SELECT doc_id, {nested}[CAST(doc_id % {len(langs)} AS INT) + 1] AS sents, "
         f" {larr}[CAST(doc_id % {len(langs)} AS INT) + 1] AS exp_lang FROM documents), "
@@ -1394,17 +916,6 @@ def q_salvage_langid_e2e(spark, sf_dir):
     return out.select("doc_id", "turn_idx", "lang")
 
 
-# -- A7/A8: LLM-labeling plumbing -------------------------------------------
-
-_WRAP_VARIANTS_SQL = (
-    "(CASE CAST(doc_id % 4 AS INT) "
-    "WHEN 0 THEN '```json' || chr(10) || '{\"label\": \"Clean\", \"score\": 3}' || chr(10) || '```' "
-    "WHEN 1 THEN ' {\"label\": \"Spam\", \"score\": 1} ' "
-    "WHEN 2 THEN '{''label'': ''Toxic'', ''score'': 2}' "
-    "ELSE '{\"label\": \"Clean\", \"score\": 4,}' || chr(10) || '```' END)"
-)
-
-
 @_register(
     "llm_output_repair",
     "SELECT doc_id, "
@@ -1454,7 +965,7 @@ def _classify_prompt_sql() -> str:
         "|| '------' || chr(10), '' ORDER BY turn_idx)"
     )
     return (
-        f"WITH {sqlgen.TURNS_CTE} "
+        f"WITH {dsql.TURNS_CTE} "
         f"SELECT conv_id, {lit(pre)} || doc_lang || {lit(mid)} || {lines} || {lit(post)} AS prompt "
         f"FROM turns WHERE turn_idx < 3 GROUP BY conv_id, doc_lang"
     )
@@ -1483,69 +994,6 @@ def q_classify_prompt_format(spark, sf_dir):
     )
 
 
-_DOC_CORR_SQL = _with_turns(
-    "SELECT round(corr(ms, pc), 6) AS corr_doc_score_pct_clean FROM ("
-    " SELECT doc_id,"
-    "  CAST(sum(CAST((doc_id*131 + turn_idx*17) % 1001 AS BIGINT)) AS DOUBLE)"
-    "   / (1000.0 * count(*)) AS ms,"
-    "  CAST(sum(CASE WHEN label = 'Clean' THEN 1 ELSE 0 END) AS DOUBLE)"
-    "   / count(*) AS pc"
-    " FROM scored GROUP BY doc_id)"
-)
-
-
-@_register("doc_quality_corr", _DOC_CORR_SQL)
-def q_doc_quality_corr(spark, sf_dir):
-    """G8, notebook parity: Pearson corr between per-DOC mean quality
-    score and %Clean (quality_label_correlation.ipynb cell 2) via the
-    built-in corr aggregate.  Per-doc inputs are exact doubles from
-    integer sums; the final corr is rounded to 6 decimals (engines'
-    co-moment accumulation orders differ only at the 17th significant
-    digit — measured across 3/8/32 shuffle partitions)."""
-    t = _synth_cols(derive_turns(spark, sf_dir))
-    k = (F.col("doc_id") * 131 + F.col("turn_idx") * 17) % 1001
-    per = t.groupBy("doc_id").agg(
-        (
-            F.sum(k.cast("bigint")).cast("double")
-            / (F.lit(1000.0) * F.count(F.lit(1)))
-        ).alias("ms"),
-        (
-            F.sum(F.when(F.col("label") == "Clean", 1).otherwise(0)).cast("double")
-            / F.count(F.lit(1))
-        ).alias("pc"),
-    )
-    return per.agg(F.round(F.corr("ms", "pc"), 6).alias("corr_doc_score_pct_clean"))
-
-
-# -- text-analysis + embedding near-dup driver coverage ----------------------
-
-
-@_register(
-    "doc_fingerprint",
-    None,  # attached below from the shared generator
-)
-def q_doc_fingerprint(spark, sf_dir):
-    """Order-sensitive rolling document fingerprint (md5-based portable
-    polynomial; see textstats.fingerprint_md5_expr — 'a b' != 'b a',
-    unlike a bag-of-words hash)."""
-    from quality_filter.textstats import fingerprint_md5_expr
-
-    return _docs(spark, sf_dir).select(
-        "doc_id", fingerprint_md5_expr(F.col("text")).alias("fp")
-    )
-
-
-def _attach_fp_oracle():
-    from quality_filter.textstats import fingerprint_md5_sql
-
-    ORACLES["doc_fingerprint"] = (
-        f"SELECT doc_id, {fingerprint_md5_sql('text')} AS fp FROM documents"
-    )
-
-
-_attach_fp_oracle()
-
-
 def _quality_score_sql() -> str:
     from quality_filter.textstats import STOPWORDS
 
@@ -1566,7 +1014,7 @@ def _quality_score_sql() -> str:
         f"(0.3 * {len_sat} + 0.25 * {alpha} + 0.25 * {rep}"
         f" + 0.2 * least({stop_ratio} * 4.0, 1.0))"
     )
-    return f"SELECT doc_id, {sqlgen.bround3_sql(raw)} AS quality_score FROM documents"
+    return f"SELECT doc_id, {dsql.bround3_sql(raw)} AS quality_score FROM documents"
 
 
 @_register("doc_quality_score", _quality_score_sql())
@@ -1711,7 +1159,7 @@ _NGRAM8 = (
 
 
 # Shared by decontaminate_docs (exact path) and decontaminate_bloom_docs:
-# the Bloom variant is stamped against the SAME exact-gram oracle (see its
+# the Bloom variant is checked against the SAME exact-gram oracle (see its
 # docstring for why equality — not just superset — holds at this sizing).
 _DECONTAM_SQL = (
     "WITH benchdocs AS ("
@@ -1856,12 +1304,11 @@ def q_substring_dedup_docs(spark, sf_dir):
     millions of occurrences reduce in the combiner); reassembly is
     explode → anti-join → ordered group-concat, all keyed on doc_id.
 
-    grams='hof' (r9): the composed op measured 3.2 vs 5.3 s at sf1.0 —
-    the hof marking path (split hoisted r9) skips the window strategy's
-    extra shuffle+sort of the word stream, which pays off whenever no
-    document approaches segment_size; the window strategy remains the
-    library default for corpora with 10⁷-word documents.  Output
-    identical (strategy parity pinned by tests/test_round6.py)."""
+    grams='hof': the hof marking path skips the window strategy's extra
+    shuffle+sort of the word stream, which pays off whenever no document
+    approaches segment_size; the window strategy remains the library
+    default for corpora with 10⁷-word documents.  Output identical
+    (strategy parity pinned by tests/test_round6.py)."""
     from quality_filter.dedup import substring_dedup
 
     return substring_dedup(_docs(spark, sf_dir), k=5, grams="hof")
@@ -1925,31 +1372,6 @@ def q_mixture_upsample_docs(spark, sf_dir):
     return out.select("doc_id", "source", "copy_idx")
 
 
-def _top_quality_sql() -> str:
-    qsql = _quality_score_sql()
-    return (
-        f"WITH s AS ({qsql}), "
-        "thr AS (SELECT quantile_cont(quality_score, 0.75) AS t FROM s) "
-        "SELECT s.doc_id, s.quality_score FROM s, thr WHERE s.quality_score >= thr.t"
-    )
-
-
-@_register("top_quality_docs", _top_quality_sql())
-def q_top_quality_docs(spark, sf_dir):
-    """Quality-threshold selection (FineWeb-style): keep the top 25% of
-    docs by heuristic quality score.  The cutoff is one scalar from a
-    single aggregate pass (exact sort-based percentile here — matches
-    DuckDB quantile_cont bit-for-bit on the bround-3 scores; the at-scale
-    swap-in is approx_percentile, same plan shape, see
-    textstats.select_top_quality) folded into a narrow filter — no global
-    sort or rank shuffle."""
-    from quality_filter.textstats import select_top_quality
-
-    return select_top_quality(_docs(spark, sf_dir), frac=0.25).select(
-        "doc_id", "quality_score"
-    )
-
-
 def _eval_report_ctes() -> str:
     """The shared (label, prediction) → per-class report CTE chain, ending
     in ``rep`` with columns (class, support, predicted, tp, "precision",
@@ -1987,12 +1409,12 @@ def _eval_report_sql() -> str:
 
 
 def _eval_summary_sql() -> str:
-    # bround-9 (sqlgen.bround_sql — Spark HALF_EVEN tie rule, NOT DuckDB
+    # bround-9 (dsql.bround_sql — Spark HALF_EVEN tie rule, NOT DuckDB
     # round which is half-away-from-zero on the raw binary) mirrors
     # evalreport.eval_summary: parallel float AVG is summation-order-
     # sensitive in BOTH engines (±1 ulp run-to-run).  Macro averages over
     # ALL rep rows (true ∪ predicted classes — sklearn labels=None).
-    from quality_filter.sqlgen import bround_sql
+    from tests.duckdb_sql import bround_sql
 
     mp = bround_sql('AVG("precision")', 9)
     mr = bround_sql('AVG("recall")', 9)
@@ -2013,7 +1435,7 @@ def _mm_payload(i: int):
     """Frozen deterministic media payload for residue class ``i``: cycles
     real decodable formats (binary PPM, zlib PNG RGB/RGBA, PCM WAV) so the
     stdlib codec paths — PPM header parse, PNG filter reversal, WAV frame
-    read — are all exercised by the driver row."""
+    read — are all exercised by the case."""
     from quality_filter import multimodal as MM
 
     variant = i % 3
@@ -2027,8 +1449,8 @@ def _mm_payload(i: int):
 def _multimodal_sql() -> str:
     """Value-exact multimodal oracle: payloads are a pure function of
     doc_id % 6, so the expected feature values of every residue class are
-    computed ONCE driver-side with the same decode+featurize code the
-    mapInPandas operator runs, and stated as literals — hash-exact on
+    computed ONCE locally with the same decode+featurize code the
+    mapInPandas operator runs, and stated as literals — exact on
     actual decoded-content features (mirrors _ppl_expected_sql)."""
     from quality_filter import multimodal as MM
 
@@ -2060,7 +1482,7 @@ def q_multimodal_features(spark, sf_dir):
     ``extract_features(use_real_codec=True)`` mapInPandas path, and emit
     four feature components whose values the oracle states literally —
     any drift in the PPM/PNG/WAV decoders, the featurizer, or the
-    binary→Arrow→numpy plumbing breaks the hash."""
+    binary→Arrow→numpy plumbing breaks the match."""
     import pandas as pd
 
     from quality_filter.multimodal import extract_features
@@ -2070,13 +1492,12 @@ def q_multimodal_features(spark, sf_dir):
     ids = _docs(spark, sf_dir).select("doc_id")
     media_schema = "doc_id long, modality string, payload binary"
 
-    def synth(batches):
-        from quality_filter.entry_queries import _mm_payload
+    # payloads are a pure function of doc_id % 6 — build each residue's
+    # payload once and ship the six to the tasks in the closure instead of
+    # re-running the PNG/WAV synth (zlib compress per call) on every row
+    arms = [_mm_payload(r) for r in range(_MM_RESIDUES)]
 
-        # payloads are a pure function of doc_id % 6 — build each residue's
-        # payload once per task instead of re-running the PNG/WAV synth
-        # (zlib compress per call) on every row (r9)
-        arms = [_mm_payload(r) for r in range(_MM_RESIDUES)]
+    def synth(batches):
         for pdf in batches:
             mods, payloads = [], []
             for d in pdf["doc_id"]:
@@ -2172,68 +1593,6 @@ ORACLES["cohen_kappa"] = _with_turns(
 )
 
 
-@_register(
-    "doc_length_histogram",
-    "SELECT CAST(floor(log2(greatest(n_chars, 1))) AS INT) AS log2_bucket,"
-    " count(*) AS n, min(n_chars) AS min_chars, max(n_chars) AS max_chars"
-    " FROM documents GROUP BY 1",
-)
-def q_doc_length_histogram(spark, sf_dir):
-    """Corpus length profile (FineWeb-style data audit): documents
-    bucketed by floor(log2(n_chars)).  One map-side-combinable aggregate
-    over ≤64 buckets — corpus-size-independent output."""
-    docs = _docs(spark, sf_dir)
-    bucket = F.floor(F.log2(F.greatest(F.col("n_chars"), F.lit(1)))).cast("int")
-    return docs.groupBy(bucket.alias("log2_bucket")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-    )
-
-
-@_register(
-    "top_tokens",
-    "WITH w AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents) "
-    "SELECT token, count(*) AS n FROM w WHERE token <> ''"
-    " GROUP BY 1 ORDER BY n DESC, token LIMIT 20",
-)
-def q_top_tokens(spark, sf_dir):
-    """Corpus token-frequency head (Zipf audit): top-20 whitespace tokens
-    with a deterministic (count desc, token asc) tiebreak.  Explode →
-    map-side-combined count → global top-k; the shuffle carries one row
-    per DISTINCT token, the limit is driver-side over k rows."""
-    docs = _docs(spark, sf_dir)
-    w = docs.select(F.explode(F.split(F.col("text"), " ")).alias("token")).filter(
-        F.col("token") != ""
-    )
-    return (
-        w.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("token"))
-        .limit(20)
-    )
-
-
-@_register(
-    "length_quantiles_by_source",
-    "SELECT source, quantile_cont(n_chars, 0.25) AS p25,"
-    " quantile_cont(n_chars, 0.5) AS p50, quantile_cont(n_chars, 0.75) AS p75"
-    " FROM documents GROUP BY source",
-)
-def q_length_quantiles_by_source(spark, sf_dir):
-    """Per-source length quantiles (corpus audit table): exact sort-based
-    percentiles, linear interpolation — matches DuckDB quantile_cont
-    bit-for-bit on integer inputs (same (1−d)·lo + d·hi formula).  At
-    10^12 rows the same plan swaps to approx_percentile (KLL sketch)."""
-    docs = _docs(spark, sf_dir)
-    q = F.percentile(F.col("n_chars"), F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
-    return docs.groupBy("source").agg(
-        F.element_at(q, 1).alias("p25"),
-        F.element_at(q, 2).alias("p50"),
-        F.element_at(q, 3).alias("p75"),
-    )
-
-
 _SEMDEDUP_COS = (
     "round(list_sum(list_transform(range(1, 65), i -> a.e[i] * b.e[i])) / "
     "(sqrt(list_sum(list_transform(range(1, 65), i -> a.e[i] * a.e[i]))) * "
@@ -2320,11 +1679,11 @@ def q_quality_weighted_docs(spark, sf_dir):
     from quality_filter.sampling import quality_weighted_sample
     from quality_filter.textstats import with_quality_score
 
-    # localCheckpoint barrier (r9): the sample's filter references the
+    # localCheckpoint barrier: the sample's filter references the
     # computed score, and pushdown substitutes the whole five-split
     # score expression into the predicate AND pushes it below the
     # spread Exchange — the score then evaluated twice per row on the
-    # unspread 2-partition scan (measured ~3.4 s vs ~1 s at sf1.0).  A
+    # unspread 2-partition scan.  A
     # nondeterministic barrier column does not survive column pruning
     # here (the final select drops it, so ColumnPruning removes it
     # before the pushdown check); materializing the tiny (id, score)
@@ -2363,16 +1722,6 @@ def q_near_dup_dedup_docs(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Registry order = registration order (stable for library consumers and for
-# tests/test_entry_contract.py, which checks EVERY entry regardless of
-# position).  The external driver's correctness harness stamps only a
-# bounded window of the registry (observed: exactly the first 50 entries
-# each round); the per-round rotation that decides WHICH rows sit inside
-# that window is harness policy, not library semantics, so it lives in the
-# driver adapter (__spark_entry__.py), not here.
-
-
-# ---------------------------------------------------------------------------
 # Gopher quality rules + C4 line filter (textstats.with_gopher_flags /
 # textstats.c4_line_filter).  The synthetic documents table is a
 # punctuation-free single-line word stream, so — as with the planted
@@ -2390,9 +1739,8 @@ _STOP_SUFFIX = "array('the','of','and','that','have','with')"
 
 def _structured_docs(spark, sf_dir):
     # The world-builder below is interpreted-HOF scaffolding; _docs
-    # already spreads the single-row-group scan across cores (r9 —
-    # the former explicit repartition here would now be a second,
-    # redundant exchange).
+    # already spreads the single-row-group scan across cores (an explicit
+    # repartition here would be a second, redundant exchange).
     d = _docs(spark, sf_dir)
     words = (
         f"CASE WHEN doc_id % 2 = 0 THEN concat({_W_WORDS}, {_STOP_SUFFIX}) "
@@ -2413,8 +1761,7 @@ def _structured_docs(spark, sf_dir):
     # and the former single-reference `nlines` column let the whole
     # filter(split(text)) tree be inlined INTO the transform lambda —
     # captured lambda expressions re-evaluate per element, making the
-    # world-builder O(words²/8) per document (r9; measured ~8× on the
-    # structured-world build at sf1.0).
+    # world-builder O(words²/8) per document.
     joined = (
         "array_join(transform("
         " sequence(0, greatest(1, cast(ceil(size(words) / 8.0) AS int)) - 1),"
@@ -2426,26 +1773,24 @@ def _structured_docs(spark, sf_dir):
         "     WHEN doc_id % 89 = 0 THEN concat(t, '\\n', 'lorem ipsum dolor sit amet.')"
         "     ELSE t END AS text",
     )
-    # localCheckpoint = pushdown/collapse BARRIER, not a cache (r9): the
+    # localCheckpoint = pushdown/collapse BARRIER, not a cache: the
     # consumers of this world filter on columns derived from `text`
     # (C4/Gopher gates, the qmodel margin band), and Catalyst's
     # PushDownPredicates substitutes aliases into pushed predicates with
     # no reference-count guard — each pushed predicate re-ran this whole
-    # interpreted HOF world-builder 3+ times per row (measured: the
-    # qmodel labeled build was 60 s at sf1.0 against 0.7 s for the world
-    # itself).  Materializing ~doc-table-sized rows once per invocation
-    # keeps every downstream operator reading attributes instead.  The
+    # interpreted HOF world-builder 3+ times per row.  Materializing
+    # ~doc-table-sized rows once per invocation keeps every downstream
+    # operator reading attributes instead.  The
     # world is still recomputed from the parquet input on every query
     # invocation — nothing persists across runs.
     return out.localCheckpoint()
 
 
-# NOTE (ADVICE r8 #4, documented rather than changed — the oracle SQL
-# text is fingerprint-frozen): DuckDB/RE2's \s here is [\t\n\f\r ] (no
-# \x0b), while the Spark kernels split on [ \t\n\x0b\f\r]+.  A vertical
-# tab INSIDE a line would diverge the two sides; \x0b does not occur in
-# the stamped worlds (the deterministic world-builders emit none), so
-# the stamp is sound with \x0b explicitly excluded from its domain.
+# NOTE: DuckDB/RE2's \s here is [\t\n\f\r ] (no \x0b), while the Spark
+# kernels split on [ \t\n\x0b\f\r]+.  A vertical tab INSIDE a line would
+# diverge the two sides; \x0b does not occur in the planted worlds (the
+# deterministic world-builders emit none), so the check is sound with
+# \x0b explicitly excluded from its domain.
 _D_WORDS = "list_filter(regexp_split_to_array(coalesce(text, ''), '\\s+'), w -> w <> '')"
 
 _C4WORLD_CTE = (
@@ -2735,16 +2080,16 @@ def q_paragraph_dedup_docs(spark, sf_dir):
     )
 
 
-# -- r7: trained-artifact round trips (train → persist → reload → score) -----
+# -- trained-artifact round trips (train → persist → reload → score) -----
 #
 # The planted labeled training world is one row per residue class
 # r ∈ [0, M): lang = langs[r % |langs|], text = the same two-seed-sentence
 # construction as _seed_text_col.  Deriving it from DISTINCT doc_id % M
 # makes the corpus independent of sf (every sf's documents table covers all
 # M residues), so the oracle can state the trained model's outputs as
-# literals computed from an INDEPENDENT driver-side numpy replication of
+# literals computed from an INDEPENDENT local numpy replication of
 # the training math — the distributed trainer must reproduce the exact
-# counts → profile → score chain to hash-match.
+# counts → profile → score chain to match.
 
 
 def _train_world_m() -> int:
@@ -2776,8 +2121,8 @@ def _train_world_rows() -> list[tuple[int, str, str]]:
 def _train_corpus_spark(spark, sf_dir) -> DataFrame:
     """The planted world as a DataFrame: DISTINCT doc_id % M → (doc_id=r,
     lang_label, text).  The label column is deliberately NOT named 'lang'
-    so the driver row also regression-covers train_profiles' support for
-    arbitrary label column names (ADVICE r6)."""
+    so the case also regression-covers train_profiles' support for
+    arbitrary label column names."""
     langs = _seed_langs()
     m = _train_world_m()
     lang = F.element_at(
@@ -2871,9 +2216,9 @@ def q_perplexity_lm_roundtrip(spark, sf_dir):
     trains the trigram LM fully distributed and persists raw
     (bucket, c3, c2) counts as parquet; read_model reloads + smooths;
     the production pandas UDF scores the documents table with the
-    reloaded artifact.  The oracle is an independent driver-side numpy
+    reloaded artifact.  The oracle is an independent local numpy
     replication, so any drift in training, persistence, smoothing, or
-    the Arrow scoring path breaks the hash."""
+    the Arrow scoring path breaks the match."""
     import shutil
     import tempfile
 
@@ -2896,7 +2241,7 @@ def q_paragraph_dedup_hashed(spark, sf_dir):
     128-bit xxhash64 fingerprint (16 bytes per distinct paragraph on the
     exchange) instead of the paragraph text.  Same oracle as
     paragraph_dedup_docs — the outputs are identical absent a 2^-129
-    collision, which is exactly the claim this row stamps."""
+    collision, which is exactly the claim this case checks."""
     from quality_filter.dedup import paragraph_dedup
 
     return paragraph_dedup(_rep_world_spark(spark, sf_dir), key="hash").select(
@@ -2905,9 +2250,8 @@ def q_paragraph_dedup_hashed(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r8: driver stamps for the four r7 pytest-only components (VERDICT r7 #2) —
 # the fused Arrow gate, the composed corpus build, the trainable quality
-# classifier, Bloom decontamination — plus the per-domain contribution cap.
+# classifier, Bloom decontamination, and the per-domain contribution cap
 # ---------------------------------------------------------------------------
 
 
@@ -3003,12 +2347,11 @@ def _fused_gate_sql() -> str:
 def q_fused_gate_docs(spark, sf_dir):
     """The fused Arrow corpus gate (textstats.fused_gate_arrow) over the
     line-structured world: ONE mapInPandas plan node computes the C4
-    line clean + both Gopher gate verdicts as columns (5.4× the
-    interpreted HOF chain at identical survivors — BENCH/r7_gates_ab.json).
-    This row stamps the fused composition itself against an independent
-    DuckDB mirror of C4→quality→repetition over the cleaned text; the
-    component gates are separately stamped by c4_line_filter /
-    gopher_quality_flags / gopher_repetition."""
+    line clean + both Gopher gate verdicts as columns.  This case checks
+    the fused composition itself against an independent DuckDB mirror of
+    C4→quality→repetition over the cleaned text; the component gates are
+    checked separately by c4_line_filter / gopher_quality_flags /
+    gopher_repetition."""
     from quality_filter.textstats import fused_gate_arrow
 
     return fused_gate_arrow(_structured_docs(spark, sf_dir)).select(
@@ -3054,8 +2397,7 @@ def q_corpus_build_docs(spark, sf_dir):
     exact verify must remove nothing) → exact decontamination against the
     C4-cleaned doc_id % 17 == 3 pages (a leak class chosen to contain
     gate survivors, so the stage provably removes documents).
-    One driver row stamping the whole composition the bench's corpus-build
-    lane measures."""
+    One case checking the whole composition end to end."""
     from quality_filter.corpus import build_pretrain_corpus
     from quality_filter.textstats import c4_line_filter
 
@@ -3080,7 +2422,7 @@ def q_corpus_build_docs(spark, sf_dir):
 @_register("decontaminate_bloom_docs", _DECONTAM_SQL)
 def q_decontaminate_bloom_docs(spark, sf_dir):
     """Bloom-filter decontamination (curation.decontaminate_bloom) on the
-    same planted-leak world as decontaminate_docs, stamped against the
+    same planted-leak world as decontaminate_docs, checked against the
     SAME exact-gram oracle: at bits_per_gram=48 (k=33, gram fpp ≈ 1e-10)
     the deterministic seeded-xxhash64 bitset has zero false positives at
     this scale — a stable property, not a lucky draw — while the
@@ -3126,13 +2468,13 @@ def _qmodel_sql() -> str:
 
 @_register("qmodel_train_score", _qmodel_sql())
 def q_qmodel_train_score(spark, sf_dir):
-    """M4 trainable counterpart, train→score driver stamp: MLlib L-BFGS
+    """M4 trainable counterpart, train→score check: MLlib L-BFGS
     logistic regression (qmodel.train_quality_classifier — map-side
-    gradients, model-sized driver state, training-summary stripped) over
+    gradients, model-sized collected state, training-summary stripped) over
     the scan-shaped Gopher metric features, trained on the planted
     margin-separated linear rule and scored through the pure-JVM
-    transform path (qmodel.score_quality).  The hashed output is the 0.5-
-    thresholded PREDICTION, not the probability, so the stamp requires
+    transform path (qmodel.score_quality).  The compared output is the
+    0.5-thresholded PREDICTION, not the probability, so the check requires
     the learned boundary to land inside the planted margin band."""
     from quality_filter.qmodel import (
         doc_quality_features,
@@ -3141,15 +2483,15 @@ def q_qmodel_train_score(spark, sf_dir):
         train_quality_classifier,
     )
 
-    # r9: materialize the FULL prefixed feature set once and checkpoint
+    # materialize the FULL prefixed feature set once and checkpoint
     # THAT (doc_id + 11 doubles + keep — no text), so neither the scaler
     # fit, the L-BFGS instance build nor the scoring pass ever re-runs
     # the metric projection (a dozen interpreted split/filter HOF
     # evaluations per row); train/score take the precomputed-feature
-    # fast path in qmodel.doc_quality_features.  The margin rule below
-    # is value-identical to the r8 formulation: _qf_word_count /
-    # _qf_stopword_hits are the same integers cast to double, and
-    # int→double promotion is exact in this range.
+    # fast path in qmodel.doc_quality_features.  _qf_word_count /
+    # _qf_stopword_hits are integers cast to double, and int→double
+    # promotion is exact in this range, so the margin rule below equals
+    # its integer statement in the oracle.
     feats = doc_quality_features(_structured_docs(spark, sf_dir))
     s = (
         F.lit(0.02) * F.col("_qf_word_count")
@@ -3201,7 +2543,7 @@ def _teacher_sql() -> str:
 
     labs = ", ".join(f"'{l}'" for l in LABELS)
     return (
-        f"WITH {sqlgen.TURNS_CTE} "
+        f"WITH {dsql.TURNS_CTE} "
         f"SELECT doc_id, turn_idx, text, "
         f"CASE WHEN length(text) % {_t._FAKE_INVALID_MOD} = "
         f"{_t._FAKE_INVALID_RESIDUE} THEN 'Clean' "
@@ -3219,7 +2561,7 @@ def q_teacher_label_loop(spark, sf_dir):
     (A7) → line-number alignment with the Clean default → out-of-taxonomy
     coercion.  The fake derives labels arithmetically from each line's
     text INSIDE the prompt and answers in fenced, trailing-comma'd JSON,
-    so this row stamps every deterministic stage of the loop end-to-end;
+    so this case checks every deterministic stage of the loop end-to-end;
     the real vLLM backend is the one pluggable seam (out of sandbox)."""
     from quality_filter.teacher import (
         fake_structured_teacher,
@@ -3230,3 +2572,4 @@ def q_teacher_label_loop(spark, sf_dir):
     return label_lines_with_teacher(
         t, fake_structured_teacher, idx_col="turn_idx"
     )
+

@@ -1,9 +1,9 @@
-"""DuckDB oracle-SQL generation for the driver's correctness gate.
+"""DuckDB SQL text for the oracle side of ``tests/test_entry_contract.py``.
 
 Generates ANSI/DuckDB SQL that mirrors the engine's Catalyst expressions
 *from the same frozen constants* (quality_filter.patterns /
-quality_filter.rules), so the Spark implementation and its oracle cannot
-drift.  Pattern dialect notes in patterns.py (common Java/RE2/Python
+quality_filter.rules, quality_filter.reseg, quality_filter.langmap), so
+the Spark implementation and its oracle cannot drift.  Pattern dialect notes in patterns.py (common Java/RE2/Python
 subset); float expressions repeat the exact operand order of rules.py for
 IEEE-754 bit parity; rounding is DuckDB ``round_even`` == Spark ``bround``
 (both round the shortest-decimal repr half-to-even).
@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from quality_filter import patterns as P
 from quality_filter.labels import LABELS
+from quality_filter.langmap import LANGUAGE_CODES, LANGUAGE_NAMES
+from quality_filter.reseg import _STRIP_RE, MAX_SEGMENT_CHARS
 from quality_filter.rules import (
     ALPHA_RATIO_MIN,
     FORMATTING_LABEL,
@@ -49,7 +51,7 @@ def _features(t: str) -> dict[str, str]:
 
 def label_sql(t: str) -> str:
     """CASE expression assigning the rule label to text expression ``t``
-    (mirror of rules.label_expr)."""
+    (mirror of the labelling in rules.score_turns)."""
     f = _features(t)
     branches = "".join(
         f"WHEN regexp_matches({t}, '{pat}') THEN '{label.replace(chr(39), chr(39)*2)}' "
@@ -107,8 +109,8 @@ def bround3_sql(x: str) -> str:
 
 
 def raw_score_sql(t: str) -> str:
-    """The unrounded score formula — identical operand order to
-    rules.clean_score_expr for IEEE-754 bit parity."""
+    """The unrounded score formula — identical operand order to the
+    clean_score of rules.score_turns for IEEE-754 bit parity."""
     f = _features(t)
     return (
         f"({W_ALPHA} * {f['alpha_ratio']} "
@@ -118,8 +120,8 @@ def raw_score_sql(t: str) -> str:
 
 
 def clean_score_sql(t: str, label_expr: str) -> str:
-    """Mirror of rules.clean_score_expr (damped non-Clean, banker's-rounded
-    to 3 decimals with Spark semantics)."""
+    """Mirror of the clean_score of rules.score_turns (damped non-Clean,
+    banker's-rounded to 3 decimals with Spark semantics)."""
     raw = raw_score_sql(t)
     damped = (
         f"(CASE WHEN {label_expr} = '{LABELS[0]}' THEN {raw} ELSE 0.4 * {raw} END)"
@@ -136,7 +138,7 @@ def scrub_sql(t: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# derived transcript view over the driver's `documents` table: each doc is
+# derived transcript view over the `documents` table: each doc is
 # chunked into 8-word turns — same derivation on both engines.
 # ---------------------------------------------------------------------------
 
@@ -177,3 +179,45 @@ SYNTH_LANGS = ["en", "de", "zh", "fr", "es"]
 def synth_turn_lang_sql() -> str:
     arr = ", ".join(f"'{l}'" for l in SYNTH_LANGS)
     return f"([{arr}][CAST((doc_id + turn_idx*3) % 5 AS INT) + 1])"
+
+
+def lang_name_case_sql(code_expr: str, default: str = "Unknown") -> str:
+    """Mirror of langmap.lang_name_expr as a CASE ladder generated from the
+    same table."""
+    branches = "".join(
+        f"WHEN {code_expr} = '{code}' THEN '{LANGUAGE_NAMES[code]}' "
+        for code in LANGUAGE_CODES
+    )
+    return f"(CASE {branches}ELSE '{default}' END)"
+
+
+def resegment_sql(table: str = "documents", text_expr: str = "text") -> str:
+    """Mirror of reseg.resegment: identical sentinel split, packing loop as a
+    recursive CTE walking sentences per document (RE2 backreference
+    ``\\1``)."""
+    ws = P.WS_CLASS.replace("'", "''")
+    strip = _STRIP_RE.replace("'", "''")
+    return f"""
+WITH RECURSIVE s AS (
+  SELECT doc_id,
+         string_split(regexp_replace({text_expr}, '([.!?]){ws}+', '\\1' || chr(1), 'g'), chr(1)) AS sents
+  FROM {table}
+), rec AS (
+  SELECT doc_id, sents, 1 AS i, CAST([] AS VARCHAR[]) AS segs, '' AS cur FROM s
+  UNION ALL
+  SELECT doc_id, sents, i + 1,
+    CASE WHEN length(cur) + length(sents[i]) + 1 > {MAX_SEGMENT_CHARS}
+         THEN list_append(segs, regexp_replace(cur, '{strip}', '', 'g')) ELSE segs END,
+    CASE WHEN length(cur) + length(sents[i]) + 1 > {MAX_SEGMENT_CHARS}
+         THEN sents[i] ELSE cur || ' ' || sents[i] END
+  FROM rec WHERE i <= len(sents)
+), fin AS (
+  SELECT doc_id,
+         CASE WHEN cur <> '' THEN list_append(segs, regexp_replace(cur, '{strip}', '', 'g')) ELSE segs END AS segs
+  FROM rec WHERE i = len(sents) + 1
+)
+SELECT doc_id, CAST(u.seg_idx AS INT) AS seg_idx, u.segment FROM (
+  SELECT doc_id, unnest(list_transform(range(1, len(segs) + 1),
+    j -> struct_pack(seg_idx := j - 1, segment := segs[j]))) AS u
+  FROM fin) t
+"""

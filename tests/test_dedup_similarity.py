@@ -13,6 +13,7 @@ from quality_filter.dedup import (
     minhash_dedup,
     minhash_jaccard,
     minhash_signatures,
+    normalized_text,
     simhash_near_dups,
 )
 from quality_filter.similarity import cosine_topk, lsh_ann_topk
@@ -39,6 +40,23 @@ def test_exact_dedup(spark, dup_docs):
     assert 100 in ids and 101 not in ids and 103 not in ids
     assert 102 in ids  # near-dup, not exact
     assert len(ids) == 32
+
+
+def test_normalized_text_hand_computed(spark):
+    """The fingerprint normalization lowercases, collapses runs of
+    space/tab/CR/LF to one space and trims the ends; other control
+    characters are kept."""
+    cases = {
+        "  Hello   World\t\n": "hello world",
+        "A\r\nB": "a b",
+        "": "",
+        "x\x0by": "x\x0by",
+        "Ünïcode  MIXED": "ünïcode mixed",
+    }
+    df = spark.createDataFrame([(k,) for k in cases], "text string")
+    got = {r["text"]: r["n"] for r in df.select(
+        "text", normalized_text(F.col("text")).alias("n")).collect()}
+    assert got == cases
 
 
 def test_minhash_survives_short_docs(spark):

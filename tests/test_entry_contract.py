@@ -1,21 +1,16 @@
-"""Mimic of the driver's correctness gate: run every ``queries()`` entry at
-sf=0.01 and compare against its ``oracle_sql()`` via DuckDB — row count,
-column names, and exact sorted-row value equality (strictly stronger than
-the driver's order-insensitive value hash)."""
+"""Per-operator DuckDB parity: each case in ``tests/duckdb_parity.py`` runs
+a library operator at sf=0.01 and compares it against its DuckDB oracle
+SQL — row count, column names, and exact sorted-row value equality."""
 
 from __future__ import annotations
 
 import datetime
 import math
-import sys
-from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-import __spark_entry__ as entry_mod
+from tests.duckdb_parity import ORACLES, QUERIES
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -50,18 +45,13 @@ def _rows_sorted(cols, rows):
     return sorted(out, key=repr)
 
 
-QUERY_NAMES = sorted(entry_mod.queries())
-ORACLE_NAMES = sorted(entry_mod.oracle_sql())
-
-
-@pytest.mark.parametrize("name", ORACLE_NAMES)
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_duckdb_oracle(spark, ddb, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
+    sdf = QUERIES[name](spark, SF_DIR)
     scols = [c.lower() for c in sdf.columns]
     srows = [tuple(r) for r in sdf.collect()]
 
-    rel = ddb.sql(entry_mod.oracle_sql()[name])
+    rel = ddb.sql(ORACLES[name])
     dcols = [c.lower() for c in rel.columns]
     drows = rel.fetchall()
 
@@ -71,16 +61,3 @@ def test_query_matches_duckdb_oracle(spark, ddb, name):
     b = _rows_sorted(dcols, drows)
     mism = [(x, y) for x, y in zip(a, b) if x != y]
     assert not mism, f"{name}: {len(mism)} mismatched rows, first 3: {mism[:3]}"
-
-
-def test_every_query_has_an_oracle():
-    # Since r6 every registered query carries a DuckDB oracle; keep it
-    # that way (a rows-only row would silently get the weaker driver
-    # check).  This replaces the former empty-parameter-set rows-only
-    # runner, which pytest reported as a permanent skip.
-    assert QUERY_NAMES == ORACLE_NAMES
-
-
-def test_entry_smoke(spark):
-    df = entry_mod.entry(spark)
-    assert df.count() > 0

@@ -1,8 +1,8 @@
 """Gopher quality rules (Rae et al. 2021 A1.1) and C4 line/page cleaning
 (Raffel et al. 2020 §2.2): hand-computed fixtures for every rule, plus
 edge cases (empty/None text, div-by-zero guards, case-insensitive lorem,
-line-order preservation).  The sf0.01 oracle parity for both registered
-queries lives in tests/test_entry_contract.py."""
+line-order preservation).  The fused Arrow gate is pinned to these HOF
+gates in tests/test_round7.py and tests/test_round8.py."""
 
 from __future__ import annotations
 

@@ -107,7 +107,11 @@ def test_llm_output_strip_matches_python(spark):
 
 
 def test_llm_parse_and_prompt(spark):
-    from quality_filter.llmprep import classify_prompt_expr, parse_llm_output
+    from quality_filter.llmprep import (
+        CLASSIFY_TEMPLATE,
+        classify_prompt_expr,
+        parse_llm_output,
+    )
 
     df = spark.createDataFrame(
         [(0, "```json\n{'label': 'Clean', 'score': 2,}\n```"),
@@ -129,13 +133,16 @@ def test_llm_parse_and_prompt(spark):
     ).select("p.note", "p.score").first()
     assert apos["note"] == "it's fine" and apos["score"] == 3
 
+    # the whole prompt is the template with the language and the
+    # numbered line blocks substituted in
+    lines = ["first line", "100% sure", ""]
     p = spark.createDataFrame(
-        [(["first line", "second line"], "English")],
+        [(lines, "English")],
         "lines array<string>, language string",
     ).select(classify_prompt_expr(F.col("lines"), F.col("language")).alias("t")
     ).first()["t"]
-    assert "Line 1: first line\n------\n" in p
-    assert "Line 2: second line\n------\n" in p
+    blocks = "".join(f"Line {i + 1}: {t}\n------\n" for i, t in enumerate(lines))
+    assert p == CLASSIFY_TEMPLATE % ("English", blocks)
     assert "document in English" in p
 
 

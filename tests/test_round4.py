@@ -314,53 +314,6 @@ def test_quality_weighted_sample_rate_tracks_score(spark):
         assert abs(kept / len(ids) - s) < 0.05
 
 
-# -- JVM-side langid variants ------------------------------------------------
-
-def test_langid_sql_struct_agrees_with_expr(spark):
-    """The regexp_count-based hit counting must agree with the documented
-    split-and-match semantics: same winning lang as langid_sql_expr, and
-    a [0,1] confidence that is 1.0 for single-language marker text."""
-    from quality_filter.textstats import langid_sql_expr, langid_sql_struct_expr
-
-    rows = [
-        ("the cat and the dog is here",),
-        ("der hund ist nicht hier und die katze",),
-        ("le chat est ici et les chiens",),
-        ("el perro es de los gatos que",),
-        ("zzz qqq www",),
-        ("",),
-        ("the-and.of,to!is",),      # separators other than space
-        ("to to to der der",),      # mixed langs, en wins 3-2
-    ]
-    df = spark.createDataFrame(rows, "text string")
-    out = df.select(
-        "text",
-        langid_sql_expr(F.col("text")).alias("l1"),
-        langid_sql_struct_expr(F.col("text")).alias("s"),
-    ).collect()
-    for r in out:
-        assert r["s"]["lang"] == r["l1"], r["text"]
-        assert 0.0 <= r["s"]["lang_prob"] <= 1.0
-    byt = {r["text"]: r for r in out}
-    assert byt["the cat and the dog is here"]["s"]["lang_prob"] == 1.0
-    assert byt["the-and.of,to!is"]["s"]["lang"] == "en"
-    assert byt["to to to der der"]["s"]["lang"] == "en"
-    assert byt["zzz qqq www"]["l1"] == "und"
-
-
-def test_with_scores_sql_impl_columns(spark):
-    from quality_filter.scoring import with_scores
-    from quality_filter.synth import synth_transcripts
-
-    df = synth_transcripts(spark, n_convs=30, seed=4)
-    out = with_scores(df, langid_impl="sql")
-    rows = out.select("lang", "lang_prob", "logppl").limit(20).collect()
-    assert all(r["logppl"] is not None for r in rows)
-    assert all(r["lang"] is not None for r in rows)
-    with pytest.raises(ValueError, match="langid_impl"):
-        with_scores(df, langid_impl="nope")
-
-
 # -- streaming dedup == batch dedup equivalence (VERDICT r3 #9) --------------
 
 def test_stream_dedup_equals_batch_dedup(spark, tmpdir):

@@ -118,7 +118,7 @@ def test_kappa_small_values_unchanged(spark):
 def test_bround9_oracle_matches_spark(spark):
     import duckdb
 
-    from quality_filter.sqlgen import bround_sql
+    from tests.duckdb_sql import bround_sql
 
     # tie-dense 9-digit values: k + 5e-10 sits exactly on the HALF_EVEN
     # boundary after shortest-repr; plus random doubles
@@ -140,7 +140,8 @@ def _degenerate_docs(spark, n=240):
     """Near-identical (NOT exact-duplicate) corpus: every doc shares one
     long boilerplate body plus a unique trailing token, so exact-first
     staging cannot collapse it and every minhash band bucket holds all
-    n docs — the O(k²) blowup class from BENCH/r4_cluster_scale.py."""
+    n docs — the O(k²) blowup class from ``BENCH/r4_cluster_scale.py`` at
+    b9e3436."""
     body = " ".join(f"w{i % 7}x{i % 11}" for i in range(60))
     rows = [(i, f"{body} uniq{i}") for i in range(n)]
     return spark.createDataFrame(rows, "doc_id long, text string")
@@ -274,8 +275,9 @@ def test_stream_trim_max_turns_guard(spark, tmpdir):
 # -- IVF recall floor in the genuinely approximate regime --------------------
 
 def test_ivf_recall_bounds_at_low_nprobe(spark):
-    """ann_ivf_top5's driver row runs nprobe=nlist (exact, oracle-valid);
-    this pins the approximate regime: on a clusterable manifold with
+    """nprobe=nlist is exact (test_dedup_similarity.py::
+    test_ivf_topk_recall); this pins the approximate regime: on a
+    clusterable manifold with
     cell-boundary queries, recall@5 has a quantified floor at nprobe=1
     and recovers by nprobe=2 (calibrated: 0.6875 / 1.0 with these seeds)."""
     import numpy as np

@@ -151,7 +151,9 @@ def test_with_langid_and_perplexity_arrow_match_reference(spark, transcripts):
 def test_srp_bucket_matches_unrolled(spark):
     """The nested-HOF srp_bucket (one array-of-plane-literals transform)
     is value-identical to the unrolled per-plane aggregate form it
-    replaced — same zip_with product, same sequential double fold."""
+    replaced — same zip_with product, same sequential double fold.  The
+    40-plane case checks that bits from 31 up do not wrap: the bit
+    arithmetic runs in bigint."""
     from pyspark.sql import functions as F
 
     from quality_filter.similarity import _dot, _hyperplanes, srp_bucket
@@ -161,9 +163,8 @@ def test_srp_bucket_matches_unrolled(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "id int, v array<float>"
     )
-    planes = _hyperplanes(16, 6, seed=123)
 
-    def unrolled(vec_col):
+    def unrolled(vec_col, planes):
         bits = []
         for i, plane in enumerate(planes):
             lit_plane = F.array(*[F.lit(float(x)) for x in plane])
@@ -174,11 +175,33 @@ def test_srp_bucket_matches_unrolled(spark):
             out = out + b
         return out
 
-    rows = df.select(
-        srp_bucket(F.col("v"), planes).alias("a"),
-        unrolled(F.col("v")).alias("b"),
-    ).collect()
-    assert rows and all(r["a"] == r["b"] for r in rows)
+    for n_bits in (6, 8, 40):
+        planes = _hyperplanes(16, n_bits, seed=123)
+        rows = df.select(
+            srp_bucket(F.col("v"), planes).alias("a"),
+            unrolled(F.col("v"), planes).alias("b"),
+        ).collect()
+        assert rows and all(r["a"] == r["b"] for r in rows), n_bits
+        assert all(0 <= r["a"] < 1 << n_bits for r in rows), n_bits
+
+
+def test_srp_n_bits_out_of_range_raises(spark):
+    """Bucket ids are bigint bit sets, so the public SRP operators accept
+    1..62 planes and fail loudly outside that range."""
+    from quality_filter.similarity import (
+        embedding_near_dups,
+        lsh_ann_topk,
+        semantic_dedup,
+    )
+
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    for n_bits in (0, 63):
+        with pytest.raises(ValueError, match="n_bits"):
+            embedding_near_dups(df, dim=2, n_bits=n_bits)
+        with pytest.raises(ValueError, match="n_bits"):
+            semantic_dedup(df, dim=2, n_bits=n_bits)
+        with pytest.raises(ValueError, match="n_bits"):
+            lsh_ann_topk(df, df, dim=2, n_bits=n_bits)
 
 
 def test_nearest_centroids_matches_unrolled(spark):

@@ -25,7 +25,6 @@ from quality_filter.sampling import (
     stratified_split_sampled,
 )
 from quality_filter.textstats import (
-    langid_sql_expr,
     with_fingerprint,
     with_quality_score,
     with_token_stats,
@@ -65,6 +64,40 @@ def test_quality_score_orders(spark):
     assert got[1] > got[3] > got[2]
 
 
+def test_quality_score_hand_computed(spark):
+    """quality_score equals the formula restated in plain Python (ASCII
+    text, so ``str.isalpha`` counts what ``\\p{L}`` counts): length
+    saturation at 500 chars, letter density, distinct-word ratio and
+    stopword share, banker's-rounded to 3 decimals."""
+    import re
+
+    from quality_filter.textstats import STOPWORDS
+    from tests.oracle import _bround3
+
+    def ref(text):
+        words = re.split(r"[ \t\n\x0b\f\r]+", text.lower())
+        n = len(text)
+        stop = sum(1 for w in words if w in STOPWORDS) / max(1, len(words))
+        alpha = sum(1 for ch in text if ch.isalpha()) / max(1, n)
+        rep = len(set(words)) / max(1, len(words))
+        len_sat = min(n, 500) / 500.0
+        return _bround3(
+            0.3 * len_sat + 0.25 * alpha + 0.25 * rep + 0.2 * min(stop * 4.0, 1.0)
+        )
+
+    texts = [
+        "The committee reviewed the proposal and agreed on the next steps.",
+        "$$$ ### !!!",
+        "word word word word word word",
+        "",
+        "Tabs\tand  double  spaces, 42 digits",
+        " ".join(["the data is clean and it is fine"] * 20),
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    got = {r["id"]: r["quality_score"] for r in with_quality_score(df).collect()}
+    assert got == {i: ref(t) for i, t in enumerate(texts)}
+
+
 def test_fingerprint_order_sensitive(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta"), (2, "beta alpha"), (3, "  Alpha   BETA ")],
@@ -73,19 +106,6 @@ def test_fingerprint_order_sensitive(spark):
     got = {r["id"]: r["fingerprint"] for r in with_fingerprint(df).collect()}
     assert got[1] != got[2]       # order matters (rolling hash)
     assert got[1] == got[3]       # normalization: case + whitespace
-
-
-def test_langid_sql(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the cat and the dog is here"),
-            (2, "der hund und die katze ist nicht da"),
-            (3, "zzz qqq"),
-        ],
-        "id long, text string",
-    )
-    got = {r["id"]: r["lg"] for r in df.select("id", langid_sql_expr(F.col("text")).alias("lg")).collect()}
-    assert got == {1: "en", 2: "de", 3: "und"}
 
 
 # --- sampling --------------------------------------------------------------
@@ -299,6 +319,37 @@ def test_real_codec_decodes_stdlib_formats(spark):
     # audio features carry the actual duration
     for i in aud_ids:
         assert abs(real[i][0] - 400 / 8000.0) < 1e-6
+
+
+def test_real_codec_features_match_local_decode(spark):
+    """Through the Spark path, ``extract_features(use_real_codec=True)``
+    returns for every stdlib format (PPM, PNG RGB/RGBA, WAV) the full
+    feature vector that decoding and featurizing the payload locally
+    gives."""
+    from quality_filter.multimodal import (
+        MEDIA_SCHEMA,
+        _real_features,
+        _synth_png,
+        _synth_ppm,
+        _synth_wav,
+        extract_features,
+        real_decode,
+    )
+
+    media = [
+        (0, "image", _synth_ppm(0)),
+        (1, "image", _synth_png(1)),
+        (2, "image", _synth_png(2, rgba=True)),
+        (3, "audio", _synth_wav(3)),
+    ]
+    df = spark.createDataFrame(
+        [(i, m, bytearray(p), None) for i, m, p in media], MEDIA_SCHEMA
+    )
+    got = {r["media_id"]: r["feature"]
+           for r in extract_features(df, use_real_codec=True).collect()}
+    for i, modality, payload in media:
+        expect = _real_features(modality, real_decode(modality, payload))
+        assert got[i] == [float(x) for x in expect], i
 
 
 def test_extract_features_total_on_corrupt_media(spark):
