@@ -34,7 +34,6 @@ resume of ``src/classifier_inference_pipeline.py:133-139``).
 from __future__ import annotations
 
 import argparse
-import sys
 
 from pyspark.sql import DataFrame, SparkSession
 

@@ -39,8 +39,6 @@ are inherent to CC); the gate/scan stages stay lazy until an action."""
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 

@@ -19,7 +19,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from quality_filter import ngram
 from quality_filter.langid import SEED_CORPORA

@@ -19,29 +19,21 @@ Reference semantics (all re-expressed as declarative Catalyst plans):
   ``len(text) >= min_doc_length`` (``:219``).
 - empty-doc drop — P4 (``src/filter_by_quality_label.py:188``).
 
-Per-conversation aggregates come in two physical strategies:
-
-- ``window``   — single pass over the input, one shuffle (DEFAULT: the
-  upstream subtree — scorer UDFs included — is evaluated exactly once;
-  Spark's WindowExec spills giant groups to disk, so skewed conversations
-  are slow-but-safe);
-- ``agg_join`` — groupBy (map-side partial agg, skew-immune) + join back
-  (AQE skew-join).  Costs a second evaluation of the upstream subtree on
-  the aggregate side, so use it when the upstream is a cheap scan — e.g.
-  the two-phase production layout where scores are materialized to a table
-  first (the reference's own score-then-filter architecture,
-  scripts/run_classifier_inference.sh → run_filter_by_quality_label.sh).
+Per-conversation aggregates (trim bounds, document length, document
+language) are attached to every turn with a window over ``conv_id``: one
+shuffle, and the upstream subtree — scorer UDFs included — is evaluated
+exactly once in the same pass as the rows it attaches to.  Spark's
+WindowExec spills giant groups to disk, so skewed conversations are
+slow-but-safe.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from quality_filter.labels import parse_labels
-from quality_filter.rules import score_turns
+from quality_filter.labels import LABELS, parse_labels
+from quality_filter.rules import barrier_filter, clean_fastpath_scored, score_turns
 from quality_filter.scrub import scrub_turns
 
 SALVAGE_SCORE_THRESHOLD = 0.9  # strict > (src/salvage_low_quality_data.py:185)
@@ -75,38 +67,25 @@ def keep_by_salvage(document_lang_col: str = "document_lang") -> Column:
 
 
 # --------------------------------------------------------------------------
-# per-conversation aggregate attachment (window vs agg+join)
+# per-conversation aggregate attachment
 # --------------------------------------------------------------------------
 
-def _attach_per_conv(
-    df: DataFrame, aggs: dict[str, Column], strategy: str = "window"
-) -> DataFrame:
-    """Attach per-conv aggregate columns to every turn row.
+def _attach_per_conv(df: DataFrame, aggs: dict[str, Column]) -> DataFrame:
+    """Attach per-conv aggregate columns to every turn row (a window over
+    ``conv_id``; NULL conv_id rows form one group).
 
     ``aggs`` maps output column name → a *single* aggregate function call
     (compose arithmetic after attachment — window functions can only wrap
     one aggregate at a time).
     """
-    if strategy == "window":
-        w = Window.partitionBy("conv_id")
-        out = df
-        for name, expr in aggs.items():
-            out = out.withColumn(name, expr.over(w))
-        return out
-    if strategy == "agg_join":
-        agg_df = df.groupBy("conv_id").agg(
-            *[expr.alias(name) for name, expr in aggs.items()]
-        ).withColumnRenamed("conv_id", "_agg_conv_id")
-        # null-safe equality: the window strategy treats NULL conv_id as
-        # one partition group, so the join-back must too (a plain inner
-        # equi-join would silently drop NULL-conv_id rows)
-        return df.join(
-            agg_df, F.col("conv_id").eqNullSafe(F.col("_agg_conv_id")), "inner"
-        ).drop("_agg_conv_id")
-    raise ValueError(f"unknown strategy: {strategy}")
+    w = Window.partitionBy("conv_id")
+    out = df
+    for name, expr in aggs.items():
+        out = out.withColumn(name, expr.over(w))
+    return out
 
 
-def _attach_doc_len(df: DataFrame, strategy: str) -> DataFrame:
+def _attach_doc_len(df: DataFrame) -> DataFrame:
     """Attach ``_doc_len`` = length of '\\n'.join(texts) per conversation =
     sum(len(turn)) + count - 1."""
     with_parts = _attach_per_conv(
@@ -115,58 +94,31 @@ def _attach_doc_len(df: DataFrame, strategy: str) -> DataFrame:
             "_sum_len": F.sum(F.length(F.coalesce(F.col("text"), F.lit("")))),
             "_cnt": F.count(F.lit(1)),
         },
-        strategy,
     )
     return with_parts.withColumn(
         "_doc_len", F.col("_sum_len") + F.col("_cnt") - F.lit(1)
     ).drop("_sum_len", "_cnt")
 
 
-def with_document_lang(df: DataFrame, strategy: str = "window") -> DataFrame:
+def with_document_lang(df: DataFrame) -> DataFrame:
     """Per-conversation dominant language: argmax over summed per-turn
     ``lang_prob`` — the turn-grain analog of
     ``lang[argmax(prob)]`` (``src/classifier_inference_pipeline.py:115``).
-    Deterministic tiebreak in both strategies: highest mass, then
-    lexicographically largest lang code.
+    Deterministic tiebreak: highest mass, then lexicographically largest
+    lang code.
 
-    - ``window`` (default): one linear pass — sum mass over
-      (conv_id, lang), then max(struct(mass, lang)) over conv_id.  The
-      upstream subtree (langid pandas UDF included) is evaluated exactly
-      ONCE; costs two window shuffles of the turn rows.
-    - ``agg_join``: ``max_by`` over a pre-aggregated (conv_id, lang)
-      table joined back (broadcast when small, AQE skew-join otherwise).
-      No window over skewed partitions, but the upstream subtree is
-      evaluated twice (once per join branch) — use it when lang comes
-      from a cheap scan, e.g. the two-phase layout where scores are
-      materialized to a table first.
+    One linear pass — sum mass over (conv_id, lang), then
+    max(struct(mass, lang)) over conv_id.  The upstream subtree (langid
+    pandas UDF included) is evaluated exactly ONCE; costs two window
+    shuffles of the turn rows.
     """
-    if strategy == "window":
-        w1 = Window.partitionBy("conv_id", "lang")
-        w2 = Window.partitionBy("conv_id")
-        massed = df.withColumn("_lang_mass", F.sum("lang_prob").over(w1))
-        return massed.withColumn(
-            "document_lang",
-            F.max(F.struct(F.col("_lang_mass"), F.col("lang"))).over(w2)["lang"],
-        ).drop("_lang_mass")
-    if strategy != "agg_join":
-        raise ValueError(f"unknown strategy: {strategy}")
-    per_lang = (
-        df.groupBy("conv_id", "lang")
-        .agg(F.sum("lang_prob").alias("lang_mass"))
-        .groupBy("conv_id")
-        .agg(
-            F.max_by("lang", F.struct(F.col("lang_mass"), F.col("lang"))).alias(
-                "document_lang"
-            )
-        )
-    ).withColumnRenamed("conv_id", "_dl_conv_id")
-    # per_lang has one row per conversation — tiny relative to turns;
-    # Catalyst broadcasts it when under the threshold, AQE skew-joins
-    # otherwise.  Null-safe equality keeps NULL-conv_id rows consistent
-    # with the window strategy (which treats NULL as one partition group).
-    return df.join(
-        per_lang, F.col("conv_id").eqNullSafe(F.col("_dl_conv_id")), "left"
-    ).drop("_dl_conv_id")
+    w1 = Window.partitionBy("conv_id", "lang")
+    w2 = Window.partitionBy("conv_id")
+    massed = df.withColumn("_lang_mass", F.sum("lang_prob").over(w1))
+    return massed.withColumn(
+        "document_lang",
+        F.max(F.struct(F.col("_lang_mass"), F.col("lang"))).over(w2)["lang"],
+    ).drop("_lang_mass")
 
 
 # --------------------------------------------------------------------------
@@ -178,15 +130,13 @@ def apply_filter_mode(df: DataFrame, keep: Column) -> DataFrame:
     return df.filter(keep)
 
 
-def apply_trim_mode(
-    df: DataFrame, keep: Column, strategy: str = "window"
-) -> DataFrame:
+def apply_trim_mode(df: DataFrame, keep: Column) -> DataFrame:
     """Trim mode: keep turns between the first and last keep-worthy turn;
     interior bad turns survive.  Conversations with zero keep-worthy turns
     vanish (NULL bounds fail the BETWEEN).
 
     ``min/max(CASE WHEN keep THEN turn_idx END)`` per conversation,
-    attached via the chosen strategy, then a single BETWEEN filter.
+    attached by a window, then a single BETWEEN filter.
     """
     flagged = df.withColumn("_keep", keep)
     kept_idx = F.when(F.col("_keep"), F.col("turn_idx"))
@@ -194,7 +144,7 @@ def apply_trim_mode(
         "_first_keep": F.min(kept_idx),
         "_last_keep": F.max(kept_idx),
     }
-    with_bounds = _attach_per_conv(flagged, bounds, strategy)
+    with_bounds = _attach_per_conv(flagged, bounds)
     return (
         with_bounds.filter(
             F.col("turn_idx").between(F.col("_first_keep"), F.col("_last_keep"))
@@ -203,9 +153,7 @@ def apply_trim_mode(
     )
 
 
-def apply_min_doc_length(
-    df: DataFrame, min_doc_length: int, strategy: str = "window"
-) -> DataFrame:
+def apply_min_doc_length(df: DataFrame, min_doc_length: int) -> DataFrame:
     """Drop conversations whose reassembled text would be shorter than
     ``min_doc_length`` chars.  Reassembled length of n turns =
     sum(len(turn)) + (n-1) joiner newlines — exactly
@@ -215,16 +163,16 @@ def apply_min_doc_length(
     conversation with zero rows has already vanished and a single empty
     turn has doc_len 0.
     """
-    with_len = _attach_doc_len(df, strategy)
+    with_len = _attach_doc_len(df)
     return with_len.filter(F.col("_doc_len") >= F.lit(min_doc_length)).drop("_doc_len")
 
 
-def drop_empty_convs(df: DataFrame, strategy: str = "window") -> DataFrame:
+def drop_empty_convs(df: DataFrame) -> DataFrame:
     """P4: drop conversations whose reassembled text is empty ("" join of
     all-empty turns still counts as non-empty if any turn has chars or
     there are ≥2 turns — matches ``if processed["text"]`` truthiness on
     the joined string)."""
-    with_len = _attach_doc_len(df, strategy)
+    with_len = _attach_doc_len(df)
     return with_len.filter(F.col("_doc_len") > 0).drop("_doc_len")
 
 
@@ -321,7 +269,6 @@ def clean_pipeline(
     score_threshold: float | None = None,
     min_doc_length: int = 1,
     scrub: bool = True,
-    strategy: str = "window",
 ) -> DataFrame:
     """Flagship pipeline: score → keep flag → filter/trim → min-length →
     scrub.  Output stays turn-grained (one row per surviving turn) with
@@ -336,25 +283,15 @@ def clean_pipeline(
         raise ValueError("Must choose either 'trim' or 'filter'")
     if score_threshold is None and labels_to_remove is None:
         raise ValueError("one of labels_to_remove / score_threshold is required")
-    from quality_filter.labels import LABELS
-    from quality_filter.rules import clean_fastpath_predicate
-
     remove_all = (
         score_threshold is None
         and set(parse_labels(labels_to_remove)) == set(LABELS[1:])
     )
     if mode == "filter" and remove_all:
         # cheap-filter-first rewrite: when every non-Clean label is removed,
-        # keep ⟺ the Clean fast-path predicate — filter with the compact
-        # predicate BEFORE scoring; survivors are Clean by construction, so
-        # the label is a literal and no row ever pays the full regex cascade.
-        # r9: the fused lane materializes the char-class counts and the
-        # lowered text once and shares them between the keep predicate
-        # and the score (the predicate path re-derived every count per
-        # evaluation, and inline lower(text) in the guards' OR chains
-        # re-lowered per probe — codegen CSE skips conditional branches).
-        from quality_filter.rules import clean_fastpath_scored
-
+        # keep ⟺ the turn would label Clean — filter on that BEFORE
+        # labelling; survivors are Clean by construction, so the label is a
+        # literal and no row ever builds the label CASE chain.
         out = clean_fastpath_scored(df)
     else:
         scored = score_turns(df)
@@ -370,15 +307,13 @@ def clean_pipeline(
             # barrier column is folded into the predicate itself
             # (rules.barrier_filter) — a bare barrier column is pruned
             # as unreferenced and the pushdown then happens anyway.
-            from quality_filter.rules import barrier_filter
-
             out = barrier_filter(scored, keep)
         else:
-            out = apply_trim_mode(scored, keep, strategy)
+            out = apply_trim_mode(scored, keep)
     if min_doc_length > 1:
-        out = apply_min_doc_length(out, min_doc_length, strategy)
+        out = apply_min_doc_length(out, min_doc_length)
     elif not (mode == "filter" and remove_all):
-        out = drop_empty_convs(out, strategy)
+        out = drop_empty_convs(out)
     # else: the empty-conversation gate is provably a no-op — every
     # survivor of the remove-all filter is Clean, and an empty/whitespace
     # turn always labels "Formatting, Style & Errors" (n_nonspace == 0),
@@ -395,7 +330,6 @@ def salvage_pipeline(
     mode: str = "filter",
     min_doc_length: int = DEFAULT_MIN_DOC_LENGTH,
     doc_score_col: str | None = None,
-    strategy: str = "window",
 ) -> DataFrame:
     """The salvage path (``src/salvage_low_quality_data.py:176-259``):
     doc pre-gate → score → Clean ∧ score>0.9 ∧ lang==document_lang →
@@ -410,13 +344,13 @@ def salvage_pipeline(
     # doc pre-gate: doc_scores[0] < 5 AND original doc length >= min_doc_length
     if doc_score_col is not None:
         work = work.filter(F.col(doc_score_col) < 5)
-    work = apply_min_doc_length(work, min_doc_length, strategy)
+    work = apply_min_doc_length(work, min_doc_length)
     scored = score_turns(work)
     if "lang" not in scored.columns:
         from quality_filter.langid import with_langid
 
         scored = with_langid(scored)
-    scored = with_document_lang(scored, strategy)
+    scored = with_document_lang(scored)
     if mode == "filter":
         out = apply_filter_mode(scored, keep_by_salvage())
     else:
@@ -424,6 +358,6 @@ def salvage_pipeline(
         # no score or lang condition (``src/salvage_low_quality_data.py:
         # 191-203`` loops on ``quality_labels[i] != "Clean"`` only); the
         # composite predicate applies to filter mode only (``:186-188``)
-        out = apply_trim_mode(scored, F.col("label") == "Clean", strategy)
-    out = apply_min_doc_length(out, min_doc_length, strategy)
+        out = apply_trim_mode(scored, F.col("label") == "Clean")
+    out = apply_min_doc_length(out, min_doc_length)
     return out.drop("document_lang")

@@ -8,11 +8,23 @@ rounding, matching ``round(score, 3)`` at
 ``src/classifier_inference_pipeline.py:88`` (Spark ``bround`` == Python
 ``round`` == HALF_EVEN).
 
-Everything here is a single Catalyst projection — no UDFs, fully
+Everything here is Catalyst projections and filters — no UDFs, fully
 whole-stage-codegen'd, and trivially parallel at any scale (no shuffle).
 Rule precedence is frozen (first match wins); the Python golden oracle
 (``tests/oracle.py``) implements the same order, and the two are
 bit-identical.
+
+One features → label → score builder serves both public lanes.  Each
+piece is written once: ``_with_features`` (materialized char-class counts
+and lowered text), ``_features`` (derived ratios), ``_rule_hits`` (the
+guarded regex rules), ``_formatting`` (the fallback rule) and
+``_clean_score`` (the score formula).
+
+- ``score_turns`` labels every turn (the CASE chain) and damps non-Clean
+  scores — the general lane, used by trim, score-threshold and salvage.
+- ``clean_fastpath_scored`` keeps only turns that would label Clean and
+  scores them undamped — the filter lane when every non-Clean label is
+  removed.
 """
 
 from __future__ import annotations
@@ -48,35 +60,6 @@ MIN_CHARS_FOR_ALPHA_RULE = 4
 # clean_score formula weights (frozen; mirrored in tests/oracle.py).
 W_ALPHA, W_LEN, W_SYM = 0.6, 0.3, 0.1
 LEN_NORM = 120
-
-
-def feature_columns(text: Column) -> dict[str, Column]:
-    """Character-class counts/ratios used by the formatting rule and score.
-
-    Letter counting uses Unicode-aware ``\\p{L}`` (one regex pass); digit
-    and whitespace counts use ``translate`` (a plain char-map pass, several
-    times cheaper than a regex scan) — provably identical to counting the
-    ASCII classes ``[0-9]`` / ``[ \\t\\r\\n\\x0B\\f]`` the oracle uses.
-    """
-    n_chars = F.length(text)
-    # length-diff of a regexp_replace beats regexp_count (which
-    # materializes every single-char match into an array per row);
-    # matching letter RUNS removes the same characters with one regex
-    # iteration per run instead of per letter (~2.5× on mostly-letter
-    # text, identical count)
-    n_letter = n_chars - F.length(F.regexp_replace(text, r"\p{L}+", ""))
-    n_digit = n_chars - F.length(F.translate(text, "0123456789", ""))
-    n_space = n_chars - F.length(F.translate(text, " \t\r\n\x0b\f", ""))
-    n_nonspace = n_chars - n_space
-    n_symbol = n_chars - n_letter - n_digit - n_space
-    alpha_ratio = n_letter.cast("double") / F.greatest(F.lit(1), n_nonspace)
-    symbol_ratio = n_symbol.cast("double") / F.greatest(F.lit(1), n_chars)
-    return {
-        "n_chars": n_chars,
-        "n_nonspace": n_nonspace,
-        "alpha_ratio": alpha_ratio,
-        "symbol_ratio": symbol_ratio,
-    }
 
 
 # --- per-rule two-level screen ---------------------------------------------
@@ -172,23 +155,16 @@ def _rule_hits(text: Column, lowered: Column) -> list[tuple[str, Column]]:
     return hits
 
 
-def _defect_hit(text: Column, lowered: Column | None = None) -> Column:
-    """True iff ANY labelling regex (or the symbol-run formatting
-    trigger) matches — ∃-equivalent to the old combined-alternation
-    scan, evaluated as per-rule guarded probes.  Pass a materialized
-    ``lowered`` column when available: an inline ``lower(text)`` in the
-    guards' short-circuit OR chains is re-evaluated per probe (codegen
-    CSE skips conditional branches)."""
-    if lowered is None:
-        lowered = F.lower(text)
-    hit = F.lit(False)
-    for _, rule_hit in _rule_hits(text, lowered):
-        hit = hit | rule_hit
-    return hit | text.rlike(P.SYMBOL_RUN)
 
 
-def _feature_cols_from(df: DataFrame, text: Column) -> DataFrame:
-    """Materialize the four feature counts as real columns.
+# --- features → label → score: the pieces both lanes share ------------------
+
+_MATERIALIZED = ("_n_chars", "_n_letter", "_n_digit", "_n_space", "_lowered")
+
+
+def _with_features(df: DataFrame, text: Column) -> DataFrame:
+    """Materialize the four char-class counts and the lowered text as real
+    columns (dropped again by the caller, see ``_MATERIALIZED``).
 
     Keeping them as named intermediate columns (instead of inlining the
     expression tree at every use site) matters twice over: each count is
@@ -197,7 +173,18 @@ def _feature_cols_from(df: DataFrame, text: Column) -> DataFrame:
     label+score expression tree pushed into a Filter blows that limit and
     the whole stage silently runs interpreted (~3× slower; measured).
     CollapseProject will not re-inline them because they are non-cheap and
-    multiply referenced.
+    multiply referenced.  ``_lowered`` is materialized for the same reason:
+    the ~60 guard ``contains`` probes sit in short-circuit OR chains, where
+    codegen's subexpression elimination does NOT fire (conditional branches
+    are excluded), so an inline ``lower(text)`` re-lowered the string once
+    per probe — measured ~2× on the guard pass (r9).
+
+    Letter counting uses Unicode-aware ``\\p{L}``: the length-diff of a
+    ``regexp_replace`` over letter RUNS (one regex iteration per run, ~2.5×
+    cheaper than ``regexp_count``, same count).  Digit and whitespace
+    counts use ``translate`` (a plain char-map pass) — provably identical
+    to counting the ASCII classes ``[0-9]`` / ``[ \\t\\r\\n\\x0B\\f]`` the
+    oracle uses.
     """
     n_chars = F.length(text)
     return (
@@ -208,10 +195,12 @@ def _feature_cols_from(df: DataFrame, text: Column) -> DataFrame:
         )
         .withColumn("_n_digit", n_chars - F.length(F.translate(text, "0123456789", "")))
         .withColumn("_n_space", n_chars - F.length(F.translate(text, " \t\r\n\x0b\f", "")))
+        .withColumn("_lowered", F.lower(text))
     )
 
 
-def _feats_from_cols() -> dict[str, Column]:
+def _features() -> dict[str, Column]:
+    """Derived features over the ``_with_features`` columns."""
     n_chars = F.col("_n_chars")
     n_nonspace = n_chars - F.col("_n_space")
     n_symbol = n_chars - F.col("_n_letter") - F.col("_n_digit") - F.col("_n_space")
@@ -224,36 +213,29 @@ def _feats_from_cols() -> dict[str, Column]:
     }
 
 
-def _ratio_formatting(feats: dict[str, Column]) -> Column:
+def _formatting(feats: dict[str, Column], text: Column) -> tuple[Column, Column]:
+    """The "Formatting, Style & Errors" rule as its two triggers: the
+    char-class ratio test and the symbol-run regex.  A turn is formatting
+    iff either holds (and no earlier regex rule fired)."""
+    ratio = (
+        (feats["n_nonspace"] == 0)
+        | (feats["symbol_ratio"] > F.lit(SYMBOL_RATIO_MAX))
+        | (
+            (feats["n_chars"] >= F.lit(MIN_CHARS_FOR_ALPHA_RULE))
+            & (feats["alpha_ratio"] < F.lit(ALPHA_RATIO_MIN))
+        )
+    )
+    return ratio, text.rlike(P.SYMBOL_RUN)
+
+
+def _clean_score(feats: dict[str, Column]) -> Column:
+    """Undamped rule-based P(Clean), before rounding."""
     return (
-        (feats["n_nonspace"] == 0)
-        | (feats["symbol_ratio"] > F.lit(SYMBOL_RATIO_MAX))
-        | (
-            (feats["n_chars"] >= F.lit(MIN_CHARS_FOR_ALPHA_RULE))
-            & (feats["alpha_ratio"] < F.lit(ALPHA_RATIO_MIN))
-        )
+        F.lit(W_ALPHA) * feats["alpha_ratio"]
+        + F.lit(W_LEN)
+        * (F.least(feats["n_chars"], F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
+        + F.lit(W_SYM) * (F.lit(1.0) - feats["symbol_ratio"])
     )
-
-
-def clean_fastpath_predicate(
-    text: Column, lowered: Column | None = None
-) -> Column:
-    """True iff the label would be Clean — as a compact standalone
-    predicate (per-rule guarded probes + char-map counts).  Lets pipelines
-    filter *before* scoring when the removal set is every non-Clean label
-    (the cheap-filter-first rewrite anticipated in SURVEY.md §7.2):
-    pushed into the scan, it never materializes labels for dropped rows.
-    ``lowered``: see ``_defect_hit``."""
-    feats = feature_columns(text)
-    ratio_formatting = (
-        (feats["n_nonspace"] == 0)
-        | (feats["symbol_ratio"] > F.lit(SYMBOL_RATIO_MAX))
-        | (
-            (feats["n_chars"] >= F.lit(MIN_CHARS_FOR_ALPHA_RULE))
-            & (feats["alpha_ratio"] < F.lit(ALPHA_RATIO_MIN))
-        )
-    )
-    return ~_defect_hit(text, lowered) & ~ratio_formatting
 
 
 def barrier_filter(df: DataFrame, keep: Column) -> DataFrame:
@@ -276,48 +258,28 @@ def barrier_filter(df: DataFrame, keep: Column) -> DataFrame:
 
 
 def clean_fastpath_scored(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Fused remove-all lane (r9): filter to Clean rows AND score them in
-    ONE pass over materialized feature/lowered columns — byte-identical
-    to ``score_clean_survivors(df.filter(clean_fastpath_predicate(...)))``
-    (same expressions), but the char-class counts and the lowered text
-    are computed once instead of once for the predicate and once for the
-    score (the predicate path re-derived them per evaluation).  The
-    nondeterministic barrier column blocks PushDownPredicates from
-    substituting the materialized columns back into the filter."""
+    """Remove-all lane: keep only the turns ``score_turns`` would label
+    Clean, and score them, in ONE pass over the materialized features.
+
+    The keep predicate is "no regex rule and no formatting trigger fires",
+    so dropped rows never build a label, and survivors get the literal
+    Clean label and the undamped score.  Row-identical to
+    ``score_turns(df).filter(label == 'Clean')`` (parity-tested).  The
+    filter sits behind ``barrier_filter`` so PushDownPredicates cannot
+    substitute the materialized columns back into a scan-level filter."""
     text = F.coalesce(F.col(text_col), F.lit(""))
-    base = _feature_cols_from(df, text).withColumn("_lowered", F.lower(text))
-    feats = _feats_from_cols()
-    keep = ~_defect_hit(text, F.col("_lowered")) & ~_ratio_formatting(feats)
-    kept = barrier_filter(base, keep).drop("_lowered")
-    score_raw = (
-        F.lit(W_ALPHA) * feats["alpha_ratio"]
-        + F.lit(W_LEN)
-        * (F.least(feats["n_chars"], F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
-        + F.lit(W_SYM) * (F.lit(1.0) - feats["symbol_ratio"])
-    )
+    base = _with_features(df, text)
+    feats = _features()
+    ratio_formatting, symbol_run = _formatting(feats, text)
+    defect = F.lit(False)
+    for _, hit in _rule_hits(text, F.col("_lowered")):
+        defect = defect | hit
+    keep = ~(defect | symbol_run) & ~ratio_formatting
     return (
-        kept.withColumn("label", F.lit(LABELS[0]))
-        .withColumn("clean_score", F.bround(score_raw, 3))
-        .drop("_n_chars", "_n_letter", "_n_digit", "_n_space")
-    )
-
-
-def score_clean_survivors(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Score rows already known to be Clean (e.g. survivors of
-    ``clean_fastpath_predicate``): label is a literal and the score needs
-    only the char-class counts — no regex cascade at all.  Byte-identical
-    to ``score_turns`` on such rows (parity-tested)."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    base = _feature_cols_from(df, text).withColumn("label", F.lit(LABELS[0]))
-    feats = _feats_from_cols()
-    score_raw = (
-        F.lit(W_ALPHA) * feats["alpha_ratio"]
-        + F.lit(W_LEN)
-        * (F.least(feats["n_chars"], F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
-        + F.lit(W_SYM) * (F.lit(1.0) - feats["symbol_ratio"])
-    )
-    return base.withColumn("clean_score", F.bround(score_raw, 3)).drop(
-        "_n_chars", "_n_letter", "_n_digit", "_n_space"
+        barrier_filter(base, keep)
+        .withColumn("label", F.lit(LABELS[0]))
+        .withColumn("clean_score", F.bround(_clean_score(feats), 3))
+        .drop(*_MATERIALIZED)
     )
 
 
@@ -327,34 +289,27 @@ def score_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
     Three slim projections (features → label → score) — the Spark analog
     of the reference's classify-then-annotate step
     (``src/classifier_inference_pipeline.py:103-123``) with the model
-    replaced by deterministic rules.  ``label`` is computed from the
-    materialized feature columns; ``clean_score`` references the ``label``
-    column (no re-inlining — see ``_feature_cols_from``).
+    replaced by deterministic rules.  ``label`` is the first-match CASE
+    chain over the regex rules, then formatting, else Clean; non-Clean
+    scores are damped by 0.4.  ``clean_score`` references the
+    materialized ``label`` column (no re-inlining — see
+    ``_with_features``).
     """
     text = F.coalesce(F.col(text_col), F.lit(""))
-    # ``_lowered`` is materialized as a real column for the same reason
-    # the feature counts are (see _feature_cols_from): the ~60 guard
-    # ``contains`` probes sit in short-circuit OR chains, where codegen's
-    # subexpression elimination does NOT fire (conditional branches are
-    # excluded), so an inline ``lower(text)`` was re-lowering the string
-    # once per probe — measured ~2× on the guard pass (r9).
-    base = _feature_cols_from(df, text).withColumn("_lowered", F.lower(text))
-    feats = _feats_from_cols()
-    full = F.lit(LABELS[0])
-    formatting = _ratio_formatting(feats) | text.rlike(P.SYMBOL_RUN)
-    full = F.when(formatting, F.lit(FORMATTING_LABEL)).otherwise(full)
-    for label, hit in reversed(_rule_hits(text, F.col("_lowered"))):
-        full = F.when(hit, F.lit(label)).otherwise(full)
-    labeled = base.withColumn("label", full)
-    score_raw = (
-        F.lit(W_ALPHA) * feats["alpha_ratio"]
-        + F.lit(W_LEN)
-        * (F.least(feats["n_chars"], F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
-        + F.lit(W_SYM) * (F.lit(1.0) - feats["symbol_ratio"])
+    base = _with_features(df, text)
+    feats = _features()
+    ratio_formatting, symbol_run = _formatting(feats, text)
+    label = F.when(ratio_formatting | symbol_run, F.lit(FORMATTING_LABEL)).otherwise(
+        F.lit(LABELS[0])
     )
-    damped = F.when(F.col("label") == F.lit(LABELS[0]), score_raw).otherwise(
-        F.lit(0.4) * score_raw
+    for name, hit in reversed(_rule_hits(text, F.col("_lowered"))):
+        label = F.when(hit, F.lit(name)).otherwise(label)
+    score = _clean_score(feats)
+    damped = F.when(F.col("label") == F.lit(LABELS[0]), score).otherwise(
+        F.lit(0.4) * score
     )
-    return labeled.withColumn("clean_score", F.bround(damped, 3)).drop(
-        "_n_chars", "_n_letter", "_n_digit", "_n_space", "_lowered"
+    return (
+        base.withColumn("label", label)
+        .withColumn("clean_score", F.bround(damped, 3))
+        .drop(*_MATERIALIZED)
     )

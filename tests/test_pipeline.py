@@ -59,10 +59,8 @@ MODES = [
 
 @pytest.mark.parametrize("kw", MODES, ids=[str(i) for i in range(len(MODES))])
 def test_pipeline_matches_oracle(spark, transcripts, transcript_rows, kw):
-    for strategy in ("agg_join", "window"):
-        out = clean_pipeline(transcripts, strategy=strategy, **kw)
-        expect = _oracle_expect(transcript_rows, **kw)
-        _check(out, expect)
+    out = clean_pipeline(transcripts, **kw)
+    _check(out, _oracle_expect(transcript_rows, **kw))
 
 
 def test_filter_and_trim_mutually_exclusive(spark, transcripts):

@@ -11,7 +11,8 @@ from __future__ import annotations
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from quality_filter.rules import score_turns
+from quality_filter.labels import LABELS
+from quality_filter.rules import clean_fastpath_scored, score_turns
 from quality_filter.scrub import scrub_turns
 from tests import oracle
 
@@ -49,6 +50,7 @@ def _collect_examples(n_batches: int = 8) -> list[str]:
         "ｗｉｄｅ ｔｅｘｔ",
         "\\d [0-9]+ regex-looking (?i) input $1",
         "newline\ninside turn",
+        "plain words, then a divider ===== and more plain words",
     ]
     return out
 
@@ -72,6 +74,30 @@ def test_rules_parity_on_fuzz(spark, examples):
         ws = oracle.clean_score_of(t, wl)
         if r["label"] != wl or r["clean_score"] != ws:
             bad.append((repr(t)[:80], r["label"], wl, r["clean_score"], ws))
+    assert not bad, bad[:5]
+
+
+def test_clean_fastpath_parity_on_fuzz(spark, examples):
+    """The fused remove-all lane keeps exactly the turns the oracle labels
+    Clean, each with the oracle's undamped score."""
+    df = spark.createDataFrame(
+        [("c", i, t) for i, t in enumerate(examples)],
+        "conv_id string, turn_idx int, text string",
+    )
+    got = {
+        r["turn_idx"]: (r["label"], r["clean_score"])
+        for r in clean_fastpath_scored(df).collect()
+    }
+    want = {
+        i: (LABELS[0], oracle.clean_score_of(t, LABELS[0]))
+        for i, t in enumerate(examples)
+        if oracle.label_of(t) == LABELS[0]
+    }
+    assert want, "fuzz batch has no Clean turn"
+    assert set(got) == set(want), [
+        repr(examples[i])[:80] for i in sorted(set(got) ^ set(want))[:5]
+    ]
+    bad = [(repr(examples[i])[:80], got[i], want[i]) for i in want if got[i] != want[i]]
     assert not bad, bad[:5]
 
 

@@ -19,19 +19,29 @@ def _labeled_world(spark, n=3000, seed=17):
     )
 
 
-def test_train_score_separates_gate_classes(spark):
-    from pyspark.ml.evaluation import BinaryClassificationEvaluator
-
-    from quality_filter.qmodel import score_quality, train_quality_classifier
+@pytest.fixture(scope="module")
+def holdout_model(spark):
+    """(model, holdout): the classifier trained with default params on 4/5
+    of the default world, and the held-out fifth.  Shared by the two tests
+    that check its quality, so the model is trained once."""
+    from quality_filter.qmodel import train_quality_classifier
 
     world = _labeled_world(spark)
     train = world.filter(F.col("doc_id") % 5 != 0)
-    test = world.filter(F.col("doc_id") % 5 == 0)
+    holdout = world.filter(F.col("doc_id") % 5 == 0)
+    return train_quality_classifier(train, "keep"), holdout
+
+
+def test_train_score_separates_gate_classes(spark, holdout_model):
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+
+    from quality_filter.qmodel import score_quality
+
+    model, test = holdout_model
     n_pos = test.filter(F.col("keep") == 1).count()
     n_neg = test.filter(F.col("keep") == 0).count()
     assert n_pos > 50 and n_neg > 20  # both classes present in holdout
 
-    model = train_quality_classifier(train, "keep")
     scored = score_quality(model, test).withColumn(
         "_label", F.col("keep").cast("double")
     )
@@ -134,19 +144,15 @@ def test_model_survives_observe_poisoned_session(spark):
     assert score_quality(model, world).count() == 800
 
 
-def test_eval_report_for_trained_classifier(spark):
+def test_eval_report_for_trained_classifier(spark, holdout_model):
     """VERDICT r7 #7: quality numbers for the learned model, not just
     round-trip mechanics — the trained classifier's holdout predictions
     fed through the library's own eval operators (evalreport.eval_report
     / cohen_kappa), with pinned floors."""
     from quality_filter.evalreport import cohen_kappa, eval_report
-    from quality_filter.qmodel import score_quality, train_quality_classifier
+    from quality_filter.qmodel import score_quality
 
-    world = _labeled_world(spark, n=3000, seed=17)
-    train = world.filter(F.col("doc_id") % 5 != 0)
-    holdout = world.filter(F.col("doc_id") % 5 == 0)
-
-    model = train_quality_classifier(train, "keep")
+    model, holdout = holdout_model
     preds = score_quality(model, holdout).select(
         F.col("keep").cast("string").alias("label"),
         (F.col("quality_prob") >= 0.5).cast("int").cast("string").alias(

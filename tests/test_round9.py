@@ -7,8 +7,8 @@ construction each change replaced.
    adversarial inputs: nulls, empties, unicode, embedded NULs, sliced
    arrays, large_string, chunked arrays.
 2. ``rules.clean_fastpath_scored`` (the fused remove-all filter+score
-   lane) is row-identical to the former two-pass
-   ``score_clean_survivors(filter(clean_fastpath_predicate))``.
+   lane) is row-identical to the general lane's Clean rows,
+   ``score_turns(df).filter(label == 'Clean')``.
 3. ``scoring.with_scores`` (now an arrow_udf off the string buffers)
    matches the pandas ``score_batch`` reference path value-exactly.
 4. The ``_has_digit`` guard rewrite is exactly the former ``[0-9]``
@@ -87,21 +87,15 @@ def test_arrow_hashes_sliced_and_chunked():
 def test_clean_fastpath_scored_matches_two_pass(spark, transcripts):
     from pyspark.sql import functions as F
 
-    from quality_filter.rules import (
-        clean_fastpath_predicate,
-        clean_fastpath_scored,
-        score_clean_survivors,
-    )
+    from quality_filter.labels import LABELS
+    from quality_filter.rules import clean_fastpath_scored, score_turns
 
-    text = F.coalesce(F.col("text"), F.lit(""))
-    two_pass = score_clean_survivors(
-        transcripts.filter(clean_fastpath_predicate(text))
-    )
+    two_pass = score_turns(transcripts).filter(F.col("label") == LABELS[0])
     fused = clean_fastpath_scored(transcripts)
     assert fused.columns == two_pass.columns
     a = sorted(map(tuple, two_pass.collect()))
     b = sorted(map(tuple, fused.collect()))
-    assert a == b
+    assert a and a == b
 
 
 def test_with_scores_arrow_matches_pandas_reference(spark, transcripts):

@@ -75,10 +75,9 @@ def test_salvage_matches_oracle(spark, langid_transcripts, mode, min_len):
 
 
 def test_document_lang_skew_safe_plan_and_result(spark):
-    """One 20k-turn conversation (heavy skew): the agg_join document-lang
-    strategy must stay window-free (two map-side-combinable groupBys) and
-    the tiny per-conv aggregate must come back via a broadcast join; the
-    single-pass window strategy must produce identical assignments."""
+    """One 20k-turn conversation (heavy skew): the window attach gives
+    every turn its conversation's dominant language, and its plan reads
+    the input once (windows, no join back to a second evaluation)."""
     from quality_filter.pipeline import with_document_lang
 
     rows = [("big", i, "en" if i % 3 else "de", 0.9 if i % 3 else 0.8)
@@ -87,21 +86,17 @@ def test_document_lang_skew_safe_plan_and_result(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, lang string, lang_prob double"
     )
-    out = with_document_lang(df, strategy="agg_join")
-    langs = {(r["conv_id"], r["document_lang"]) for r in out.collect()}
+    out = with_document_lang(df)
     # big: en mass = 13333*0.9 ≈ 12000 > de mass ≈ 5333*0.8
-    assert langs == {("big", "en"), ("small", "fr")}
-    # AQE finalizes the physical plan only after execution of THIS frame
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, "agg_join must not use a window"
-    assert "BroadcastHashJoin" in plan, plan
-    # window strategy: same assignments, single evaluation of the input
-    win = with_document_lang(df, strategy="window")
-    got = {(r["conv_id"], r["turn_idx"], r["document_lang"]) for r in win.collect()}
+    got = {(r["conv_id"], r["turn_idx"], r["document_lang"]) for r in out.collect()}
     expect = {(r["conv_id"], r["turn_idx"],
                "en" if r["conv_id"] == "big" else "fr")
               for r in df.collect()}
     assert got == expect
+    # AQE finalizes the physical plan only after execution of THIS frame
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in plan, plan
+    assert "Join" not in plan, plan
 
 
 def test_salvage_keeps_only_clean_high_conf_lang_matched(spark, langid_transcripts):
@@ -110,23 +105,19 @@ def test_salvage_keeps_only_clean_high_conf_lang_matched(spark, langid_transcrip
     assert bad == 0
 
 
-def test_document_lang_null_conv_id_strategy_parity(spark):
-    """NULL conv_id rows form one group in BOTH strategies (the agg_join
-    join-back is null-safe, like _attach_per_conv's)."""
+def test_document_lang_null_conv_id_one_group(spark):
+    """NULL conv_id rows form one group: they share one document_lang,
+    decided by their summed mass, apart from the other conversations."""
     from quality_filter.pipeline import with_document_lang
 
     rows = [(None, 0, "en", 0.9), (None, 1, "de", 0.5), ("x", 0, "fr", 1.0)]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, lang string, lang_prob double"
     )
-    outs = {
-        strat: sorted(
-            ((r["conv_id"], r["turn_idx"], r["document_lang"])
-             for r in with_document_lang(df, strat).collect()),
-            key=str,
-        )
-        for strat in ("window", "agg_join")
-    }
-    assert outs["window"] == outs["agg_join"]
-    assert ("x", 0, "fr") in outs["window"]
-    assert (None, 0, "en") in outs["window"]  # en mass 0.9 > de 0.5
+    got = sorted(
+        ((r["conv_id"], r["turn_idx"], r["document_lang"])
+         for r in with_document_lang(df).collect()),
+        key=str,
+    )
+    # en mass 0.9 > de 0.5
+    assert got == sorted([(None, 0, "en"), (None, 1, "en"), ("x", 0, "fr")], key=str)
