@@ -37,6 +37,8 @@ import argparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from quality_filter.session import get_spark
+
 
 def _read(spark: SparkSession, path: str) -> DataFrame:
     from quality_filter.io import read_jsonl
@@ -155,168 +157,139 @@ def main(argv: list[str] | None = None) -> None:
     p_qs.add_argument("--cores", type=int, default=None)
 
     args = parser.parse_args(argv)
-    if args.cmd in ("quality-train", "quality-score"):
-        from pyspark.sql import SparkSession
+    mode = None
+    if args.cmd in ("score", "filter", "filter-score", "salvage"):
+        mode = _mode(args)  # validate filter/trim exclusivity before any IO
+        if args.cmd == "filter":
+            from quality_filter.labels import parse_labels
 
-        from quality_filter import qmodel
-        from quality_filter.session import get_spark as _gs
-
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = _gs("quality_filter_cli", cores=args.cores)
-        docs = spark.read.parquet(args.data_path)
-        if args.cmd == "quality-train":
-            model = qmodel.train_quality_classifier(docs, args.label_col)
-            model.write().overwrite().save(args.model_path)
-            print(f"model: {args.model_path}")
-        else:
-            model = qmodel.load_quality_classifier(args.model_path)
-            qmodel.score_quality(model, docs).write.mode("overwrite").parquet(
-                args.save_path
-            )
-            print(f"scored: {args.save_path}")
-        if not preexisting:
-            spark.stop()
-        return
-    if args.cmd == "label":
-        from importlib import import_module
-
-        from pyspark.sql import SparkSession
-
-        from quality_filter.session import get_spark as _gs
-        from quality_filter.teacher import label_lines_with_teacher
-
-        mod_name, _, fn_name = args.teacher.partition(":")
-        generate_fn = getattr(import_module(mod_name), fn_name)
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = _gs("quality_filter_cli", cores=args.cores)
-        lines = spark.read.parquet(args.data_path)
-        labeled = label_lines_with_teacher(
-            lines,
-            generate_fn,
-            id_col=args.id_col,
-            idx_col=args.idx_col,
-            text_col=args.text_col,
-            language=args.language,
-            lines_per_batch=args.lines_per_batch,
-            prompt=args.prompt,
-        )
-        labeled.write.mode("overwrite").parquet(args.save_path)
-        print(f"labeled: {args.save_path}")
-        if args.vocab_path:
-            from quality_filter.io import write_tsv_freq
-
-            write_tsv_freq(
-                spark.read.parquet(args.save_path), args.vocab_path,
-                label_col="label",
-            )
-            print(f"vocab: {args.vocab_path}")
-        if not preexisting:
-            spark.stop()
-        return
-    if args.cmd == "corpus":
-        # the generic dispatch below re-imports SparkSession locally, which
-        # makes the name function-local — import it here too
-        from pyspark.sql import SparkSession
-
-        from quality_filter.corpus import build_pretrain_corpus
-        from quality_filter.session import get_spark as _gs
-
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = _gs("quality_filter_cli", cores=args.cores)
-        docs = spark.read.parquet(args.data_path)
-        bench = (
-            spark.read.parquet(args.benchmark_path)
-            if args.benchmark_path else None
-        )
-        out, resolve_counts = build_pretrain_corpus(
-            docs,
-            benchmark=bench,
-            c4=not args.no_c4,
-            gopher=not args.no_gopher,
-            paragraph_dedup=args.paragraph_dedup,
-            substring_k=args.substring_k,
-            jaccard_threshold=args.jaccard_threshold,
-            verify_exact=args.verify_exact,
-            with_counts=True,
-        )
-        out.write.mode("overwrite").parquet(args.save_path)
-        # counts were observed as a side effect of the write — zero
-        # extra scans (resolve AFTER the action, per the corpus contract)
-        for r in resolve_counts().collect():
-            print(f"{r['stage']}: {r['n_docs']}")
-        if not preexisting:
-            spark.stop()
-        return
-
-    mode = _mode(args)  # validate filter/trim exclusivity before any IO
-    if args.cmd == "filter":
-        from quality_filter.labels import parse_labels
-
-        parse_labels(args.quality_labels)  # fail fast on unknown labels
-
-    from pyspark.sql import SparkSession
-
-    from quality_filter.pipeline import clean_pipeline, salvage_pipeline
-    from quality_filter.rules import score_turns
-    from quality_filter.scoring import with_scores
-    from quality_filter.session import get_spark
+            parse_labels(args.quality_labels)  # fail fast on unknown labels
 
     preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("quality_filter_cli", cores=args.cores)
+    try:
+        if args.cmd in ("quality-train", "quality-score"):
+            _quality(spark, args)
+        elif args.cmd == "label":
+            _label(spark, args)
+        elif args.cmd == "corpus":
+            _corpus(spark, args)
+        else:
+            _turns(spark, args, mode)
+    finally:
+        if not preexisting:
+            # only stop a session this CLI created — embedding callers
+            # (tests, notebooks) keep theirs
+            spark.stop()
+
+
+def _quality(spark: SparkSession, args) -> None:
+    from quality_filter import qmodel
+
+    docs = spark.read.parquet(args.data_path)
+    if args.cmd == "quality-train":
+        model = qmodel.train_quality_classifier(docs, args.label_col)
+        model.write().overwrite().save(args.model_path)
+        print(f"model: {args.model_path}")
+    else:
+        model = qmodel.load_quality_classifier(args.model_path)
+        qmodel.score_quality(model, docs).write.mode("overwrite").parquet(
+            args.save_path
+        )
+        print(f"scored: {args.save_path}")
+
+
+def _label(spark: SparkSession, args) -> None:
+    from importlib import import_module
+
+    from quality_filter.teacher import label_lines_with_teacher
+
+    mod_name, _, fn_name = args.teacher.partition(":")
+    generate_fn = getattr(import_module(mod_name), fn_name)
+    lines = spark.read.parquet(args.data_path)
+    labeled = label_lines_with_teacher(
+        lines,
+        generate_fn,
+        id_col=args.id_col,
+        idx_col=args.idx_col,
+        text_col=args.text_col,
+        language=args.language,
+        lines_per_batch=args.lines_per_batch,
+        prompt=args.prompt,
+    )
+    labeled.write.mode("overwrite").parquet(args.save_path)
+    print(f"labeled: {args.save_path}")
+    if args.vocab_path:
+        from quality_filter.io import write_tsv_freq
+
+        write_tsv_freq(
+            spark.read.parquet(args.save_path), args.vocab_path,
+            label_col="label",
+        )
+        print(f"vocab: {args.vocab_path}")
+
+
+def _corpus(spark: SparkSession, args) -> None:
+    from quality_filter.corpus import build_pretrain_corpus
+
+    docs = spark.read.parquet(args.data_path)
+    bench = (
+        spark.read.parquet(args.benchmark_path)
+        if args.benchmark_path else None
+    )
+    out, resolve_counts = build_pretrain_corpus(
+        docs,
+        benchmark=bench,
+        c4=not args.no_c4,
+        gopher=not args.no_gopher,
+        paragraph_dedup=args.paragraph_dedup,
+        substring_k=args.substring_k,
+        jaccard_threshold=args.jaccard_threshold,
+        verify_exact=args.verify_exact,
+        with_counts=True,
+    )
+    out.write.mode("overwrite").parquet(args.save_path)
+    # counts were observed as a side effect of the write — zero
+    # extra scans (resolve AFTER the action, per the corpus contract)
+    for r in resolve_counts().collect():
+        print(f"{r['stage']}: {r['n_docs']}")
+
+
+def _turns(spark: SparkSession, args, mode: str) -> None:
+    from quality_filter.pipeline import clean_pipeline, salvage_pipeline
+    from quality_filter.rules import score_turns
+    from quality_filter.scoring import with_scores
+
+    # shared by both paths: checkpointed runs re-derive the pipeline
+    # per bucket batch
+    def pipeline(part: DataFrame) -> DataFrame:
+        if args.cmd == "score":
+            return with_scores(score_turns(part))
+        if args.cmd == "filter":
+            return clean_pipeline(
+                part, mode=mode, labels_to_remove=args.quality_labels,
+                min_doc_length=args.min_doc_length,
+            )
+        if args.cmd == "filter-score":
+            return clean_pipeline(
+                part, mode=mode, labels_to_remove=None,
+                score_threshold=args.quality_threshold,
+                min_doc_length=args.min_doc_length,
+            )
+        return salvage_pipeline(
+            part, mode=mode, min_doc_length=args.min_doc_length
+        )
+
     df = _read(spark, args.data_path)
-
-    if args.cmd == "score":
-        out = with_scores(score_turns(df))
-    elif args.cmd == "filter":
-        out = clean_pipeline(
-            df,
-            mode=mode,
-            labels_to_remove=args.quality_labels,
-            min_doc_length=args.min_doc_length,
-        )
-    elif args.cmd == "filter-score":
-        out = clean_pipeline(
-            df,
-            mode=mode,
-            labels_to_remove=None,
-            score_threshold=args.quality_threshold,
-            min_doc_length=args.min_doc_length,
-        )
-    else:  # salvage
-        out = salvage_pipeline(df, mode=mode, min_doc_length=args.min_doc_length)
-
     if args.manifest_path:
         from quality_filter.checkpoint import run_checkpointed
 
-        # re-derive the pipeline per bucket batch for checkpointed runs
-        def fn(part):
-            if args.cmd == "score":
-                return with_scores(score_turns(part))
-            if args.cmd == "filter":
-                return clean_pipeline(
-                    part, mode=mode, labels_to_remove=args.quality_labels,
-                    min_doc_length=args.min_doc_length,
-                )
-            if args.cmd == "filter-score":
-                return clean_pipeline(
-                    part, mode=mode, labels_to_remove=None,
-                    score_threshold=args.quality_threshold,
-                    min_doc_length=args.min_doc_length,
-                )
-            return salvage_pipeline(
-                part, mode=mode, min_doc_length=args.min_doc_length
-            )
-
         done = run_checkpointed(
-            spark, df, fn, args.save_path, args.manifest_path, args.run_id
+            spark, df, pipeline, args.save_path, args.manifest_path, args.run_id
         )
         print(f"processed buckets: {done}")
     else:
-        _write(out, args.save_path)
-    if not preexisting:
-        # only stop a session this CLI created — embedding callers (tests,
-        # notebooks) keep theirs
-        spark.stop()
+        _write(pipeline(df), args.save_path)
 
 
 if __name__ == "__main__":

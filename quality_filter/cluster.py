@@ -84,7 +84,7 @@ def connected_components(
 
     # both directions via one explode, NOT union(edges, edges.swapped):
     # the union form plans and EXECUTES the whole upstream pair pipeline
-    # (LSH band join / SRP bucketing / exact verify) once per branch when
+    # (LSH band join / exact verify) once per branch when
     # ``und`` first materializes — the explode derives both orientations
     # from a single pass and halves the candidate-stage plan tree
     und = (

@@ -1,9 +1,5 @@
 """Corpus-curation operators beyond the per-document gates: per-key
 contribution caps (RefinedWeb/Dolma-style per-domain limits).
-
-New module (rather than extending sampling.py) so the driver-window
-rotation audit keeps its per-module change detection useful: operators
-added here leave existing rows' import closures untouched.
 """
 
 from __future__ import annotations

@@ -19,64 +19,6 @@ from pyspark.sql import functions as F
 _LOG = logging.getLogger(__name__)
 
 
-def cap_bucket_occupancy(
-    banded: DataFrame,
-    key_cols: list[str],
-    id_col: str,
-    cap: int | None,
-    what: str = "lsh",
-    log_drops: bool = False,
-) -> DataFrame:
-    """Occupancy guard for LSH-style self-joins: a (band, key) bucket
-    holding k rows emits O(k²) candidate pairs, so one degenerate bucket
-    (mass near-identical text that exact-first staging cannot collapse,
-    or all-parallel embeddings) turns the sub-quadratic plan quadratic.
-    Buckets beyond ``cap`` rows are truncated to a deterministic
-    ``cap``-row subset — ordered by xxhash64(bucket key, id), so a
-    duplicate group capped in several bands keeps a DIFFERENT member
-    subset per band, maximizing cross-band linkage of what survives.
-
-    The guard is FULLY LAZY: one ``row_number`` window partitioned by the
-    bucket key, filtered to ``cap`` (Spark plans it as a map-side
-    ``WindowGroupLimit`` pre-filter + one (key) shuffle).  No job runs at
-    plan-construction time, nothing is checkpointed or cached: lineage
-    stays intact, so executor loss (spot nodes / dynamic allocation)
-    recomputes instead of failing, and repeated calls leak no storage.
-    (The previous design eagerly ``localCheckpoint``ed the banded table
-    for an always-on stats pass — both hazards flagged and removed.)
-
-    Used where the capped table feeds a SINGLE consumer (e.g. the ANN
-    corpus side joined against broadcast queries).  SELF-join candidate
-    generation should use ``bucket_pairs`` instead: it folds this cap
-    into a per-bucket combination explode that consumes the banded
-    lineage once, where a self-join on the capped output would compute
-    the window on both sides.
-
-    Drop accounting is opt-in (``log_drops=True``): a diagnostic action
-    that scans the banded lineage once more and WARNs with bucket count /
-    largest bucket / rows dropped.  It recomputes the banded plan (cost:
-    one extra pass, nothing persisted) — wire it to a debug flag, not the
-    hot path.
-
-    Truncation trades recall for a hard runtime bound: members dropped
-    from every bucket of their group stay unlinked (a bounded
-    under-merge, logged when ``log_drops`` is on).  Pair volume per
-    bucket is bounded by cap²/2.  ``cap=None`` disables the guard; the
-    survivor set for any cap is identical to the previous eager design
-    (same deterministic ordering key)."""
-    if cap is None:
-        return banded
-    if log_drops:
-        _log_bucket_drops(banded, key_cols, cap, what)
-    order = F.xxhash64(*[F.col(c) for c in key_cols], F.col(id_col))
-    w = Window.partitionBy(*key_cols).orderBy(order, F.col(id_col))
-    return (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= cap)
-        .drop("_rn")
-    )
-
-
 def _log_bucket_drops(
     banded: DataFrame, key_cols: list[str], cap: int, what: str
 ) -> None:
@@ -114,8 +56,7 @@ def bucket_pairs(
 ) -> DataFrame:
     """Distinct candidate pairs (``a`` < ``b``) of ids sharing a bucket in
     an LSH-banded table — the shared candidate-generation core of
-    ``lsh_candidates`` / ``simhash_near_dups`` /
-    ``similarity.embedding_near_dups``.
+    ``lsh_candidates`` / ``simhash_near_dups``.
 
     Output columns: ``a``, ``b`` (+ ``a_<p>``, ``b_<p>`` for each
     ``payload`` column carried through, e.g. the simhash needed for the
@@ -139,7 +80,15 @@ def bucket_pairs(
       quadratic in the largest bucket.
 
     Both strategies emit the identical pair set (combinations of the same
-    deterministic survivor membership; parity pinned by test)."""
+    deterministic survivor membership; parity pinned by test).
+
+    The cap is the occupancy guard: a bucket of k rows emits O(k²) pairs,
+    so one degenerate bucket would make the sub-quadratic plan quadratic.
+    Survivors are the first ``cap`` rows by xxhash64(bucket key, id), so a
+    duplicate group capped in several bands keeps a different member
+    subset per band, which maximizes cross-band linkage.  Truncation
+    trades recall for a hard runtime bound; ``log_drops=True`` runs one
+    extra aggregate pass and WARNs with the drop counts."""
     if cap is None:
         x, y = banded.alias("x"), banded.alias("y")
         cond = F.col(f"x.{id_col}") < F.col(f"y.{id_col}")

@@ -128,13 +128,3 @@ def write_bucketed_table(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def split_files(df: DataFrame, n: int) -> DataFrame:
-    """S10: the reference's near-equal file splitter is a repartition."""
-    return df.repartition(n)
-
-
-def concat_files(df: DataFrame) -> DataFrame:
-    """S11: deterministic single-file concat."""
-    return df.coalesce(1)

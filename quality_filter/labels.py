@@ -5,7 +5,8 @@ Semantics from the reference taxonomy (``src/filter_by_quality_label.py:104-139`
 "Clean" is pinned first (id 0), shorthand aliases map to canonical names,
 ``"all"`` expands to every non-Clean label, and unknown labels raise.
 Invalid *predicted* labels coerce to "Clean"
-(``src/label_lines_with_LLM.py:341-354``, ``src/prep_data_for_training.py:40-42``).
+(``src/label_lines_with_LLM.py:341-354``, ``src/prep_data_for_training.py:40-42``);
+the Spark coercion is in ``teacher.label_lines_with_teacher``.
 """
 
 from __future__ import annotations
@@ -58,9 +59,3 @@ def parse_labels(spec: str | list[str]) -> list[str]:
         if label not in LABELS:
             raise ValueError(f"Label '{label}' is not a valid quality label.")
     return resolved
-
-
-def coerce_label(label: str | None) -> str:
-    """Coerce any out-of-taxonomy label to Clean
-    (``src/label_lines_with_LLM.py:341-354``)."""
-    return label if label in LABEL_TO_ID else CLEAN

@@ -1,5 +1,5 @@
 """Trainable document-quality classifier (the learned counterpart of the
-heuristic ``textstats.doc_quality_score``): distributed logistic
+heuristic ``textstats.quality_score_expr``): distributed logistic
 regression over the Gopher metric columns via ``pyspark.ml``, with
 parquet-backed model persistence.
 
@@ -19,9 +19,6 @@ This module keeps that loop Spark-native end to end:
 - persistence uses the MLlib writer (parquet + JSON metadata, written
   distributed), so a 100-TB scoring job loads the model from shared
   storage exactly like the langid/perplexity artifacts.
-
-New module (not textstats) so the driver-window rotation audit keeps
-existing rows' import closures untouched.
 """
 
 from __future__ import annotations

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quality_filter.labels import LABELS
@@ -52,10 +52,6 @@ def _spread(df: DataFrame) -> DataFrame:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
 def derive_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,7 +490,7 @@ def q_full_clean_reassemble(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# dedup / simhash / ANN / text analysis
+# dedup / simhash / text analysis
 # ---------------------------------------------------------------------------
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '[ \\t\\r\\n]+', ' ', 'g'))"
@@ -568,44 +564,6 @@ def q_simhash16_docs(spark, sf_dir):
         term = F.when(F.col(f"v{i}") > 0, F.lit(2 ** i)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return per_doc.select("doc_id", sim.alias("simhash"))
-
-
-@_register(
-    "ann_cosine_top5",
-    "WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings), "
-    "q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 3), "
-    "p AS (SELECT q.query_id, v.vec_id AS neighbor_id, "
-    " round(list_sum(list_transform(range(1, 65), i -> qe[i] * e[i])) / "
-    " (sqrt(list_sum(list_transform(range(1, 65), i -> qe[i] * qe[i]))) * "
-    "  sqrt(list_sum(list_transform(range(1, 65), i -> e[i] * e[i])))), 6) AS cos "
-    " FROM v, q WHERE v.vec_id != q.query_id), "
-    "r AS (SELECT query_id, neighbor_id, "
-    " row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank "
-    " FROM p) "
-    "SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 5",
-)
-def q_ann_cosine_top5(spark, sf_dir):
-    """Brute-force cosine top-5 neighbors for queries vec_id < 3 (ranks
-    computed on round(cos, 6) with vec_id tiebreak for cross-engine float
-    stability)."""
-    emb = _embeddings(spark, sf_dir)
-    from quality_filter.similarity import _dot, _norm
-
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
-    joined = c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col("neighbor_id"))
-    cos = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6
-    )
-    scored = joined.select("query_id", "neighbor_id", cos.alias("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank")
-    )
 
 
 @_register(
@@ -1032,51 +990,6 @@ def q_doc_quality_score(spark, sf_dir):
     )
 
 
-def _near_dup_sql() -> str:
-    dot = "list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))"
-    na = "sqrt(list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))"
-    nb = "sqrt(list_sum(list_transform(range(1, 65), i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))"
-    return (
-        "WITH world AS ("
-        " SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500"
-        " UNION ALL"
-        " SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id < 20) "
-        f"SELECT a.vec_id AS a, b.vec_id AS b, round({dot} / ({na} * {nb}), 6) AS cos6 "
-        "FROM world a JOIN world b ON a.vec_id < b.vec_id "
-        f"WHERE {dot} / ({na} * {nb}) >= 0.99"
-    )
-
-
-@_register("embedding_near_dups", _near_dup_sql())
-def q_embedding_near_dups(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs via the REAL SRP-LSH
-    library operator (similarity.embedding_near_dups) over a corpus with
-    planted exact copies (vec_id+100000 for vec_id < 20).  The oracle is
-    the brute-force pair scan — exact copies collide in every LSH table,
-    so the sub-quadratic path must find precisely the brute-force set
-    (random 64-dim pairs never reach cosine 0.99)."""
-    from quality_filter.similarity import embedding_near_dups
-
-    emb = _embeddings(spark, sf_dir)
-    base = emb.filter(F.col("vec_id") < 500).select("vec_id", "embedding")
-    copies = emb.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    world = base.unionByName(copies)
-    # 2 tables suffice here: EXACT copies collide in every table, so the
-    # output (post cosine-verify) is table-count-invariant; fewer tables
-    # halve the plan's hyperplane-literal folds
-    # max_bucket_size=None: the DuckDB oracle computes the UNCAPPED
-    # candidate set, so the occupancy guard (a scale knob with its own
-    # adversarial pytest coverage) must be off wherever an oracle checks
-    # the output — a real >cap bucket would otherwise turn the guard into
-    # a Spark-vs-oracle mismatch.
-    pairs = embedding_near_dups(
-        world, threshold=0.99, n_tables=2, max_bucket_size=None
-    )
-    return pairs.select("a", "b", F.round(F.col("cosine"), 6).alias("cos6"))
-
-
 @_register(
     "dedup_convs_exact",
     _with_turns(
@@ -1428,98 +1341,6 @@ def _eval_summary_sql() -> str:
     )
 
 
-_MM_RESIDUES = 6
-
-
-def _mm_payload(i: int):
-    """Frozen deterministic media payload for residue class ``i``: cycles
-    real decodable formats (binary PPM, zlib PNG RGB/RGBA, PCM WAV) so the
-    stdlib codec paths — PPM header parse, PNG filter reversal, WAV frame
-    read — are all exercised by the case."""
-    from quality_filter import multimodal as MM
-
-    variant = i % 3
-    if variant == 0:
-        return "image", MM._synth_ppm(i)
-    if variant == 1:
-        return "image", MM._synth_png(i, rgba=(i % 2 == 0))
-    return "audio", MM._synth_wav(i)
-
-
-def _multimodal_sql() -> str:
-    """Value-exact multimodal oracle: payloads are a pure function of
-    doc_id % 6, so the expected feature values of every residue class are
-    computed ONCE locally with the same decode+featurize code the
-    mapInPandas operator runs, and stated as literals — exact on
-    actual decoded-content features (mirrors _ppl_expected_sql)."""
-    from quality_filter import multimodal as MM
-
-    picks = {"f0": 0, "f1": 1, "f2": 2, "f8": 8}
-    arms: dict[str, list[float]] = {c: [] for c in picks}
-    for i in range(_MM_RESIDUES):
-        modality, payload = _mm_payload(i)
-        v = MM._real_features(modality, MM.real_decode(modality, payload))
-        for c, idx in picks.items():
-            arms[c].append(float(v[idx]))
-    exprs = ", ".join(
-        "CAST(CASE CAST(doc_id % {m} AS INT) {cases} END AS DOUBLE) AS {c}".format(
-            m=_MM_RESIDUES,
-            cases=" ".join(
-                f"WHEN {r} THEN {val!r}" for r, val in enumerate(arms[c])
-            ),
-            c=c,
-        )
-        for c in picks
-    )
-    return f"SELECT doc_id, {exprs} FROM documents"
-
-
-@_register("multimodal_features", _multimodal_sql())
-def q_multimodal_features(spark, sf_dir):
-    """Multimodal feature extraction, oracle-bound: synthesize REAL
-    decodable payloads (PPM / PNG / WAV, frozen per doc_id residue) in an
-    Arrow-batched step, decode + featurize them through the production
-    ``extract_features(use_real_codec=True)`` mapInPandas path, and emit
-    four feature components whose values the oracle states literally —
-    any drift in the PPM/PNG/WAV decoders, the featurizer, or the
-    binary→Arrow→numpy plumbing breaks the match."""
-    import pandas as pd
-
-    from quality_filter.multimodal import extract_features
-    from quality_filter.shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    ids = _docs(spark, sf_dir).select("doc_id")
-    media_schema = "doc_id long, modality string, payload binary"
-
-    # payloads are a pure function of doc_id % 6 — build each residue's
-    # payload once and ship the six to the tasks in the closure instead of
-    # re-running the PNG/WAV synth (zlib compress per call) on every row
-    arms = [_mm_payload(r) for r in range(_MM_RESIDUES)]
-
-    def synth(batches):
-        for pdf in batches:
-            mods, payloads = [], []
-            for d in pdf["doc_id"]:
-                modality, payload = arms[int(d) % _MM_RESIDUES]
-                mods.append(modality)
-                payloads.append(payload)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    media = ids.mapInPandas(synth, media_schema)
-    feat = extract_features(media, use_real_codec=True)
-    f = F.col("feature")
-    return feat.select(
-        "doc_id",
-        F.element_at(f, 1).cast("double").alias("f0"),
-        F.element_at(f, 2).cast("double").alias("f1"),
-        F.element_at(f, 3).cast("double").alias("f2"),
-        F.element_at(f, 9).cast("double").alias("f8"),
-    )
-
-
 @_register("eval_report", _eval_report_sql())
 def q_eval_report(spark, sf_dir):
     """Training-eval report (src/train_classifier.py:56-96): per-class
@@ -1593,73 +1414,6 @@ ORACLES["cohen_kappa"] = _with_turns(
 )
 
 
-_SEMDEDUP_COS = (
-    "round(list_sum(list_transform(range(1, 65), i -> a.e[i] * b.e[i])) / "
-    "(sqrt(list_sum(list_transform(range(1, 65), i -> a.e[i] * a.e[i]))) * "
-    " sqrt(list_sum(list_transform(range(1, 65), i -> b.e[i] * b.e[i])))), 6)"
-)
-
-
-@_register(
-    "semantic_dedup_docs",
-    # the embeddings table has no near-parallel pairs (max pairwise cosine
-    # ~0.51), so semantic duplicates are PLANTED deterministically: every
-    # vec_id % 10 == 0 row gains scaled copies at +1000 (×2) and +2000
-    # (×3) — scaling preserves cosine exactly, giving 3-element transitive
-    # clusters whose minimum id must survive
-    "WITH RECURSIVE "
-    "base AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e"
-    " FROM embeddings WHERE vec_id < 150), "
-    "v AS (SELECT vec_id, e FROM base"
-    " UNION ALL SELECT vec_id + 1000, list_transform(e, x -> x * 2) FROM base WHERE vec_id % 10 = 0"
-    " UNION ALL SELECT vec_id + 2000, list_transform(e, x -> x * 3) FROM base WHERE vec_id % 10 = 0), "
-    f"p AS (SELECT a.vec_id AS pa, b.vec_id AS pb FROM v a JOIN v b"
-    f" ON a.vec_id < b.vec_id AND {_SEMDEDUP_COS} >= 0.9), "
-    "und AS (SELECT pa AS s, pb AS d FROM p UNION ALL SELECT pb, pa FROM p), "
-    "reach(s, d) AS ("
-    " SELECT vec_id, vec_id FROM v"
-    " UNION"
-    " SELECT r.s, u.d FROM reach r JOIN und u ON r.d = u.s), "
-    "comp AS (SELECT s AS vec_id, MIN(d) AS rep FROM reach GROUP BY s) "
-    "SELECT vec_id FROM comp WHERE vec_id = rep",
-)
-def q_semantic_dedup_docs(spark, sf_dir):
-    """SemDeDup-style semantic dedup (Abbas et al. 2023) through the
-    PRODUCTION scale path: ``similarity.semantic_dedup`` — SRP-LSH
-    bucketed candidate pairs (equi-join on (table, bucket), hyperplanes
-    as plan literals) → exact-cosine verify → connected components → one
-    canonical row per semantic cluster.  The embeddings table has no
-    near-parallel pairs (max pairwise cosine ≈ 0.51), so clusters are
-    PLANTED as positively-scaled copies: scaling preserves direction, so
-    every copy lands in the SAME SRP bucket in EVERY table (the ×2 copy
-    bit-exactly — power-of-two scaling commutes with double rounding —
-    and the ×3 copy up to a sign flip only when a projection sits within
-    float epsilon of a hyperplane, vanishing odds across 4 independent
-    tables), making LSH recall 1 by construction; precision is enforced
-    by the operator's exact cosine ≥ threshold verify (planted-to-other
-    cosine equals base-to-other ≤ 0.51).  The oracle checks the same
-    semantics via exact all-pairs + recursive-CTE components."""
-    from quality_filter.similarity import semantic_dedup
-
-    base = _embeddings(spark, sf_dir).filter(
-        F.col("vec_id") < 150
-    ).select("vec_id", "embedding")
-    dup = base.filter(F.col("vec_id") % 10 == 0)
-    scaled = lambda k: F.transform(  # noqa: E731
-        F.col("embedding"), lambda x: (x.cast("double") * k).cast("float")
-    )
-    emb = base.unionByName(
-        dup.select((F.col("vec_id") + 1000).alias("vec_id"), scaled(2).alias("embedding"))
-    ).unionByName(
-        dup.select((F.col("vec_id") + 2000).alias("vec_id"), scaled(3).alias("embedding"))
-    )
-    # uncapped: oracle computes the full candidate set (see
-    # q_embedding_near_dups note on the occupancy guard)
-    return semantic_dedup(emb, threshold=0.9, max_bucket_size=None).select(
-        "vec_id"
-    )
-
-
 def _quality_weighted_sql() -> str:
     qsql = _quality_score_sql()
     return (
@@ -1725,7 +1479,7 @@ def q_near_dup_dedup_docs(spark, sf_dir):
 # Gopher quality rules + C4 line filter (textstats.with_gopher_flags /
 # textstats.c4_line_filter).  The synthetic documents table is a
 # punctuation-free single-line word stream, so — as with the planted
-# near-dup/semantic worlds above — each query first derives a deterministic
+# near-dup worlds above — each query first derives a deterministic
 # line-structured world from it (8-word lines; terminal '.', '...'-endings,
 # and '- ' bullets keyed off (doc_id + line); stopword suffix on even
 # doc_ids; '{ config }' / 'lorem ipsum' pages planted on doc_id % 97 / 89),
@@ -2572,4 +2326,3 @@ def q_teacher_label_loop(spark, sf_dir):
     return label_lines_with_teacher(
         t, fake_structured_teacher, idx_col="turn_idx"
     )
-

@@ -1,9 +1,7 @@
-"""Dedup (exact / MinHash-LSH / SimHash) and similarity-search tests with
-planted duplicates and brute-force ground truth."""
+"""Dedup (exact / MinHash-LSH / SimHash) tests with planted duplicates."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,7 +14,6 @@ from quality_filter.dedup import (
     normalized_text,
     simhash_near_dups,
 )
-from quality_filter.similarity import cosine_topk, lsh_ann_topk
 
 BASE = ("the quick brown fox jumps over the lazy dog while the committee "
         "reviews the proposal in detail and agrees on next steps for the project")
@@ -100,31 +97,6 @@ def test_simhash_near_dups(spark, dup_docs):
     assert all(a >= 100 for a, b in pairs)  # no false positives among uniques
 
 
-SF = "/root/testdata/sf0.01"
-
-
-def _brute_force_topk(emb, k=5, n_queries=3):
-    ids = np.array([e[0] for e in emb])
-    V = np.array([e[1] for e in emb], dtype=np.float64)
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    out = {}
-    for qi in range(n_queries):
-        sims = Vn @ Vn[qi]
-        order = [
-            int(ids[j])
-            for j in sorted(range(len(ids)), key=lambda j: (-sims[j], ids[j]))
-            if ids[j] != ids[qi]
-        ]
-        out[int(ids[qi])] = order[:k]
-    return out
-
-
-@pytest.fixture(scope="module")
-def embeddings(spark):
-    df = spark.read.parquet(f"{SF}/embeddings.parquet")
-    return df, [(r["vec_id"], r["embedding"]) for r in df.collect()]
-
-
 def test_simhash_grouped_equals_hof(spark, dup_docs):
     """The explode+groupBy SimHash layout must produce bit-identical
     hashes to the aggregate-HOF layout (incl. empty and NULL text)."""
@@ -139,75 +111,6 @@ def test_simhash_grouped_equals_hof(spark, dup_docs):
     joined = hof.alias("a").join(grp.alias("b"), "doc_id", "full")
     assert joined.filter("a.sh IS DISTINCT FROM b.sh").count() == 0
     assert grp.count() == df.count()
-
-
-def test_cosine_topk_matches_brute_force(spark, embeddings):
-    df, emb = embeddings
-    queries = df.filter("vec_id < 3")
-    got = {}
-    for r in cosine_topk(df, queries, k=5).collect():
-        got.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"]))
-    want = _brute_force_topk(emb, k=5, n_queries=3)
-    for q, pairs in got.items():
-        ordered = [nid for _, nid in sorted(pairs)]
-        assert ordered == want[q], (q, ordered, want[q])
-
-
-def test_lsh_ann_recall(spark, embeddings):
-    df, emb = embeddings
-    queries = df.filter("vec_id < 10")
-    ann = {}
-    # random-Gaussian embeddings are LSH's worst case (neighbors barely
-    # closer than random) — use wide buckets and many tables
-    for r in lsh_ann_topk(df, queries, k=5, n_bits=4, n_tables=12).collect():
-        ann.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    want = _brute_force_topk(emb, k=5, n_queries=10)
-    recalls = [
-        len(ann.get(q, set()) & set(truth)) / len(truth) for q, truth in want.items()
-    ]
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-
-
-def test_embedding_near_dups(spark, embeddings):
-    from pyspark.sql import functions as F
-    from quality_filter.similarity import embedding_near_dups
-
-    df, emb = embeddings
-    # plant two near-identical copies of vec 0
-    v0 = emb[0][1]
-    extra = spark.createDataFrame(
-        [(9001, [x * 1.0001 for x in v0], 0), (9002, list(v0), 0)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    world = df.unionByName(extra)
-    pairs = {(r["a"], r["b"]): r["cosine"] for r in
-             embedding_near_dups(world, threshold=0.99).collect()}
-    assert (0, 9001) in pairs and (0, 9002) in pairs and (9001, 9002) in pairs
-    for c in pairs.values():
-        assert c >= 0.99
-    # random vectors must not appear as near-dups at 0.99
-    assert all(a >= 9001 or b >= 9001 or a == 0 for (a, b) in pairs), pairs
-
-
-def test_ivf_topk_recall(spark, embeddings):
-    """IVF ANN: recall@5 vs brute force must be high at nprobe=4/16 and
-    exact at nprobe=nlist (probe-everything degrades to brute force)."""
-    from quality_filter.similarity import ivf_topk
-
-    df, emb = embeddings
-    truth = _brute_force_topk(emb, k=5, n_queries=3)
-    queries = df.filter("vec_id < 3")
-
-    got = {}
-    for r in ivf_topk(df, queries, k=5, nlist=16, nprobe=4).collect():
-        got.setdefault(r["query_id"], []).append(r["neighbor_id"])
-    hits = sum(len(set(got.get(q, [])) & set(t)) for q, t in truth.items())
-    assert hits >= 0.6 * sum(len(t) for t in truth.values()), (got, truth)
-
-    exact = {}
-    for r in ivf_topk(df, queries, k=5, nlist=8, nprobe=8).collect():
-        exact.setdefault(r["query_id"], []).append(r["neighbor_id"])
-    assert {q: set(v) for q, v in exact.items()} == {q: set(t) for q, t in truth.items()}
 
 
 def test_conv_fingerprint_salted_20k_turn_conversation(spark):

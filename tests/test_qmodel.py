@@ -168,3 +168,21 @@ def test_eval_report_for_trained_classifier(spark, holdout_model):
     assert rep["1"]["f1"] > 0.85, f"keep-class F1 {rep['1']['f1']:.3f}"
     kappa = cohen_kappa(preds).collect()[0]["kappa"]
     assert kappa > 0.5, f"chance-corrected agreement too low: {kappa:.3f}"
+
+
+def test_cli_quality_score_keeps_the_callers_session(spark, holdout_model, tmp_path):
+    """`quality-score` loads a saved classifier and writes the scored
+    table, and it leaves running a session that it did not create."""
+    from quality_filter.cli import main
+
+    model, holdout = holdout_model
+    model.write().overwrite().save(str(tmp_path / "model"))
+    holdout.write.parquet(str(tmp_path / "docs"))
+    main([
+        "quality-score", "--data-path", str(tmp_path / "docs"),
+        "--model-path", str(tmp_path / "model"),
+        "--save-path", str(tmp_path / "scored"),
+    ])
+    scored = spark.read.parquet(str(tmp_path / "scored"))
+    assert "quality_prob" in scored.columns
+    assert scored.count() == holdout.count()

@@ -265,35 +265,6 @@ def test_cohen_kappa_hand_computed(spark):
     assert cohen_kappa(degen).collect()[0]["kappa"] == 0.0
 
 
-# -- semantic dedup (SemDeDup-style) -----------------------------------------
-
-def test_semantic_dedup_lsh_path_matches_exact(spark):
-    """Planted near-parallel embedding clusters: the sub-quadratic
-    SRP-LSH path must keep the same survivors as exact all-pairs cosine
-    (near-identical vectors collide in every LSH table → recall 1)."""
-    import numpy as np
-
-    from quality_filter.similarity import semantic_dedup
-
-    rng = np.random.RandomState(7)
-    rows = []
-    vid = 0
-    expected_survivors = set()
-    for c in range(10):
-        base = rng.randn(64)
-        base /= np.linalg.norm(base)
-        n_members = 1 + c % 4
-        expected_survivors.add(vid)  # min id of each cluster survives
-        for m in range(n_members):
-            v = base + rng.randn(64) * 1e-4  # cosine ≈ 1 within cluster
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = semantic_dedup(df, threshold=0.95)
-    got = {r["vec_id"] for r in out.collect()}
-    assert got == expected_survivors
-
-
 def test_quality_weighted_sample_rate_tracks_score(spark):
     from quality_filter.sampling import _MIX, quality_weighted_sample
 
@@ -312,36 +283,3 @@ def test_quality_weighted_sample_rate_tracks_score(spark):
         ids = [i for i, sc in rows if sc == s]
         kept = sum(1 for i in ids if i in got)
         assert abs(kept / len(ids) - s) < 0.05
-
-
-# -- streaming dedup == batch dedup equivalence (VERDICT r3 #9) --------------
-
-def test_stream_dedup_equals_batch_dedup(spark, tmpdir):
-    """Set-equality of survivors: streaming dropDuplicatesWithinWatermark
-    keyed on (conv_id, turn_idx, fingerprint) must agree with the batch
-    analog (distinct on the same key) on a replayed input."""
-    from quality_filter.dedup import normalized_text
-    from quality_filter.streaming import stream_dedup
-    from quality_filter.synth import synth_transcripts
-
-    inp, outp, ckpt = f"{tmpdir}/in", f"{tmpdir}/out", f"{tmpdir}/ck"
-    base = synth_transcripts(spark, n_convs=8, seed=11)
-    replay = base.limit(7)                      # verbatim re-delivery
-    again = base.limit(2).withColumn("turn_idx", F.col("turn_idx") + 500)
-    feed = base.unionByName(replay).unionByName(again)
-    feed.write.mode("append").parquet(inp)
-
-    stream_dedup(spark, inp, outp, ckpt)
-    key = lambda df: {  # noqa: E731
-        (r["conv_id"], r["turn_idx"], r["nt"])
-        for r in df.select(
-            "conv_id",
-            "turn_idx",
-            normalized_text(F.coalesce(F.col("text"), F.lit(""))).alias("nt"),
-        ).collect()
-    }
-    # batch analog: exact dedup on the same (conv_id, turn_idx, fp) key —
-    # the key() set IS that dedup
-    assert key(spark.read.parquet(outp)) == key(feed)
-    # row-count check too: the stream emitted each surviving key once
-    assert spark.read.parquet(outp).count() == len(key(feed))

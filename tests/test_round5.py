@@ -192,24 +192,6 @@ def test_bucket_cap_kept_subset_is_linkable_and_deterministic(spark):
     assert p1 == p2 and len(p1) > 0
 
 
-def test_embedding_near_dups_bucket_cap(spark, caplog):
-    import logging
-
-    from quality_filter.similarity import embedding_near_dups
-
-    # 150 exactly-parallel vectors (scaled copies): one SRP bucket per
-    # table holds all of them -> quadratic without the guard
-    base = [float((j * 37 + 11) % 19) - 9.0 for j in range(64)]
-    rows = [(i, [x * (1.0 + i) for x in base]) for i in range(150)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    with caplog.at_level(logging.WARNING, logger="quality_filter.dedup"):
-        pairs = embedding_near_dups(df, threshold=0.99, max_bucket_size=25,
-                                    log_bucket_drops=True)
-        n = pairs.count()
-    assert 0 < n <= 4 * (25 * 24) // 2
-    assert any("embedding_near_dups" in r.message for r in caplog.records)
-
-
 def test_simhash_near_dups_bucket_cap(spark, caplog):
     import logging
 
@@ -243,80 +225,6 @@ def test_class_weights_bounded_guard(spark, monkeypatch):
     bad = spark.createDataFrame([(f"l{i}",) for i in range(25)], "label string")
     with pytest.raises(ValueError, match="bounded vocabulary"):
         class_weights(bad)
-
-
-# -- streaming trim: state-size guard ----------------------------------------
-
-def test_stream_trim_max_turns_guard(spark, tmpdir):
-    """A conversation past max_turns_per_conv keeps only its lowest-
-    turn_idx window in state; trim then runs on that window."""
-    import datetime
-
-    from quality_filter.streaming import END_MARKER_ROLE, stream_trim_stateful
-
-    inp, outp, ckpt = f"{tmpdir}/in", f"{tmpdir}/out", f"{tmpdir}/ckpt"
-    ts = datetime.datetime(2024, 1, 1)
-    good = "This is a perfectly reasonable sentence for training."
-    junk = "$$$$$$$$"
-    rows = [("big", 0, "user", junk, None, ts)]
-    rows += [("big", i, "user", good, None, ts) for i in range(1, 9)]
-    rows += [("big", 9, "user", junk, None, ts)]          # would be trimmed
-    rows += [("big", 99, END_MARKER_ROLE, "", None, ts)]
-    cols = ("conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp")
-    spark.createDataFrame(rows, cols).coalesce(1).write.parquet(inp)
-    stream_trim_stateful(spark, inp, outp, ckpt, max_turns_per_conv=6)
-    got = sorted(r["turn_idx"] for r in spark.read.parquet(outp).collect())
-    # guard keeps turns 0..5 (lowest turn_idx); trim then cuts the
-    # leading junk turn 0 and keeps the clean run 1..5
-    assert got == [1, 2, 3, 4, 5]
-
-
-# -- IVF recall floor in the genuinely approximate regime --------------------
-
-def test_ivf_recall_bounds_at_low_nprobe(spark):
-    """nprobe=nlist is exact (test_dedup_similarity.py::
-    test_ivf_topk_recall); this pins the approximate regime: on a
-    clusterable manifold with
-    cell-boundary queries, recall@5 has a quantified floor at nprobe=1
-    and recovers by nprobe=2 (calibrated: 0.6875 / 1.0 with these seeds)."""
-    import numpy as np
-
-    from quality_filter.similarity import cosine_topk, ivf_topk
-
-    rng = np.random.RandomState(7)
-    centers = rng.randn(8, 64) * 10
-    pts = [
-        (c * 40 + j, (centers[c] + rng.randn(64)).astype("float32").tolist())
-        for c in range(8)
-        for j in range(40)
-    ]
-    corpus = spark.createDataFrame(pts, "vec_id long, embedding array<float>")
-    qs = []
-    for i in range(16):
-        a, b = i % 8, (i + 3) % 8
-        mid = (centers[a] + centers[b]) / 2 + rng.randn(64) * 0.5
-        qs.append((10_000 + i, mid.astype("float32").tolist()))
-    queries = spark.createDataFrame(qs, "vec_id long, embedding array<float>")
-
-    def topk_sets(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return out
-
-    exact = topk_sets(cosine_topk(corpus, queries, k=5))
-
-    def recall(nprobe):
-        approx = topk_sets(
-            ivf_topk(corpus, queries, k=5, nlist=8, nprobe=nprobe, seed=11)
-        )
-        return sum(len(exact[q] & approx.get(q, set())) / 5 for q in exact) / len(exact)
-
-    r1, r2 = recall(1), recall(2)
-    assert 0.5 <= r1 < 1.0, r1   # genuinely approximate, bounded floor
-    assert r2 >= 0.95, r2        # one extra probe recovers the boundary
-    assert r2 >= r1
 
 
 # -- exact-substring dedup: span-merge boundary property ---------------------

@@ -1,5 +1,5 @@
-"""Round-6 regression tests: lazy occupancy guard, narrow ANN shuffles,
-segment-salted substring dedup, vectorized stateful-trim ingest."""
+"""Round-6 regression tests: lazy occupancy guard, segment-salted substring
+dedup, MinHash banding S-curve, scorer fast-path bit-identity."""
 
 from __future__ import annotations
 
@@ -19,11 +19,12 @@ def _boom_docs(spark):
 
 
 def test_occupancy_guard_is_lazy(spark):
-    """cap_bucket_occupancy with a cap set must not run ANY Spark job at
-    plan-construction time (the r5 design eagerly localCheckpointed +
-    collected stats; ADVICE flagged the executor-loss and eager-execution
-    hazards).  Built over an input that raises when computed: plan
-    construction succeeds, only an action explodes."""
+    """The occupancy cap of ``lsh_candidates`` (``dedup.bucket_pairs``)
+    must not run ANY Spark job at plan-construction time (the r5 design
+    eagerly localCheckpointed + collected stats; ADVICE flagged the
+    executor-loss and eager-execution hazards).  Built over an input that
+    raises when computed: plan construction succeeds, only an action
+    explodes."""
     from quality_filter.dedup import lsh_candidates, minhash_signatures
 
     docs = _boom_docs(spark)
@@ -62,46 +63,6 @@ def test_guard_capped_set_matches_r5_design(spark):
     p1 = sorted(tuple(r) for r in lsh_candidates(sig, max_bucket_size=12).collect())
     p2 = sorted(tuple(r) for r in lsh_candidates(sig, max_bucket_size=12).collect())
     assert p1 == p2 and 0 < len(p1) <= 4 * (12 * 11) // 2
-
-
-def test_embedding_near_dups_matches_uncapped_after_narrowing(spark):
-    """The id-pair-distinct + vector-re-attach layout returns the same
-    pairs and cosines as before the narrowing (small corpus, cap off)."""
-    from quality_filter.similarity import cosine_topk, embedding_near_dups
-
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    base = rng.randn(64)
-    rows = [(i, (base * (1.0 + 0.5 * i)).tolist()) for i in range(3)] + [
-        (i, rng.randn(64).tolist()) for i in range(3, 40)
-    ]
-    # vec 0,1,2 scaled copies -> near-dup cluster; rest independent gaussians
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = embedding_near_dups(df, threshold=0.999, max_bucket_size=None)
-    got = {(r["a"], r["b"]) for r in pairs.collect()}
-    assert got == {(0, 1), (0, 2), (1, 2)}
-    for r in pairs.collect():
-        assert r["cosine"] >= 0.999
-
-
-def test_lsh_ann_topk_narrow_matches_bruteforce(spark):
-    """lsh_ann_topk after the narrow-shuffle rewrite still agrees with
-    brute-force cosine ranking on colliding candidates (exact copies
-    collide in every table, so top-1 must be the planted copy)."""
-    from quality_filter.similarity import lsh_ann_topk
-
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    corpus_rows = [(i, rng.randn(64).astype(float).tolist()) for i in range(60)]
-    # plant: query 1000+i is an exact copy of corpus vector i
-    query_rows = [(1000 + i, corpus_rows[i][1]) for i in range(5)]
-    corpus = spark.createDataFrame(corpus_rows, "vec_id long, embedding array<float>")
-    queries = spark.createDataFrame(query_rows, "vec_id long, embedding array<float>")
-    out = lsh_ann_topk(corpus, queries, k=1).collect()
-    top1 = {r["query_id"]: r["neighbor_id"] for r in out if r["rank"] == 1}
-    assert top1 == {1000 + i: i for i in range(5)}
 
 
 # -- substring dedup: segment-salted window strategy (giant-doc skew) --------

@@ -142,97 +142,6 @@ def test_with_langid_and_perplexity_arrow_match_reference(spark, transcripts):
         assert r["logppl"] == ref["logppl"][i]
 
 
-def test_srp_bucket_matches_unrolled(spark):
-    """The nested-HOF srp_bucket (one array-of-plane-literals transform)
-    is value-identical to the unrolled per-plane aggregate form it
-    replaced — same zip_with product, same sequential double fold.  The
-    40-plane case checks that bits from 31 up do not wrap: the bit
-    arithmetic runs in bigint."""
-    from pyspark.sql import functions as F
-
-    from quality_filter.similarity import _dot, _hyperplanes, srp_bucket
-
-    rng = np.random.RandomState(7)
-    vecs = [[float(np.float32(x)) for x in rng.randn(16)] for _ in range(40)]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "id int, v array<float>"
-    )
-
-    def unrolled(vec_col, planes):
-        bits = []
-        for i, plane in enumerate(planes):
-            lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-            proj = _dot(vec_col, lit_plane)
-            bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out
-
-    for n_bits in (6, 8, 40):
-        planes = _hyperplanes(16, n_bits, seed=123)
-        rows = df.select(
-            srp_bucket(F.col("v"), planes).alias("a"),
-            unrolled(F.col("v"), planes).alias("b"),
-        ).collect()
-        assert rows and all(r["a"] == r["b"] for r in rows), n_bits
-        assert all(0 <= r["a"] < 1 << n_bits for r in rows), n_bits
-
-
-def test_srp_n_bits_out_of_range_raises(spark):
-    """Bucket ids are bigint bit sets, so the public SRP operators accept
-    1..62 planes and fail loudly outside that range."""
-    from quality_filter.similarity import (
-        embedding_near_dups,
-        lsh_ann_topk,
-        semantic_dedup,
-    )
-
-    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
-    for n_bits in (0, 63):
-        with pytest.raises(ValueError, match="n_bits"):
-            embedding_near_dups(df, dim=2, n_bits=n_bits)
-        with pytest.raises(ValueError, match="n_bits"):
-            semantic_dedup(df, dim=2, n_bits=n_bits)
-        with pytest.raises(ValueError, match="n_bits"):
-            lsh_ann_topk(df, df, dim=2, n_bits=n_bits)
-
-
-def test_nearest_centroids_matches_unrolled(spark):
-    """_nearest_centroids' transform-over-centroid-literals form equals
-    the former unrolled array-of-structs argmin."""
-    from pyspark.sql import functions as F
-
-    from quality_filter.similarity import _nearest_centroids, _sqdist
-
-    rng = np.random.RandomState(11)
-    vecs = [[float(np.float32(x)) for x in rng.randn(8)] for _ in range(30)]
-    centers = [list(map(float, rng.randn(8))) for _ in range(5)]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "id int, v array<float>"
-    )
-
-    def unrolled(vec_col, n):
-        ds = F.array(
-            *[
-                F.struct(
-                    _sqdist(
-                        vec_col, F.array(*[F.lit(float(x)) for x in c])
-                    ).alias("d"),
-                    F.lit(i).alias("cid"),
-                )
-                for i, c in enumerate(centers)
-            ]
-        )
-        return F.transform(F.slice(F.array_sort(ds), 1, n), lambda s: s["cid"])
-
-    rows = df.select(
-        _nearest_centroids(F.col("v"), centers, 3).alias("a"),
-        unrolled(F.col("v"), 3).alias("b"),
-    ).collect()
-    assert rows and all(list(r["a"]) == list(r["b"]) for r in rows)
-
-
 def test_cc_fused_first_round_chain_and_empty(spark):
     """connected_components with the fused first propagation round: a
     diameter-3 chain still converges to the component minimum (exercising

@@ -1,5 +1,4 @@
-"""Streaming ingest (exactly-once incremental), CLI entry points, and the
-skew-safe salted reassembly."""
+"""CLI entry points and the skew-safe salted reassembly."""
 
 from __future__ import annotations
 
@@ -7,7 +6,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from quality_filter.pipeline import clean_pipeline, reassemble, reassemble_salted
 from quality_filter.synth import synth_transcripts
@@ -38,48 +36,6 @@ def test_salted_reassembly_matches_plain(spark, transcripts):
         reassemble(out, strategy="nope")
 
 
-def test_stream_score_incremental_exactly_once(spark, tmpdir):
-    inp, outp, ckpt = f"{tmpdir}/in", f"{tmpdir}/out", f"{tmpdir}/ckpt"
-    from quality_filter.streaming import stream_score
-
-    batch1 = synth_transcripts(spark, n_convs=20, seed=1)
-    batch1.write.mode("append").parquet(inp)
-    stream_score(spark, inp, outp, ckpt)
-    n1 = spark.read.parquet(outp).count()
-    assert n1 == batch1.count()
-
-    batch2 = synth_transcripts(spark, n_convs=10, seed=2).withColumn(
-        "conv_id", F.concat(F.lit("b2_"), F.col("conv_id"))
-    )
-    batch2.write.mode("append").parquet(inp)
-    stream_score(spark, inp, outp, ckpt)
-    n2 = spark.read.parquet(outp).count()
-    # only the new files were processed (checkpointed file source)
-    assert n2 == n1 + batch2.count()
-    cols = set(spark.read.parquet(outp).columns)
-    assert {"label", "clean_score", "keep", "scrubbed_text"} <= cols
-
-
-def test_stream_clean_matches_batch(spark, tmpdir):
-    inp, outp, ckpt = f"{tmpdir}/in", f"{tmpdir}/out", f"{tmpdir}/ckpt"
-    from quality_filter.streaming import stream_clean
-
-    df = synth_transcripts(spark, n_convs=30, seed=3)
-    df.write.mode("append").parquet(inp)
-    stream_clean(spark, inp, outp, ckpt, mode="filter", labels_to_remove="all")
-    got = sorted(
-        (r["conv_id"], r["turn_idx"])
-        for r in spark.read.parquet(outp).select("conv_id", "turn_idx").collect()
-    )
-    want = sorted(
-        (r["conv_id"], r["turn_idx"])
-        for r in clean_pipeline(df, mode="filter", labels_to_remove="all")
-        .select("conv_id", "turn_idx")
-        .collect()
-    )
-    assert got == want
-
-
 def test_cli_filter_roundtrip(spark, tmpdir):
     from quality_filter.cli import main
 
@@ -95,6 +51,28 @@ def test_cli_filter_roundtrip(spark, tmpdir):
     assert out.filter("label != 'Clean'").count() == 0
 
 
+def test_cli_checkpointed_run_matches_plain_run(spark, tmpdir):
+    """`--manifest-path` runs the same pipeline bucket batch by bucket
+    batch, and a second run with the same run id skips every bucket."""
+    from quality_filter.cli import main
+
+    synth_transcripts(spark, n_convs=25, seed=4).write.parquet(f"{tmpdir}/in")
+    args = ["filter", "--data-path", f"{tmpdir}/in", "--quality-labels", "all", "--trim"]
+    main(args + ["--save-path", f"{tmpdir}/plain"])
+    ckpt = args + [
+        "--save-path", f"{tmpdir}/ckpt",
+        "--manifest-path", f"{tmpdir}/markers", "--run-id", "r1",
+    ]
+    main(ckpt)
+    main(ckpt)  # resume: every bucket has its marker
+
+    def rows(path):
+        df = spark.read.parquet(path)
+        return sorted(df.select("conv_id", "turn_idx", "text").collect())
+
+    assert rows(f"{tmpdir}/ckpt") == rows(f"{tmpdir}/plain") != []
+
+
 def test_cli_mutual_exclusion(tmpdir):
     from quality_filter.cli import main
 
@@ -103,140 +81,6 @@ def test_cli_mutual_exclusion(tmpdir):
             "filter", "--data-path", "x", "--save-path", "y",
             "--quality-labels", "all", "--filter", "--trim",
         ])
-
-
-def test_stream_trim_stateful_across_microbatches(spark, tmpdir):
-    """A conversation whose turns STRADDLE two micro-batches must be
-    trimmed as one unit (the caveat stream_clean documents).  Two input
-    files + maxFilesPerTrigger=1 → two micro-batches inside one
-    availableNow drain; the end-marker row finalizes the conversation."""
-    import datetime
-
-    from quality_filter.pipeline import apply_trim_mode
-    from quality_filter.rules import score_turns
-    from quality_filter.streaming import END_MARKER_ROLE, stream_trim_stateful
-
-    inp, outp, ckpt = f"{tmpdir}/in", f"{tmpdir}/out", f"{tmpdir}/ckpt"
-    ts = datetime.datetime(2024, 1, 1)
-    junk = "$$$$$$$$"          # labels non-Clean (symbol run)
-    good = "This is a perfectly reasonable sentence for training."
-    # conv A: junk edges land in DIFFERENT files; interior junk survives
-    f1 = [("A", 0, "user", junk, None, ts),
-          ("A", 1, "user", good, None, ts),
-          ("A", 2, "user", junk, None, ts)]
-    f2 = [("A", 3, "user", good, None, ts),
-          ("A", 4, "user", junk, None, ts),
-          ("A", 5, "user", "", None, ts),     # trailing empty → trimmed
-          ("A", 99, END_MARKER_ROLE, "", None, ts),
-          ("B", 0, "user", good, None, ts),
-          ("B", 99, END_MARKER_ROLE, "", None, ts)]
-    cols = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    spark.createDataFrame(f1, cols).coalesce(1).write.mode("overwrite").parquet(f"{inp}/b1")
-    spark.createDataFrame(f2, cols).coalesce(1).write.mode("append").parquet(f"{inp}/b2")
-    # file source needs one flat dir: rewrite as two files in one dir
-    import glob as g
-    import shutil as sh
-    import os
-    os.makedirs(f"{inp}/flat")
-    for i, d in enumerate(["b1", "b2"]):
-        src = g.glob(f"{inp}/{d}/part-*.parquet")[0]
-        dst = f"{inp}/flat/file_{i}.parquet"
-        sh.copy(src, dst)
-        # the file source orders micro-batches by modification time; the
-        # marker file must process AFTER the turns it closes
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    stream_trim_stateful(
-        spark, f"{inp}/flat", outp, ckpt, max_files_per_trigger=1
-    )
-    got = sorted(
-        (r["conv_id"], r["turn_idx"], r["label"])
-        for r in spark.read.parquet(outp).collect()
-    )
-    # batch reference on the full conversations (markers excluded)
-    full = spark.createDataFrame(
-        [r for r in f1 + f2 if r[2] != END_MARKER_ROLE], cols
-    )
-    expect_df = apply_trim_mode(score_turns(full), F.col("label") == "Clean")
-    expect = sorted(
-        (r["conv_id"], r["turn_idx"], r["label"])
-        for r in expect_df.select("conv_id", "turn_idx", "label").collect()
-    )
-    assert got == expect, (got, expect)
-    # the straddling edge case actually exercised: turns 1..3 kept incl.
-    # the interior junk turn 2, edges 0/4/5 trimmed
-    assert [t for c, t, _ in got if c == "A"] == [1, 2, 3]
-
-
-def test_stream_trim_state_survives_restart(spark, tmpdir):
-    """A conversation buffered in run 1 (no marker yet) must be held in
-    the checkpointed state store and emitted by run 2 when its marker
-    arrives — state survives query RESTARTS, not just micro-batches."""
-    import datetime
-    import os
-
-    from quality_filter.streaming import END_MARKER_ROLE, stream_trim_stateful
-
-    inp, outp, ckpt = f"{tmpdir}/in", f"{tmpdir}/out", f"{tmpdir}/ckpt"
-    os.makedirs(inp)
-    ts = datetime.datetime(2024, 1, 1)
-    good = "This is a perfectly reasonable sentence for training."
-    cols = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-
-    spark.createDataFrame(
-        [("C", 0, "user", "$$$$$$$$", None, ts), ("C", 1, "user", good, None, ts)],
-        cols,
-    ).coalesce(1).write.mode("append").parquet(inp)
-    stream_trim_stateful(spark, inp, outp, ckpt)
-    first = [f for f in os.listdir(outp) if f.endswith(".parquet")] if os.path.exists(outp) else []
-    got1 = spark.read.parquet(outp).count() if first else 0
-    assert got1 == 0, "conversation must stay buffered until its marker"
-
-    spark.createDataFrame(
-        [("C", 2, "user", good, None, ts),
-         ("C", 3, "user", "$$$$$$$$", None, ts),
-         ("C", 99, END_MARKER_ROLE, "", None, ts)],
-        cols,
-    ).coalesce(1).write.mode("append").parquet(inp)
-    stream_trim_stateful(spark, inp, outp, ckpt)
-    got = sorted(r["turn_idx"] for r in spark.read.parquet(outp).collect())
-    assert got == [1, 2], got  # trimmed across BOTH runs' turns
-
-
-def test_stream_trim_straggler_after_marker_dropped(spark, tmpdir):
-    """A turn arriving AFTER its conversation's end-marker finalized must
-    be absorbed by the state tombstone and dropped — NOT re-open state and
-    later emit a second, independently-trimmed fragment of the same
-    conv_id (ADVICE r2)."""
-    import datetime
-    import os
-
-    from quality_filter.streaming import END_MARKER_ROLE, stream_trim_stateful
-
-    inp, outp, ckpt = f"{tmpdir}/in", f"{tmpdir}/out", f"{tmpdir}/ckpt"
-    os.makedirs(inp)
-    ts = datetime.datetime(2024, 1, 1)
-    good = "This is a perfectly reasonable sentence for training."
-    cols = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-
-    spark.createDataFrame(
-        [("D", 0, "user", good, None, ts),
-         ("D", 99, END_MARKER_ROLE, "", None, ts)],
-        cols,
-    ).coalesce(1).write.mode("append").parquet(inp)
-    stream_trim_stateful(spark, inp, outp, ckpt)
-    assert sorted(r["turn_idx"] for r in spark.read.parquet(outp).collect()) == [0]
-
-    # run 2: a straggler turn (and even a second marker) for the already-
-    # finalized conversation — must be dropped, output unchanged
-    spark.createDataFrame(
-        [("D", 1, "user", good, None, ts),
-         ("D", 98, END_MARKER_ROLE, "", None, ts)],
-        cols,
-    ).coalesce(1).write.mode("append").parquet(inp)
-    stream_trim_stateful(spark, inp, outp, ckpt)
-    got = sorted(r["turn_idx"] for r in spark.read.parquet(outp).collect())
-    assert got == [0], f"straggler must not create a duplicate fragment: {got}"
 
 
 def test_cli_salvage_min_doc_length_passthrough(spark, tmpdir):
@@ -258,53 +102,3 @@ def test_cli_salvage_min_doc_length_passthrough(spark, tmpdir):
 
     # the 250-char doc gate must drop strictly more than the open gate
     assert n_open > n_default, (n_open, n_default)
-
-
-def test_stream_dedup_drops_replays_keeps_cross_conv(spark, tmpdir):
-    inp, outp, ckpt = f"{tmpdir}/sd_in", f"{tmpdir}/sd_out", f"{tmpdir}/sd_ckpt"
-    from quality_filter.streaming import stream_dedup
-
-    base = synth_transcripts(spark, n_convs=10, seed=3)
-    # replay 5 turns verbatim (same conv, same turn_idx, same text ->
-    # dropped), plant one cross-conversation repeat (other conv, same
-    # text -> kept), and one GENUINE in-conversation repeat (same conv,
-    # same text, NEW turn_idx -> kept: the user really said it twice)
-    replay = base.limit(5)
-    first = base.limit(1)
-    cross = first.withColumn("conv_id", F.concat(F.lit("x_"), F.col("conv_id")))
-    genuine = first.withColumn("turn_idx", F.col("turn_idx") + 1000)
-    base.unionByName(replay).unionByName(cross).unionByName(genuine).write.mode(
-        "append"
-    ).parquet(inp)
-
-    stream_dedup(spark, inp, outp, ckpt)
-    out = spark.read.parquet(outp)
-    # distinct (conv_id, turn_idx, normalized text) triples survive exactly
-    # once — the dedup key normalizes like dedup.exact_dedup does
-    from quality_filter.dedup import normalized_text
-
-    want = (
-        base.unionByName(cross)
-        .unionByName(genuine)
-        .select(
-            "conv_id",
-            "turn_idx",
-            normalized_text(F.coalesce(F.col("text"), F.lit(""))).alias("nt"),
-        )
-        .distinct()
-        .count()
-    )
-    assert out.count() == want
-    assert out.filter(F.col("conv_id").startswith("x_")).count() == 1
-    # the genuine repeat survived alongside the original turn
-    gen = genuine.select("conv_id", "turn_idx").first()
-    assert (
-        out.filter(
-            (F.col("conv_id") == gen["conv_id"])
-            & (F.col("turn_idx").isin(gen["turn_idx"], gen["turn_idx"] - 1000))
-        ).count()
-        == 2
-    )
-    # second run with no new files processes nothing (checkpoint)
-    stream_dedup(spark, inp, outp, ckpt)
-    assert spark.read.parquet(outp).count() == want

@@ -1,4 +1,4 @@
-"""Text stats, sampling/splits, IO round-trips, and multimodal plumbing."""
+"""Text stats, sampling/splits and IO round-trips."""
 
 from __future__ import annotations
 
@@ -223,163 +223,6 @@ def test_tsv_freq_sink(spark, tmpdir):
     assert lines == ["a\t3", "b\t2", "c\t1"]
 
 
-# --- multimodal ------------------------------------------------------------
-
-def test_multimodal_plumbing(spark):
-    from quality_filter.multimodal import (
-        extract_features,
-        resize_meta,
-        sample_frames,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=24)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 24
-    for r in rows:
-        assert len(r["feature"]) == 32
-    # deterministic: same payload → same feature
-    again = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    first = {r["media_id"]: r["feature"] for r in rows}
-    assert again == first
-
-    # 16×12 PPMs are under max_side → scale clamps at 1.0 (no upscaling);
-    # a big fake-meta row exercises the downscale arithmetic
-    rz = {r["media_id"]: r["resize_to"] for r in resize_meta(media).collect()
-          if r["modality"] == "image"}
-    for v in rz.values():
-        assert v["width"] == 16 and v["height"] == 12
-    big = spark.createDataFrame(
-        [(99, "image", None,
-          {"width": 640, "height": 480, "sample_rate": None,
-           "n_frames": None, "mime": "image/x-portable-pixmap"})],
-        media.schema,
-    )
-    bigrz = resize_meta(big).collect()[0]["resize_to"]
-    assert bigrz["width"] == 224 and bigrz["height"] == 168
-
-    fp = {r["media_id"]: r["frame_plan"] for r in sample_frames(media).collect()}
-    video_ids = [r["media_id"] for r in media.filter("modality='video'").collect()]
-    assert all(list(fp[i]) == list(range(0, 300, 30)) for i in video_ids)
-    assert all(fp[i] == [] for i in fp if i not in video_ids)
-
-
-def test_real_codec_decodes_stdlib_formats(spark):
-    """P6 PPM, zlib PNG (RGB + RGBA) and PCM WAV decode for REAL (numpy /
-    stdlib zlib / wave); the content-derived features flow through the
-    Spark path and differ from the digest-seeded fallback; formats stdlib
-    genuinely can't parse (JPEG/MP4) still raise."""
-    import numpy as np
-
-    from quality_filter.multimodal import (
-        _synth_png,
-        _synth_ppm,
-        _synth_wav,
-        extract_features,
-        real_decode,
-        synth_media,
-    )
-
-    img = real_decode("image", _synth_ppm(3))
-    assert img.shape == (12, 16, 3) and img.dtype == np.uint8
-    png = real_decode("image", _synth_png(4))
-    assert png.shape == (12, 16, 3) and png.dtype == np.uint8
-    # byte-exact filter reversal: decode recovers the encoder's raster
-    expect = np.random.RandomState(2004).randint(
-        0, 256, size=(12, 16, 3), dtype=np.uint8
-    )
-    assert (png == expect).all()
-    rgba = real_decode("image", _synth_png(5, rgba=True))
-    assert rgba.shape == (12, 16, 4)
-    samples, rate = real_decode("audio", _synth_wav(3))
-    assert rate == 8000 and samples.shape == (400, 1)
-
-    with pytest.raises(NotImplementedError):
-        real_decode("image", b"\xff\xd8\xff\xe0JFIF...")  # JPEG: codec seam
-    with pytest.raises(NotImplementedError):
-        real_decode("video", b"\x00\x01")
-
-    media = synth_media(spark, n=12)
-    real = {r["media_id"]: r["feature"]
-            for r in extract_features(media, use_real_codec=True).collect()}
-    fake = {r["media_id"]: r["feature"]
-            for r in extract_features(media, use_real_codec=False).collect()}
-    img_ids = [r["media_id"] for r in media.filter("modality='image'").collect()]
-    aud_ids = [r["media_id"] for r in media.filter("modality='audio'").collect()]
-    vid_ids = [r["media_id"] for r in media.filter("modality='video'").collect()]
-    for i in img_ids + aud_ids:
-        assert real[i] != fake[i]          # content features, not digest
-    for i in vid_ids:
-        assert real[i] == fake[i]          # undecodable → fallback
-    # image features carry the actual dimensions
-    for i in img_ids:
-        assert abs(real[i][0] - 12 / 4096.0) < 1e-6
-        assert abs(real[i][1] - 16 / 4096.0) < 1e-6
-    # audio features carry the actual duration
-    for i in aud_ids:
-        assert abs(real[i][0] - 400 / 8000.0) < 1e-6
-
-
-def test_real_codec_features_match_local_decode(spark):
-    """Through the Spark path, ``extract_features(use_real_codec=True)``
-    returns for every stdlib format (PPM, PNG RGB/RGBA, WAV) the full
-    feature vector that decoding and featurizing the payload locally
-    gives."""
-    from quality_filter.multimodal import (
-        MEDIA_SCHEMA,
-        _real_features,
-        _synth_png,
-        _synth_ppm,
-        _synth_wav,
-        extract_features,
-        real_decode,
-    )
-
-    media = [
-        (0, "image", _synth_ppm(0)),
-        (1, "image", _synth_png(1)),
-        (2, "image", _synth_png(2, rgba=True)),
-        (3, "audio", _synth_wav(3)),
-    ]
-    df = spark.createDataFrame(
-        [(i, m, bytearray(p), None) for i, m, p in media], MEDIA_SCHEMA
-    )
-    got = {r["media_id"]: r["feature"]
-           for r in extract_features(df, use_real_codec=True).collect()}
-    for i, modality, payload in media:
-        expect = _real_features(modality, real_decode(modality, payload))
-        assert got[i] == [float(x) for x in expect], i
-
-
-def test_extract_features_total_on_corrupt_media(spark):
-    """A payload that LOOKS decodable (P6/RIFF/PNG magic) but is truncated
-    or corrupt must fall back to the digest featurizer — one bad media
-    file must never kill the job (ADVICE r2)."""
-    from quality_filter.multimodal import (
-        MEDIA_SCHEMA,
-        _fake_features,
-        _synth_png,
-        extract_features,
-    )
-
-    truncated_png = _synth_png(7)[:40]  # cut inside IHDR/IDAT
-    rows = [
-        (0, "image", bytearray(b"P6\n"), None),             # truncated PPM header
-        (1, "image", bytearray(b"P6\n2 2\n255\nab"), None),  # short raster
-        (2, "audio", bytearray(b"RIFFxxxxWAVE"), None),     # bogus WAV
-        (3, "image", bytearray(truncated_png), None),       # truncated PNG
-        (4, "image", None, None),                           # NULL payload
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r["media_id"]: r["feature"]
-           for r in extract_features(df, use_real_codec=True).collect()}
-    assert len(got) == 5
-    for mid, _, payload, _ in rows:
-        expect = _fake_features(bytes(payload) if payload is not None else b"")
-        assert got[mid] == [float(x) for x in expect]
-
-
 def test_bucketed_table_join_has_no_exchange(spark, tmpdir):
     from quality_filter.io import write_bucketed_table
     from quality_filter.synth import synth_transcripts
@@ -404,59 +247,3 @@ def test_bucketed_table_join_has_no_exchange(spark, tmpdir):
     assert n_exchange <= 1, plan[:2000]
     spark.sql("DROP TABLE IF EXISTS qf_bucketed_a")
     spark.sql("DROP TABLE IF EXISTS qf_bucketed_b")
-
-
-def test_resize_images_real_pixels(spark):
-    from quality_filter.multimodal import (
-        _decode_ppm,
-        real_decode,
-        resize_images,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=12)
-    out = {r["media_id"]: r for r in resize_images(media, max_side=8).collect()}
-    for i, r in out.items():
-        if r["modality"] != "image":
-            # non-image rows pass through untouched
-            assert r["was_resized"] is False
-            assert bytes(r["resized"]) == bytes(r["payload"])
-            continue
-        assert r["was_resized"] is True
-        assert (r["resized_w"], r["resized_h"]) == (8, 6)  # 16x12 -> 8x6
-        small = _decode_ppm(bytes(r["resized"]))
-        assert small.shape == (6, 8, 3)
-        # nearest-neighbor: every output pixel exists at the sampled
-        # source coordinate of the original
-        orig = real_decode("image", bytes(r["payload"]))
-        assert (small == orig[::2, ::2, :3]).all()
-    # corrupt image payload: total fallback, no resize
-    corrupt = spark.createDataFrame(
-        [(99, "image", bytearray(b"P6\n16 12\n255\n tiny"), None)],
-        media.schema,
-    )
-    r = resize_images(corrupt, max_side=8).collect()[0]
-    assert r["was_resized"] is False and bytes(r["resized"]) == bytes(r["payload"])
-
-
-def test_downsample_audio_real_samples(spark):
-    from quality_filter.multimodal import (
-        _decode_wav,
-        downsample_audio,
-        real_decode,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=12)
-    out = {r["media_id"]: r for r in downsample_audio(media, every_n=4).collect()}
-    for i, r in out.items():
-        if r["modality"] != "audio":
-            assert r["was_resampled"] is False
-            assert bytes(r["resampled"]) == bytes(r["payload"])
-            continue
-        assert r["was_resampled"] is True
-        assert r["resampled_rate"] == 2000  # 8000 // 4
-        small, rate = _decode_wav(bytes(r["resampled"]))
-        orig, _ = real_decode("audio", bytes(r["payload"]))
-        assert rate == 2000
-        assert (small == orig[::4]).all()
