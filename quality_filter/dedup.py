@@ -164,77 +164,6 @@ def exact_dedup(
     return keeper.select(*[F.col(f"_row.{c}").alias(c) for c in df.columns])
 
 
-def conv_fingerprint_salted(
-    df: DataFrame,
-    text_col: str = "text",
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    segment_turns: int = 4096,
-) -> DataFrame:
-    """Conversation-grain fingerprint WITHOUT materializing the joined
-    conversation string: phase 1 groups by (conv_id, turn_idx div
-    ``segment_turns``) — every group bounded, skew spread across tasks —
-    and hashes each segment's '\\n'-joined text; phase 2 hashes the
-    ordered segment hashes.  A 10^7-turn conversation costs bounded
-    memory per task in both phases (the same skew story as
-    ``pipeline.reassemble_salted``, minus even the segment-concat output).
-
-    Equality contract: two conversations with the same turn_idx → text
-    mapping always get equal fingerprints.  Conversations whose joined
-    texts are equal but whose turn_idx values straddle segment boundaries
-    differently may get different fingerprints (false split, never false
-    merge beyond md5 collision) — with the per-conversation 0-based
-    turn_idx contract of TRANSCRIPT_SCHEMA this does not occur.
-
-    Returns (conv_id, _fp string, n_turns)."""
-    salt = (F.col(idx_col) / F.lit(segment_turns)).cast("int")
-    segs = (
-        df.withColumn("_salt", salt)
-        .groupBy(conv_col, "_salt")
-        .agg(
-            F.md5(
-                F.encode(
-                    F.array_join(
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(
-                                    F.struct(
-                                        F.col(idx_col),
-                                        F.col(text_col).alias("t"),
-                                    )
-                                )
-                            ),
-                            lambda s: F.coalesce(s["t"], F.lit("")),
-                        ),
-                        "\n",
-                    ),
-                    "UTF-8",
-                )
-            ).alias("_seg_h"),
-            F.count(F.lit(1)).alias("_seg_n"),
-        )
-    )
-    return segs.groupBy(conv_col).agg(
-        F.md5(
-            F.encode(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(F.col("_salt"), F.col("_seg_h").alias("h"))
-                            )
-                        ),
-                        lambda s: s["h"],
-                    ),
-                    "|",
-                ),
-                "UTF-8",
-            )
-        ).alias("_fp"),
-        F.sum("_seg_n").alias("n_turns"),
-    )
-
-
 def word_shingles_from_words(words_col, k: int = 3):
     """Array of k-word shingles from an already-split word-array column.
     Empty for docs with fewer than ``k`` words: ``sequence(1, 0)`` is
@@ -544,9 +473,8 @@ def duplicated_span_marks(
       window — whole-stage-codegen'd, no per-gram string
       materialization.  Costs one extra shuffle of the word stream.
       The window partitions on (id, pos ÷ ``segment_size``), NOT bare
-      id: a 10⁷-word document would otherwise become ONE sort task (the
-      giant-doc skew the salted conv-fingerprint already guards
-      against).  Boundary grams stay exact because each segment's first
+      id: a 10⁷-word document would otherwise become ONE sort task.
+      Boundary grams stay exact because each segment's first
       k−1 words are duplicated into the previous segment's group (the
       overlap rows only feed ``lead()``; a gram row is kept only in its
       home segment, so no double counting).  Per-group sort state is

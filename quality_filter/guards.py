@@ -2,7 +2,7 @@
 
 Policy: the ONLY ``.collect()``s allowed in this package are (a) one-row
 scalars that steer control flow (thresholds, convergence signatures) and
-(b) BOUNDED vocabularies (mixture domains, the 9-label taxonomy) that
+(b) BOUNDED vocabularies (label columns, the 9-label taxonomy) that
 become broadcast literals.  ``bounded_collect`` enforces (b): it turns an
 unbounded-cardinality misuse into a loud error instead of an unbounded
 driver pull.

@@ -14,8 +14,9 @@ Mappings (reference → here):
   ``src/filter_by_quality_score.py:21-23``).
 - S6     ``write_jsonl``       — ``to_json`` rows to text files; zstd via
   S12's codec option (``scripts/compress_files.sh:53``).
-- S8/S9  ``write_csv`` / ``write_tsv`` — incl. the (label, count)
-  frequency sink (``src/label_lines_with_LLM.py:377-379``).
+- S8/S9  plain ``df.write.csv`` / ``write_tsv_freq`` — the latter is
+  the (label, count) frequency sink
+  (``src/label_lines_with_LLM.py:377-379``).
 - S10/S11 split/concat         — ``repartition(n)`` / ``coalesce(1)``;
   the reference's 80-line splitter (``src/split_large_files.py:48-127``)
   disappears into the shuffle layer.
@@ -84,12 +85,6 @@ def write_jsonl(
     if compression:
         writer = writer.option("compression", compression)
     writer.text(path)
-
-
-def write_csv(df: DataFrame, path: str, sep: str = ",", header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", str(header).lower()).option(
-        "sep", sep
-    ).csv(path)
 
 
 def merge_freq_tables(a: DataFrame, b: DataFrame) -> DataFrame:

@@ -180,82 +180,22 @@ def drop_empty_convs(df: DataFrame) -> DataFrame:
 # reassembly
 # --------------------------------------------------------------------------
 
-def reassemble_salted(
-    df: DataFrame, text_col: str = "text", segment_turns: int = 4096
-) -> DataFrame:
-    """Skew-safe two-phase reassembly (SURVEY.md §7.3): a 10^7-turn
-    conversation never materializes as one collect_list.  Phase 1 groups
-    by (conv_id, turn_idx div segment_turns) — every group is bounded by
-    ``segment_turns`` rows and partial aggregation spreads the skew across
-    tasks.  Phase 2 joins the ordered segment strings.  Byte-identical to
-    ``reassemble`` ('\\n'.join is associative over contiguous segments)."""
-    salt = (F.col("turn_idx") / F.lit(segment_turns)).cast("int")
-    segs = (
-        df.withColumn("_salt", salt)
-        .groupBy("conv_id", "_salt")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(F.col("turn_idx"), F.col(text_col).alias("t"))
-                        )
-                    ),
-                    lambda s: F.coalesce(s["t"], F.lit("")),
-                ),
-                "\n",
-            ).alias("_seg_text"),
-            F.count(F.lit(1)).alias("_seg_n"),
-        )
-    )
-    return segs.groupBy("conv_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("_salt"), F.col("_seg_text").alias("t")))
-                ),
-                lambda s: s["t"],
-            ),
-            "\n",
-        ).alias("text"),
-        F.sum("_seg_n").alias("n_turns"),
-    )
-
-
-def reassemble(
-    df: DataFrame,
-    text_col: str = "text",
-    extra_aggs: dict[str, Column] | None = None,
-    strategy: str = "sorted_agg",
-) -> DataFrame:
+def reassemble(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Rebuild one row per conversation: ``text`` = '\\n'.join(turns) under
     stable (conv_id, turn_idx) order — A3
     (``src/filter_by_quality_label.py:35``) without a window: sort the
     collected (turn_idx, text) structs *inside* each group, so the only
-    shuffle is the groupBy itself.
-
-    ``strategy='salted'`` routes to the two-phase skew-safe layout
-    (byte-identical output; use when single conversations can reach
-    millions of turns).
-    """
-    if strategy == "salted":
-        if extra_aggs:
-            raise ValueError("extra_aggs is not supported with strategy='salted'")
-        return reassemble_salted(df, text_col)
-    if strategy != "sorted_agg":
-        raise ValueError(f"unknown strategy: {strategy}")
+    shuffle is the groupBy itself.  A giant conversation is one group;
+    its output row is the whole conversation text under any layout."""
     sorted_structs = F.array_sort(
         F.collect_list(F.struct(F.col("turn_idx"), F.col(text_col).alias("t")))
     )
-    aggs = [
+    return df.groupBy("conv_id").agg(
         F.array_join(
             F.transform(sorted_structs, lambda s: F.coalesce(s["t"], F.lit(""))), "\n"
         ).alias("text"),
         F.count(F.lit(1)).alias("n_turns"),
-    ]
-    for name, expr in (extra_aggs or {}).items():
-        aggs.append(expr.alias(name))
-    return df.groupBy("conv_id").agg(*aggs)
+    )
 
 
 # --------------------------------------------------------------------------

@@ -36,13 +36,6 @@ def deterministic_bucket(key, buckets: int = 1000):
     )
 
 
-# shared guard (quality_filter.guards) re-exported under the historical
-# local name — all vocabulary pulls in this module go through it.  The
-# cardinality ceiling is the single knob ``guards.MAX_DRIVER_CARDINALITY``
-# (read at call time; patch it THERE — a by-value copy here would be dead).
-_bounded_collect = bounded_collect
-
-
 def deterministic_split(
     df: DataFrame, key: str, weights: tuple[float, ...] = (0.7, 0.15, 0.15),
     names: tuple[str, ...] = ("train", "val", "test"),
@@ -75,7 +68,7 @@ def downsample_label(
     (``src/prep_data_for_training.py:123-128``)."""
     labels = [
         r[label_col]
-        for r in _bounded_collect(
+        for r in bounded_collect(
             df.select(label_col).distinct(), f"label column {label_col!r}"
         )
     ]
@@ -92,7 +85,7 @@ def stratified_split_sampled(
     state by construction (``sampleBy`` takes a dict)."""
     labels = [
         r[label_col]
-        for r in _bounded_collect(
+        for r in bounded_collect(
             df.select(label_col).distinct(), f"label column {label_col!r}"
         )
     ]
@@ -114,148 +107,3 @@ def seeded_shuffle(df: DataFrame, seed: int = 42) -> DataFrame:
     """R4: deterministic global shuffle order (``src/train_classifier.py:175``)."""
     return df.orderBy(F.rand(seed))
 
-
-def mixture_resample(
-    df: DataFrame,
-    weights: dict[str, int],
-    key: str = "doc_id",
-    domain_col: str = "source",
-    budget_pm: int = 500,
-) -> DataFrame:
-    """Domain-mixture resampling (The Pile / DoReMi-static style): keep a
-    deterministic subset sized ``budget_pm``/1000 of the corpus whose
-    domain proportions approach ``weights`` (per-mille integers summing
-    to 1000; domains absent from the map are dropped).
-
-    Per-domain keep threshold (0-1000, integer arithmetic so the same
-    rows are chosen by any engine):
-
-        thr_d = min(1000, (N_total * budget_pm * w_pm_d) // (1000 * N_d))
-        (= 1000 * target_rows_d / N_d, target_rows_d = N_total * budget_pm/1000 * w_pm_d/1000)
-        keep  <=> (key * 2654435761) % 1000 < thr_d
-
-    A domain with fewer rows than its target saturates at thr=1000 (keep
-    all — deterministic selection cannot oversample; upsampling is a
-    repeat-explode concern, not a filter).
-
-    Scale: ONE map-side-combinable count aggregate over the corpus (the
-    total is the sum of the per-domain counts — no second corpus scan);
-    the per-domain rows come back to the driver (bounded — domains are
-    data sources, guarded by ``guards.MAX_DRIVER_CARDINALITY``), thresholds are
-    computed with exact arbitrary-precision Python integers (no wrap at
-    any corpus size), and selection is a broadcast join + narrow filter —
-    no corpus shuffle."""
-    counts, total = _domain_counts(df, domain_col)
-    rates = [
-        (d, min(1000, (total * budget_pm * int(weights[d])) // (1000 * n)))
-        for d, n in _eligible_domains(counts, weights)
-    ]
-    rates_df = df.sparkSession.createDataFrame(
-        rates, _rates_schema(df, domain_col, "_thr")
-    )
-    return (
-        df.join(F.broadcast(rates_df), domain_col)
-        .filter(deterministic_bucket(key) < F.col("_thr"))
-        .drop("_thr")
-    )
-
-
-def _domain_counts(df: DataFrame, domain_col: str) -> tuple[dict, int]:
-    """Per-domain row counts + corpus total from a single aggregate pass.
-    The total counts EVERY row, including NULL-domain rows (the NULL
-    group is a legitimate count key even though it can never be selected
-    by the weight map)."""
-    rows = _bounded_collect(
-        df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("_n")),
-        f"domain column {domain_col!r}",
-    )
-    counts = {r[domain_col]: r["_n"] for r in rows}
-    return counts, sum(counts.values())
-
-
-def _eligible_domains(counts: dict, weights: dict) -> list:
-    """Deterministically ordered (domain, count) pairs that participate in
-    a mixture: NULL domains are skipped BEFORE sorting (a None key would
-    make ``sorted`` raise TypeError against str domains; an inner
-    equi-join could never match them anyway), as are domains absent from
-    the weight map."""
-    return sorted(
-        (d, n)
-        for d, n in counts.items()
-        if d is not None and d in weights
-    )
-
-
-def _rates_schema(df: DataFrame, domain_col: str, extra: str):
-    """Schema for the broadcast per-domain rates table: the domain field
-    type is taken from ``df`` (not hardcoded string — int/date domain
-    keys must round-trip with their own type for the join to hit)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    fields = [StructField(domain_col, df.schema[domain_col].dataType)]
-    for name in extra.split(","):
-        fields.append(StructField(name.strip(), LongType()))
-    return StructType(fields)
-
-
-def quality_weighted_sample(
-    df: DataFrame, score_col: str, key: str = "doc_id", scale_pm: int = 1000
-) -> DataFrame:
-    """Soft quality filtering: keep each row with probability proportional
-    to its [0,1] quality score (score 1.0 → always kept at the default
-    scale, 0.2 → 20%), selected DETERMINISTICALLY by the same
-    engine-portable mix as the split/shard operators:
-
-        keep  ⟺  bucket(key) < floor(score · scale_pm)
-
-    The soft alternative to a hard threshold cut (FineWeb-style pipelines
-    use both: hard floors for garbage, proportional sampling to keep some
-    mid-quality mass and avoid distribution collapse).  Narrow filter, no
-    shuffle, reproducible on reruns and across engines."""
-    thr = F.floor(F.col(score_col) * F.lit(scale_pm))
-    return df.filter(deterministic_bucket(key, scale_pm) < thr)
-
-
-def mixture_upsample(
-    df: DataFrame,
-    weights: dict[str, int],
-    key: str = "doc_id",
-    domain_col: str = "source",
-    budget_pm: int = 1000,
-) -> DataFrame:
-    """Upsampling counterpart of ``mixture_resample``: domains whose
-    target exceeds their row count are REPEATED (multi-epoch mixing for
-    small high-value domains).  Each kept row gains a ``copy_idx``
-    column (0-based); target_d = N_total * budget_pm/1000 * w_pm_d/1000:
-
-        base_copies_d = target_d // N_d
-        one more copy where (key * 2654435761) % 1000 <
-        (1000 * (target_d % N_d)) // N_d   (fractional remainder)
-
-    Rows in domains with target < N_d get copies 0 or 1 by the same rule
-    (base 0 + fractional) — i.e. downsampling falls out as base_copies=0.
-    Scale: ONE count aggregate (total = sum of per-domain counts, no
-    second corpus scan; targets computed with exact Python integers) +
-    broadcast join + one explode of ``sequence(1, copies)``; output
-    volume = requested budget, shuffles nowhere."""
-    counts, total = _domain_counts(df, domain_col)
-    rates = []
-    for d, n in _eligible_domains(counts, weights):
-        target = (total * budget_pm * int(weights[d])) // 1_000_000
-        base = target // n
-        rates.append((d, base, (1000 * (target - base * n)) // n))
-    rates_df = df.sparkSession.createDataFrame(
-        rates, _rates_schema(df, domain_col, "_base,_fthr")
-    )
-    copies = F.col("_base") + F.when(
-        deterministic_bucket(key) < F.col("_fthr"), 1
-    ).otherwise(0)
-    return (
-        df.join(F.broadcast(rates_df), domain_col)
-        .withColumn("_copies", copies)
-        .filter(F.col("_copies") > 0)
-        .withColumn(
-            "copy_idx", F.explode(F.sequence(F.lit(0), F.col("_copies") - 1))
-        )
-        .drop("_base", "_fthr", "_copies")
-    )

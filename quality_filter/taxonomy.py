@@ -195,8 +195,7 @@ def apply_label_map(
     df: DataFrame, mapping: dict[str, str], label_col: str = "label"
 ) -> DataFrame:
     """J3: broadcast replacement-map lookup with identity fallback.
-    None keys are skipped (same class of defect as the mixture NULL-
-    domain crash: None breaks the deterministic sort, and
+    None keys are skipped (None breaks the deterministic sort, and
     ``element_at(map, NULL)`` could never match them anyway — NULL
     labels fall through to the identity fallback)."""
     pairs = []

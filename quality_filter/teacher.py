@@ -26,8 +26,7 @@ groupBy((id, batch)) — two exchanges, deliberately NOT fused into a
 single groupBy(id) + array-slice explode: that shape would materialize
 every line of a document in ONE aggregation row (unbounded state on a
 10^6-line page), while here the only materialized rows are
-batch-bounded (≤ lines_per_batch lines each), the same skew story as
-``pipeline.reassemble_salted``.  Then a partition-preserving
+batch-bounded (≤ lines_per_batch lines each).  Then a partition-preserving
 ``mapInPandas`` node for the generate call (the same plan-node pattern
 as the fused gate: a model/HTTP client is per-worker state, never
 broadcast), and narrow projections: the parse, alignment (posexplode

@@ -1,6 +1,6 @@
-"""Text-analysis operators: token counting, quality heuristics,
-document fingerprinting, and the C4/Gopher corpus gates — pure Catalyst
-expressions over the text column, plus the fused Arrow gate.
+"""Text-analysis operators: the quality heuristic and the C4/Gopher
+corpus gates — pure Catalyst expressions over the text column, plus the
+fused Arrow gate.
 """
 
 from __future__ import annotations
@@ -8,32 +8,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from quality_filter.dedup import normalized_text
-
-# BPE-ish token regex: word pieces, numbers, or single non-space symbols —
-# a deterministic stand-in for a real tokenizer's token count.
-BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
 STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "was", "for",
     "on", "with", "that", "this", "it", "as", "at", "by", "be",
 ]
-
-
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace words, BPE-ish tokens, chars, distinct-word ratio."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.split(text, r"\s+")
-    return (
-        df.withColumn("n_chars", F.length(text))
-        .withColumn("n_words", F.size(words))
-        .withColumn("n_tokens", F.regexp_count(text, F.lit(BPE_ISH)))
-        .withColumn(
-            "distinct_word_ratio",
-            F.size(F.array_distinct(words)).cast("double")
-            / F.greatest(F.lit(1), F.size(words)),
-        )
-    )
 
 
 def quality_score_expr(text: Column, words: Column | None = None) -> Column:
@@ -77,27 +55,6 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
             "quality_score", quality_score_expr(text, F.col("_qs_words"))
         )
         .drop("_qs_words")
-    )
-
-
-def fingerprint_expr(text: Column) -> Column:
-    """Deterministic document fingerprint: rolling polynomial hash over
-    normalized words (aggregate HOF fold — order-sensitive, so
-    'a b' ≠ 'b a', unlike a bag-of-words md5).  Every step is reduced mod
-    2^52 so the fold never overflows a long under ANSI arithmetic
-    (acc < 2^52 → acc*31 + |reduced hash| < 2^58)."""
-    words = F.split(normalized_text(text), " ")
-    m = F.lit(1 << 52).cast("long")
-    return F.aggregate(
-        words,
-        F.lit(1125899906842597 % (1 << 52)).cast("long"),  # prime seed, reduced
-        lambda acc, w: F.pmod(acc * F.lit(31).cast("long") + F.pmod(F.xxhash64(w), m), m),
-    )
-
-
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn(
-        "fingerprint", fingerprint_expr(F.coalesce(F.col(text_col), F.lit("")))
     )
 
 
@@ -329,59 +286,6 @@ def gopher_filter(
     return out if keep_metrics else out.select(*in_cols)
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    log_idf: bool = True,
-) -> DataFrame:
-    """Top-k TF-IDF terms per group (e.g. per source): corpus keyword
-    extraction / domain profiling.
-
-    Scale shape: the doc-term count is a map-side-combinable hash
-    aggregate over exploded words; document frequency is a second
-    combinable aggregate over the SAME doc-term table (already distinct
-    per doc, so no extra distinct pass); the corpus size joins in as a
-    broadcast one-row aggregate; the final top-k is a window on the
-    group key — report-shaped output (|groups|·k rows), so the window's
-    per-group sort touches |vocab-per-group| rows, not the corpus.
-
-    ``log_idf=True`` uses the standard smoothed ``ln((N+1)/(df+1)) + 1``;
-    ``log_idf=False`` uses the rational ``(N+1)/(df+1)`` — same ranking
-    for any fixed df ordering and bit-identical across engines (exact-int
-    division, no libm), so an exact expectation can pin the scores.
-    Returns (group, term, rnk, sum_tf, df, score)."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != F.lit(""))
-    dt = (
-        docs.select(id_col, group_col, F.explode(words).alias("term"))
-        .groupBy(id_col, group_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = dt.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    grouped = dt.groupBy(group_col, "term").agg(F.sum("tf").alias("sum_tf"))
-    ratio = (F.col("n_docs") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))
-    idf = (F.log(ratio) + F.lit(1.0)) if log_idf else ratio
-    scored = (
-        grouped.join(dfreq, "term")
-        .crossJoin(F.broadcast(n))
-        .withColumn("score", F.col("sum_tf").cast("double") * idf)
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("score").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(group_col, "term", "rnk", "sum_tf", "df", "score")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Fused Arrow gate: C4 line cleaning + Gopher quality + repetition rules in
 # ONE Arrow-batched pass (r7).  The HOF gates above are the fixture-checked
@@ -396,11 +300,12 @@ def tfidf_top_terms(
 # space-only trims, str.isalpha == \p{L} on the letter categories the
 # gates see).
 #
-# r8 adds a second kernel behind the same plan node: _fused_gate_batch,
-# built on pyarrow.compute C++ kernels (no per-element Python on the fast
-# lane).  _fused_gate_row stays as the parity oracle; tests/test_round8.py
-# pins the two column-exact on adversarial corpora, and
-# ``BENCH/r8_gates_ab.json`` at b9e3436 carries the measured A/B.
+# r8 runs the plan node on _fused_gate_batch, built on pyarrow.compute C++
+# kernels (no per-element Python on the fast lane).  The per-doc kernel
+# _fused_gate_row is its parity oracle (tests/test_round8.py pins the two
+# column-exact on adversarial corpora) and the batch kernel's lane for
+# documents with exotic whitespace; ``BENCH/r8_gates_ab.json`` at b9e3436
+# carries the measured A/B.
 # ---------------------------------------------------------------------------
 
 import re as _re
@@ -698,7 +603,6 @@ def fused_gate_arrow(
     min_words_per_line: int = C4_MIN_WORDS_PER_LINE,
     min_lines: int = C4_MIN_LINES,
     with_repetition: bool = True,
-    impl: str = "batch",
 ) -> DataFrame:
     """Append ``clean_text`` (C4-surviving lines re-joined), ``c4_keep``
     and ``gopher_keep`` via one Arrow-batched pass — a non-filtering
@@ -713,14 +617,13 @@ def fused_gate_arrow(
     land the PythonUDF inside an interpreted Filter ([INTERNAL_ERROR]
     Cannot evaluate expression) — a plan node cannot be collapsed into.
 
-    ``impl``: 'batch' (default — the r8 Arrow-compute kernel,
-    ``BENCH/r8_gates_ab.json`` at b9e3436) or 'row' (the r7 per-doc
-    kernel, kept as the parity oracle).  Outputs are column-exact between
-    the two (tests/test_round8.py)."""
+    Each batch runs through ``_fused_gate_batch`` (the Arrow-compute
+    kernel, ``BENCH/r8_gates_ab.json`` at b9e3436), which hands documents
+    with exotic whitespace to the per-doc ``_fused_gate_row``; outputs are
+    column-exact against ``_fused_gate_row`` on every document
+    (tests/test_round8.py)."""
     from quality_filter.shipping import ensure_shipped
 
-    if impl not in ("batch", "row"):
-        raise ValueError(f"impl must be 'batch' or 'row', got {impl!r}")
     ensure_shipped(df.sparkSession)
     out_schema = (
         ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
@@ -729,26 +632,13 @@ def fused_gate_arrow(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if impl == "batch":
-                clean, c4, gk = _fused_gate_batch(
-                    pdf[text_col], min_words_per_line, min_lines,
-                    with_repetition,
-                )
-                g = pd.DataFrame(
-                    {"clean_text": clean, "c4_keep": c4, "gopher_keep": gk},
-                    index=pdf.index,
-                )
-            else:
-                rows = [
-                    _fused_gate_row(
-                        t, min_words_per_line, min_lines, with_repetition
-                    )
-                    for t in pdf[text_col].tolist()
-                ]
-                g = pd.DataFrame(
-                    rows, columns=["clean_text", "c4_keep", "gopher_keep"],
-                    index=pdf.index,
-                )
+            clean, c4, gk = _fused_gate_batch(
+                pdf[text_col], min_words_per_line, min_lines, with_repetition
+            )
+            g = pd.DataFrame(
+                {"clean_text": clean, "c4_keep": c4, "gopher_keep": gk},
+                index=pdf.index,
+            )
             yield pd.concat([pdf, g], axis=1)
 
     return df.mapInPandas(run, out_schema)

@@ -990,45 +990,7 @@ def q_doc_quality_score(spark, sf_dir):
     )
 
 
-@_register(
-    "dedup_convs_exact",
-    _with_turns(
-        "SELECT min(conv_id) AS keeper, count(*) AS n_copies FROM ("
-        " SELECT conv_id, string_agg(text, chr(10) ORDER BY turn_idx) AS text"
-        " FROM (SELECT conv_id, turn_idx, text FROM scored"
-        "       UNION ALL"
-        "       SELECT conv_id || '_copy', turn_idx, text FROM scored WHERE doc_id < 10)"
-        " GROUP BY conv_id)"
-        " GROUP BY md5(text) HAVING count(*) > 1"
-    ),
-)
-def q_dedup_convs_exact(spark, sf_dir):
-    """Conversation-grain exact dedup through the SKEW-SAFE path:
-    ``dedup.conv_fingerprint_salted`` hashes bounded segments then the
-    ordered segment hashes, so the full conversation string never
-    materializes (a 10^7-turn conversation costs bounded task memory);
-    identical conversations collapse to a deterministic keeper.  The
-    oracle fingerprints the fully-joined text — equality CLASSES match
-    (same turn_idx → text mapping ⇔ same fingerprint), which is all the
-    (keeper, n_copies) output depends on.  10 planted copies make the dup
-    groups non-empty."""
-    from quality_filter.dedup import conv_fingerprint_salted
-
-    t = derive_turns(spark, sf_dir).select("conv_id", "doc_id", "turn_idx", "text")
-    copies = t.filter(F.col("doc_id") < 10).withColumn(
-        "conv_id", F.concat(F.col("conv_id"), F.lit("_copy"))
-    )
-    world = t.unionByName(copies)
-    fps = conv_fingerprint_salted(world)
-    return (
-        fps.groupBy("_fp")
-        .agg(F.min("conv_id").alias("keeper"), F.count(F.lit(1)).alias("n_copies"))
-        .filter(F.col("n_copies") > 1)
-        .select("keeper", "n_copies")
-    )
-
-
-# -- near-dup clustering + decontamination + packing ------------------------
+# -- near-dup clustering + decontamination ----------------------------------
 
 def _cluster_sql() -> str:
     # connected components of the minhash candidate graph as a recursive
@@ -1118,65 +1080,6 @@ def q_decontaminate_docs(spark, sf_dir):
     return decontaminate(train, bench, n=8)
 
 
-_PACK_T = (
-    "t AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens"
-    " FROM documents), "
-    # DuckDB SUM(BIGINT) is HUGEINT — cast back so // and range() bind
-    "o AS (SELECT doc_id, n_tokens,"
-    " CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id"
-    "   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off FROM t)"
-)
-
-
-@_register(
-    "pack_sequences",
-    f"WITH {_PACK_T} "
-    "SELECT doc_id, n_tokens, start_off, start_off // 256 AS first_chunk,"
-    " (start_off + n_tokens - 1) // 256 AS last_chunk FROM o",
-)
-def q_pack_sequences(spark, sf_dir):
-    """GPT-style sequence packing offsets: documents concatenated in
-    doc_id order, token stream cut into 256-token chunks; each doc gets
-    its global start offset and chunk span.  The global prefix sum runs
-    as the two-phase scan (packing.pack_offsets): per-shard window +
-    tiny shard-offset broadcast — no single-task global window.  The
-    oracle states the same packing with one flat window (fine at oracle
-    scale).  docs_per_shard=100 so even sf0.01 exercises the multi-shard
-    path (5 shards)."""
-    from quality_filter.packing import pack_offsets
-
-    docs = _docs(spark, sf_dir)
-    t = docs.select(
-        "doc_id", F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens")
-    )
-    return pack_offsets(t, budget=256, docs_per_shard=100)
-
-
-@_register(
-    "pack_chunks",
-    f"WITH {_PACK_T}, "
-    "e AS (SELECT doc_id, n_tokens, start_off,"
-    " unnest(range(start_off // 256, (start_off + n_tokens - 1) // 256 + 1)) AS chunk_id"
-    " FROM o) "
-    "SELECT chunk_id, doc_id,"
-    " greatest(chunk_id * 256 - start_off, 0) AS tok_from,"
-    " least(chunk_id * 256 + 256 - start_off, n_tokens) AS tok_to FROM e",
-)
-def q_pack_chunks(spark, sf_dir):
-    """Chunk-grain packing view: one row per (chunk_id, doc) with the
-    doc's token sub-range landing in that chunk — what a pretraining
-    data loader materializes.  Same two-phase prefix-sum plan as
-    pack_sequences plus one explode (docs span ≤ 2 chunks at this
-    budget); no extra shuffle."""
-    from quality_filter.packing import pack_chunks
-
-    docs = _docs(spark, sf_dir)
-    t = docs.select(
-        "doc_id", F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens")
-    )
-    return pack_chunks(t, budget=256, docs_per_shard=100)
-
-
 def _substr_dedup_sql() -> str:
     # same semantics with gram STRINGS (Spark groups on xxhash64(gram) —
     # identical occurrence classes, see dedup.duplicated_span_marks) and
@@ -1225,64 +1128,6 @@ def q_substring_dedup_docs(spark, sf_dir):
     from quality_filter.dedup import substring_dedup
 
     return substring_dedup(_docs(spark, sf_dir), k=5, grams="hof")
-
-
-@_register(
-    "mixture_resample_docs",
-    "WITH counts AS (SELECT source, count(*) AS n FROM documents GROUP BY source), "
-    "tot AS (SELECT count(*) AS t FROM documents), "
-    "w(source, wpm) AS (VALUES ('src0', 400), ('src1', 300), ('src2', 200), ('src3', 100)), "
-    "rates AS (SELECT c.source,"
-    " least(1000, (CAST(t.t AS HUGEINT) * 100 * w.wpm) // (1000 * c.n)) AS thr"
-    " FROM counts c JOIN w USING (source) CROSS JOIN tot t) "
-    "SELECT d.doc_id, d.source FROM documents d JOIN rates r USING (source)"
-    " WHERE (CAST(d.doc_id AS HUGEINT) * 2654435761) % 1000 < r.thr",
-)
-def q_mixture_resample_docs(spark, sf_dir):
-    """Domain-mixture resampling (The Pile-style source rebalancing):
-    keep a deterministic ~10% budget whose source proportions follow the
-    400/300/200/100 per-mille target over src0..src3 (other sources
-    dropped).  Per-domain thresholds derive from one count aggregate and
-    come back via a broadcast join; row selection is the engine-portable
-    multiplicative mixing used by the split/shard queries — no corpus
-    shuffle anywhere (sampling.mixture_resample)."""
-    from quality_filter.sampling import mixture_resample
-
-    docs = _docs(spark, sf_dir)
-    out = mixture_resample(
-        docs,
-        {"src0": 400, "src1": 300, "src2": 200, "src3": 100},
-        budget_pm=100,
-    )
-    return out.select("doc_id", "source")
-
-
-@_register(
-    "mixture_upsample_docs",
-    "WITH counts AS (SELECT source, count(*) AS n FROM documents GROUP BY source), "
-    "tot AS (SELECT count(*) AS t FROM documents), "
-    "w(source, wpm) AS (VALUES ('src0', 730), ('src1', 270)), "
-    "rates AS (SELECT c.source,"
-    " ((CAST(t.t AS HUGEINT) * 500 * w.wpm) // 1000000) // c.n AS base,"
-    " (1000 * (((CAST(t.t AS HUGEINT) * 500 * w.wpm) // 1000000) % c.n)) // c.n AS fthr"
-    " FROM counts c JOIN w USING (source) CROSS JOIN tot t) "
-    "SELECT d.doc_id, d.source, u.j AS copy_idx "
-    "FROM documents d JOIN rates r USING (source), "
-    "unnest(range(0, CAST(r.base + CASE WHEN (CAST(d.doc_id AS HUGEINT) * 2654435761) % 1000 < r.fthr"
-    " THEN 1 ELSE 0 END AS BIGINT))) AS u(j)",
-)
-def q_mixture_upsample_docs(spark, sf_dir):
-    """Multi-epoch domain upsampling: src0/src1 repeated to a 73/27
-    per-mille mixture over half the corpus budget — small domains gain
-    whole-corpus copies (base) plus a deterministic fractional remainder;
-    each output row carries copy_idx (sampling.mixture_upsample).  Same
-    broadcast-threshold shape as mixture_resample plus one explode —
-    output volume equals the requested budget, no corpus shuffle."""
-    from quality_filter.sampling import mixture_upsample
-
-    docs = _docs(spark, sf_dir)
-    out = mixture_upsample(docs, {"src0": 730, "src1": 270}, budget_pm=500)
-    return out.select("doc_id", "source", "copy_idx")
 
 
 def _eval_report_ctes() -> str:
@@ -1412,44 +1257,6 @@ ORACLES["cohen_kappa"] = _with_turns(
     " / (1.0 - CAST(sp AS DOUBLE)/(CAST(n AS DOUBLE)*CAST(n AS DOUBLE)))"
     " ELSE 0.0 END AS kappa FROM t"
 )
-
-
-def _quality_weighted_sql() -> str:
-    qsql = _quality_score_sql()
-    return (
-        f"WITH s AS ({qsql}) SELECT doc_id, quality_score FROM s "
-        "WHERE ((CAST(doc_id AS HUGEINT) * 2654435761) % 1000 + 1000) % 1000"
-        " < floor(quality_score * 1000)"
-    )
-
-
-@_register("quality_weighted_docs", _quality_weighted_sql())
-def q_quality_weighted_docs(spark, sf_dir):
-    """Soft quality filtering: keep each doc with probability equal to its
-    heuristic quality score, selected deterministically by the
-    engine-portable integer mix (sampling.quality_weighted_sample) — the
-    FineWeb-style alternative to a hard threshold that preserves some
-    mid-quality mass.  Narrow filter, no shuffle."""
-    from quality_filter.sampling import quality_weighted_sample
-    from quality_filter.textstats import with_quality_score
-
-    # localCheckpoint barrier: the sample's filter references the
-    # computed score, and pushdown substitutes the whole five-split
-    # score expression into the predicate AND pushes it below the
-    # spread Exchange — the score then evaluated twice per row on the
-    # unspread 2-partition scan.  A
-    # nondeterministic barrier column does not survive column pruning
-    # here (the final select drops it, so ColumnPruning removes it
-    # before the pushdown check); materializing the tiny (id, score)
-    # table is the robust barrier.
-    scored = (
-        with_quality_score(_docs(spark, sf_dir))
-        .select("doc_id", "quality_score")
-        .localCheckpoint()
-    )
-    return quality_weighted_sample(scored, "quality_score").select(
-        "doc_id", "quality_score"
-    )
 
 
 @_register(
@@ -1752,50 +1559,6 @@ def q_gopher_repetition(spark, sf_dir):
         "dup_para_frac",
         "dup_para_char_frac",
         "repetition_keep",
-    )
-
-
-def _tfidf_sql() -> str:
-    words = (
-        "list_filter(regexp_split_to_array(lower(coalesce(text, '')), '\\s+'),"
-        " w -> w <> '')"
-    )
-    return (
-        "WITH dt AS ("
-        f" SELECT doc_id, source, w AS term, count(*) AS tf"
-        f" FROM documents, unnest({words}) AS t(w)"
-        " GROUP BY 1, 2, 3), "
-        "dfreq AS (SELECT term, count(*) AS df FROM dt GROUP BY term), "
-        "n AS (SELECT count(*) AS n_docs FROM documents), "
-        "scored AS ("
-        " SELECT g.source, g.term, g.sum_tf, dfreq.df,"
-        "  CAST(g.sum_tf AS DOUBLE) * ((n.n_docs + 1.0) / (dfreq.df + 1.0)) AS score"
-        " FROM (SELECT source, term, sum(tf) AS sum_tf FROM dt GROUP BY 1, 2) g"
-        " JOIN dfreq ON g.term = dfreq.term CROSS JOIN n) "
-        "SELECT source, term, rnk, CAST(sum_tf AS BIGINT) AS sum_tf,"
-        " CAST(df AS BIGINT) AS df, score FROM ("
-        " SELECT *, CAST(row_number() OVER ("
-        "  PARTITION BY source ORDER BY score DESC, term ASC) AS INT) AS rnk"
-        " FROM scored) WHERE rnk <= 3"
-    )
-
-
-@_register("tfidf_top_terms", _tfidf_sql())
-def q_tfidf_top_terms(spark, sf_dir):
-    """Top-3 TF-IDF terms per source (textstats.tfidf_top_terms) —
-    corpus keyword extraction.  Uses the rational-idf variant
-    (exact-int (N+1)/(df+1), no libm) so Spark and the oracle are
-    bit-identical; the standard log variant is the library default."""
-    from quality_filter.textstats import tfidf_top_terms
-
-    out = tfidf_top_terms(_docs(spark, sf_dir), k=3, log_idf=False)
-    return out.select(
-        "source",
-        "term",
-        "rnk",
-        F.col("sum_tf").cast("bigint").alias("sum_tf"),
-        F.col("df").cast("bigint").alias("df"),
-        "score",
     )
 
 

@@ -3,7 +3,6 @@ guarantee vs the exact operator, bounded false positives, persistence
 round-trip, broadcast-probe plan shape."""
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _world(spark):

@@ -1,5 +1,5 @@
-"""Unit tests for near-dup clustering (cluster.py) and sequence packing
-(packing.py)."""
+"""Unit tests for near-dup clustering (cluster.py) and exact-substring
+dedup."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from quality_filter.cluster import (
     connected_components,
     decontaminate,
 )
-from quality_filter.packing import pack_chunks, pack_offsets
 
 
 def _nodes(spark, ids):
@@ -83,53 +82,6 @@ def test_decontaminate_flags_ngram_overlap(spark):
     assert got[3] == (0, False)
 
 
-@pytest.fixture()
-def tok_df(spark):
-    # ids deliberately sparse across shards (docs_per_shard=4)
-    rows = [(0, 5), (1, 3), (2, 10), (5, 4), (6, 1), (9, 7)]
-    return spark.createDataFrame(rows, "doc_id bigint, n_tokens bigint")
-
-
-def test_pack_offsets_exact(spark, tok_df):
-    out = {
-        r["doc_id"]: (r["start_off"], r["first_chunk"], r["last_chunk"])
-        for r in pack_offsets(tok_df, budget=8, docs_per_shard=4).collect()
-    }
-    # cumulative stream: 0:0-5, 1:5-8, 2:8-18, 5:18-22, 6:22-23, 9:23-30
-    assert out == {
-        0: (0, 0, 0),
-        1: (5, 0, 0),
-        2: (8, 1, 2),
-        5: (18, 2, 2),
-        6: (22, 2, 2),
-        9: (23, 2, 3),
-    }
-
-
-def test_pack_chunks_partitions_the_stream(spark, tok_df):
-    rows = pack_chunks(tok_df, budget=8, docs_per_shard=4).collect()
-    # every doc's chunk sub-ranges tile [0, n_tokens) exactly
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append((r["tok_from"], r["tok_to"]))
-    ntok = {r["doc_id"]: r["n_tokens"] for r in tok_df.collect()}
-    for doc, spans in by_doc.items():
-        spans.sort()
-        assert spans[0][0] == 0
-        assert spans[-1][1] == ntok[doc]
-        for (a0, a1), (b0, b1) in zip(spans, spans[1:]):
-            assert a1 == b0
-    # chunk token counts: every chunk except the last is exactly 8 tokens
-    per_chunk = {}
-    for r in rows:
-        per_chunk[r["chunk_id"]] = per_chunk.get(r["chunk_id"], 0) + (
-            r["tok_to"] - r["tok_from"]
-        )
-    last = max(per_chunk)
-    for cid, tot in per_chunk.items():
-        assert tot == 8 or cid == last
-
-
 # -- exact-substring dedup ---------------------------------------------------
 
 def _sub_df(spark, rows):
@@ -180,58 +132,6 @@ def test_substring_dedup_short_docs_untouched(spark):
     got = {r["doc_id"]: (r["clean_text"], r["n_removed"]) for r in
            substring_dedup(df, k=5).collect()}
     assert got == {1: ("too short", 0), 2: ("too short", 0)}
-
-
-# -- domain-mixture resampling -------------------------------------------------
-
-def test_mixture_resample_proportions_and_saturation(spark):
-    from quality_filter.sampling import mixture_resample
-
-    rows = [(i, "big" if i % 10 else "rare") for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id bigint, source string")
-    # targets: rare 500pm, big 500pm of a 200pm budget -> rare target =
-    # 2000*0.2*0.5 = 200 rows but only has 200 -> saturates (keep all);
-    # big target = 200 of 1800 -> ~11% kept
-    out = mixture_resample(
-        df, {"rare": 500, "big": 500}, budget_pm=200, domain_col="source"
-    )
-    got = {r["source"]: r["n"] for r in
-           out.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert got["rare"] == 200               # saturated: kept all
-    assert 140 <= got["big"] <= 260         # ~200 at 1000-bucket granularity
-    # unmapped domains are dropped entirely
-    df2 = df.withColumn(
-        "source", F.when(F.col("doc_id") < 100, "unmapped").otherwise("big")
-    )
-    out2 = mixture_resample(df2, {"big": 1000}, budget_pm=200, domain_col="source")
-    assert out2.filter(F.col("source") == "unmapped").count() == 0
-    # determinism: same rows on re-run
-    a = sorted(r["doc_id"] for r in out.collect())
-    b = sorted(r["doc_id"] for r in mixture_resample(
-        df, {"rare": 500, "big": 500}, budget_pm=200, domain_col="source").collect())
-    assert a == b
-
-
-def test_mixture_upsample_copies_and_budget(spark):
-    from quality_filter.sampling import mixture_upsample
-
-    rows = [(i, "rare" if i < 50 else "big") for i in range(1000)]
-    df = spark.createDataFrame(rows, "doc_id bigint, source string")
-    # rare: target = 1000 * 0.5 * 0.5 = 250 of 50 rows -> base 5 copies
-    # big: target = 250 of 950 rows -> base 0, fractional ~26%
-    out = mixture_upsample(df, {"rare": 500, "big": 500}, budget_pm=500)
-    got = {r["source"]: r["n"] for r in
-           out.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert got["rare"] == 250
-    assert 180 <= got["big"] <= 320
-    # copy_idx dense 0..copies-1 per row
-    per = out.filter("source = 'rare'").groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.min("copy_idx").alias("lo"),
-        F.max("copy_idx").alias("hi"),
-    )
-    bad = per.filter((F.col("lo") != 0) | (F.col("hi") != F.col("c") - 1)).count()
-    assert bad == 0
 
 
 def test_star_components_long_chain(spark):

@@ -113,30 +113,3 @@ def test_simhash_grouped_equals_hof(spark, dup_docs):
     assert grp.count() == df.count()
 
 
-def test_conv_fingerprint_salted_20k_turn_conversation(spark):
-    """The skew-safe conversation fingerprint must (a) agree with the
-    full-text md5 on equality CLASSES, and (b) handle a 20k-turn
-    conversation — which crosses multiple 4096-turn segments — through
-    the salted path without materializing the joined string."""
-    from quality_filter.dedup import conv_fingerprint_salted
-    from quality_filter.pipeline import reassemble
-
-    n = 20_000
-    rows = []
-    for i in range(n):
-        txt = f"turn number {i} with some content"
-        rows.append(("X", i, txt))
-        rows.append(("Y", i, txt))                      # exact copy of X
-        rows.append(("Z", i, txt if i != 12_345 else "DIFFERENT"))
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-
-    fps = {r["conv_id"]: (r["_fp"], r["n_turns"])
-           for r in conv_fingerprint_salted(df).collect()}
-    assert fps["X"][1] == n
-    assert fps["X"][0] == fps["Y"][0], "identical conversations must collide"
-    assert fps["X"][0] != fps["Z"][0], "one differing turn must split"
-
-    # equality classes agree with the full-text fingerprint
-    full = {r["conv_id"]: r["h"] for r in reassemble(df).select(
-        "conv_id", F.md5(F.encode(F.col("text"), "UTF-8")).alias("h")).collect()}
-    assert (full["X"] == full["Y"]) and (full["X"] != full["Z"])

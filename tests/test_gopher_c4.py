@@ -7,7 +7,6 @@ gates in tests/test_round7.py and tests/test_round8.py."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from quality_filter.textstats import (
     C4_MIN_LINES,
@@ -315,92 +314,6 @@ def test_gates_compose_with_structured_streaming(spark, tmpdir):
         r["doc_id"] for r in c4_line_filter(gopher_filter(batch)).collect()
     )
     assert got == want
-
-
-# ---------------------------------------------------------------------------
-# TF-IDF top terms (textstats.tfidf_top_terms)
-# ---------------------------------------------------------------------------
-
-def test_tfidf_hand_computed(spark):
-    """3 docs, 2 sources: 'apple' appears only in source A (rare, tf 2),
-    'common' appears in every doc (idf floor).  Rational idf
-    (N+1)/(df+1) with N=3: apple df=1 -> idf 2.0; common df=3 -> 1.0."""
-    from quality_filter.textstats import tfidf_top_terms
-
-    docs = spark.createDataFrame(
-        [
-            (1, "apple apple common", "A"),
-            (2, "banana common pear", "B"),
-            (3, "banana common", "B"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    out = tfidf_top_terms(docs, k=2, log_idf=False).collect()
-    m = {(r["source"], r["rnk"]): r for r in out}
-    a1 = m[("A", 1)]
-    assert a1["term"] == "apple" and a1["sum_tf"] == 2 and a1["df"] == 1
-    assert a1["score"] == 2 * (4.0 / 2.0)
-    # B: banana sum_tf 2, df 2 -> 2*(4/3); common sum_tf 2, df 3 -> 2*1
-    b1, b2 = m[("B", 1)], m[("B", 2)]
-    assert b1["term"] == "banana" and b1["score"] == 2 * (4.0 / 3.0)
-    assert b2["term"] == "common" and b2["score"] == 2.0
-    # ties break on term asc: A's 'common' (tf 1, idf 1) ranks after apple
-    assert m[("A", 2)]["term"] == "common"
-
-
-def test_tfidf_log_variant_monotone(spark):
-    """The default log idf keeps the same per-group ranking as the
-    rational variant when df ordering is fixed (log is monotone)."""
-    from quality_filter.textstats import tfidf_top_terms
-
-    docs = spark.createDataFrame(
-        [(i, f"rare{i} shared words here", "S") for i in range(4)],
-        "doc_id long, text string, source string",
-    )
-    rat = [r["term"] for r in tfidf_top_terms(docs, k=4, log_idf=False).collect()]
-    log = [r["term"] for r in tfidf_top_terms(docs, k=4, log_idf=True).collect()]
-    assert rat == log
-
-
-def test_tfidf_property_pin(spark):
-    """Seeded random corpora: tfidf_top_terms(log_idf=False) equals a
-    pure-Python reference exactly — scores are exact-int arithmetic in
-    doubles, ranking ties break on term asc."""
-    import random
-    from collections import Counter, defaultdict
-
-    rng = random.Random(42)
-    vocab = [f"w{i}" for i in range(12)] + ["the", "naïve", "中文"]
-    docs = []
-    for d in range(60):
-        words = [rng.choice(vocab) for _ in range(rng.randint(1, 30))]
-        docs.append((d, " ".join(words), f"s{d % 3}"))
-
-    # python reference
-    N = len(docs)
-    df_counter = Counter()
-    per_group = defaultdict(Counter)
-    for _, text, src in docs:
-        ws = text.split()
-        df_counter.update(set(ws))
-        per_group[src].update(ws)
-    want = {}
-    for src, counts in per_group.items():
-        scored = sorted(
-            ((tf * ((N + 1.0) / (df_counter[t] + 1.0)), t, tf) for t, tf in counts.items()),
-            key=lambda x: (-x[0], x[1]),
-        )[:3]
-        want[src] = [(t, rnk + 1, tf, df_counter[t], sc)
-                     for rnk, (sc, t, tf) in enumerate(scored)]
-
-    from quality_filter.textstats import tfidf_top_terms
-
-    sdf = spark.createDataFrame(docs, "doc_id long, text string, source string")
-    got = defaultdict(list)
-    for r in sorted(tfidf_top_terms(sdf, k=3, log_idf=False).collect(),
-                    key=lambda r: (r["source"], r["rnk"])):
-        got[r["source"]].append((r["term"], r["rnk"], r["sum_tf"], r["df"], r["score"]))
-    assert dict(got) == want
 
 
 def test_gates_linear_on_giant_document(spark):

@@ -115,6 +115,26 @@ def test_reassemble_order_and_bytes(spark, transcripts, transcript_rows):
     assert docs == want_docs
 
 
+def test_reassemble_giant_conversation(spark):
+    """A 20,000-turn conversation (several 4,096-turn segments' worth),
+    fed in scrambled order over several partitions and with one NULL
+    turn, reassembles byte-identically to Python's '\\n'.join."""
+    n = 20_000
+    texts = [f"turn {i} says {'é' * (i % 3)}hello" for i in range(n)]
+    texts[12_345] = None
+    order = [(i * 7919) % n for i in range(n)]  # 7919 is prime, so a permutation
+    rows = [("giant", i, texts[i]) for i in order] + [("small", 0, "only")]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    got = {
+        r["conv_id"]: (r["text"], r["n_turns"])
+        for r in reassemble(df.repartition(4)).collect()
+    }
+    assert got == {
+        "giant": ("\n".join(t or "" for t in texts), n),
+        "small": ("only", 1),
+    }
+
+
 def test_score_threshold_boundary_is_inclusive(spark):
     # keep iff clean_score >= t (src/filter_by_quality_score.py:30): a turn
     # whose score equals the threshold exactly must survive.

@@ -1,6 +1,6 @@
 """Property-based parity for the round-3 operators: connected
-components vs a Python union-find, sequence packing vs a Python cumsum,
-exact-substring dedup vs a direct Python implementation of the spec.
+components vs a Python union-find and exact-substring dedup vs a direct
+Python implementation of the spec.
 
 Pattern as in test_property_parity.py: hypothesis generates all examples
 up front (deterministic), then ONE Spark job checks the whole batch —
@@ -8,12 +8,10 @@ per-example Spark jobs would be minutes of overhead."""
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import given, settings, strategies as st
 
 from quality_filter.cluster import connected_components
 from quality_filter.dedup import substring_dedup
-from quality_filter.packing import pack_offsets
 
 NS = 1_000_000  # id namespace per generated example
 
@@ -85,27 +83,6 @@ def test_connected_components_vs_union_find(spark):
         for r in connected_components(ndf, edf, algorithm="star").collect()
     }
     assert star == expected
-
-
-# -- packing vs python cumsum -------------------------------------------------
-
-TOKENS = st.lists(st.integers(min_value=1, max_value=500), min_size=1, max_size=200)
-
-
-def test_pack_offsets_vs_cumsum(spark):
-    counts = [c for batch in _gather(TOKENS) for c in batch]
-    budget = 257  # prime, to exercise straddles
-    rows = [(i * 3, c) for i, c in enumerate(counts)]  # sparse ids
-    df = spark.createDataFrame(rows, "doc_id bigint, n_tokens bigint")
-    got = {
-        r["doc_id"]: (r["start_off"], r["first_chunk"], r["last_chunk"])
-        for r in pack_offsets(df, budget=budget, docs_per_shard=37).collect()
-    }
-    off = 0
-    for i, c in enumerate(counts):
-        did = i * 3
-        assert got[did] == (off, off // budget, (off + c - 1) // budget), did
-        off += c
 
 
 # -- substring dedup vs python spec -------------------------------------------

@@ -1,7 +1,6 @@
 """Property-based parity for the round-4 operators: eval report vs a
-Python confusion-matrix implementation, Cohen's kappa vs its closed
-form, mixture resample vs exact integer arithmetic, quality-weighted
-sampling vs its spec.
+Python confusion-matrix implementation and Cohen's kappa vs its closed
+form.
 
 Pattern as in test_property_parity.py: hypothesis generates all examples
 up front (deterministic), then ONE Spark job checks the whole batch."""
@@ -12,8 +11,6 @@ from collections import Counter
 
 import pytest
 from hypothesis import given, settings, strategies as st
-
-from quality_filter.sampling import _MIX
 
 
 def _gather(strategy, n_batches=12):
@@ -85,53 +82,3 @@ def test_eval_report_and_kappa_match_python(spark):
         k = cohen_kappa(sub).collect()[0]["kappa"]
         assert k == pytest.approx(_py_kappa(pairs))
         assert -1.0 - 1e-9 <= k <= 1.0 + 1e-9
-
-
-MIX_CASES = st.tuples(
-    st.lists(st.integers(0, 3), min_size=4, max_size=80),  # domain per row
-    st.integers(1, 1000),                                  # budget_pm
-)
-
-
-def test_mixture_resample_matches_exact_arithmetic(spark):
-    from quality_filter.sampling import mixture_resample
-
-    examples = _gather(MIX_CASES)
-    for ex_id, (domains, budget_pm) in enumerate(examples):
-        rows = [(i, f"d{d}") for i, d in enumerate(domains)]
-        df = spark.createDataFrame(rows, "doc_id long, source string")
-        weights = {"d0": 400, "d1": 300, "d2": 200, "d3": 100}
-        out = {r["doc_id"] for r in
-               mixture_resample(df, weights, budget_pm=budget_pm).collect()}
-        counts = Counter(f"d{d}" for d in domains)
-        total = len(domains)
-        expect = set()
-        for i, d in enumerate(domains):
-            dom = f"d{d}"
-            thr = min(1000, (total * budget_pm * weights[dom]) // (1000 * counts[dom]))
-            if (i * _MIX) % 1000 < thr:
-                expect.add(i)
-        assert out == expect, (ex_id, budget_pm)
-
-
-def test_quality_weighted_sample_spec(spark):
-    from quality_filter.sampling import quality_weighted_sample
-
-    scores = _gather(
-        st.lists(st.floats(0.0, 1.0, allow_nan=False), min_size=1, max_size=50),
-        n_batches=8,
-    )
-    import math
-
-    rows = [
-        (ex_id * 1000 + i, ex_id, float(s))
-        for ex_id, sl in enumerate(scores)
-        for i, s in enumerate(sl)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, ex long, score double")
-    got = {r["doc_id"] for r in quality_weighted_sample(df, "score").collect()}
-    expect = {
-        did for did, _, s in rows
-        if (did * _MIX) % 1000 < math.floor(s * 1000)
-    }
-    assert got == expect

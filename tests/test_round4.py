@@ -1,6 +1,6 @@
 """Round-4 regression tests: string-id connected components (ADVICE r3),
 overflow-free deterministic bucketing, bounded-cardinality guards,
-one-pass mixture thresholds, exact-Jaccard candidate verification, and
+exact-Jaccard candidate verification, and
 the training-eval report."""
 
 from __future__ import annotations
@@ -61,57 +61,6 @@ def test_deterministic_bucket_no_int64_overflow(spark):
         assert 0 <= got[k] < 1000
 
 
-def test_mixture_resample_huge_keys_not_always_kept(spark):
-    from quality_filter.sampling import _MIX, mixture_resample
-
-    # rows whose doc_id overflows the old bigint mix: with the overflow
-    # bug every such row was kept at ANY threshold; now selection follows
-    # the exact arithmetic
-    base = 4_000_000_000
-    rows = [(base + i, "src0") for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = mixture_resample(df, {"src0": 1000}, budget_pm=100)
-    expect = {k for k, _ in rows if (k * _MIX) % 1000 < 100}
-    got = {r["doc_id"] for r in out.collect()}
-    assert got == expect
-    assert 0 < len(got) < len(rows)
-
-
-def test_mixture_single_scan_and_parity(spark):
-    """One-pass thresholds (total derived from the per-domain counts, no
-    separate df.count job) must reproduce the documented arithmetic."""
-    from quality_filter.sampling import _MIX, mixture_resample, mixture_upsample
-
-    rows = [(i, "a" if i % 3 else "b") for i in range(3000)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    n = {"a": sum(1 for _, s in rows if s == "a"),
-         "b": sum(1 for _, s in rows if s == "b")}
-    total = len(rows)
-    out = mixture_resample(df, {"a": 600, "b": 400}, budget_pm=500)
-    expect = set()
-    for k, s in rows:
-        w = 600 if s == "a" else 400
-        thr = min(1000, (total * 500 * w) // (1000 * n[s]))
-        if (k * _MIX) % 1000 < thr:
-            expect.add(k)
-    assert {r["doc_id"] for r in out.collect()} == expect
-
-    up = mixture_upsample(df, {"a": 500, "b": 500}, budget_pm=2000)
-    expect_copies = {}
-    for k, s in rows:
-        target = (total * 2000 * 500) // 1_000_000
-        base_c = target // n[s]
-        fthr = (1000 * (target - base_c * n[s])) // n[s]
-        c = base_c + (1 if (k * _MIX) % 1000 < fthr else 0)
-        if c > 0:
-            expect_copies[k] = c
-    got_copies = {
-        r["doc_id"]: r["n"]
-        for r in up.groupBy("doc_id").agg(F.count("*").alias("n")).collect()
-    }
-    assert got_copies == expect_copies
-
-
 def test_bounded_cardinality_guard(spark, monkeypatch):
     import quality_filter.guards as G
     import quality_filter.sampling as S
@@ -120,8 +69,6 @@ def test_bounded_cardinality_guard(spark, monkeypatch):
     df = spark.createDataFrame(
         [(i, f"d{i}") for i in range(25)], "doc_id long, source string"
     )
-    with pytest.raises(ValueError, match="bounded vocabulary"):
-        S.mixture_resample(df, {"d0": 1000})
     with pytest.raises(ValueError, match="bounded vocabulary"):
         S.downsample_label(df, "source", "d0", 0.5)
 
@@ -263,23 +210,3 @@ def test_cohen_kappa_hand_computed(spark):
     # degenerate: everything one class on both sides -> pe = 1 -> defined 0
     degen = spark.createDataFrame([("x", "x")] * 5, "label string, prediction string")
     assert cohen_kappa(degen).collect()[0]["kappa"] == 0.0
-
-
-def test_quality_weighted_sample_rate_tracks_score(spark):
-    from quality_filter.sampling import _MIX, quality_weighted_sample
-
-    rows = [(i, [0.1, 0.5, 0.9][i % 3]) for i in range(3000)]
-    df = spark.createDataFrame(rows, "doc_id long, score double")
-    out = quality_weighted_sample(df, "score")
-    got = {r["doc_id"] for r in out.collect()}
-    import math
-
-    expect = {
-        i for i, s in rows if (i * _MIX) % 1000 < math.floor(s * 1000)
-    }
-    assert got == expect
-    # keep-rate per stratum ≈ its score
-    for s in (0.1, 0.5, 0.9):
-        ids = [i for i, sc in rows if sc == s]
-        kept = sum(1 for i in ids if i in got)
-        assert abs(kept / len(ids) - s) < 0.05

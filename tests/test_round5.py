@@ -1,5 +1,4 @@
-"""Round-5 regression tests: NULL-domain mixtures + typed domain keys
-(ADVICE r4 medium), exact-Jaccard total-pair contract (ADVICE r4 low),
+"""Round-5 regression tests: exact-Jaccard total-pair contract (ADVICE r4 low),
 overflow-safe Cohen's kappa, sklearn-union macro averages, the 9-digit
 banker's-rounding oracle emulation, and the LSH bucket-occupancy guard."""
 
@@ -7,52 +6,6 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-# -- mixture operators: NULL domains must be dropped, not crash --------------
-
-def test_mixture_resample_null_domain(spark):
-    from quality_filter.sampling import mixture_resample
-
-    rows = [(i, "src0" if i % 3 == 0 else ("src1" if i % 3 == 1 else None))
-            for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = mixture_resample(df, {"src0": 600, "src1": 400}, budget_pm=500)
-    got = out.select("source").distinct().collect()
-    # NULL-domain rows are dropped (inner join on the weight map), the
-    # eligible domains survive, and nothing raised TypeError on sort
-    assert {r["source"] for r in got} <= {"src0", "src1"}
-    assert out.count() > 0
-
-
-def test_mixture_upsample_null_domain_and_unmapped(spark):
-    from quality_filter.sampling import mixture_upsample
-
-    rows = (
-        [(i, "small") for i in range(20)]
-        + [(i + 100, "big") for i in range(200)]
-        + [(i + 1000, None) for i in range(30)]
-        + [(i + 2000, "unmapped") for i in range(30)]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = mixture_upsample(df, {"small": 700, "big": 300}, budget_pm=1000)
-    srcs = {r["source"] for r in out.select("source").distinct().collect()}
-    assert srcs <= {"small", "big"}
-    # the small domain is upsampled: more output rows than input rows
-    n_small = out.filter(F.col("source") == "small").count()
-    assert n_small > 20
-
-
-def test_mixture_resample_integer_domain_column(spark):
-    """The rates-table schema derives the domain type from the input —
-    an int-keyed domain column must join (previously hardcoded string)."""
-    from quality_filter.sampling import mixture_resample
-
-    rows = [(i, i % 2) for i in range(400)]
-    df = spark.createDataFrame(rows, "doc_id long, source int")
-    out = mixture_resample(df, {0: 500, 1: 500}, budget_pm=500)
-    assert out.count() > 0
-    assert dict(out.dtypes)["source"] == "int"
 
 
 # -- exact_jaccard_for_pairs: a row for EVERY input pair ---------------------
@@ -293,7 +246,7 @@ def test_substring_dedup_span_merge_property(spark):
     assert want[9003][1] == 0 and want[9004][1] == 7
 
 
-# -- apply_label_map: None keys skipped (same class as the mixture fix) ------
+# -- apply_label_map: None keys skipped ----------------------------------------
 
 def test_apply_label_map_none_key_and_null_label(spark):
     from quality_filter.taxonomy import apply_label_map

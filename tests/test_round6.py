@@ -4,7 +4,6 @@ dedup, MinHash banding S-curve, scorer fast-path bit-identity."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _boom_docs(spark):

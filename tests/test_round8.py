@@ -1,14 +1,13 @@
-"""Round-8 additions: the Arrow-compute batch kernel of the fused corpus
-gate must be COLUMN-EXACT against the r7 row kernel (which stays in the
-tree as the parity oracle), including the exact-fallback lanes — exotic
-Unicode whitespace, unicode-letter tokens without ASCII letters, adjacent
-letterless tokens, empty/None/ws-only docs."""
+"""Round-8 additions: the fused corpus gate's Spark output (the
+Arrow-compute batch kernel) must be COLUMN-EXACT against the r7 row
+kernel run on the driver over the same texts (the row kernel stays in
+the tree as the parity oracle), including the exact-fallback lanes —
+exotic Unicode whitespace, unicode-letter tokens without ASCII letters,
+adjacent letterless tokens, empty/None/ws-only docs."""
 
 from __future__ import annotations
 
 import random
-
-from pyspark.sql import functions as F
 
 
 def _adversarial_docs():
@@ -71,40 +70,49 @@ def _adversarial_docs():
     return docs
 
 
-def test_fused_gate_batch_equals_row_kernel(spark):
+def _row_kernel(df):
+    """doc_id → (clean_text, c4_keep, gopher_keep) from the per-doc row
+    kernel, run on the driver over the same texts."""
+    from quality_filter.textstats import (
+        C4_MIN_LINES,
+        C4_MIN_WORDS_PER_LINE,
+        _fused_gate_row,
+    )
+
+    return {
+        r["doc_id"]: _fused_gate_row(
+            r["text"], C4_MIN_WORDS_PER_LINE, C4_MIN_LINES, True
+        )
+        for r in df.collect()
+    }
+
+
+def _spark_gate(df):
     from quality_filter.textstats import fused_gate_arrow
 
-    df = spark.createDataFrame(_adversarial_docs(), "doc_id long, text string")
     cols = ["doc_id", "clean_text", "c4_keep", "gopher_keep"]
-    row = {r["doc_id"]: r for r in
-           fused_gate_arrow(df, impl="row").select(cols).collect()}
-    batch = {r["doc_id"]: r for r in
-             fused_gate_arrow(df, impl="batch").select(cols).collect()}
+    return {
+        r["doc_id"]: tuple(r)[1:]
+        for r in fused_gate_arrow(df).select(cols).collect()
+    }
+
+
+def test_fused_gate_batch_equals_row_kernel(spark):
+    df = spark.createDataFrame(_adversarial_docs(), "doc_id long, text string")
+    row = _row_kernel(df)
+    batch = _spark_gate(df)
     assert row.keys() == batch.keys()
-    diffs = [i for i in row if tuple(row[i]) != tuple(batch[i])]
+    diffs = [i for i in row if row[i] != batch[i]]
     assert not diffs, f"batch kernel diverges from row kernel on: {diffs[:10]}"
     # sanity: the fixture exercises both verdicts and both lanes
-    assert any(r["gopher_keep"] for r in row.values())
-    assert any(not r["c4_keep"] for r in row.values())
-    assert row[910]["gopher_keep"] and row[913]["gopher_keep"]
+    assert any(gk for _, _, gk in row.values())
+    assert any(not c4 for _, c4, _ in row.values())
+    assert row[910][2] and row[913][2]
 
 
 def test_fused_gate_batch_equals_row_on_synth(spark):
     from quality_filter.synth import synth_documents
-    from quality_filter.textstats import fused_gate_arrow
 
     docs = synth_documents(spark, 1500, seed=11).select("doc_id", "text")
-    cols = ["doc_id", "clean_text", "c4_keep", "gopher_keep"]
-    a = {tuple(r) for r in fused_gate_arrow(docs, impl="row").select(cols).collect()}
-    b = {tuple(r) for r in fused_gate_arrow(docs, impl="batch").select(cols).collect()}
-    assert a == b and len(a) == 1500
-
-
-def test_fused_gate_bad_impl_raises(spark):
-    import pytest
-
-    from quality_filter.textstats import fused_gate_arrow
-
-    df = spark.createDataFrame([(1, "x.")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="impl"):
-        fused_gate_arrow(df, impl="numpy")
+    row = _row_kernel(docs)
+    assert _spark_gate(docs) == row and len(row) == 1500

@@ -3,7 +3,6 @@ must match exactly (the F1 ≥ 0.99 gate of BASELINE.json — in practice 1.0)."
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from quality_filter.rules import score_turns

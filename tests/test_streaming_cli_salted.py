@@ -1,4 +1,4 @@
-"""CLI entry points and the skew-safe salted reassembly."""
+"""CLI entry points."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import tempfile
 
 import pytest
 
-from quality_filter.pipeline import clean_pipeline, reassemble, reassemble_salted
 from quality_filter.synth import synth_transcripts
 
 
@@ -16,24 +15,6 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="qf_scs_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_salted_reassembly_matches_plain(spark, transcripts):
-    out = clean_pipeline(transcripts, mode="filter", labels_to_remove="all")
-    plain = {r["conv_id"]: (r["text"], r["n_turns"]) for r in reassemble(out).collect()}
-    salted = {
-        r["conv_id"]: (r["text"], r["n_turns"])
-        for r in reassemble_salted(out, segment_turns=37).collect()
-    }
-    assert plain == salted
-    # strategy dispatch on the public reassemble() entry point
-    dispatched = {
-        r["conv_id"]: (r["text"], r["n_turns"])
-        for r in reassemble(out, strategy="salted").collect()
-    }
-    assert dispatched == plain
-    with pytest.raises(ValueError):
-        reassemble(out, strategy="nope")
 
 
 def test_cli_filter_roundtrip(spark, tmpdir):

@@ -24,11 +24,7 @@ from quality_filter.sampling import (
     shard,
     stratified_split_sampled,
 )
-from quality_filter.textstats import (
-    with_fingerprint,
-    with_quality_score,
-    with_token_stats,
-)
+from quality_filter.textstats import with_quality_score
 
 
 @pytest.fixture()
@@ -36,18 +32,6 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="qf_io_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_token_stats(spark):
-    df = spark.createDataFrame(
-        [(1, "Hello world, 42 times!"), (2, ""), (3, "a a a a")],
-        "id long, text string",
-    )
-    got = {r["id"]: r for r in with_token_stats(df).collect()}
-    assert got[1]["n_words"] == 4
-    # Hello|world|,|42|times|! → 6 BPE-ish tokens
-    assert got[1]["n_tokens"] == 6
-    assert got[3]["distinct_word_ratio"] == 0.25
 
 
 def test_quality_score_orders(spark):
@@ -96,16 +80,6 @@ def test_quality_score_hand_computed(spark):
     df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
     got = {r["id"]: r["quality_score"] for r in with_quality_score(df).collect()}
     assert got == {i: ref(t) for i, t in enumerate(texts)}
-
-
-def test_fingerprint_order_sensitive(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta alpha"), (3, "  Alpha   BETA ")],
-        "id long, text string",
-    )
-    got = {r["id"]: r["fingerprint"] for r in with_fingerprint(df).collect()}
-    assert got[1] != got[2]       # order matters (rolling hash)
-    assert got[1] == got[3]       # normalization: case + whitespace
 
 
 # --- sampling --------------------------------------------------------------
