@@ -1,9 +1,9 @@
-"""Near-duplicate CLUSTERING: candidate pairs (MinHash/SimHash/Jaccard)
-are only half of a dedup pipeline — production web-scale dedup (CCNet /
-RefinedWeb / Gopher style) groups the pair graph into connected
-components and keeps ONE canonical document per component, so that
-transitive chains (A~B, B~C, A!~C) collapse in a single pass instead of
-needing repeated pairwise sweeps.
+"""Near-duplicate CLUSTERING: candidate pairs (MinHash-LSH, optionally
+Jaccard-verified) are only half of a dedup pipeline — production
+web-scale dedup (CCNet / RefinedWeb / Gopher style) groups the pair
+graph into connected components and keeps ONE canonical document per
+component, so that transitive chains (A~B, B~C, A!~C) collapse in a
+single pass instead of needing repeated pairwise sweeps.
 
 Reference scope note: the reference repo (TurkuNLP/linewise_quality_filtering)
 has no dedup at all — this module is part of the beyond-reference
@@ -289,9 +289,9 @@ def cluster_dedup(
 ) -> DataFrame:
     """Keep one canonical row per near-dup cluster (the minimum id).
 
-    ``pairs`` is any near-dup pair set — ``dedup.lsh_candidates`` output,
-    SimHash pairs, or verified-Jaccard pairs.  Transitive chains collapse
-    in one pass (unlike the one-hop ``dedup.minhash_dedup``)."""
+    ``pairs`` is any near-dup pair set — ``dedup.lsh_candidates`` output
+    or verified-Jaccard pairs.  Transitive chains (A~B, B~C, A!~C)
+    collapse in one pass, not over repeated pairwise sweeps."""
     comp = connected_components(
         df.select(id_col), pairs, id_col=id_col, a_col=a_col, b_col=b_col,
         algorithm=algorithm,
@@ -376,7 +376,6 @@ def dedup_pipeline(
     algorithm: str = "propagation",
     verify_exact: bool = False,
     max_bucket_size: int | None = 1000,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """The staged corpus-dedup composition a 100 TB run uses, in order:
 
@@ -412,23 +411,18 @@ def dedup_pipeline(
         substring_dedup,
     )
 
-    uniq = exact_dedup(df, id_col, text_col)
-    if checkpoint:
-        # uniq feeds the signature stage, the CC vertex set, AND the final
-        # keeper join; sig feeds both sides of the band join plus the two
-        # signature re-attach joins.  Without a materialization boundary
-        # every consumer re-executes the full upstream lineage — for a
-        # corpus build whose input is an Arrow gate stage that measured
-        # ~8 executions of the most expensive stage per build.  Lazy
-        # localCheckpoint (same mechanism as the CC loop below): blocks
-        # live MEMORY_AND_DISK on executors, are freed when the DataFrame
-        # is GC'd, and truncate lineage — the documented CC caveat
-        # applies (executor loss requires a job restart; acceptable for
-        # batch dedup, pass checkpoint=False to keep pure lineage).
-        uniq = uniq.localCheckpoint(eager=False)
-    sig = minhash_signatures(uniq, id_col, text_col)
-    if checkpoint:
-        sig = sig.localCheckpoint(eager=False)
+    # uniq feeds the signature stage, the CC vertex set, AND the final
+    # keeper join; sig feeds the band grouping plus the two signature
+    # re-attach joins.  Without a materialization boundary every consumer
+    # re-executes the full upstream lineage — for a corpus build whose
+    # input is an Arrow gate stage that measured ~8 executions of the most
+    # expensive stage per build.  Lazy localCheckpoint (same mechanism as
+    # the CC loop): blocks live MEMORY_AND_DISK on executors, are freed
+    # when the DataFrame is GC'd, and truncate lineage — the documented CC
+    # caveat applies (executor loss requires a job restart; acceptable
+    # for batch dedup).
+    uniq = exact_dedup(df, id_col, text_col).localCheckpoint(eager=False)
+    sig = minhash_signatures(uniq, id_col, text_col).localCheckpoint(eager=False)
     cand = lsh_candidates(sig, id_col, max_bucket_size=max_bucket_size)
     pairs = minhash_jaccard(sig, cand, id_col).filter(
         F.col("est_jaccard") >= jaccard_threshold

@@ -6,14 +6,20 @@ ordering, the column plumbing, and the stage accounting.
 
 Stage order and why it matters at scale:
 
-1. **C4 line cleaning** (`textstats.c4_line_filter`) — scan-shaped, no
-   shuffle; runs first because boilerplate lines inflate both gate
-   metrics and shingle sets, and because dropping whole junk pages here
-   is the cheapest possible discard (nothing has been shuffled yet).
-   Downstream stages operate on the cleaned text.
-2. **Gopher gates** (`textstats.gopher_filter`) — also scan-shaped;
-   applied to the C4-cleaned text so repetition/quality metrics judge
-   the content that would actually be trained on.
+1. **C4 line cleaning** — scan-shaped, no shuffle; runs first because
+   boilerplate lines inflate both gate metrics and shingle sets, and
+   because dropping whole junk pages here is the cheapest possible
+   discard (nothing has been shuffled yet).  Downstream stages operate
+   on the cleaned text.
+2. **Gopher gates** — also scan-shaped; applied to the C4-cleaned text
+   so repetition/quality metrics judge the content that would actually
+   be trained on.
+
+   With both gates on, stages 1 and 2 are one fused Arrow pass
+   (`textstats.fused_gate_arrow`); with one gate off, the other runs
+   alone as its HOF operator (`textstats.c4_line_filter` or
+   `textstats.gopher_filter`), which is also the fused pass's test
+   oracle.
 3. **Dedup** (`cluster.dedup_pipeline`) — exact-first (skew defuser),
    then MinHash+LSH → connected components; runs AFTER the gates so the
    shuffle-bearing stage sees only documents worth deduplicating
@@ -51,15 +57,12 @@ def build_pretrain_corpus(
     c4: bool = True,
     gopher: bool = True,
     gopher_repetition: bool = True,
-    gate_impl: str = "arrow",
     jaccard_threshold: float = 0.8,
     verify_exact: bool = False,
     max_bucket_size: int | None = 1000,
     substring_k: int | None = None,
     paragraph_dedup: bool = False,
-    paragraph_key: str = "hash",
     decontaminate_n: int = 8,
-    decontaminate_impl: str = "exact",
     with_counts: bool = False,
 ):
     """Compose C4 cleaning → Gopher gates → staged dedup →
@@ -83,16 +86,13 @@ def build_pretrain_corpus(
         observations.append((stage, obs))
         return df.observe(obs, F.count(F.lit(1)).alias("n_docs"))
 
-    if gate_impl not in ("arrow", "hof"):
-        raise ValueError(f"gate_impl must be 'arrow' or 'hof', got {gate_impl!r}")
-
     cur = _observed(docs, "input")
-    if gate_impl == "arrow" and c4 and gopher:
-        # 100-TB hot path: one fused Arrow pass computes the C4 clean +
-        # both gate verdicts (the interpreted HOF chain measured 5.4×
-        # its wall time at identical survivors — ``BENCH/r7_gates_ab.json``
-        # at b9e3436); the verdicts come back as columns, so per-stage
-        # accounting stays exact.
+    if c4 and gopher:
+        # one fused Arrow pass computes the C4 clean + both gate verdicts
+        # (the interpreted HOF chain measured 5.4× its wall time at
+        # identical survivors); the verdicts come back as columns, so
+        # per-stage accounting stays exact.  With one gate off, the HOF
+        # operators below run that gate alone.
         from quality_filter.textstats import fused_gate_arrow
 
         g = fused_gate_arrow(cur, text_col, with_repetition=gopher_repetition)
@@ -130,10 +130,7 @@ def build_pretrain_corpus(
         # paragraph's canonical occurrence is in a canonical document
         from quality_filter.dedup import paragraph_dedup as _para
 
-        # hash key by default: the 100-TB exchange carries a 16-byte
-        # fingerprint per paragraph, not the paragraph (output-identical,
-        # pinned by test_round7.py)
-        spans = _para(cur, id_col, text_col, key=paragraph_key)
+        spans = _para(cur, id_col, text_col)
         cur = (
             cur.drop(text_col)
             .join(spans.select(id_col, "clean_text"), id_col)
@@ -142,28 +139,7 @@ def build_pretrain_corpus(
         )
         cur = _observed(cur, "after_paragraph_dedup")
     if benchmark is not None:
-        if decontaminate_impl == "bloom":
-            # memory-bounded variant: 3 bytes/gram broadcast bitset, no
-            # false negatives, ~0.1% doc-level over-flagging at the
-            # default sizing (see curation.build_decontamination_filter)
-            from quality_filter.curation import (
-                build_decontamination_filter,
-                decontaminate_bloom,
-            )
-
-            bits, meta = build_decontamination_filter(
-                benchmark, text_col, n=decontaminate_n
-            )
-            flags = decontaminate_bloom(cur, bits, meta, id_col, text_col)
-        elif decontaminate_impl == "exact":
-            flags = decontaminate(
-                cur, benchmark, id_col, text_col, n=decontaminate_n
-            )
-        else:
-            raise ValueError(
-                f"decontaminate_impl must be 'exact' or 'bloom', "
-                f"got {decontaminate_impl!r}"
-            )
+        flags = decontaminate(cur, benchmark, id_col, text_col, n=decontaminate_n)
         cur = cur.join(
             flags.filter(~F.col("contaminated")).select(id_col), id_col, "semi"
         )

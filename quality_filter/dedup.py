@@ -1,12 +1,12 @@
 """Deduplication operators for training-data pipelines: exact,
-MinHash+LSH, SimHash, and n-gram Jaccard — all JVM-side (xxhash64 +
-array HOFs + joins), no UDFs.
+MinHash+LSH with n-gram Jaccard verify, exact-substring spans and
+paragraphs — all JVM-side (xxhash64 + array HOFs + joins), no UDFs.
 
 Scale notes: exact dedup is one hash-groupBy (map-side combinable);
 MinHash signatures are one groupBy over exploded shingles; LSH candidate
-generation is an equi-join on band keys (shuffle on band hash — the
-standard sub-quadratic near-dup layout); everything downstream of
-candidates is pair-local.
+generation groups on band keys (shuffle on band hash — the standard
+sub-quadratic near-dup layout); everything downstream of candidates is
+pair-local.
 """
 
 from __future__ import annotations
@@ -17,123 +17,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _LOG = logging.getLogger(__name__)
-
-
-def _log_bucket_drops(
-    banded: DataFrame, key_cols: list[str], cap: int, what: str
-) -> None:
-    """Diagnostic drop accounting for the occupancy cap: one extra
-    aggregate pass over the banded lineage, WARNs when buckets overflow."""
-    sizes = banded.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_bn"))
-    st = (
-        sizes.filter(F.col("_bn") > cap)
-        .agg(
-            F.count(F.lit(1)).alias("nb"),
-            F.sum(F.col("_bn") - F.lit(cap)).alias("nd"),
-            F.max("_bn").alias("mx"),
-        )
-        .collect()[0]
-    )
-    if st["nb"]:
-        _LOG.warning(
-            "%s: %d bucket(s) exceed the occupancy cap %d (largest: %d "
-            "rows); dropping %d banded row(s) from candidate generation "
-            "(deterministic per-bucket, per-band top-%d by hashed id). "
-            "If these are genuine duplicates, stage exact dedup first "
-            "or raise max_bucket_size.",
-            what, st["nb"], cap, st["mx"], st["nd"], cap,
-        )
-
-
-def bucket_pairs(
-    banded: DataFrame,
-    key_cols: list[str],
-    id_col: str,
-    cap: int | None,
-    what: str = "lsh",
-    payload: tuple[str, ...] = (),
-    log_drops: bool = False,
-) -> DataFrame:
-    """Distinct candidate pairs (``a`` < ``b``) of ids sharing a bucket in
-    an LSH-banded table — the shared candidate-generation core of
-    ``lsh_candidates`` / ``simhash_near_dups``.
-
-    Output columns: ``a``, ``b`` (+ ``a_<p>``, ``b_<p>`` for each
-    ``payload`` column carried through, e.g. the simhash needed for the
-    Hamming verify).
-
-    Physical strategy:
-
-    - ``cap`` set (the scale path): the occupancy cap bounds every bucket,
-      so pairs are generated WITHOUT a self-join — per-bucket
-      ``row_number`` cap (map-side ``WindowGroupLimit`` + one (key)
-      shuffle), then ``collect_list`` of the ≤ cap members per bucket
-      (bounded memory, reuses the window's partitioning — no second
-      shuffle) and a positional double-explode of the sorted member array
-      for the C(n,2) combinations.  The banded lineage — signatures,
-      banding explode — is computed EXACTLY ONCE; a self-join on the
-      capped table would compute window + lineage once per join side
-      (measured +38-46% end-to-end on the sf0.1 minhash path).
-    - ``cap=None``: per-bucket membership is unbounded, so
-      ``collect_list`` would be an OOM hazard on a degenerate bucket —
-      pairs come from the classic banded self-join on the bucket key,
-      quadratic in the largest bucket.
-
-    Both strategies emit the identical pair set (combinations of the same
-    deterministic survivor membership; parity pinned by test).
-
-    The cap is the occupancy guard: a bucket of k rows emits O(k²) pairs,
-    so one degenerate bucket would make the sub-quadratic plan quadratic.
-    Survivors are the first ``cap`` rows by xxhash64(bucket key, id), so a
-    duplicate group capped in several bands keeps a different member
-    subset per band, which maximizes cross-band linkage.  Truncation
-    trades recall for a hard runtime bound; ``log_drops=True`` runs one
-    extra aggregate pass and WARNs with the drop counts."""
-    if cap is None:
-        x, y = banded.alias("x"), banded.alias("y")
-        cond = F.col(f"x.{id_col}") < F.col(f"y.{id_col}")
-        for k in key_cols:
-            cond = (F.col(f"x.{k}") == F.col(f"y.{k}")) & cond
-        return (
-            x.join(y, cond)
-            .select(
-                F.col(f"x.{id_col}").alias("a"),
-                F.col(f"y.{id_col}").alias("b"),
-                *[F.col(f"x.{p}").alias(f"a_{p}") for p in payload],
-                *[F.col(f"y.{p}").alias(f"b_{p}") for p in payload],
-            )
-            .distinct()
-        )
-    if log_drops:
-        _log_bucket_drops(banded, key_cols, cap, what)
-    order = F.xxhash64(*[F.col(c) for c in key_cols], F.col(id_col))
-    w = Window.partitionBy(*key_cols).orderBy(order, F.col(id_col))
-    capped = banded.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= cap
-    )
-    member = F.struct(
-        F.col(id_col).alias("_i"), *[F.col(p).alias(p) for p in payload]
-    )
-    # id is the struct's first field, so sort_array orders members by id
-    # and positional combinations below are automatically a < b
-    members = capped.groupBy(*key_cols).agg(
-        F.sort_array(F.collect_list(member)).alias("_ms")
-    )
-    e = members.select(
-        F.posexplode("_ms").alias("_p", "_a"), F.col("_ms")
-    )
-    pairs = e.select(
-        "_a",
-        F.explode(
-            F.slice(F.col("_ms"), F.col("_p") + F.lit(2), F.size("_ms"))
-        ).alias("_b"),
-    )
-    return pairs.select(
-        F.col("_a._i").alias("a"),
-        F.col("_b._i").alias("b"),
-        *[F.col(f"_a.{p}").alias(f"a_{p}") for p in payload],
-        *[F.col(f"_b.{p}").alias(f"b_{p}") for p in payload],
-    ).distinct()
 
 
 def normalized_text(col):
@@ -210,6 +93,30 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*aggs)
 
 
+def _log_bucket_drops(banded: DataFrame, cap: int) -> None:
+    """Diagnostic drop accounting for the occupancy cap: one extra
+    aggregate pass over the banded lineage, WARNs when buckets overflow."""
+    sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("_bn"))
+    st = (
+        sizes.filter(F.col("_bn") > cap)
+        .agg(
+            F.count(F.lit(1)).alias("nb"),
+            F.sum(F.col("_bn") - F.lit(cap)).alias("nd"),
+            F.max("_bn").alias("mx"),
+        )
+        .collect()[0]
+    )
+    if st["nb"]:
+        _LOG.warning(
+            "lsh_candidates: %d bucket(s) exceed the occupancy cap %d "
+            "(largest: %d rows); dropping %d banded row(s) from candidate "
+            "generation (deterministic per-bucket, per-band top-%d by "
+            "hashed id). If these are genuine duplicates, stage exact "
+            "dedup first or raise max_bucket_size.",
+            st["nb"], cap, st["mx"], st["nd"], cap,
+        )
+
+
 def lsh_candidates(
     sig: DataFrame,
     id_col: str = "doc_id",
@@ -218,11 +125,38 @@ def lsh_candidates(
     max_bucket_size: int | None = 1000,
     log_bucket_drops: bool = False,
 ) -> DataFrame:
-    """LSH banding: docs sharing any band hash become candidate pairs
-    (a < b) via ``bucket_pairs`` — single-lineage grouped combinations
-    when ``max_bucket_size`` bounds the buckets, banded self-join when
-    uncapped; set ``log_bucket_drops`` for an audited extra pass that
-    WARNs with drop counts."""
+    """LSH banding: docs sharing any band hash become distinct candidate
+    pairs (``a`` < ``b``).
+
+    Physical strategy:
+
+    - ``max_bucket_size`` set (the scale path): the occupancy cap bounds
+      every (band, hash) bucket, so pairs are generated WITHOUT a
+      self-join — per-bucket ``row_number`` cap (map-side
+      ``WindowGroupLimit`` + one bucket shuffle), then ``collect_list``
+      of the ≤ cap members per bucket (bounded memory, reuses the
+      window's partitioning — no second shuffle) and a positional
+      double-explode of the sorted member array for the C(n,2)
+      combinations.  The banded lineage — signatures, banding explode —
+      is computed EXACTLY ONCE; a self-join on the capped table would
+      compute window + lineage once per join side (measured +38-46%
+      end-to-end on the sf0.1 minhash path).
+    - ``max_bucket_size=None``: per-bucket membership is unbounded, so
+      ``collect_list`` would be an OOM hazard on a degenerate bucket —
+      pairs come from the classic banded self-join on the bucket key,
+      quadratic in the largest bucket.
+
+    Both strategies emit the identical pair set (combinations of the same
+    deterministic survivor membership; parity pinned by test).
+
+    The cap is the occupancy guard: a bucket of k rows emits O(k²) pairs,
+    so one degenerate bucket would make the sub-quadratic plan quadratic.
+    Survivors are the first ``max_bucket_size`` rows by xxhash64(bucket,
+    id), so a duplicate group capped in several bands keeps a different
+    member subset per band, which maximizes cross-band linkage.
+    Truncation trades recall for a hard runtime bound;
+    ``log_bucket_drops=True`` runs one extra aggregate pass and WARNs
+    with the drop counts."""
     band_cols = []
     for b in range(bands):
         cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
@@ -230,10 +164,40 @@ def lsh_candidates(
     banded = sig.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("bd")
     ).select(id_col, F.col("bd.band").alias("band"), F.col("bd.bh").alias("bh"))
-    return bucket_pairs(
-        banded, ["band", "bh"], id_col, max_bucket_size, "lsh_candidates",
-        log_drops=log_bucket_drops,
+    if max_bucket_size is None:
+        x, y = banded.alias("x"), banded.alias("y")
+        cond = F.col(f"x.{id_col}") < F.col(f"y.{id_col}")
+        for k in ("band", "bh"):
+            cond = (F.col(f"x.{k}") == F.col(f"y.{k}")) & cond
+        return (
+            x.join(y, cond)
+            .select(F.col(f"x.{id_col}").alias("a"), F.col(f"y.{id_col}").alias("b"))
+            .distinct()
+        )
+    if log_bucket_drops:
+        _log_bucket_drops(banded, max_bucket_size)
+    order = F.xxhash64(F.col("band"), F.col("bh"), F.col(id_col))
+    w = Window.partitionBy("band", "bh").orderBy(order, F.col(id_col))
+    capped = banded.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= max_bucket_size
     )
+    # id is the struct's only field, so sort_array orders members by id
+    # and positional combinations below are automatically a < b
+    members = capped.groupBy("band", "bh").agg(
+        F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("_i")))).alias("_ms")
+    )
+    e = members.select(
+        F.posexplode("_ms").alias("_p", "_a"), F.col("_ms")
+    )
+    pairs = e.select(
+        "_a",
+        F.explode(
+            F.slice(F.col("_ms"), F.col("_p") + F.lit(2), F.size("_ms"))
+        ).alias("_b"),
+    )
+    return pairs.select(
+        F.col("_a._i").alias("a"), F.col("_b._i").alias("b")
+    ).distinct()
 
 
 def minhash_jaccard(sig: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
@@ -313,144 +277,6 @@ def exact_jaccard_for_pairs(
         .otherwise(F.lit(0.0))
         .alias("jaccard"),
     )
-
-
-def minhash_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    n_hashes: int = 16,
-    bands: int = 4,
-    max_bucket_size: int | None = 1000,
-    log_bucket_drops: bool = False,
-) -> DataFrame:
-    """Near-dup removal: LSH candidates → signature-Jaccard ≥ threshold →
-    drop the larger id of each duplicate pair (single-link, one hop —
-    transitive chains collapse over repeated application)."""
-    sig = minhash_signatures(df, id_col, text_col, n_hashes)
-    pairs = lsh_candidates(sig, id_col, bands, n_hashes // bands,
-                           max_bucket_size=max_bucket_size,
-                           log_bucket_drops=log_bucket_drops)
-    dups = minhash_jaccard(sig, pairs, id_col, n_hashes).filter(
-        F.col("est_jaccard") >= threshold
-    )
-    losers = dups.select(F.col("b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
-
-
-def _bit_vote(hashes, i: int):
-    """Sum over tokens of (bit_i set ? +1 : -1).  Closure over ``i`` — a
-    default-arg parameter would change the HOF lambda's arity."""
-    return F.aggregate(
-        hashes,
-        F.lit(0),
-        lambda acc, h: acc
-        + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-    )
-
-
-def simhash64(text_col):
-    """64-bit SimHash over whitespace tokens: per-bit majority vote of
-    token hashes, built from 64 bit-test aggregates on xxhash64 — pure
-    Catalyst (aggregate HOF over the token array)."""
-    tokens = F.split(normalized_text(text_col), " ")
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    bit_exprs = []
-    for i in range(64):
-        weight = 2**i if i < 63 else -(2**63)  # two's-complement sign bit
-        bit_exprs.append(
-            F.when(_bit_vote(hashes, i) > 0, F.lit(weight).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bit_exprs[0]
-    for e in bit_exprs[1:]:
-        out = out + e
-    return out
-
-
-def simhash_near_dups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    max_hamming: int = 3, max_bucket_size: int | None = 1000,
-    log_bucket_drops: bool = False,
-) -> DataFrame:
-    """SimHash near-dup pairs: band the 64-bit hash into 4×16-bit keys —
-    any pair within Hamming distance 3 shares at least one band
-    (pigeonhole); verify with bit_count(xor) ≤ max_hamming.
-
-    Hashes come from the grouped layout (measured 7.8× faster than the
-    per-row aggregate-HOF variant at sf0.1: 0.65 s vs 5.08 s for 5k docs —
-    64 codegen'd conditional sums beat 64 interpreted HOF passes).
-
-    NULL/empty-text docs are excluded up front: they carry no content
-    signal, and under the grouped layout they would otherwise all collapse
-    onto one hash and be reported as hamming-0 "near-dups" of each other.
-    Assumes ``id_col`` is unique per row (duplicate ids would be merged
-    into a single signature by the groupBy)."""
-    nonempty = df.filter(normalized_text(F.col(text_col)) != "")
-    h = simhash64_grouped(nonempty, id_col, text_col).select(
-        F.col(id_col), F.col("sh")
-    )
-    bands = h.select(
-        id_col,
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("sh", 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("bk"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bd"),
-    ).select(id_col, "sh", F.col("bd.band").alias("band"), F.col("bd.bk").alias("bk"))
-    cand = bucket_pairs(
-        bands, ["band", "bk"], id_col, max_bucket_size, "simhash_near_dups",
-        payload=("sh",), log_drops=log_bucket_drops,
-    ).select(
-        "a", "b", F.col("a_sh").alias("sha"), F.col("b_sh").alias("shb")
-    )
-    ham = F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
-    return cand.select("a", "b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-
-
-def simhash64_grouped(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Same 64-bit SimHash as ``simhash64`` in an explode+groupBy layout:
-    one row per token, 64 conditional-sum aggregates (map-side combinable,
-    whole-stage-codegen'd) instead of 64 interpreted aggregate-HOF passes
-    per row.  Costs one shuffle of (id, 64 ints); wins when documents are
-    long enough that the HOF interpretation dominates.  Docs with zero
-    tokens (empty text) get no row — left-join and fill 0 if needed."""
-    tokens = df.select(
-        F.col(id_col),
-        F.explode(
-            F.split(normalized_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
-        ).alias("_tok"),
-    ).withColumn("_h", F.xxhash64("_tok"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright("_h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"v{i}")
-        for i in range(64)
-    ]
-    per_doc = tokens.groupBy(id_col).agg(*votes)
-    sh = None
-    for i in range(64):
-        weight = 2**i if i < 63 else -(2**63)
-        term = F.when(F.col(f"v{i}") > 0, F.lit(weight).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sh = term if sh is None else sh + term
-    return per_doc.select(F.col(id_col), sh.alias("sh"))
 
 
 def duplicated_span_marks(
@@ -640,10 +466,7 @@ def substring_dedup(
 
 
 def paragraph_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    key: str = "text",
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Corpus-wide exact PARAGRAPH dedup (the Dolma-style pass between
     whole-document dedup and word-gram span dedup): every blank-line
@@ -659,32 +482,21 @@ def paragraph_dedup(
     ``row_number`` over the paragraph key), and an ordered group-concat
     per document.
 
-    ``key`` picks the shuffle/join key:
-
-    * ``"text"`` — the paragraph string itself: exact equality, the
-      default, checked by hand-computed fixtures.
-    * ``"hash"`` — ``struct(xxhash64(p), xxhash64(p, 1))``: a 128-bit
-      fingerprint, so the aggregate exchange carries 16 bytes per
-      distinct paragraph instead of the paragraph, and the join
-      hashes/compares two longs instead of arbitrarily long strings —
-      the 100-TB production key (collision odds across two independent
-      64-bit seeds are ~n²/2¹²⁹).  Output-identical to ``"text"``
-      absent a collision (pinned by test).
+    The shuffle/join key is ``struct(xxhash64(p), xxhash64(p, 1))``, a
+    128-bit fingerprint: the aggregate exchange carries 16 bytes per
+    distinct paragraph instead of the paragraph, and the join
+    hashes/compares two longs instead of arbitrarily long strings
+    (collision odds across two independent 64-bit seeds are ~n²/2¹²⁹;
+    the DuckDB parity case groups on the paragraph text itself).
 
     Returns (id, clean_text, n_paras_kept, n_paras_total)."""
-    if key not in ("text", "hash"):
-        raise ValueError(f"key must be 'text' or 'hash', got {key!r}")
     text = F.coalesce(F.col(text_col), F.lit(""))
     paras = F.filter(F.split(text, r"\n{2,}"), lambda p: p != F.lit(""))
     exploded = df.select(
         F.col(id_col), F.posexplode(paras).alias("para_idx", "para")
+    ).withColumn(
+        "pkey", F.struct(F.xxhash64("para"), F.xxhash64("para", F.lit(1)))
     )
-    if key == "hash":
-        exploded = exploded.withColumn(
-            "pkey", F.struct(F.xxhash64("para"), F.xxhash64("para", F.lit(1)))
-        )
-    else:
-        exploded = exploded.withColumn("pkey", F.col("para"))
     first = exploded.groupBy("pkey").agg(
         F.min(F.struct(F.col(id_col), F.col("para_idx"))).alias("first")
     )

@@ -102,24 +102,3 @@ def write_tsv_freq(df: DataFrame, path: str, label_col: str = "label") -> None:
     """S9: (label \\t count) sorted by count desc."""
     freq = df.groupBy(label_col).count().orderBy(F.desc("count"), label_col)
     freq.coalesce(1).write.mode("overwrite").option("sep", "\t").csv(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    n_buckets: int = 16,
-    bucket_col: str = "conv_id",
-    sort_col: str = "turn_idx",
-) -> None:
-    """Persist as a bucketed+sorted managed table: subsequent joins and
-    aggregations on ``bucket_col`` read co-located, pre-sorted buckets —
-    no Exchange in the plan (verified in tests).  The parquet stand-in for
-    an Iceberg table with a bucket partition spec."""
-    sort_cols = [bucket_col] + ([sort_col] if sort_col != bucket_col else [])
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(*sort_cols)
-        .format("parquet")
-        .saveAsTable(table)
-    )

@@ -490,7 +490,7 @@ def q_full_clean_reassemble(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# dedup / simhash / text analysis
+# dedup / text analysis
 # ---------------------------------------------------------------------------
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '[ \\t\\r\\n]+', ' ', 'g'))"
@@ -507,63 +507,6 @@ def q_exact_dedup_docs(spark, sf_dir):
     from quality_filter.dedup import exact_dedup
 
     return exact_dedup(_docs(spark, sf_dir)).select("doc_id")
-
-
-def _simhash16_sql() -> str:
-    # md5 computed once per word (CTE), then 16 bit-votes over the digest
-    # list: bit i lives in hex char i//4 (1-based substr), sub-bit i%4
-    bits = []
-    for i in range(16):
-        ch, bit = i // 4 + 1, i % 4
-        val = f"(strpos('0123456789abcdef', substr(m, {ch}, 1)) - 1)"
-        vote = (
-            f"list_sum(list_transform(hs, "
-            f"m -> CASE WHEN ({val} // {2 ** bit}) % 2 = 1 THEN 1 ELSE -1 END))"
-        )
-        bits.append(f"(CASE WHEN {vote} > 0 THEN {2 ** i} ELSE 0 END)")
-    return "(" + " + ".join(bits) + ")"
-
-
-@_register(
-    "simhash16_docs",
-    f"WITH h AS (SELECT doc_id, list_transform(string_split({_NORM_SQL}, ' '), "
-    f"w -> md5(w)) AS hs FROM documents) "
-    f"SELECT doc_id, {_simhash16_sql()} AS simhash FROM h",
-)
-def q_simhash16_docs(spark, sf_dir):
-    """16-bit SimHash fingerprint (portable md5-bit variant of the
-    64-bit xxhash64 SimHash in quality_filter.dedup).
-
-    Grouped layout (see dedup.simhash64_grouped): explode words, md5 once
-    per token, extract the 4 leading hex nibbles once, 16 codegen'd
-    conditional-sum aggregates — replaces 16 interpreted aggregate-HOF
-    passes that re-parsed the digest per bit.  Values identical."""
-    from quality_filter.dedup import normalized_text
-
-    docs = _docs(spark, sf_dir)
-    words = F.split(normalized_text(F.col("text")), " ")
-    tok = docs.select("doc_id", F.explode(words).alias("w")).withColumn(
-        "m", F.md5(F.encode("w", "UTF-8"))
-    )
-    for ch in range(1, 5):
-        tok = tok.withColumn(
-            f"n{ch}", F.conv(F.substring("m", ch, 1), 16, 10).cast("int")
-        )
-    votes = [
-        F.sum(
-            F.when(
-                ((F.col(f"n{i // 4 + 1}") / F.lit(2 ** (i % 4))).cast("int") % 2) == 1,
-                1,
-            ).otherwise(-1)
-        ).alias(f"v{i}")
-        for i in range(16)
-    ]
-    per_doc = tok.groupBy("doc_id").agg(*votes)
-    sim = None
-    for i in range(16):
-        term = F.when(F.col(f"v{i}") > 0, F.lit(2 ** i)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return per_doc.select("doc_id", sim.alias("simhash"))
 
 
 @_register(
@@ -1033,9 +976,6 @@ _NGRAM8 = (
 )
 
 
-# Shared by decontaminate_docs (exact path) and decontaminate_bloom_docs:
-# the Bloom variant is checked against the SAME exact-gram oracle (see its
-# docstring for why equality — not just superset — holds at this sizing).
 _DECONTAM_SQL = (
     "WITH benchdocs AS ("
     " SELECT text FROM documents WHERE doc_id % 97 = 0"
@@ -1588,8 +1528,10 @@ def q_paragraph_dedup_docs(spark, sf_dir):
     over the duplicate-planted structured world: all-filler docs share
     identical 6-line filler paragraphs across the corpus, so only the
     lowest (doc_id, para_idx) occurrence survives.  The oracle uses a
-    row_number window (exactness only); the Spark side is the skew-safe
-    min(struct) aggregate + equi-join."""
+    row_number window keyed on the paragraph text (exactness only); the
+    Spark side is the skew-safe min(struct) aggregate + equi-join keyed
+    on a 128-bit paragraph fingerprint, so equal outputs also show the
+    fingerprint separates every distinct paragraph of this world."""
     from quality_filter.dedup import paragraph_dedup
 
     return paragraph_dedup(_rep_world_spark(spark, sf_dir)).select(
@@ -1752,23 +1694,9 @@ def q_perplexity_lm_roundtrip(spark, sf_dir):
     return with_perplexity(docs, artifact=artifact).select("doc_id", "logppl")
 
 
-@_register("paragraph_dedup_hashed", _para_dedup_sql())
-def q_paragraph_dedup_hashed(spark, sf_dir):
-    """The 100-TB variant of paragraph_dedup: the shuffle/join key is a
-    128-bit xxhash64 fingerprint (16 bytes per distinct paragraph on the
-    exchange) instead of the paragraph text.  Same oracle as
-    paragraph_dedup_docs — the outputs are identical absent a 2^-129
-    collision, which is exactly the claim this case checks."""
-    from quality_filter.dedup import paragraph_dedup
-
-    return paragraph_dedup(_rep_world_spark(spark, sf_dir), key="hash").select(
-        "doc_id", "clean_text", "n_paras_kept", "n_paras_total"
-    )
-
-
 # ---------------------------------------------------------------------------
-# the fused Arrow gate, the composed corpus build, the trainable quality
-# classifier, Bloom decontamination, and the per-domain contribution cap
+# the fused Arrow gate, the composed corpus build and the trainable
+# quality classifier
 # ---------------------------------------------------------------------------
 
 
@@ -1932,36 +1860,7 @@ def q_corpus_build_docs(spark, sf_dir):
         jaccard_threshold=0.9,
         verify_exact=True,
         max_bucket_size=None,
-        decontaminate_impl="exact",
     ).select("doc_id", "text")
-
-
-@_register("decontaminate_bloom_docs", _DECONTAM_SQL)
-def q_decontaminate_bloom_docs(spark, sf_dir):
-    """Bloom-filter decontamination (curation.decontaminate_bloom) on the
-    same planted-leak world as decontaminate_docs, checked against the
-    SAME exact-gram oracle: at bits_per_gram=48 (k=33, gram fpp ≈ 1e-10)
-    the deterministic seeded-xxhash64 bitset has zero false positives at
-    this scale — a stable property, not a lucky draw — while the
-    no-false-negative direction (every truly contaminated doc flagged)
-    holds for ANY sizing.  Build is a map-side-combinable bit_or over
-    Kirsch-Mitzenmacher bit positions; probe is a broadcast hash join;
-    zero Python workers."""
-    from quality_filter.curation import (
-        build_decontamination_filter,
-        decontaminate_bloom,
-    )
-
-    docs = _docs(spark, sf_dir)
-    train = docs.filter(F.col("doc_id") % 97 != 0)
-    snippets = train.filter(F.col("doc_id") % 89 == 1).select(
-        F.array_join(F.slice(F.split(F.col("text"), " "), 1, 12), " ").alias("text")
-    )
-    bench = docs.filter(F.col("doc_id") % 97 == 0).select("text").unionByName(
-        snippets
-    )
-    bits, meta = build_decontamination_filter(bench, n=8, bits_per_gram=48)
-    return decontaminate_bloom(train, bits, meta)
 
 
 # Planted MARGIN-separated linear rule over the deterministic Gopher
@@ -2033,26 +1932,6 @@ def q_qmodel_train_score(spark, sf_dir):
     return score_quality(model, labeled).select(
         "doc_id", (F.col("quality_prob") >= 0.5).cast("int").alias("pred")
     )
-
-
-@_register(
-    "cap_per_source_docs",
-    "SELECT doc_id, source, n_chars FROM ("
-    " SELECT doc_id, source, n_chars, row_number() OVER ("
-    "  PARTITION BY source ORDER BY n_chars DESC, doc_id ASC) AS rn"
-    " FROM documents) WHERE rn <= 5",
-)
-def q_cap_per_source_docs(spark, sf_dir):
-    """Per-domain contribution cap (curation.cap_per_key — RefinedWeb/
-    Dolma-style): keep the 5 longest documents per source, doc_id as the
-    deterministic tiebreaker.  Planned as a rank-limit window
-    (row_number <= k) → WindowGroupLimit with a map-side PARTIAL pass, so
-    a 10^9-row domain ships tasks×k rows through the exchange, not 10^9
-    into one sort task (plan-asserted in tests/test_round7.py)."""
-    from quality_filter.curation import cap_per_key
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
-    return cap_per_key(docs, key_col="source", k=5, order_col="n_chars")
 
 
 def _teacher_sql() -> str:

@@ -87,6 +87,27 @@ def test_stages_are_optional(spark):
     assert ids == [1, 4, 5, 6]
 
 
+def test_gopher_only_lane_matches_gopher_filter(spark):
+    """With the C4 gate off, the Gopher gate runs alone on the raw text:
+    the build's ``after_gopher`` count and survivors are those of
+    ``gopher_filter`` on the raw text, deduplicated."""
+    from quality_filter.cluster import dedup_pipeline
+    from quality_filter.corpus import build_pretrain_corpus
+    from quality_filter.textstats import gopher_filter
+
+    docs = _corpus(spark)
+    kept, resolve_counts = build_pretrain_corpus(
+        docs, c4=False, gopher=True, jaccard_threshold=0.5, with_counts=True
+    )
+    rows = {(r["doc_id"], r["text"]) for r in kept.collect()}
+    c = {r["stage"]: r["n_docs"] for r in resolve_counts().collect()}
+    gated = gopher_filter(docs)
+    assert c["after_gopher"] == gated.count() < c["input"]
+    assert "after_c4" not in c
+    hand = dedup_pipeline(gated, jaccard_threshold=0.5)
+    assert rows == {(r["doc_id"], r["text"]) for r in hand.collect()}
+
+
 def test_substring_passage_dedup_stage(spark):
     """substring_k folds exact-substring passage dedup into the dedup
     stage: a boilerplate passage repeated across two otherwise-unique

@@ -1,18 +1,17 @@
-"""Dedup (exact / MinHash-LSH / SimHash) tests with planted duplicates."""
+"""Dedup (exact / MinHash-LSH) tests with planted duplicates."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from quality_filter.cluster import dedup_pipeline
 from quality_filter.dedup import (
     exact_dedup,
     lsh_candidates,
-    minhash_dedup,
     minhash_jaccard,
     minhash_signatures,
     normalized_text,
-    simhash_near_dups,
 )
 
 BASE = ("the quick brown fox jumps over the lazy dog while the committee "
@@ -61,16 +60,18 @@ def test_minhash_survives_short_docs(spark):
     shingle arrays, not crash: sequence(1, 0) is descending in Spark and
     slice(words, 0, k) throws INVALID_PARAMETER_VALUE.START."""
     rows = [(0, ""), (1, "   "), (2, "one"), (3, "two words"),
-            (4, "exactly three words"), (5, BASE), (6, BASE)]
+            (4, "exactly three words"), (5, BASE),
+            (6, BASE.replace("lazy", "sleepy"))]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sig = minhash_signatures(df)
     # docs with < k words produce zero shingles → no signature row at all
     # (doc 1, "   ", splits into 4 empty-string words → degenerate shingles)
     assert sorted(r["doc_id"] for r in sig.select("doc_id").collect()) == [1, 4, 5, 6]
-    out = minhash_dedup(df, threshold=0.5)
+    out = dedup_pipeline(df, jaccard_threshold=0.5)
     ids = sorted(r["doc_id"] for r in out.select("doc_id").collect())
-    assert 5 in ids and 6 not in ids          # the dup pair still collapses
-    assert {0, 1, 2, 3, 4} <= set(ids)        # short docs pass through
+    # the near-dup pair still collapses and the short docs pass through
+    # (doc 1 normalizes to doc 0's empty text, so the exact stage keeps 0)
+    assert ids == [0, 2, 3, 4, 5]
 
 
 def test_minhash_lsh_finds_near_dups(spark, dup_docs):
@@ -81,35 +82,3 @@ def test_minhash_lsh_finds_near_dups(spark, dup_docs):
     assert (100, 102) in got or (101, 102) in got
     jac = {(r["a"], r["b"]): r["est_jaccard"] for r in minhash_jaccard(sig, pairs).collect()}
     assert jac[(100, 101)] == 1.0
-
-
-def test_minhash_dedup_removes_near_dups(spark, dup_docs):
-    out = minhash_dedup(dup_docs, threshold=0.5)
-    ids = sorted(r["doc_id"] for r in out.select("doc_id").collect())
-    assert 100 in ids and 101 not in ids and 102 not in ids
-    assert all(i in ids for i in range(30))
-
-
-def test_simhash_near_dups(spark, dup_docs):
-    pairs = {(r["a"], r["b"]): r["hamming"] for r in simhash_near_dups(dup_docs, max_hamming=6).collect()}
-    assert (100, 101) in pairs and pairs[(100, 101)] == 0
-    assert (100, 103) in pairs and pairs[(100, 103)] == 0  # normalization
-    assert all(a >= 100 for a, b in pairs)  # no false positives among uniques
-
-
-def test_simhash_grouped_equals_hof(spark, dup_docs):
-    """The explode+groupBy SimHash layout must produce bit-identical
-    hashes to the aggregate-HOF layout (incl. empty and NULL text)."""
-    from quality_filter.dedup import simhash64, simhash64_grouped
-
-    extra = spark.createDataFrame(
-        [(200, ""), (201, None), (202, "one")], "doc_id long, text string"
-    )
-    df = dup_docs.unionByName(extra)
-    hof = df.select("doc_id", simhash64(F.coalesce(F.col("text"), F.lit(""))).alias("sh"))
-    grp = simhash64_grouped(df)
-    joined = hof.alias("a").join(grp.alias("b"), "doc_id", "full")
-    assert joined.filter("a.sh IS DISTINCT FROM b.sh").count() == 0
-    assert grp.count() == df.count()
-
-

@@ -334,7 +334,8 @@ def test_gates_linear_on_giant_document(spark):
 
 
 # ---------------------------------------------------------------------------
-# Corpus-wide paragraph dedup (dedup.paragraph_dedup)
+# Corpus-wide paragraph dedup (dedup.paragraph_dedup): hand-computed
+# outputs of the operator, which groups paragraphs by a 128-bit hash key
 # ---------------------------------------------------------------------------
 
 def test_paragraph_dedup_first_occurrence_wins(spark):

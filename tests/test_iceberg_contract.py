@@ -3,9 +3,9 @@
 This sandbox has no Iceberg runtime (no jars, no network), so the
 catalog-table surface is a parquet stand-in: partitioned writes with
 ``partitionOverwriteMode=dynamic`` + per-bucket marker files
-(quality_filter/checkpoint.py, io.write_bucketed_table).  These tests pin
-the stand-in to the DOCUMENTED semantics of the Iceberg operations it
-maps to, clause by clause, so swapping the writer for
+(quality_filter/checkpoint.py).  These tests pin the stand-in to the
+DOCUMENTED semantics of the Iceberg operations it maps to, clause by
+clause, so swapping the writer for
 ``df.writeTo(tbl).overwritePartitions()`` on a real catalog preserves
 behavior (each clause below cites the public Iceberg spec/API contract
 it mirrors):

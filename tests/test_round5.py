@@ -145,25 +145,6 @@ def test_bucket_cap_kept_subset_is_linkable_and_deterministic(spark):
     assert p1 == p2 and len(p1) > 0
 
 
-def test_simhash_near_dups_bucket_cap(spark, caplog):
-    import logging
-
-    from quality_filter.dedup import simhash_near_dups
-
-    docs = _degenerate_docs(spark, n=100)
-    n_uncapped = simhash_near_dups(docs, max_hamming=8,
-                                   max_bucket_size=None).count()
-    with caplog.at_level(logging.WARNING, logger="quality_filter.dedup"):
-        out = simhash_near_dups(docs, max_hamming=8, max_bucket_size=20,
-                                log_bucket_drops=True)
-        n = out.count()
-    # near-identical simhashes spread over a handful of band keys, each
-    # capped to 20 rows — pair volume must drop well below the uncapped
-    # blowup (and every bucket contributes at most C(20,2) per band key)
-    assert 0 < n < n_uncapped
-    assert any("simhash_near_dups" in r.message for r in caplog.records)
-
-
 # -- class_weights goes through the shared cardinality guard -----------------
 
 def test_class_weights_bounded_guard(spark, monkeypatch):

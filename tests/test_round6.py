@@ -18,7 +18,7 @@ def _boom_docs(spark):
 
 
 def test_occupancy_guard_is_lazy(spark):
-    """The occupancy cap of ``lsh_candidates`` (``dedup.bucket_pairs``)
+    """The occupancy cap of ``dedup.lsh_candidates``
     must not run ANY Spark job at plan-construction time (the r5 design
     eagerly localCheckpointed + collected stats; ADVICE flagged the
     executor-loss and eager-execution hazards).  Built over an input that

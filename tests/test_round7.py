@@ -1,5 +1,5 @@
 """Round-7 pins: trainer label-column handling, cardinality guard,
-hash-keyed paragraph dedup parity, single-pass corpus accounting."""
+single-pass corpus accounting."""
 
 import numpy as np
 import pytest
@@ -33,26 +33,6 @@ def test_train_profiles_label_cardinality_guard(spark):
     )
     with pytest.raises(ValueError, match="label vocabulary"):
         train_profiles(junk)
-
-
-def test_paragraph_dedup_hash_key_parity(spark):
-    """The hash-keyed (production) paragraph dedup removes EXACTLY the
-    same paragraph occurrences as the text-keyed (oracle) variant on a
-    planted corpus with heavy cross-doc boilerplate."""
-    from quality_filter.dedup import paragraph_dedup
-
-    boiler = "subscribe to our newsletter\nfollow us on social media"
-    docs = []
-    for i in range(40):
-        uniq = f"unique paragraph {i} body text with id {i * 7919}"
-        second = boiler if i % 3 else f"another unique {i}"
-        docs.append((i, f"{uniq}\n\n{second}\n\n{boiler}"))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = {tuple(r) for r in paragraph_dedup(df, key="text").collect()}
-    b = {tuple(r) for r in paragraph_dedup(df, key="hash").collect()}
-    assert a == b
-    with pytest.raises(ValueError, match="key must be"):
-        paragraph_dedup(df, key="bogus")
 
 
 def _acc_instrumented_corpus(spark, acc):
@@ -187,66 +167,36 @@ def test_fused_gate_parity_synth_corpus(spark):
     assert a == b and len(a) > 1000
 
 
-def test_corpus_build_gate_impls_agree(spark):
-    """build_pretrain_corpus produces identical survivors AND identical
-    per-stage accounting under gate_impl='arrow' (fused, production) and
-    gate_impl='hof' (oracle-shaped reference)."""
+def test_corpus_build_fused_gate_matches_hof_composition(spark):
+    """The fused gate pass build_pretrain_corpus runs with both gates on
+    gives the same survivors AND the same per-stage counts as the hand
+    composition of its oracle operators: c4_line_filter → gopher_filter
+    → dedup_pipeline."""
     import sys
     sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent))
-    from test_corpus import _benchmark, _corpus
+    from test_corpus import _corpus
 
+    from quality_filter.cluster import dedup_pipeline
     from quality_filter.corpus import build_pretrain_corpus
+    from quality_filter.textstats import c4_line_filter, gopher_filter
 
-    outs = {}
-    for impl in ("arrow", "hof"):
-        kept, resolve = build_pretrain_corpus(
-            _corpus(spark), benchmark=_benchmark(spark),
-            jaccard_threshold=0.5, gate_impl=impl, with_counts=True,
-        )
-        rows = {(r["doc_id"], r["text"]) for r in kept.collect()}
-        counts = {r["stage"]: r["n_docs"] for r in resolve().collect()}
-        outs[impl] = (rows, counts)
-    assert outs["arrow"] == outs["hof"]
-    with pytest.raises(ValueError, match="gate_impl"):
-        build_pretrain_corpus(_corpus(spark), gate_impl="bogus")
-
-
-def test_cap_per_key_semantics(spark):
-    """Per-domain cap keeps exactly the k best (by score desc, id asc
-    tiebreak) per key, including on a planted giant domain."""
-    from quality_filter.curation import cap_per_key
-
-    rows = [(i, "big", float(i % 7)) for i in range(500)]
-    rows += [(1000 + i, "small", float(i)) for i in range(3)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, score double")
-    out = cap_per_key(df, "source", 5, order_col="score").collect()
-    by_key = {}
-    for r in out:
-        by_key.setdefault(r["source"], []).append((r["score"], r["doc_id"]))
-    assert len(by_key["big"]) == 5 and len(by_key["small"]) == 3
-    # the k best by (score desc, id asc): scores 6.0 with the 5 smallest ids
-    assert sorted(by_key["big"]) == [(6.0, 6), (6.0, 13), (6.0, 20), (6.0, 27), (6.0, 34)]
-    # keep-first mode: no order_col -> k smallest ids per key
-    first = cap_per_key(df, "source", 2).collect()
-    assert sorted(r["doc_id"] for r in first if r["source"] == "big") == [0, 1]
-    with pytest.raises(ValueError, match="k must be"):
-        cap_per_key(df, "source", 0)
-
-
-def test_cap_per_key_plan_has_partial_group_limit(spark):
-    """The rank-limit must plan as a map-side PARTIAL WindowGroupLimit
-    before the exchange — the property that makes a 10^9-row domain
-    ship tasks*k rows instead of landing in one sort task."""
-    from quality_filter.curation import cap_per_key
-
-    df = spark.range(0, 10000, 1, 8).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 3).cast("string").alias("source"),
-        F.rand(7).alias("score"),
+    docs = _corpus(spark)
+    kept, resolve = build_pretrain_corpus(
+        docs, jaccard_threshold=0.5, with_counts=True
     )
-    plan = cap_per_key(df, "source", 10, order_col="score")._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan
-    assert "Partial" in plan, plan[:2000]
+    fused = {(r["doc_id"], r["text"]) for r in kept.collect()}
+    counts = {r["stage"]: r["n_docs"] for r in resolve().collect()}
+
+    c4 = c4_line_filter(docs).select("doc_id", F.col("clean_text").alias("text"))
+    gated = gopher_filter(c4).select("doc_id", "text")
+    hand = dedup_pipeline(gated, jaccard_threshold=0.5)
+    assert fused == {(r["doc_id"], r["text"]) for r in hand.collect()}
+    assert counts == {
+        "input": docs.count(),
+        "after_c4": c4.count(),
+        "after_gopher": gated.count(),
+        "after_dedup": len(fused),
+    }
 
 
 def test_fused_gate_composes_with_streaming(spark, tmp_path):

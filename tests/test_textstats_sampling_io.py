@@ -195,29 +195,3 @@ def test_tsv_freq_sink(spark, tmpdir):
     import glob
     lines = open(glob.glob(f"{tmpdir}/freq/part-*")[0]).read().strip().split("\n")
     assert lines == ["a\t3", "b\t2", "c\t1"]
-
-
-def test_bucketed_table_join_has_no_exchange(spark, tmpdir):
-    from quality_filter.io import write_bucketed_table
-    from quality_filter.synth import synth_transcripts
-
-    # (warehouse dir is a static conf — tables land in ./spark-warehouse
-    # and are dropped below)
-    df = synth_transcripts(spark, n_convs=50, seed=6)
-    write_bucketed_table(df, "qf_bucketed_a", n_buckets=4)
-    write_bucketed_table(df.selectExpr("conv_id", "count(1) over (partition by conv_id) n"), "qf_bucketed_b", n_buckets=4, sort_col="conv_id")
-    a = spark.table("qf_bucketed_a")
-    b = spark.table("qf_bucketed_b").dropDuplicates(["conv_id"])
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = a.join(b, "conv_id")._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    # bucketed-on-conv_id scan on the big side: no shuffle of table a
-    a_scan_side = plan.split("SortMergeJoin")[-1] if "SortMergeJoin" in plan else plan
-    assert "qf_bucketed_a" in plan
-    # count Exchanges: the pre-bucketed side must not reshuffle
-    n_exchange = plan.count("Exchange hashpartitioning")
-    assert n_exchange <= 1, plan[:2000]
-    spark.sql("DROP TABLE IF EXISTS qf_bucketed_a")
-    spark.sql("DROP TABLE IF EXISTS qf_bucketed_b")

@@ -10,6 +10,9 @@ Plain AST scans, so they need no linter package.
 - Every module is run by something: it is reachable through imports
   (function-local ones included) from the CLI or the benchmark, or
   ``UNREACHED_OWNERS`` names why it stays.
+- Every top-level def and class of the package is run by something too:
+  its name is used as code by something the CLI, the benchmark or an
+  owned module reaches, or ``UNREACHED_DEF_OWNERS`` names why it stays.
 """
 
 from __future__ import annotations
@@ -37,6 +40,31 @@ UNREACHED_OWNERS = {
     "reseg": "SURVEY A4",
     "sampling": "SURVEY R1-R5",
     "taxonomy": "SURVEY G5, M3",
+}
+
+# Top-level defs of the other modules that nothing reached from the CLI,
+# the benchmark or an owned module uses, and why each stays: the SURVEY.md
+# operator it implements, or the test it is the oracle of.
+UNREACHED_DEF_OWNERS = {
+    "io.merge_freq_tables": "SURVEY G1",
+    "io.read_jsonl_repair": "SURVEY S13",
+    "io.repair_stringified_array": "SURVEY S13",
+    "langid.score_batch": "oracle of scoring.with_scores (test_round9.py)",
+    "langid.train_profiles": "SURVEY M5",
+    "llmprep.generate_labels_prompt_verbatim_expr": "SURVEY M3",
+    "llmprep.synonyms_prompt_verbatim_expr": "SURVEY M3",
+    "perplexity.keep_by_perplexity": "SURVEY M6",
+    "perplexity.read_model": "SURVEY M6",
+    "perplexity.score_batch": "oracle of scoring.with_scores (test_round9.py)",
+    "perplexity.train_artifact": "SURVEY M6",
+    "perplexity.with_perplexity": "SURVEY M6",
+    "perplexity.write_model": "SURVEY M6",
+    "teacher.fake_structured_teacher": "SURVEY M2: the CLI names it in the "
+    "--teacher default string",
+    "teacher.fake_teacher_label_expr": "oracle of fake_structured_teacher "
+    "(test_teacher.py)",
+    "textstats.quality_score_expr": "SURVEY M4",
+    "textstats.with_quality_score": "SURVEY M4",
 }
 
 
@@ -86,6 +114,66 @@ def _reached_from_entry_points() -> set[str]:
             continue
         reached.add(name)
         todo |= imported_modules((PACKAGE / f"{name}.py").read_text())
+    return reached
+
+
+_DEFS = ast.FunctionDef | ast.AsyncFunctionDef | ast.ClassDef
+
+
+def _code_names(node: ast.AST) -> set[str]:
+    """Identifiers ``node`` uses as code (names and attribute names, not
+    strings or docstrings)."""
+    return {
+        n.id if isinstance(n, ast.Name) else n.attr
+        for n in ast.walk(node) if isinstance(n, ast.Name | ast.Attribute)
+    }
+
+
+def _top_level_defs(package: dict[str, str]):
+    """(``module.name``, node) of every top-level def and class."""
+    for module, source in package.items():
+        for node in ast.parse(source).body:
+            if isinstance(node, _DEFS):
+                yield f"{module}.{node.name}", node
+
+
+def entry_names(
+    package: dict[str, str], entry_sources: list[str], root_modules: set[str]
+) -> set[str]:
+    """Names used as code by ``entry_sources`` and by the module-level
+    statements of every module of ``package`` (module stem → source),
+    which run when it is imported, plus every name the ``root_modules``
+    define or use."""
+    names = set().union(*(_code_names(ast.parse(s)) for s in entry_sources))
+    for module, source in package.items():
+        tree = ast.parse(source)
+        if module in root_modules:
+            names |= _code_names(tree)
+            names |= {n.name for n in tree.body if isinstance(n, _DEFS)}
+        else:
+            for node in tree.body:
+                if not isinstance(node, _DEFS):
+                    names |= _code_names(node)
+    return names
+
+
+def reached_defs(package: dict[str, str], roots: set[str]) -> set[str]:
+    """``module.name`` of the top-level defs and classes of ``package``
+    that ``roots`` reach.  Over-approximate by name: a name reaches every
+    top-level def of that name in any module, and a reached def reaches
+    the names its own code uses."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    for key, node in _top_level_defs(package):
+        defs.setdefault(node.name, []).append((key, node))
+    reached, seen, todo = set(), set(), set(roots)
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for key, node in defs.get(name, ()):
+            reached.add(key)
+            todo |= _code_names(node)
     return reached
 
 
@@ -167,3 +255,42 @@ def test_every_module_is_reached_or_owned():
     )
     stale = sorted(UNREACHED_OWNERS.keys() - unreached)
     assert stale == [], f"UNREACHED_OWNERS lists reached or deleted {stale}"
+
+
+def test_def_reach_scan_flags_an_unreached_def():
+    package = {
+        "cli": "from quality_filter import a\ndef main():\n    a.run()\n",
+        "a": (
+            "TABLE = {'k': listed}\n"
+            "def run():\n    return helper()\n"
+            "def helper():\n    return 1\n"
+            "def listed():\n    pass\n"
+            "def dead():\n    'Calls run() and helper().'\n    return helper()\n"
+            "class Unused:\n    pass\n"
+        ),
+        "owned": "def tool():\n    return kept()\n",
+        "b": "def kept():\n    pass\ndef stray():\n    pass\n",
+    }
+    roots = entry_names(package, ["from quality_filter.b import x"], {"cli", "owned"})
+    reached = reached_defs(package, roots)
+    assert reached == {
+        "cli.main", "a.run", "a.helper", "a.listed", "owned.tool", "b.kept",
+    }
+    everything = {key for key, _ in _top_level_defs(package)}
+    assert everything - reached == {"a.dead", "a.Unused", "b.stray"}
+
+
+def test_every_def_is_reached_or_owned():
+    package = {p.stem: p.read_text() for p in PACKAGE.glob("*.py")}
+    roots = entry_names(
+        package, [p.read_text() for p in BENCHMARK], {"cli", *UNREACHED_OWNERS}
+    )
+    everything = {key for key, _ in _top_level_defs(package)}
+    owned = {key.split(".", 1)[1] for key in UNREACHED_DEF_OWNERS}
+    orphans = sorted(everything - reached_defs(package, roots | owned))
+    assert orphans == [], (
+        f"nothing the CLI, perfbench or an owned module reaches uses "
+        f"{orphans}: delete them, or name their owner in UNREACHED_DEF_OWNERS"
+    )
+    stale = sorted(UNREACHED_DEF_OWNERS.keys() - (everything - reached_defs(package, roots)))
+    assert stale == [], f"UNREACHED_DEF_OWNERS lists reached or deleted {stale}"
