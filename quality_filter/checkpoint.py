@@ -44,10 +44,10 @@ from pyspark.sql import functions as F
 BUCKET_COL = "bucket"
 
 
-def with_bucket(df: DataFrame, n_buckets: int, conv_col: str = "conv_id") -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     """Stable work-partitioning key: pmod(xxhash64(conv_id), B)."""
     return df.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(F.col(conv_col)), F.lit(n_buckets)).cast("int")
+        BUCKET_COL, F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
     )
 
 

@@ -20,12 +20,10 @@ combinable groupBy min.  It converges in <= graph-diameter iterations.
 For NEAR-DUP graphs this is the right algorithm: LSH banding links every
 pair of a duplicate cluster that shares a band, so components are dense
 (near-cliques) and their diameter is tiny (2-3 hops) regardless of
-corpus size — iteration count does not grow with data volume.  For
-general graphs with long chains, the alternating large-star/small-star
-algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14) converges in O(log^2 n) rounds; near-dup graphs never
-need it, so we keep the simpler propagation and bound it with
-``max_iter``.
+corpus size — iteration count does not grow with data volume.  A
+component settles in as many rounds as its farthest member is hops
+from its minimum; ``max_iter`` bounds those rounds, so a pathologically
+long chain raises instead of returning partial components.
 
 Lineage is cut every iteration with ``localCheckpoint`` — without it the
 plan doubles per round and the driver OOMs on plan strings long before
@@ -35,8 +33,7 @@ decimal(38,0))``.  Min-propagation is monotone (labels only move down
 the column's ordering), so the label assignment is a fixpoint iff no
 label changed, and an unchanged assignment keeps the signature equal; a
 changed assignment collides with the previous signature only if the
-xxhash64 sums coincide (~2^-64 per round — the same construction the
-star variant's edge fixpoint check uses).  This works for string ids
+xxhash64 sums coincide (~2^-64 per round).  This works for string ids
 too, where the previous decimal-cast-sum approach returned NULL and
 silently stopped after one round.
 """
@@ -50,36 +47,27 @@ from pyspark.sql import functions as F
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
-    id_col: str = "doc_id",
-    a_col: str = "a",
-    b_col: str = "b",
     max_iter: int = 50,
-    algorithm: str = "propagation",
     stats: dict | None = None,
 ) -> DataFrame:
-    """Connected components by min-label propagation (default) or the
-    alternating large-star/small-star algorithm (``algorithm='star'``,
-    Kiveris et al. SoCC'14 — O(log² n) rounds, for graphs with long
-    chains where propagation's diameter-bounded rounds would be slow).
+    """Connected components by min-label propagation.
 
-    ``nodes``: one row per vertex (``id_col``); vertices with no edge
+    ``nodes``: one row per vertex (``doc_id``); vertices with no edge
     become singleton clusters.  ``edges``: undirected edge list as
-    (``a_col``, ``b_col``) pairs (any orientation, duplicates fine).
+    (``a``, ``b``) pairs (any orientation, duplicates fine).
 
-    Pass a dict as ``stats`` to receive ``{"iterations": k}`` — the
-    bench harness uses it to evidence rounds-to-convergence vs input
-    scale.
+    ``max_iter`` bounds the propagation rounds that change a label (the
+    fused first round included); the round that confirms the fixpoint is
+    not counted, so a graph whose components settle in ``max_iter``
+    rounds returns, and one that needs more raises ``RuntimeError``.
+    Pass a dict as ``stats`` to receive ``{"iterations": k}``, the
+    number of rounds before the confirming one (1 for an empty or
+    single-edge graph, 3 for the path 0-1-2-3).
 
-    Returns (``id_col``, cluster_rep) where cluster_rep is the minimum
+    Returns (``doc_id``, cluster_rep) where cluster_rep is the minimum
     vertex id reachable from the vertex (the component's canonical
     representative).
     """
-    if algorithm == "star":
-        return _star_components(
-            nodes, edges, id_col, a_col, b_col, max_iter, stats
-        )
-    if algorithm != "propagation":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     from pyspark import StorageLevel
 
     # both directions via one explode, NOT union(edges, edges.swapped):
@@ -91,8 +79,8 @@ def connected_components(
         edges.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(a_col).alias("_s"), F.col(b_col).alias("_d")),
-                    F.struct(F.col(b_col).alias("_s"), F.col(a_col).alias("_d")),
+                    F.struct(F.col("a").alias("_s"), F.col("b").alias("_d")),
+                    F.struct(F.col("b").alias("_s"), F.col("a").alias("_d")),
                 )
             ).alias("_e")
         )
@@ -119,7 +107,9 @@ def connected_components(
             .groupBy("_v")
             .agg(F.min("_lbl").alias("_lbl"))
         )
-        for it in range(1, max_iter):
+        # ``rounds`` label-changing rounds have run; the next one either
+        # confirms the fixpoint or is round ``rounds + 1``
+        for rounds in range(1, max_iter + 1):
             msgs = und.join(labels, und["_s"] == labels["_v"]).select(
                 F.col("_d").alias("_v"), F.col("_lbl")
             )
@@ -128,23 +118,23 @@ def connected_components(
             )
             if new_sig == sig:
                 if stats is not None:
-                    stats["iterations"] = it + 1
+                    stats["iterations"] = rounds
                 break
             sig = new_sig
         else:
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} iterations "
-                "(pathologically long chain — rerun with algorithm='star')"
+                "(a chain longer than max_iter)"
             )
     finally:
         # unpersist on every exit path — a non-convergence RuntimeError (or
         # any mid-loop failure) must not leak the cached edge DataFrame for
         # the session's lifetime
         und.unpersist()
-    comp = labels.select(F.col("_v").alias(id_col), F.col("_lbl").alias("cluster_rep"))
-    return nodes.select(id_col).join(comp, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("cluster_rep"), F.col(id_col)).alias("cluster_rep"),
+    comp = labels.select(F.col("_v").alias("doc_id"), F.col("_lbl").alias("cluster_rep"))
+    return nodes.select("doc_id").join(comp, "doc_id", "left").select(
+        F.col("doc_id"),
+        F.coalesce(F.col("cluster_rep"), F.col("doc_id")).alias("cluster_rep"),
     )
 
 
@@ -187,164 +177,47 @@ def _checkpoint_with_sig(labels: DataFrame):
     return ck, _label_sig(ck)
 
 
-def _sym(e: DataFrame) -> DataFrame:
-    return e.union(e.select(F.col("_b").alias("_a"), F.col("_a").alias("_b")))
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor of u to min(Γ(u) ∪ {u})."""
-    nb = _sym(e)
-    mins = nb.groupBy("_a").agg(F.min("_b").alias("_mv"))
-    mins = mins.select("_a", F.least("_mv", F.col("_a")).alias("_m"))
-    j = nb.join(mins, "_a")
-    return (
-        j.filter(F.col("_b") > F.col("_a"))
-        .select(F.col("_b").alias("_a"), F.col("_m").alias("_b"))
-        .filter(F.col("_a") != F.col("_b"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Orient edges large→small; connect u and all its smaller neighbors
-    to their minimum."""
-    o = e.select(
-        F.greatest("_a", "_b").alias("_a"), F.least("_a", "_b").alias("_b")
-    ).filter(F.col("_a") != F.col("_b"))
-    mins = o.groupBy("_a").agg(F.min("_b").alias("_m"))
-    out_v = o.join(mins, "_a").select(
-        F.col("_b").alias("_x"), F.col("_m").alias("_y")
-    )
-    out_u = mins.select(F.col("_a").alias("_x"), F.col("_m").alias("_y"))
-    return (
-        out_v.union(out_u)
-        .filter(F.col("_x") != F.col("_y"))
-        .select(F.col("_x").alias("_a"), F.col("_y").alias("_b"))
-        .distinct()
-    )
-
-
-def _edge_sig(e: DataFrame):
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("_a", "_b").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
-
-
-def _star_components(
-    nodes: DataFrame, edges: DataFrame, id_col: str, a_col: str, b_col: str,
-    max_iter: int, stats: dict | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star rounds until the edge set is a
-    fixpoint (all edges then form stars rooted at component minima) —
-    O(log² n) rounds regardless of chain length; each round is two
-    join+groupBy shuffles.  Fixpoint detection compares (edge count,
-    exact decimal sum of edge hashes) between rounds."""
-    e = (
-        edges.select(
-            F.greatest(F.col(a_col), F.col(b_col)).alias("_a"),
-            F.least(F.col(a_col), F.col(b_col)).alias("_b"),
-        )
-        .filter(F.col("_a") != F.col("_b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    sig = _edge_sig(e)
-    for it in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
-        new_sig = _edge_sig(e)
-        if new_sig == sig:
-            if stats is not None:
-                stats["iterations"] = it + 1
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(f"star components did not converge in {max_iter} rounds")
-    reps = (
-        _sym(e)
-        .groupBy("_a")
-        .agg(F.min("_b").alias("_m"))
-        .select("_a", F.least("_m", F.col("_a")).alias("_m"))
-    )
-    return (
-        nodes.select(F.col(id_col))
-        .join(reps, nodes[id_col] == reps["_a"], "left")
-        .select(
-            F.col(id_col),
-            F.least(F.coalesce(F.col("_m"), F.col(id_col)), F.col(id_col)).alias(
-                "cluster_rep"
-            ),
-        )
-    )
-
-
-def cluster_dedup(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    a_col: str = "a",
-    b_col: str = "b",
-    algorithm: str = "propagation",
-) -> DataFrame:
+def cluster_dedup(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Keep one canonical row per near-dup cluster (the minimum id).
 
     ``pairs`` is any near-dup pair set — ``dedup.lsh_candidates`` output
     or verified-Jaccard pairs.  Transitive chains (A~B, B~C, A!~C)
     collapse in one pass, not over repeated pairwise sweeps."""
-    comp = connected_components(
-        df.select(id_col), pairs, id_col=id_col, a_col=a_col, b_col=b_col,
-        algorithm=algorithm,
-    )
-    keep = comp.filter(F.col(id_col) == F.col("cluster_rep")).select(id_col)
-    return df.join(keep, id_col, "left_semi")
+    comp = connected_components(df.select("doc_id"), pairs)
+    keep = comp.filter(F.col("doc_id") == F.col("cluster_rep")).select("doc_id")
+    return df.join(keep, "doc_id", "left_semi")
 
 
-def _word_ngrams_from_words(words_col, n: int):
-    """Array of n-word grams (space-joined) from an already-split word
-    array; empty for docs under n words.  Takes the ARRAY column so call
-    sites can hoist the split into its own projection — an inline
-    ``split`` captured by the lambda is re-evaluated per gram
-    (O(words²) per doc, see dedup.word_shingles_from_words)."""
-    cnt = F.size(words_col) - (n - 1)
-    return F.when(
-        cnt >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
-            lambda i: F.array_join(F.slice(words_col, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+# n-word gram length of the decontamination overlap rule
+DECONTAMINATION_N = 8
 
 
-def decontaminate(
-    df: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
+def decontaminate(df: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Test-set decontamination: flag training documents sharing any
-    n-word gram with a benchmark/eval set (the n-gram-overlap rule used
-    by GPT-3 appx. C / Gopher / The Pile to strip eval leakage from
-    training data).
+    ``DECONTAMINATION_N``-word gram with a benchmark/eval set (the
+    n-gram-overlap rule used by GPT-3 appx. C / Gopher / The Pile to strip
+    eval leakage from training data).
 
-    Returns (id, n_overlap, contaminated) for every training doc, where
-    n_overlap counts DISTINCT benchmark grams the doc contains.
+    Returns (doc_id, n_overlap, contaminated) for every training doc,
+    where n_overlap counts DISTINCT benchmark grams the doc contains.
 
     Scale: benchmark gram sets are eval-suite sized (millions of grams at
     most) — broadcast them; the join is then a map-side hash probe per
     training gram, no shuffle of the corpus.  ``F.broadcast`` is a hint:
     if a benchmark ever outgrows the broadcast ceiling Spark falls back
     to a shuffled hash join on the gram key, still sub-quadratic."""
+    from quality_filter.dedup import word_grams
+
     bench_grams = (
-        benchmark.select(F.split(F.col(text_col), " ").alias("_w"))
-        .select(F.explode(_word_ngrams_from_words(F.col("_w"), n)).alias("gram"))
+        benchmark.select(F.split(F.col("text"), " ").alias("_w"))
+        .select(F.explode(word_grams(F.col("_w"), DECONTAMINATION_N)).alias("gram"))
         .distinct()
     )
     doc_grams = df.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("_w")
+        F.col("doc_id"), F.split(F.col("text"), " ").alias("_w")
     ).select(
-        F.col(id_col), F.explode(_word_ngrams_from_words(F.col("_w"), n)).alias("gram")
+        F.col("doc_id"),
+        F.explode(word_grams(F.col("_w"), DECONTAMINATION_N)).alias("gram"),
     )
     # join FIRST, dedup after: the broadcast probe filters the corpus gram
     # stream map-side, so the (doc, gram) distinct shuffles only the hit
@@ -353,14 +226,14 @@ def decontaminate(
     hits = (
         doc_grams.join(F.broadcast(bench_grams), "gram")
         .distinct()
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
     return (
-        df.select(id_col)
-        .join(hits, id_col, "left")
+        df.select("doc_id")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_overlap"), F.lit(0)).alias("n_overlap"),
             (F.coalesce(F.col("n_overlap"), F.lit(0)) > 0).alias("contaminated"),
         )
@@ -369,13 +242,9 @@ def decontaminate(
 
 def dedup_pipeline(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     jaccard_threshold: float = 0.8,
     substring_k: int | None = None,
-    algorithm: str = "propagation",
     verify_exact: bool = False,
-    max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """The staged corpus-dedup composition a 100 TB run uses, in order:
 
@@ -385,9 +254,10 @@ def dedup_pipeline(
        candidate pairs per band bucket — exact-first collapses those k
        copies to one representative so near-dup candidate volume scales
        with band-bucket occupancy of DISTINCT texts.
-    2. MinHash+LSH near-dup pairs over the survivors → connected
-       components → one canonical doc per cluster (``cluster_dedup``;
-       ``algorithm='star'`` for pathological chain graphs).  With
+    2. MinHash+LSH near-dup pairs over the survivors (the signature shape
+       is ``dedup.BANDS`` × ``dedup.ROWS_PER_BAND``, LSH buckets capped
+       at ``lsh_candidates``' default occupancy) → connected components →
+       one canonical doc per cluster (``cluster_dedup``).  With
        ``verify_exact=True`` the estimated-Jaccard survivors are
        re-checked against the TRUE shingle-set Jaccard
        (``dedup.exact_jaccard_for_pairs``) before any edge links a
@@ -400,8 +270,9 @@ def dedup_pipeline(
        boilerplate PASSAGES inside otherwise-unique documents; returns
        column ``clean_text`` alongside the original.
 
-    Returns the surviving rows (with ``clean_text``/``n_removed`` when
-    stage 3 ran)."""
+    Takes and returns a documents table (``doc_id``, ``text``, …): the
+    surviving rows (with ``clean_text``/``n_removed`` when stage 3
+    ran)."""
     from quality_filter.dedup import (
         exact_dedup,
         exact_jaccard_for_pairs,
@@ -421,18 +292,17 @@ def dedup_pipeline(
     # when the DataFrame is GC'd, and truncate lineage — the documented CC
     # caveat applies (executor loss requires a job restart; acceptable
     # for batch dedup).
-    uniq = exact_dedup(df, id_col, text_col).localCheckpoint(eager=False)
-    sig = minhash_signatures(uniq, id_col, text_col).localCheckpoint(eager=False)
-    cand = lsh_candidates(sig, id_col, max_bucket_size=max_bucket_size)
-    pairs = minhash_jaccard(sig, cand, id_col).filter(
+    uniq = exact_dedup(df).localCheckpoint(eager=False)
+    sig = minhash_signatures(uniq).localCheckpoint(eager=False)
+    pairs = minhash_jaccard(sig, lsh_candidates(sig)).filter(
         F.col("est_jaccard") >= jaccard_threshold
     )
     if verify_exact:
-        pairs = exact_jaccard_for_pairs(
-            uniq, pairs.select("a", "b"), id_col, text_col
-        ).filter(F.col("jaccard") >= jaccard_threshold)
-    kept = cluster_dedup(uniq, pairs, id_col=id_col, algorithm=algorithm)
+        pairs = exact_jaccard_for_pairs(uniq, pairs.select("a", "b")).filter(
+            F.col("jaccard") >= jaccard_threshold
+        )
+    kept = cluster_dedup(uniq, pairs)
     if substring_k is None:
         return kept
-    spans = substring_dedup(kept, id_col, text_col, k=substring_k)
-    return kept.join(spans, id_col)
+    spans = substring_dedup(kept, k=substring_k)
+    return kept.join(spans, "doc_id")

@@ -28,6 +28,11 @@ Stage order and why it matters at scale:
    the benchmark set via a broadcast probe; runs after dedup so each
    surviving cluster representative is probed once, not once per copy.
 
+The documents table is (``doc_id``, ``text``, …), the shape every
+stage operator reads; the dedup stage caps LSH bucket occupancy at
+``dedup.lsh_candidates``' default and decontamination matches
+``cluster.DECONTAMINATION_N``-word grams.
+
 Returns the surviving rows plus a `resolve_counts` callable when
 ``with_counts=True``.  Stage accounting is SINGLE-PASS: each boundary
 carries a ``df.observe`` count that Spark collects as a side effect of
@@ -52,25 +57,20 @@ from pyspark.sql import functions as F
 def build_pretrain_corpus(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     c4: bool = True,
     gopher: bool = True,
-    gopher_repetition: bool = True,
     jaccard_threshold: float = 0.8,
     verify_exact: bool = False,
-    max_bucket_size: int | None = 1000,
     substring_k: int | None = None,
     paragraph_dedup: bool = False,
-    decontaminate_n: int = 8,
     with_counts: bool = False,
 ):
     """Compose C4 cleaning → Gopher gates → staged dedup →
     decontamination over a documents table.  The output carries the
-    input schema with ``text_col`` replaced by the cleaned text (when
+    input schema with ``text`` replaced by the cleaned text (when
     ``c4`` or ``substring_k`` is on — ``substring_k`` additionally runs
     exact-substring passage dedup inside the dedup stage and folds the
-    span-cleaned text back into ``text_col``).  See the module
+    span-cleaned text back into ``text``).  See the module
     docstring for the scale rationale of the stage order."""
     from quality_filter.cluster import decontaminate, dedup_pipeline
     from quality_filter.textstats import c4_line_filter, gopher_filter
@@ -95,10 +95,10 @@ def build_pretrain_corpus(
         # operators below run that gate alone.
         from quality_filter.textstats import fused_gate_arrow
 
-        g = fused_gate_arrow(cur, text_col, with_repetition=gopher_repetition)
+        g = fused_gate_arrow(cur)
         cur = (
             g.filter(F.col("c4_keep"))
-            .withColumn(text_col, F.col("clean_text"))
+            .withColumn("text", F.col("clean_text"))
             .select(*in_cols, "gopher_keep")
         )
         cur = _observed(cur, "after_c4")
@@ -106,42 +106,39 @@ def build_pretrain_corpus(
         cur = _observed(cur, "after_gopher")
     else:
         if c4:
-            cleaned = c4_line_filter(cur, text_col)
+            cleaned = c4_line_filter(cur)
             # downstream stages see the surviving lines only
-            cur = cleaned.withColumn(text_col, F.col("clean_text")).select(*in_cols)
+            cur = cleaned.withColumn("text", F.col("clean_text")).select(*in_cols)
             cur = _observed(cur, "after_c4")
         if gopher:
-            cur = gopher_filter(cur, text_col, with_repetition=gopher_repetition)
+            cur = gopher_filter(cur)
             cur = _observed(cur, "after_gopher")
     cur = dedup_pipeline(
         cur,
-        id_col=id_col,
-        text_col=text_col,
         jaccard_threshold=jaccard_threshold,
         verify_exact=verify_exact,
-        max_bucket_size=max_bucket_size,
         substring_k=substring_k,
     )
     if substring_k is not None:
-        cur = cur.withColumn(text_col, F.col("clean_text")).select(*in_cols)
+        cur = cur.withColumn("text", F.col("clean_text")).select(*in_cols)
     cur = _observed(cur, "after_dedup")
     if paragraph_dedup:
         # corpus-wide paragraph grain (Dolma-style), after doc dedup so a
         # paragraph's canonical occurrence is in a canonical document
         from quality_filter.dedup import paragraph_dedup as _para
 
-        spans = _para(cur, id_col, text_col)
+        spans = _para(cur)
         cur = (
-            cur.drop(text_col)
-            .join(spans.select(id_col, "clean_text"), id_col)
-            .withColumnRenamed("clean_text", text_col)
+            cur.drop("text")
+            .join(spans.select("doc_id", "clean_text"), "doc_id")
+            .withColumnRenamed("clean_text", "text")
             .select(*in_cols)
         )
         cur = _observed(cur, "after_paragraph_dedup")
     if benchmark is not None:
-        flags = decontaminate(cur, benchmark, id_col, text_col, n=decontaminate_n)
+        flags = decontaminate(cur, benchmark)
         cur = cur.join(
-            flags.filter(~F.col("contaminated")).select(id_col), id_col, "semi"
+            flags.filter(~F.col("contaminated")).select("doc_id"), "doc_id", "semi"
         )
         cur = _observed(cur, "after_decontaminate")
 

@@ -7,16 +7,27 @@ MinHash signatures are one groupBy over exploded shingles; LSH candidate
 generation groups on band keys (shuffle on band hash — the standard
 sub-quadratic near-dup layout); everything downstream of candidates is
 pair-local.
+
+Every operator takes a documents table (``doc_id``, ``text``, …); pair
+tables are (``a``, ``b``) doc-id pairs, as ``lsh_candidates`` emits them.
+
+The MinHash shape is written once, here: ``N_HASHES`` signature
+columns over ``SHINGLE_K``-word shingles, banded into ``BANDS`` bands of
+``ROWS_PER_BAND`` rows.  ``minhash_signatures``, ``lsh_candidates``,
+``minhash_jaccard`` and ``exact_jaccard_for_pairs`` all read these
+constants, so they cannot disagree; changing the shape is a code edit
+(``docs/minhash_tuning.md`` gives its S-curve).
 """
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_LOG = logging.getLogger(__name__)
+BANDS = 4
+ROWS_PER_BAND = 4
+N_HASHES = BANDS * ROWS_PER_BAND
+SHINGLE_K = 3
 
 
 def normalized_text(col):
@@ -25,9 +36,7 @@ def normalized_text(col):
     return F.trim(F.regexp_replace(F.lower(col), r"[ \t\r\n]+", " "))
 
 
-def exact_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup on normalized text: keep the row with the smallest id
     per fingerprint group (deterministic keeper).
 
@@ -38,18 +47,20 @@ def exact_dedup(
     map-side combinable, so k identical copies collapse to at most one
     surviving row per mapper before the exchange — the same skew defusal
     the join shape had."""
-    fp = F.md5(F.encode(normalized_text(F.col(text_col)), "UTF-8"))
+    fp = F.md5(F.encode(normalized_text(F.col("text")), "UTF-8"))
     row = F.struct(*[F.col(c) for c in df.columns])
     keeper = (
         df.groupBy(fp.alias("_fp"))
-        .agg(F.min_by(row, F.col(id_col)).alias("_row"))
+        .agg(F.min_by(row, F.col("doc_id")).alias("_row"))
     )
     return keeper.select(*[F.col(f"_row.{c}").alias(c) for c in df.columns])
 
 
-def word_shingles_from_words(words_col, k: int = 3):
-    """Array of k-word shingles from an already-split word-array column.
-    Empty for docs with fewer than ``k`` words: ``sequence(1, 0)`` is
+def word_grams(words_col, n: int):
+    """Array of n-word grams (space-joined) from an already-split
+    word-array column — the MinHash shingles (``SHINGLE_K``) and the
+    decontamination grams (``cluster.DECONTAMINATION_N``).
+    Empty for docs with fewer than ``n`` words: ``sequence(1, 0)`` is
     DESCENDING in Spark (yields [1, 0] and the 0 start then crashes
     ``slice``), so the short-doc case must be guarded explicitly.
 
@@ -59,72 +70,35 @@ def word_shingles_from_words(words_col, k: int = 3):
     every element, so an inline split rebuilds the whole word array once
     per shingle — O(words²) work per document (hoisting the split
     measured 3× on the corpus minhash stage at sf0.1)."""
-    n = F.size(words_col) - (k - 1)
-    return F.when(n >= 1, F.transform(
-        F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-        lambda i: F.array_join(F.slice(words_col, i, k), " "),
+    cnt = F.size(words_col) - (n - 1)
+    return F.when(cnt >= 1, F.transform(
+        F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
+        lambda i: F.array_join(F.slice(words_col, i, n), " "),
     )).otherwise(F.array().cast("array<string>"))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """MinHash signature per doc: min over shingles of xxhash64(seed,
-    shingle) for each of ``n_hashes`` seeded permutations.  Output:
-    (id, h0..h{n-1}).  One explode + one groupBy (map-side combine keeps
-    the shuffle at one row per doc)."""
+    shingle) for each of ``N_HASHES`` seeded permutations.  Output:
+    (doc_id, h0..h{N_HASHES-1}).  One explode + one groupBy (map-side
+    combine keeps the shuffle at one row per doc)."""
     # no .distinct() on the exploded shingles: min() is duplicate-
     # insensitive, and the distinct would be a second full shuffle of the
     # widest intermediate in the job.  The split is hoisted into its own
     # projection so the shingle lambda reads a bound attribute (see
-    # word_shingles_from_words).
-    warr = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
+    # word_grams).
+    warr = df.select(F.col("doc_id"), F.split(F.col("text"), " ").alias("_w"))
     sh = warr.select(
-        F.col(id_col),
-        F.explode(word_shingles_from_words(F.col("_w"), shingle_k)).alias("sh"),
+        F.col("doc_id"),
+        F.explode(word_grams(F.col("_w"), SHINGLE_K)).alias("sh"),
     )
     aggs = [
-        F.min(F.xxhash64(F.lit(s), F.col("sh"))).alias(f"h{s}") for s in range(n_hashes)
+        F.min(F.xxhash64(F.lit(s), F.col("sh"))).alias(f"h{s}") for s in range(N_HASHES)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _log_bucket_drops(banded: DataFrame, cap: int) -> None:
-    """Diagnostic drop accounting for the occupancy cap: one extra
-    aggregate pass over the banded lineage, WARNs when buckets overflow."""
-    sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("_bn"))
-    st = (
-        sizes.filter(F.col("_bn") > cap)
-        .agg(
-            F.count(F.lit(1)).alias("nb"),
-            F.sum(F.col("_bn") - F.lit(cap)).alias("nd"),
-            F.max("_bn").alias("mx"),
-        )
-        .collect()[0]
-    )
-    if st["nb"]:
-        _LOG.warning(
-            "lsh_candidates: %d bucket(s) exceed the occupancy cap %d "
-            "(largest: %d rows); dropping %d banded row(s) from candidate "
-            "generation (deterministic per-bucket, per-band top-%d by "
-            "hashed id). If these are genuine duplicates, stage exact "
-            "dedup first or raise max_bucket_size.",
-            st["nb"], cap, st["mx"], st["nd"], cap,
-        )
-
-
-def lsh_candidates(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
-    max_bucket_size: int | None = 1000,
-    log_bucket_drops: bool = False,
-) -> DataFrame:
+def lsh_candidates(sig: DataFrame, max_bucket_size: int | None = 1000) -> DataFrame:
     """LSH banding: docs sharing any band hash become distinct candidate
     pairs (``a`` < ``b``).
 
@@ -154,37 +128,33 @@ def lsh_candidates(
     Survivors are the first ``max_bucket_size`` rows by xxhash64(bucket,
     id), so a duplicate group capped in several bands keeps a different
     member subset per band, which maximizes cross-band linkage.
-    Truncation trades recall for a hard runtime bound;
-    ``log_bucket_drops=True`` runs one extra aggregate pass and WARNs
-    with the drop counts."""
+    Truncation trades recall for a hard runtime bound."""
     band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
+    for b in range(BANDS):
+        cols = [F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
         band_cols.append(F.struct(F.lit(b).alias("band"), F.xxhash64(*cols).alias("bh")))
     banded = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bd")
-    ).select(id_col, F.col("bd.band").alias("band"), F.col("bd.bh").alias("bh"))
+        F.col("doc_id"), F.explode(F.array(*band_cols)).alias("bd")
+    ).select("doc_id", F.col("bd.band").alias("band"), F.col("bd.bh").alias("bh"))
     if max_bucket_size is None:
         x, y = banded.alias("x"), banded.alias("y")
-        cond = F.col(f"x.{id_col}") < F.col(f"y.{id_col}")
+        cond = F.col("x.doc_id") < F.col("y.doc_id")
         for k in ("band", "bh"):
             cond = (F.col(f"x.{k}") == F.col(f"y.{k}")) & cond
         return (
             x.join(y, cond)
-            .select(F.col(f"x.{id_col}").alias("a"), F.col(f"y.{id_col}").alias("b"))
+            .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
             .distinct()
         )
-    if log_bucket_drops:
-        _log_bucket_drops(banded, max_bucket_size)
-    order = F.xxhash64(F.col("band"), F.col("bh"), F.col(id_col))
-    w = Window.partitionBy("band", "bh").orderBy(order, F.col(id_col))
+    order = F.xxhash64(F.col("band"), F.col("bh"), F.col("doc_id"))
+    w = Window.partitionBy("band", "bh").orderBy(order, F.col("doc_id"))
     capped = banded.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") <= max_bucket_size
     )
     # id is the struct's only field, so sort_array orders members by id
     # and positional combinations below are automatically a < b
     members = capped.groupBy("band", "bh").agg(
-        F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("_i")))).alias("_ms")
+        F.sort_array(F.collect_list(F.struct(F.col("doc_id").alias("_i")))).alias("_ms")
     )
     e = members.select(
         F.posexplode("_ms").alias("_p", "_a"), F.col("_ms")
@@ -200,26 +170,19 @@ def lsh_candidates(
     ).distinct()
 
 
-def minhash_jaccard(sig: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                    n_hashes: int = 16) -> DataFrame:
+def minhash_jaccard(sig: DataFrame, pairs: DataFrame) -> DataFrame:
     """Estimated Jaccard for candidate pairs = fraction of agreeing
     signature positions."""
-    sa = sig.select(F.col(id_col).alias("a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(n_hashes)])
-    sb = sig.select(F.col(id_col).alias("b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(n_hashes)])
+    sa = sig.select(F.col("doc_id").alias("a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)])
+    sb = sig.select(F.col("doc_id").alias("b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(N_HASHES)])
     j = pairs.join(sa, "a").join(sb, "b")
     agree = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(n_hashes)
+        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(N_HASHES)
     )
-    return j.select("a", "b", (agree / F.lit(float(n_hashes))).alias("est_jaccard"))
+    return j.select("a", "b", (agree / F.lit(float(N_HASHES))).alias("est_jaccard"))
 
 
-def exact_jaccard_for_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-) -> DataFrame:
+def exact_jaccard_for_pairs(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """TRUE shingle-set Jaccard for a given candidate pair list (a, b) —
     the verify layer between LSH candidates and clustering: 16-hash
     MinHash estimates have ±0.125 granularity, so precision-critical runs
@@ -233,34 +196,34 @@ def exact_jaccard_for_pairs(
 
     Returns (a, b, jaccard) for EVERY input pair: 0.0 when the shingle
     sets are disjoint, and also when either side has zero shingles (doc
-    shorter than ``shingle_k`` words, null/empty text, or an id absent
+    shorter than ``SHINGLE_K`` words, null/empty text, or an id absent
     from ``df`` entirely) — the size joins are left joins with a
     coalesce-to-0 so no pair silently vanishes."""
     ids = (
-        pairs.select(F.col("a").alias(id_col))
-        .union(pairs.select(F.col("b").alias(id_col)))
+        pairs.select(F.col("a").alias("doc_id"))
+        .union(pairs.select(F.col("b").alias("doc_id")))
         .distinct()
     )
     sh = (
-        df.join(ids, id_col, "left_semi")
-        .select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
+        df.join(ids, "doc_id", "left_semi")
+        .select(F.col("doc_id"), F.split(F.col("text"), " ").alias("_w"))
         .select(
-            F.col(id_col),
-            F.explode(word_shingles_from_words(F.col("_w"), shingle_k)).alias("sh"),
+            F.col("doc_id"),
+            F.explode(word_grams(F.col("_w"), SHINGLE_K)).alias("sh"),
         )
         .distinct()
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    sa = sh.select(F.col(id_col).alias("a"), "sh")
-    sb = sh.select(F.col(id_col).alias("b"), "sh")
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = sh.select(F.col("doc_id").alias("a"), "sh")
+    sb = sh.select(F.col("doc_id").alias("b"), "sh")
     common = (
         pairs.join(sa, "a")
         .join(sb, ["b", "sh"])
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    na = sizes.select(F.col(id_col).alias("a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("b"), F.col("n").alias("n_b"))
+    na = sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("n_a"))
+    nb = sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("n_b"))
     j = (
         pairs.join(common, ["a", "b"], "left")
         .join(na, "a", "left")
@@ -280,8 +243,7 @@ def exact_jaccard_for_pairs(
 
 
 def duplicated_span_marks(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5,
-    grams: str = "window", segment_size: int = 16384,
+    df: DataFrame, k: int = 5, grams: str = "window", segment_size: int = 16384
 ) -> DataFrame:
     """Word positions covered by NON-CANONICAL duplicated k-gram
     occurrences — the marking half of exact-substring dedup (Lee et al.
@@ -327,9 +289,9 @@ def duplicated_span_marks(
                 f"segment_size ({segment_size}) must be >= k ({k})"
             )
         words = df.select(
-            F.col(id_col),
-            F.size(F.split(F.col(text_col), " ")).alias("_nw"),
-            F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w0"),
+            F.col("doc_id"),
+            F.size(F.split(F.col("text"), " ")).alias("_nw"),
+            F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w0"),
         )
         home = (F.col("pos") / segment_size).cast("long")
         # first k-1 words of a segment also feed the PREVIOUS segment's
@@ -339,14 +301,14 @@ def duplicated_span_marks(
             F.array(home, home - 1),
         ).otherwise(F.array(home))
         words = words.select(
-            id_col, "_nw", "pos", "w0", F.explode(segs).alias("_seg")
+            "doc_id", "_nw", "pos", "w0", F.explode(segs).alias("_seg")
         )
-        win = Window.partitionBy(id_col, "_seg").orderBy("pos")
+        win = Window.partitionBy("doc_id", "_seg").orderBy("pos")
         lead_cols = [F.col("w0")] + [
             F.lead("w0", j).over(win).alias(f"w{j}") for j in range(1, k)
         ]
         occ = (
-            words.select(id_col, "_nw", "pos", "_seg", *lead_cols)
+            words.select("doc_id", "_nw", "pos", "_seg", *lead_cols)
             # trailing positions have NULL leads; filter BEFORE hashing
             # (xxhash64 skips nulls, so unfiltered short windows would
             # collide with genuine shorter grams)
@@ -355,7 +317,7 @@ def duplicated_span_marks(
             # the previous segment exists purely as lead() input
             .filter((F.col("pos") / segment_size).cast("long") == F.col("_seg"))
             .select(
-                id_col,
+                "doc_id",
                 "pos",
                 F.xxhash64(*[F.col(f"w{j}") for j in range(k)]).alias("gh"),
             )
@@ -364,9 +326,9 @@ def duplicated_span_marks(
         # split hoisted into its own projection under the posexplode
         # (r9): the transform lambda captures the word array, and a
         # captured expression is re-evaluated per element — the inline
-        # split was O(words²) per document (see word_shingles_from_words)
+        # split was O(words²) per document (see word_grams)
         pre = df.select(
-            F.col(id_col), F.split(F.col(text_col), " ").alias("_w")
+            F.col("doc_id"), F.split(F.col("text"), " ").alias("_w")
         )
         w = F.col("_w")
         n = F.size(w) - (k - 1)
@@ -377,27 +339,26 @@ def duplicated_span_marks(
                 lambda i: F.xxhash64(F.array_join(F.slice(w, i, k), " ")),
             ),
         ).otherwise(F.array().cast("array<bigint>"))
-        occ = pre.select(F.col(id_col), F.posexplode(gram_arr).alias("pos", "gh"))
+        occ = pre.select(F.col("doc_id"), F.posexplode(gram_arr).alias("pos", "gh"))
     else:
         raise ValueError(f"unknown grams strategy {grams!r}")
     info = occ.groupBy("gh").agg(
         F.count(F.lit(1)).alias("c"),
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("mn"),
+        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("mn"),
     )
     noncanon = (
         occ.join(info.filter(F.col("c") > 1), "gh")
-        .filter(F.struct(F.col(id_col), F.col("pos")) != F.col("mn"))
-        .select(id_col, "pos")
+        .filter(F.struct(F.col("doc_id"), F.col("pos")) != F.col("mn"))
+        .select("doc_id", "pos")
     )
     return noncanon.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("wpos"),
     ).distinct()
 
 
 def substring_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5,
-    grams: str = "window", segment_size: int = 16384,
+    df: DataFrame, k: int = 5, grams: str = "window", segment_size: int = 16384
 ) -> DataFrame:
     """Exact-substring dedup: cut duplicated k-word spans (all but their
     first corpus occurrence) out of every document.  Returns
@@ -413,16 +374,14 @@ def substring_dedup(
     itself, which the result row must hold anyway).  Every shuffle keys
     on the gram hash or the doc id.  ``grams`` selects the marking
     strategy (see ``duplicated_span_marks``)."""
-    marked = duplicated_span_marks(
-        df, id_col, text_col, k, grams=grams, segment_size=segment_size
-    )
+    marked = duplicated_span_marks(df, k, grams=grams, segment_size=segment_size)
     words = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("wpos", "word"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), " ")).alias("wpos", "word"),
     )
-    kept = words.join(marked, [id_col, "wpos"], "left_anti")
+    kept = words.join(marked, ["doc_id", "wpos"], "left_anti")
     seg_agg = kept.groupBy(
-        id_col, (F.col("wpos") / segment_size).cast("long").alias("_seg")
+        "doc_id", (F.col("wpos") / segment_size).cast("long").alias("_seg")
     ).agg(
         F.array_join(
             F.transform(
@@ -435,7 +394,7 @@ def substring_dedup(
         ).alias("_segtext"),
         F.count(F.lit(1)).alias("_n_seg"),
     )
-    agg = seg_agg.groupBy(id_col).agg(
+    agg = seg_agg.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -450,13 +409,13 @@ def substring_dedup(
         F.sum("_n_seg").alias("_n_kept"),
     )
     base = df.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), " ")).cast("bigint").alias("_n_words"),
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), " ")).cast("bigint").alias("_n_words"),
     )
     return (
-        base.join(agg, id_col, "left")
+        base.join(agg, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
             (F.col("_n_words") - F.coalesce(F.col("_n_kept"), F.lit(0))).alias(
                 "n_removed"
@@ -465,9 +424,7 @@ def substring_dedup(
     )
 
 
-def paragraph_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def paragraph_dedup(df: DataFrame) -> DataFrame:
     """Corpus-wide exact PARAGRAPH dedup (the Dolma-style pass between
     whole-document dedup and word-gram span dedup): every blank-line
     separated paragraph survives only at its first occurrence —
@@ -490,25 +447,25 @@ def paragraph_dedup(
     the DuckDB parity case groups on the paragraph text itself).
 
     Returns (id, clean_text, n_paras_kept, n_paras_total)."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     paras = F.filter(F.split(text, r"\n{2,}"), lambda p: p != F.lit(""))
     exploded = df.select(
-        F.col(id_col), F.posexplode(paras).alias("para_idx", "para")
+        F.col("doc_id"), F.posexplode(paras).alias("para_idx", "para")
     ).withColumn(
         "pkey", F.struct(F.xxhash64("para"), F.xxhash64("para", F.lit(1)))
     )
     first = exploded.groupBy("pkey").agg(
-        F.min(F.struct(F.col(id_col), F.col("para_idx"))).alias("first")
+        F.min(F.struct(F.col("doc_id"), F.col("para_idx"))).alias("first")
     )
     kept = (
         exploded.join(first, "pkey")
         .filter(
-            (F.col("first")[id_col] == F.col(id_col))
+            (F.col("first")["doc_id"] == F.col("doc_id"))
             & (F.col("first")["para_idx"] == F.col("para_idx"))
         )
         .drop("first", "pkey")
     )
-    agg = kept.groupBy(id_col).agg(
+    agg = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -521,12 +478,12 @@ def paragraph_dedup(
         F.count(F.lit(1)).alias("n_paras_kept"),
     )
     totals = df.select(
-        F.col(id_col), F.size(paras).alias("n_paras_total")
+        F.col("doc_id"), F.size(paras).alias("n_paras_total")
     )
     return (
-        totals.join(agg, id_col, "left")
+        totals.join(agg, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
             F.coalesce(F.col("n_paras_kept"), F.lit(0)).cast("int").alias(
                 "n_paras_kept"

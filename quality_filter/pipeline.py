@@ -14,9 +14,11 @@ Reference semantics (all re-expressed as declarative Catalyst plans):
   (strict) AND turn lang == document lang
   (``src/salvage_low_quality_data.py:183-188``); trim: edge-bound on the
   label ALONE (``quality_labels[i] != "Clean"``, ``:191-203`` — no score
-  or lang condition); doc pre-gate ``doc_scores[0] < 5 AND len(text) >=
-  min_doc_length`` (``src/salvage_low_quality_data.py:246``), post-gate
-  ``len(text) >= min_doc_length`` (``:219``).
+  or lang condition); doc pre-gate ``len(text) >= min_doc_length``
+  (``src/salvage_low_quality_data.py:246``; its ``doc_scores[0] < 5``
+  half needs a document score, which the transcript schema lacks — see
+  ``docmodel.doc_gates``), post-gate ``len(text) >= min_doc_length``
+  (``:219``).
 - empty-doc drop — P4 (``src/filter_by_quality_label.py:188``).
 
 Per-conversation aggregates (trim bounds, document length, document
@@ -56,13 +58,13 @@ def keep_by_score(threshold: float) -> Column:
     return F.col("clean_score") >= F.lit(threshold)
 
 
-def keep_by_salvage(document_lang_col: str = "document_lang") -> Column:
+def keep_by_salvage() -> Column:
     """C3 salvage variant: Clean AND score strictly > 0.9 AND lang match
     (``src/salvage_low_quality_data.py:185-186``)."""
     return (
         (F.col("label") == "Clean")
         & (F.col("clean_score") > F.lit(SALVAGE_SCORE_THRESHOLD))
-        & (F.col("lang") == F.col(document_lang_col))
+        & (F.col("lang") == F.col("document_lang"))
     )
 
 
@@ -269,22 +271,22 @@ def salvage_pipeline(
     df: DataFrame,
     mode: str = "filter",
     min_doc_length: int = DEFAULT_MIN_DOC_LENGTH,
-    doc_score_col: str | None = None,
 ) -> DataFrame:
-    """The salvage path (``src/salvage_low_quality_data.py:176-259``):
-    doc pre-gate → score → Clean ∧ score>0.9 ∧ lang==document_lang →
-    filter/trim → min-length post-gate.
+    """The salvage path (``src/salvage_low_quality_data.py:176-259``)
+    over the transcript schema: doc length pre-gate → score → Clean ∧
+    score>0.9 ∧ lang==document_lang → filter/trim → min-length post-gate.
+
+    The transcript schema carries no document score, so the reference's
+    ``doc_scores[0] < 5`` pre-gate is not applied here; on doc-shaped
+    records it is ``docmodel.doc_gates(doc_score_max=)``.
 
     Requires per-turn ``lang``/``lang_prob`` columns (from
     ``quality_filter.langid``) already present, or they will be computed.
     """
     if mode not in ("filter", "trim"):
         raise ValueError("Must choose either 'trim' or 'filter'")
-    work = df
-    # doc pre-gate: doc_scores[0] < 5 AND original doc length >= min_doc_length
-    if doc_score_col is not None:
-        work = work.filter(F.col(doc_score_col) < 5)
-    work = apply_min_doc_length(work, min_doc_length)
+    # doc pre-gate: original doc length >= min_doc_length
+    work = apply_min_doc_length(df, min_doc_length)
     scored = score_turns(work)
     if "lang" not in scored.columns:
         from quality_filter.langid import with_langid

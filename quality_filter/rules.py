@@ -257,7 +257,7 @@ def barrier_filter(df: DataFrame, keep: Column) -> DataFrame:
     return barred.filter(keep | (F.col("_qf_barrier") < 0)).drop("_qf_barrier")
 
 
-def clean_fastpath_scored(df: DataFrame, text_col: str = "text") -> DataFrame:
+def clean_fastpath_scored(df: DataFrame) -> DataFrame:
     """Remove-all lane: keep only the turns ``score_turns`` would label
     Clean, and score them, in ONE pass over the materialized features.
 
@@ -267,7 +267,7 @@ def clean_fastpath_scored(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``score_turns(df).filter(label == 'Clean')`` (parity-tested).  The
     filter sits behind ``barrier_filter`` so PushDownPredicates cannot
     substitute the materialized columns back into a scan-level filter."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     base = _with_features(df, text)
     feats = _features()
     ratio_formatting, symbol_run = _formatting(feats, text)
@@ -283,7 +283,7 @@ def clean_fastpath_scored(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def score_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
+def score_turns(df: DataFrame) -> DataFrame:
     """Append ``label`` and ``clean_score`` to a transcript DataFrame.
 
     Three slim projections (features → label → score) — the Spark analog
@@ -295,7 +295,7 @@ def score_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
     materialized ``label`` column (no re-inlining — see
     ``_with_features``).
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     base = _with_features(df, text)
     feats = _features()
     ratio_formatting, symbol_run = _formatting(feats, text)

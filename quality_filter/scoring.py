@@ -21,7 +21,7 @@ from quality_filter import langid as L
 from quality_filter import perplexity as X
 
 
-def with_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_scores(df: DataFrame) -> DataFrame:
     """Append ``lang``, ``lang_prob``, ``logppl`` in a single UDF stage:
     the fused full n-gram langid + perplexity Arrow pass (one serialize,
     both artifacts resident)."""
@@ -55,7 +55,7 @@ def with_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
             ["lang", "lang_prob", "logppl"],
         )
 
-    out = df.withColumn("_sc", _score(F.col(text_col)))
+    out = df.withColumn("_sc", _score(F.col("text")))
     return (
         out.withColumn("lang", F.col("_sc.lang"))
         .withColumn("lang_prob", F.col("_sc.lang_prob"))

@@ -32,11 +32,10 @@ def scrub_expr(text: Column) -> Column:
     return F.when(text.rlike(_QUICKCHECK), out).otherwise(text)
 
 
-def scrub_turns(
-    df: DataFrame, text_col: str = "text", out_col: str = "scrubbed_text"
-) -> DataFrame:
-    """Append ``out_col`` (scrubbed text) and ``scrub_applied`` (bool)."""
-    scrubbed = scrub_expr(F.coalesce(F.col(text_col), F.lit("")))
-    return df.withColumn(out_col, scrubbed).withColumn(
-        "scrub_applied", F.col(out_col) != F.coalesce(F.col(text_col), F.lit(""))
+def scrub_turns(df: DataFrame) -> DataFrame:
+    """Append ``scrubbed_text`` (``text`` scrubbed) and ``scrub_applied``
+    (bool)."""
+    scrubbed = scrub_expr(F.coalesce(F.col("text"), F.lit("")))
+    return df.withColumn("scrubbed_text", scrubbed).withColumn(
+        "scrub_applied", F.col("scrubbed_text") != F.coalesce(F.col("text"), F.lit(""))
     )

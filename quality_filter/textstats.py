@@ -170,12 +170,7 @@ C4_MIN_WORDS_PER_LINE = 5
 C4_MIN_LINES = 3
 
 
-def c4_line_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words_per_line: int = C4_MIN_WORDS_PER_LINE,
-    min_lines: int = C4_MIN_LINES,
-) -> DataFrame:
+def c4_line_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
     """C4 cleaning as one narrow projection + filter: per-line keep rule
     evaluated inside array HOFs (no explode → no shuffle, doc order and
     partitioning preserved), then the page-level gates.  Returns kept
@@ -192,7 +187,7 @@ def c4_line_filter(
     kept = F.filter(
         lines,
         lambda ln: F.rtrim(ln).rlike(_TERMINAL_RE)
-        & (F.size(_nonempty_words(ln)) >= min_words_per_line),
+        & (F.size(_nonempty_words(ln)) >= C4_MIN_WORDS_PER_LINE),
     )
     out = (
         df.withColumn("n_lines_total", F.size(lines))
@@ -200,7 +195,7 @@ def c4_line_filter(
         .withColumn("clean_text", F.array_join(kept, "\n"))
     )
     return out.filter(
-        (F.col("n_lines_kept") >= min_lines)
+        (F.col("n_lines_kept") >= C4_MIN_LINES)
         & ~F.contains(F.lower(text), F.lit("lorem ipsum"))
         & ~F.contains(text, F.lit("{"))
     )
@@ -264,26 +259,17 @@ def with_gopher_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("repetition_keep", keep)
 
 
-def gopher_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    with_repetition: bool = True,
-    keep_metrics: bool = False,
-) -> DataFrame:
+def gopher_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
     """The composed Gopher corpus gate: keep documents passing ALL quality
-    rules (with_gopher_flags) and — by default — all repetition rules
+    rules (with_gopher_flags) and all repetition rules
     (with_gopher_repetition).  One scan-shaped pass; both metric sets
-    evaluate inside the same projection.  ``keep_metrics=True`` retains
-    the per-rule metric columns for auditing, otherwise the output schema
-    equals the input schema."""
+    evaluate inside the same projection, and the output schema equals
+    the input schema (``with_gopher_flags`` and ``with_gopher_repetition``
+    keep the per-rule metric columns for auditing)."""
     in_cols = df.columns
-    out = with_gopher_flags(df, text_col)
-    keep = F.col("gopher_keep")
-    if with_repetition:
-        out = with_gopher_repetition(out, text_col)
-        keep = keep & F.col("repetition_keep")
-    out = out.filter(keep)
-    return out if keep_metrics else out.select(*in_cols)
+    out = with_gopher_repetition(with_gopher_flags(df, text_col), text_col)
+    keep = F.col("gopher_keep") & F.col("repetition_keep")
+    return out.filter(keep).select(*in_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -335,8 +321,7 @@ def _has_alpha(w: str) -> bool:
     )
 
 
-def _fused_gate_row(t: str, min_words_per_line: int, min_lines: int,
-                    with_repetition: bool) -> tuple[str, bool, bool]:
+def _fused_gate_row(t: str, with_repetition: bool) -> tuple[str, bool, bool]:
     """(clean_text, c4_keep, gopher_keep) for one document — the exact
     composition build_pretrain_corpus runs: C4 line keep → page gates →
     Gopher quality + repetition rules over the C4-cleaned text."""
@@ -347,9 +332,9 @@ def _fused_gate_row(t: str, min_words_per_line: int, min_lines: int,
         ln
         for ln in t.split("\n")
         if _PY_TERM.search(ln.rstrip(" "))
-        and sum(1 for w in _PY_WS.split(ln) if w) >= min_words_per_line
+        and sum(1 for w in _PY_WS.split(ln) if w) >= C4_MIN_WORDS_PER_LINE
     ]
-    if len(kept) < min_lines:
+    if len(kept) < C4_MIN_LINES:
         return "", False, False
     clean = "\n".join(kept)
     words = [w for w in _PY_WS.split(clean) if w]
@@ -438,10 +423,7 @@ def _fg_space_norm(arr: pa.Array) -> pa.Array:
 
 
 def _fused_gate_batch(
-    texts: pd.Series,
-    min_words_per_line: int,
-    min_lines: int,
-    with_repetition: bool,
+    texts: pd.Series, with_repetition: bool
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(clean_text, c4_keep, gopher_keep) arrays for one Arrow batch —
     column-exact vs ``_fused_gate_row`` (tests/test_round8.py)."""
@@ -457,10 +439,7 @@ def _fused_gate_batch(
     exotic = _fg_np(pc.match_substring_regex(arr0, _FG_EXOTIC_WS_RE))
     slow_idx = np.flatnonzero(exotic)
     for i in slow_idx:
-        c, k4, kg = _fused_gate_row(
-            arr0[int(i)].as_py(), min_words_per_line, min_lines,
-            with_repetition,
-        )
+        c, k4, kg = _fused_gate_row(arr0[int(i)].as_py(), with_repetition)
         clean_out[i], c4_out[i], gk_out[i] = c, k4, kg
     fast_idx = np.flatnonzero(~exotic)
     if len(fast_idx) == 0:
@@ -482,9 +461,9 @@ def _fused_gate_batch(
         pc.match_substring_regex(pc.utf8_rtrim(flat, " "), _FG_RE_TERM)
     )
     wc_line = _fg_token_count(flat)
-    keep_line = term & (wc_line >= min_words_per_line)
+    keep_line = term & (wc_line >= C4_MIN_WORDS_PER_LINE)
     n_kept = np.bincount(doc_idx[keep_line], minlength=m)
-    c4_keep = (~page_bad) & (n_kept >= min_lines)
+    c4_keep = (~page_bad) & (n_kept >= C4_MIN_LINES)
 
     # '\n'-join of kept lines as ONE C++ kernel (binary_join over a
     # rebuilt ListArray), no per-doc Python
@@ -598,11 +577,7 @@ def _fused_gate_batch(
 
 
 def fused_gate_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words_per_line: int = C4_MIN_WORDS_PER_LINE,
-    min_lines: int = C4_MIN_LINES,
-    with_repetition: bool = True,
+    df: DataFrame, text_col: str = "text", with_repetition: bool = True
 ) -> DataFrame:
     """Append ``clean_text`` (C4-surviving lines re-joined), ``c4_keep``
     and ``gopher_keep`` via one Arrow-batched pass — a non-filtering
@@ -632,9 +607,7 @@ def fused_gate_arrow(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            clean, c4, gk = _fused_gate_batch(
-                pdf[text_col], min_words_per_line, min_lines, with_repetition
-            )
+            clean, c4, gk = _fused_gate_batch(pdf[text_col], with_repetition)
             g = pd.DataFrame(
                 {"clean_text": clean, "c4_keep": c4, "gopher_keep": gk},
                 index=pdf.index,

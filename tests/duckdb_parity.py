@@ -342,7 +342,7 @@ def _word_shingles3(words_col):
     consuming explode and pass the bound attribute: Catalyst re-evaluates
     a transform lambda's CAPTURED expressions once per element, so an
     inline split is O(words²) per document (the library twin is
-    dedup.word_shingles_from_words).  The Generate under the second select is the barrier
+    dedup.word_grams).  The Generate under the second select is the barrier
     that keeps CollapseProject from re-inlining the split."""
     n_sh = F.size(words_col) - 2
     return F.when(
@@ -1017,7 +1017,7 @@ def q_decontaminate_docs(spark, sf_dir):
         F.array_join(F.slice(F.split(F.col("text"), " "), 1, 12), " ").alias("text")
     )
     bench = docs.filter(F.col("doc_id") % 97 == 0).select("text").unionByName(snippets)
-    return decontaminate(train, bench, n=8)
+    return decontaminate(train, bench)
 
 
 def _substr_dedup_sql() -> str:
@@ -1859,7 +1859,6 @@ def q_corpus_build_docs(spark, sf_dir):
         benchmark=bench,
         jaccard_threshold=0.9,
         verify_exact=True,
-        max_bucket_size=None,
     ).select("doc_id", "text")
 
 

@@ -1,5 +1,5 @@
-"""Unit tests for near-dup clustering (cluster.py) and exact-substring
-dedup."""
+"""Unit tests for near-dup clustering and decontamination (cluster.py),
+exact-substring dedup and package shipping."""
 
 from __future__ import annotations
 
@@ -50,6 +50,37 @@ def test_connected_components_no_edges(spark):
     assert got == {3: 3, 4: 4}
 
 
+def _iterations(spark, n_nodes, pairs, max_iter=50):
+    stats: dict = {}
+    comp = connected_components(
+        _nodes(spark, range(n_nodes)), _edges(spark, pairs),
+        max_iter=max_iter, stats=stats,
+    )
+    reps = {r["doc_id"]: r["cluster_rep"] for r in comp.collect()}
+    return stats["iterations"], reps
+
+
+def test_connected_components_iterations_exclude_confirming_round(spark):
+    """``iterations`` counts the rounds before the one that confirms the
+    fixpoint, the fused first round included."""
+    assert _iterations(spark, 2, [(0, 1)]) == (1, {0: 0, 1: 0})
+    assert _iterations(spark, 2, []) == (1, {0: 0, 1: 1})
+    path = [(0, 1), (1, 2), (2, 3)]
+    assert _iterations(spark, 4, path) == (3, {v: 0 for v in range(4)})
+
+
+def test_connected_components_max_iter_bounds_label_changing_rounds(spark):
+    """``max_iter`` bounds the rounds that change a label, not the
+    confirming one: a graph that settles in exactly ``max_iter`` rounds
+    returns, one that needs more raises."""
+    assert _iterations(spark, 2, [(0, 1)], max_iter=1) == (1, {0: 0, 1: 0})
+    path = [(0, 1), (1, 2), (2, 3)]
+    assert _iterations(spark, 4, path, max_iter=3)[0] == 3
+    with pytest.raises(RuntimeError, match="did not converge in 2 iterations") as err:
+        _iterations(spark, 4, path, max_iter=2)
+    assert "algorithm" not in str(err.value)
+
+
 def test_cluster_dedup_transitive_chain_one_pass(spark):
     # A~B, B~C but not A~C: one-pass cluster dedup keeps only A
     df = spark.createDataFrame(
@@ -75,7 +106,7 @@ def test_decontaminate_flags_ngram_overlap(spark):
     )
     got = {
         r["doc_id"]: (r["n_overlap"], r["contaminated"])
-        for r in decontaminate(train, bench, n=8).collect()
+        for r in decontaminate(train, bench).collect()
     }
     assert got[1][1] is True and got[1][0] >= 1
     assert got[2] == (0, False)
@@ -132,31 +163,6 @@ def test_substring_dedup_short_docs_untouched(spark):
     got = {r["doc_id"]: (r["clean_text"], r["n_removed"]) for r in
            substring_dedup(df, k=5).collect()}
     assert got == {1: ("too short", 0), 2: ("too short", 0)}
-
-
-def test_star_components_long_chain(spark):
-    # the case min-label propagation is slow on: a 60-node path — the
-    # star algorithm converges in O(log^2 n) rounds
-    n = 60
-    comp = connected_components(
-        _nodes(spark, range(n)),
-        _edges(spark, [(i, i + 1) for i in range(n - 1)]),
-        algorithm="star",
-        max_iter=15,
-    )
-    assert {r["cluster_rep"] for r in comp.collect()} == {0}
-
-
-def test_star_components_singletons_and_bad_algorithm(spark):
-    comp = connected_components(
-        _nodes(spark, [1, 2, 5]), _edges(spark, [(1, 2)]), algorithm="star"
-    )
-    got = {r["doc_id"]: r["cluster_rep"] for r in comp.collect()}
-    assert got == {1: 1, 2: 1, 5: 5}
-    with pytest.raises(ValueError):
-        connected_components(
-            _nodes(spark, [1]), _edges(spark, []), algorithm="nope"
-        )
 
 
 def test_ensure_shipped_from_zipimport_ships_the_archive(tmp_path):

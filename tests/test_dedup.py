@@ -75,8 +75,8 @@ def test_minhash_survives_short_docs(spark):
 
 
 def test_minhash_lsh_finds_near_dups(spark, dup_docs):
-    sig = minhash_signatures(dup_docs, n_hashes=16)
-    pairs = lsh_candidates(sig, bands=4, rows_per_band=4)
+    sig = minhash_signatures(dup_docs)
+    pairs = lsh_candidates(sig)
     got = {(r["a"], r["b"]) for r in pairs.collect()}
     assert (100, 101) in got
     assert (100, 102) in got or (101, 102) in got

@@ -112,14 +112,10 @@ def test_c4_page_gates(spark):
     assert kept == [1]
 
 
-def test_c4_thresholds_are_parameters(spark):
+def test_c4_default_thresholds(spark):
     text = "one two three four.\none two three four."
     strict = c4_line_filter(_docs(spark, [(1, text)]))
-    assert strict.count() == 0  # 4 words < default 5
-    loose = c4_line_filter(
-        _docs(spark, [(1, text)]), min_words_per_line=4, min_lines=2
-    )
-    assert loose.count() == 1
+    assert strict.count() == 0  # 4 words < 5
     assert C4_MIN_WORDS_PER_LINE == 5 and C4_MIN_LINES == 3
 
 
@@ -200,10 +196,9 @@ def test_gopher_filter_composition(spark):
 
     kept = [r["doc_id"] for r in gopher_filter(_docs(spark, rows)).collect()]
     assert kept == [1]
-    no_rep = gopher_filter(_docs(spark, rows), with_repetition=False)
+    # doc 3 passes the quality rules and fails on repetition alone
+    no_rep = with_gopher_flags(_docs(spark, rows)).filter("gopher_keep")
     assert sorted(r["doc_id"] for r in no_rep.collect()) == [1, 3]
-    audited = gopher_filter(_docs(spark, rows), keep_metrics=True)
-    assert "word_count" in audited.columns and "dup_line_frac" in audited.columns
     assert gopher_filter(_docs(spark, rows)).columns == ["doc_id", "text"]
 
 

@@ -78,11 +78,6 @@ def test_connected_components_vs_union_find(spark):
         for r in connected_components(ndf, edf).collect()
     }
     assert got == expected
-    star = {
-        r["doc_id"]: r["cluster_rep"]
-        for r in connected_components(ndf, edf, algorithm="star").collect()
-    }
-    assert star == expected
 
 
 # -- substring dedup vs python spec -------------------------------------------

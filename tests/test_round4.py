@@ -28,21 +28,6 @@ def test_connected_components_string_ids_full_chain(spark):
     assert reps == {i: "a" for i in ids}
 
 
-def test_connected_components_string_ids_star_algorithm(spark):
-    from quality_filter.cluster import connected_components
-
-    nodes = spark.createDataFrame(
-        [("n1",), ("n2",), ("n3",), ("n4",), ("loner",)], "doc_id string"
-    )
-    edges = spark.createDataFrame(
-        [("n1", "n2"), ("n2", "n3"), ("n3", "n4")], "a string, b string"
-    )
-    out = connected_components(nodes, edges, algorithm="star")
-    reps = {r["doc_id"]: r["cluster_rep"] for r in out.collect()}
-    assert reps == {"n1": "n1", "n2": "n1", "n3": "n1", "n4": "n1",
-                    "loner": "loner"}
-
-
 # -- overflow-free deterministic bucket (ADVICE r3) --------------------------
 
 def test_deterministic_bucket_no_int64_overflow(spark):

@@ -27,8 +27,8 @@ def test_occupancy_guard_is_lazy(spark):
     from quality_filter.dedup import lsh_candidates, minhash_signatures
 
     docs = _boom_docs(spark)
-    sig = minhash_signatures(docs, "doc_id", "text")
-    capped = lsh_candidates(sig, "doc_id", max_bucket_size=10)  # no action
+    sig = minhash_signatures(docs)
+    capped = lsh_candidates(sig, max_bucket_size=10)  # no action
     with pytest.raises(Exception, match="plan was executed"):
         capped.count()
 
@@ -39,12 +39,12 @@ def test_occupancy_guard_leaves_nothing_persisted(spark):
 
     rows = [(i, f"alpha bravo charlie delta echo{i} fox{i * 3}") for i in range(50)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = minhash_signatures(docs, "doc_id", "text")
+    sig = minhash_signatures(docs)
     # other tests in the shared session may hold legitimate checkpoints;
     # assert the GUARD adds none (delta, not absolute zero)
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     for _ in range(3):
-        lsh_candidates(sig, "doc_id", max_bucket_size=5).count()
+        lsh_candidates(sig, max_bucket_size=5).count()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 
@@ -58,7 +58,7 @@ def test_guard_capped_set_matches_r5_design(spark):
     docs = spark.createDataFrame(
         [(i, f"{body} uniq{i}") for i in range(80)], "doc_id long, text string"
     )
-    sig = minhash_signatures(docs, "doc_id", "text")
+    sig = minhash_signatures(docs)
     p1 = sorted(tuple(r) for r in lsh_candidates(sig, max_bucket_size=12).collect())
     p2 = sorted(tuple(r) for r in lsh_candidates(sig, max_bucket_size=12).collect())
     assert p1 == p2 and 0 < len(p1) <= 4 * (12 * 11) // 2

@@ -73,18 +73,9 @@ def _adversarial_docs():
 def _row_kernel(df):
     """doc_id → (clean_text, c4_keep, gopher_keep) from the per-doc row
     kernel, run on the driver over the same texts."""
-    from quality_filter.textstats import (
-        C4_MIN_LINES,
-        C4_MIN_WORDS_PER_LINE,
-        _fused_gate_row,
-    )
+    from quality_filter.textstats import _fused_gate_row
 
-    return {
-        r["doc_id"]: _fused_gate_row(
-            r["text"], C4_MIN_WORDS_PER_LINE, C4_MIN_LINES, True
-        )
-        for r in df.collect()
-    }
+    return {r["doc_id"]: _fused_gate_row(r["text"], True) for r in df.collect()}
 
 
 def _spark_gate(df):

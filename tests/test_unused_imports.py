@@ -13,6 +13,10 @@ Plain AST scans, so they need no linter package.
 - Every top-level def and class of the package is run by something too:
   its name is used as code by something the CLI, the benchmark or an
   owned module reaches, or ``UNREACHED_DEF_OWNERS`` names why it stays.
+- Every defaulted parameter of a top-level def in the ``PARAM_LINTED``
+  modules is set by something: a call in the CLI, the benchmark or the
+  package passes it, or ``UNSET_PARAM_OWNERS`` names the test it is the
+  seam or oracle for.  A parameter with one value in use is a constant.
 """
 
 from __future__ import annotations
@@ -65,6 +69,31 @@ UNREACHED_DEF_OWNERS = {
     "(test_teacher.py)",
     "textstats.quality_score_expr": "SURVEY M4",
     "textstats.with_quality_score": "SURVEY M4",
+}
+
+
+# Modules whose defaulted parameters must each be passed by some caller.
+PARAM_LINTED = {
+    "checkpoint", "cluster", "corpus", "dedup", "pipeline", "rules", "scoring",
+    "scrub",
+}
+
+# Defaulted parameters of those modules that no call in the CLI, the
+# benchmark or the package passes, and the test each is the seam or the
+# oracle of.
+UNSET_PARAM_OWNERS = {
+    "cluster.connected_components.max_iter": "the non-convergence test "
+    "(test_cluster.py::test_connected_components_max_iter_bounds_label_changing_rounds)",
+    "dedup.lsh_candidates.max_bucket_size": "small caps at test scale, None "
+    "the self-join oracle (test_round5.py, test_round6.py)",
+    "dedup.duplicated_span_marks.grams": "'hof' is the oracle of the window "
+    "marks (test_round5.py, test_round6.py)",
+    "dedup.duplicated_span_marks.segment_size": "the segment seam of the "
+    "giant-document test (test_round6.py)",
+    "dedup.substring_dedup.grams": "'hof' is the oracle of the giant-document "
+    "test (test_round6.py)",
+    "dedup.substring_dedup.segment_size": "the segment seam of the "
+    "giant-document test (test_round6.py)",
 }
 
 
@@ -294,3 +323,146 @@ def test_every_def_is_reached_or_owned():
     )
     stale = sorted(UNREACHED_DEF_OWNERS.keys() - (everything - reached_defs(package, roots)))
     assert stale == [], f"UNREACHED_DEF_OWNERS lists reached or deleted {stale}"
+
+
+def _defaulted_params(node: ast.FunctionDef) -> list[str]:
+    args = node.args
+    positional = args.posonlyargs + args.args
+    names = [a.arg for a in positional[len(positional) - len(args.defaults):]]
+    return names + [
+        a.arg for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None
+    ]
+
+
+def _call_facts(module: str, source: str, functions: dict, free: bool):
+    """(``module.def.param`` key a call passes, the key it depends on or
+    None) for every call in ``source`` of a top-level package function.
+    A call matches every def of the called name (import aliases
+    resolved).  An argument that is just a defaulted parameter of the
+    enclosing top-level def is a pass-through: it depends on that
+    parameter, unless ``free`` (the CLI and the benchmark, whose values
+    count)."""
+    tree = ast.parse(source)
+    alias = {
+        a.asname: a.name for node in _imports(tree) if isinstance(node, ast.ImportFrom)
+        for a in node.names if a.asname
+    }
+    enclosing = {}  # call → the top-level def it sits in
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            for call in ast.walk(node):
+                enclosing[call] = node
+    for call in ast.walk(tree):
+        if not isinstance(call, ast.Call):
+            continue
+        f = call.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        outer = None if free else enclosing.get(call)
+        for key, node in functions.get(alias.get(name, name), ()):
+            defaulted = _defaulted_params(node)
+            positional = [a.arg for a in node.args.posonlyargs + node.args.args]
+            passed = []  # (param, value or None for a starred argument)
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    passed += [(p, None) for p in positional[i:]]
+                    break
+                if i < len(positional):
+                    passed.append((positional[i], arg))
+            for kw in call.keywords:
+                if kw.arg is None:
+                    passed += [(p, None) for p in defaulted]
+                else:
+                    passed.append((kw.arg, kw.value))
+            for param, value in passed:
+                if param not in defaulted:
+                    continue
+                via = None
+                if (
+                    outer is not None and isinstance(value, ast.Name)
+                    and value.id in _defaulted_params(outer)
+                ):
+                    via = f"{module}.{outer.name}.{value.id}"
+                yield f"{key}.{param}", via
+
+
+def unset_params(
+    package: dict[str, str], entry_sources: list[str], linted: set[str]
+) -> set[str]:
+    """``module.def.param`` of the defaulted parameters of the top-level
+    defs of the ``linted`` modules that no call passes: not a call in
+    ``entry_sources`` (the benchmark) or in the CLI, nor a call elsewhere
+    in ``package`` unless it passes a parameter of its own enclosing def
+    that is itself passed (computed to a fixed point)."""
+    functions: dict[str, list] = {}
+    for module, source in package.items():
+        for node in ast.parse(source).body:
+            if isinstance(node, ast.FunctionDef):
+                functions.setdefault(node.name, []).append((f"{module}.{node.name}", node))
+    facts = [
+        fact for src in entry_sources
+        for fact in _call_facts("<entry>", src, functions, free=True)
+    ]
+    for module, source in package.items():
+        facts += _call_facts(module, source, functions, free=module == "cli")
+    passed: set[str] = set()
+    grew = True
+    while grew:
+        grew = False
+        for key, via in facts:
+            if key not in passed and (via is None or via in passed):
+                passed.add(key)
+                grew = True
+    every = {
+        f"{key}.{p}" for defs in functions.values() for key, node in defs
+        if key.split(".")[0] in linted for p in _defaulted_params(node)
+    }
+    return every - passed
+
+
+def unset_param_problems(
+    package: dict[str, str], entry_sources: list[str], linted: set[str],
+    owners: dict[str, str],
+) -> tuple[list[str], list[str]]:
+    """(unset parameters no owner names, owner entries that name a passed
+    or deleted parameter)."""
+    unset = unset_params(package, entry_sources, linted)
+    return sorted(unset - owners.keys()), sorted(owners.keys() - unset)
+
+
+def test_param_scan_flags_an_unset_param():
+    package = {
+        "cli": (
+            "from quality_filter.a import run as go\n"
+            "def main(args):\n    go(1, mode=args.mode)\n"
+        ),
+        "a": (
+            "def run(df, mode='x', width=3, seam=None):\n"
+            "    return helper(df, mode, size=width)\n"
+            "def helper(df, mode='y', size=2, extra=0):\n"
+            "    return deep(df, size)\n"
+            "def deep(df, size=1):\n    return df\n"
+            "def kwonly(df, *, flag=False):\n    return df\n"
+        ),
+        "b": "def use(x):\n    return kwonly(x, flag=x)\n",
+    }
+    bench = ["from quality_filter.a import helper\nhelper(0, extra=5)\n"]
+    unset = unset_params(package, bench, {"a"})
+    # run.width is never passed, so helper.size and deep.size, which only
+    # its pass-through sets, are unset too; run.mode comes from the CLI
+    assert unset == {"a.run.width", "a.run.seam", "a.helper.size", "a.deep.size"}
+    owners = {"a.run.seam": "a test seam", "a.deep.size": "an oracle", "a.gone.p": "x"}
+    orphans, stale = unset_param_problems(package, bench, {"a"}, owners)
+    assert orphans == ["a.helper.size", "a.run.width"]
+    assert stale == ["a.gone.p"]
+
+
+def test_every_defaulted_param_is_passed_or_owned():
+    package = {p.stem: p.read_text() for p in PACKAGE.glob("*.py")}
+    orphans, stale = unset_param_problems(
+        package, [p.read_text() for p in BENCHMARK], PARAM_LINTED, UNSET_PARAM_OWNERS
+    )
+    assert orphans == [], (
+        f"no caller in the CLI, perfbench or the package passes {orphans}: "
+        "make each a constant, or name the test it serves in UNSET_PARAM_OWNERS"
+    )
+    assert stale == [], f"UNSET_PARAM_OWNERS lists passed or deleted {stale}"
