@@ -15,11 +15,11 @@ from pyspark.sql import functions as F
 from quality_filter.checkpoint import BUCKET_COL
 
 
-def bucket_metrics(flagged: DataFrame, keep_col: str = "keep") -> DataFrame:
+def bucket_metrics(flagged: DataFrame) -> DataFrame:
     """Aggregate a bucketed, keep-flagged, scrub-marked frame to one row
     per bucket.  Map-side combinable; no skew concerns (buckets are the
     aggregation key)."""
-    kept = F.col(keep_col).cast("long")
+    kept = F.col("keep").cast("long")
     return flagged.groupBy(BUCKET_COL).agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.sum(kept).alias("n_kept"),
@@ -30,11 +30,9 @@ def bucket_metrics(flagged: DataFrame, keep_col: str = "keep") -> DataFrame:
     )
 
 
-def append_audit(
-    flagged: DataFrame, audit_path: str, run_id: str, keep_col: str = "keep"
-) -> None:
+def append_audit(flagged: DataFrame, audit_path: str, run_id: str) -> None:
     (
-        bucket_metrics(flagged, keep_col)
+        bucket_metrics(flagged)
         .withColumn("run_id", F.lit(run_id))
         .withColumn("completed_ts", F.current_timestamp())
         .coalesce(1)

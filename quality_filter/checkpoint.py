@@ -101,6 +101,10 @@ def run_checkpointed(
     dynamically overwrites exactly that partition directory.  The
     session's own ``partitionOverwriteMode`` is left as the caller set it.
     """
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    if buckets_per_batch < 1:
+        raise ValueError(f"buckets_per_batch must be >= 1, got {buckets_per_batch}")
     done = completed_buckets(spark, manifest_path, run_id)
     todo = [b for b in range(n_buckets) if b not in done]
     bucketed = with_bucket(source, n_buckets)

@@ -283,6 +283,8 @@ def duplicated_span_marks(
     per-gram window, so boilerplate grams with millions of occurrences
     cost one combiner-reduced row; the occurrence⋈gram-info join builds
     its hash table on the one-row-per-gram side."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     if grams == "window":
         if segment_size < k:
             raise ValueError(

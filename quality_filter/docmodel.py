@@ -42,18 +42,18 @@ def alignment_ok(df: DataFrame) -> Column:
     )
 
 
-def explode_document(df: DataFrame, id_col: str = "id") -> DataFrame:
+def explode_document(df: DataFrame) -> DataFrame:
     """C1: one row per line with aligned per-line fields pulled from the
     parallel arrays (``posexplode(split(text, '\\n'))``)."""
     lines = F.split(F.coalesce(F.col("text"), F.lit("")), "\n", -1)
     out = df.select(
-        F.col(id_col),
+        F.col("id"),
         F.posexplode(lines).alias("line_idx", "line"),
         F.col("line_quality_labels"),
         F.col("quality_scores"),
     )
     return out.select(
-        id_col,
+        "id",
         "line_idx",
         "line",
         F.element_at("line_quality_labels", F.col("line_idx") + 1).alias("label"),
@@ -61,21 +61,22 @@ def explode_document(df: DataFrame, id_col: str = "id") -> DataFrame:
     )
 
 
-def _zipped(df: DataFrame, extra_arrays: dict[str, str]) -> Column:
-    """arrays_zip of lines + every parallel array, so one filter/slice
-    keeps them aligned by construction."""
+def _zipped(df: DataFrame, extra: dict[str, str]) -> Column:
+    """arrays_zip of lines + every parallel array (``extra`` maps
+    zip-field name → column name), so one filter/slice keeps them aligned
+    by construction."""
     lines = F.split(F.coalesce(F.col("text"), F.lit("")), "\n", -1)
     cols = [
         lines.alias("line"),
         F.col("line_quality_labels").alias("label"),
         F.col("quality_scores").alias("score"),
     ]
-    for out_name, col_name in extra_arrays.items():
+    for out_name, col_name in extra.items():
         cols.append(F.col(col_name).alias(out_name))
     return F.arrays_zip(*cols)
 
 
-def _unzip(df: DataFrame, zipped: Column, extra_arrays: dict[str, str]) -> DataFrame:
+def _unzip(df: DataFrame, zipped: Column, extra: dict[str, str]) -> DataFrame:
     out = df.withColumn("_z", zipped)
     out = (
         out.withColumn(
@@ -84,40 +85,27 @@ def _unzip(df: DataFrame, zipped: Column, extra_arrays: dict[str, str]) -> DataF
         .withColumn("line_quality_labels", F.transform("_z", lambda x: x["label"]))
         .withColumn("quality_scores", F.transform("_z", lambda x: x["score"]))
     )
-    for out_name, col_name in extra_arrays.items():
+    for out_name, col_name in extra.items():
         out = out.withColumn(col_name, F.transform("_z", lambda x: x[out_name]))
     return out.drop("_z")
 
 
-def filter_doc_lines(
-    df: DataFrame,
-    labels_to_remove: str | list[str],
-    extra_arrays: dict[str, str] | None = None,
-) -> DataFrame:
+def filter_doc_lines(df: DataFrame, labels_to_remove: str | list[str]) -> DataFrame:
     """C3 on doc-shaped rows: drop lines whose label is in the removal
-    set; text and every parallel array are sliced by the same mask.
-    ``extra_arrays`` maps zip-field name → column name for additional
-    aligned arrays (e.g. {"lg": "seg_langs"} for the salvage variant,
-    ``src/salvage_low_quality_data.py:152``)."""
-    extra = extra_arrays or {}
+    set; text, labels and scores are sliced by the same mask."""
     labels = parse_labels(labels_to_remove)
     remove = F.array(*[F.lit(l) for l in labels])
-    kept = F.filter(_zipped(df, extra), lambda x: ~F.array_contains(remove, x["label"]))
-    return _unzip(df, kept, extra)
+    kept = F.filter(_zipped(df, {}), lambda x: ~F.array_contains(remove, x["label"]))
+    return _unzip(df, kept, {})
 
 
-def trim_doc_lines(
-    df: DataFrame,
-    labels_to_remove: str | list[str],
-    extra_arrays: dict[str, str] | None = None,
-) -> DataFrame:
+def trim_doc_lines(df: DataFrame, labels_to_remove: str | list[str]) -> DataFrame:
     """C4 on doc-shaped rows: slice ``[start:end+1]`` where start/end are
     the first/last non-removable line; all-bad → empty arrays and empty
     text (``src/filter_by_quality_label.py:50-53``)."""
-    extra = extra_arrays or {}
     labels = parse_labels(labels_to_remove)
     remove = F.array(*[F.lit(l) for l in labels])
-    z = _zipped(df, extra)
+    z = _zipped(df, {})
     n = F.size(z)
     keep_idx = F.filter(
         F.sequence(F.lit(0), n - 1),
@@ -129,14 +117,15 @@ def trim_doc_lines(
     sliced = F.when(
         F.size(keep_idx) > 0, F.slice(z, start + 1, end - start + 1)
     ).otherwise(F.slice(z, 1, 0))
-    return _unzip(df, sliced, extra)
+    return _unzip(df, sliced, {})
 
 
 def salvage_doc_filter(df: DataFrame) -> DataFrame:
     """The salvage composite on doc rows
     (``src/salvage_low_quality_data.py:183-188``): keep line i iff
     label=='Clean' ∧ score>0.9 ∧ seg_langs[i]==document_lang; slices
-    text/labels/scores/langs together."""
+    text/labels/scores/langs together (``seg_langs`` rides the zip as
+    field ``lg``, ``:152``)."""
     with_dl = df.withColumn("document_lang", doc_lang_expr(F.col("lang"), F.col("prob")))
     z = _zipped(with_dl, {"lg": "seg_langs"})
     kept = F.filter(
@@ -150,18 +139,15 @@ def salvage_doc_filter(df: DataFrame) -> DataFrame:
 
 def doc_gates(
     df: DataFrame,
-    min_doc_length: int = 0,
     require_robots_allowed: bool = False,
     doc_score_max: float | None = None,
 ) -> DataFrame:
-    """S7/P1/P2/P3/P4 doc-level gates."""
+    """S7/P1/P3/P4 doc-level gates: the optional robots and doc-score
+    gates, then the empty-doc drop.  The P2 min-length gate runs on the
+    turn table (``pipeline.apply_min_doc_length``)."""
     out = df
     if doc_score_max is not None:
         out = out.filter(F.element_at("doc_scores", 1) < F.lit(doc_score_max))
     if require_robots_allowed:
         out = out.filter(F.col("robotstxt") == "allowed")
-    if min_doc_length > 0:
-        out = out.filter(F.length(F.coalesce(F.col("text"), F.lit(""))) >= min_doc_length)
-    else:
-        out = out.filter(F.col("text") != "")
-    return out
+    return out.filter(F.col("text") != "")

@@ -18,20 +18,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def confusion_matrix(
-    df: DataFrame, label_col: str = "label", pred_col: str = "prediction"
-) -> DataFrame:
+def confusion_matrix(df: DataFrame) -> DataFrame:
     """Confusion counts: one row per observed (label, prediction) pair
     (``sklearn.confusion_matrix`` in long form,
     ``src/train_classifier.py:93-96``)."""
-    return df.groupBy(
-        F.col(label_col).alias("label"), F.col(pred_col).alias("prediction")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    return df.groupBy("label", "prediction").agg(F.count(F.lit(1)).alias("n"))
 
 
-def eval_report(
-    df: DataFrame, label_col: str = "label", pred_col: str = "prediction"
-) -> DataFrame:
+def eval_report(df: DataFrame) -> DataFrame:
     """Per-class eval report over (label, prediction) rows: support (true
     count), predicted count, true positives, precision, recall, F1 —
     ``sklearn.classification_report`` as a DataFrame
@@ -40,7 +34,7 @@ def eval_report(
     Division guards are explicit CASE logic (0.0 when the denominator is
     zero): under Spark ANSI mode x/0 raises, and SQL engines disagree
     on it otherwise."""
-    cm = confusion_matrix(df, label_col, pred_col)
+    cm = confusion_matrix(df)
     per_true = cm.groupBy(F.col("label").alias("class")).agg(
         F.sum("n").alias("support"),
         F.sum(F.when(F.col("prediction") == F.col("label"), F.col("n")).otherwise(0)).alias("tp"),
@@ -76,9 +70,7 @@ def eval_report(
     return out.withColumn("f1", f1)
 
 
-def eval_summary(
-    df: DataFrame, label_col: str = "label", pred_col: str = "prediction"
-) -> DataFrame:
+def eval_summary(df: DataFrame) -> DataFrame:
     """One-row accuracy + macro-averaged P/R/F1 (the summary block of
     ``classification_report``; accuracy at ``src/train_classifier.py:69``).
     Macro = unweighted mean over the UNION of true and predicted classes
@@ -94,7 +86,7 @@ def eval_summary(
     raw doubles drift by ±1 ulp run-to-run — rounding makes the
     operator's output deterministic (accuracy is a ratio of two exact
     integer sums and needs no rounding)."""
-    rep = eval_report(df, label_col, pred_col)
+    rep = eval_report(df)
     return rep.agg(
         (F.sum("tp").cast("double") / F.sum("support")).alias("accuracy"),
         F.bround(F.avg("precision"), 9).alias("macro_precision"),
@@ -103,9 +95,7 @@ def eval_summary(
     )
 
 
-def cohen_kappa(
-    df: DataFrame, label_col: str = "label", pred_col: str = "prediction"
-) -> DataFrame:
+def cohen_kappa(df: DataFrame) -> DataFrame:
     """Cohen's kappa over (label, prediction) rows: chance-corrected
     agreement κ = (p_o − p_e) / (1 − p_e), with p_o = accuracy and
     p_e = Σ_c support_c·predicted_c / n² — the standard annotator-vs-
@@ -119,7 +109,7 @@ def cohen_kappa(
     overflow int64 past n ≈ 3e9 (wrong or negative κ); decimal keeps
     both exact up to n ≈ 9.2e18 (n² ≤ 8.5e37 < 10^38) before the final
     lossless-in-relative-terms cast to double."""
-    return kappa_from_report(eval_report(df, label_col, pred_col))
+    return kappa_from_report(eval_report(df))
 
 
 def kappa_from_report(rep: DataFrame) -> DataFrame:

@@ -59,7 +59,7 @@ def read_jsonl_repair(
     return good, bad
 
 
-def repair_stringified_array(df: DataFrame, col: str, element_type: str = "double") -> DataFrame:
+def repair_stringified_array(df: DataFrame, col: str) -> DataFrame:
     """Recover arrays that arrive as their string repr
     ("[0.1, 0.2]" → array<double>) — ``ast.literal_eval`` as ``from_json``
     (``src/filter_by_quality_score.py:21-23``)."""
@@ -67,20 +67,14 @@ def repair_stringified_array(df: DataFrame, col: str, element_type: str = "doubl
 
     if not isinstance(df.schema[col].dataType, StringType):
         return df  # already a proper array column
-    return df.withColumn(
-        col, F.from_json(F.col(col), f"array<{element_type}>")
-    )
+    return df.withColumn(col, F.from_json(F.col(col), "array<double>"))
 
 
-def write_jsonl(
-    df: DataFrame, path: str, compression: str | None = None, single_file: bool = False
-) -> None:
+def write_jsonl(df: DataFrame, path: str, compression: str | None = None) -> None:
     """S6: newline-delimited JSON.  ``to_json`` keeps non-ASCII unescaped,
     matching ``json.dumps(ensure_ascii=False)``
     (``src/classifier_inference_pipeline.py:130``)."""
     out = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-    if single_file:
-        out = out.coalesce(1)
     writer = out.write.mode("overwrite")
     if compression:
         writer = writer.option("compression", compression)

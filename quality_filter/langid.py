@@ -116,7 +116,7 @@ def build_artifact() -> tuple[list[str], np.ndarray]:
 
 
 def train_profiles(
-    corpus: DataFrame, text_col: str = "text", lang_col: str = "lang"
+    corpus: DataFrame, lang_col: str = "lang"
 ) -> tuple[list[str], np.ndarray]:
     """Train the langid profile matrix on a LABELED DataFrame corpus —
     the distributed counterpart of ``build_artifact`` (embedded seed
@@ -159,7 +159,7 @@ def train_profiles(
 
     partials = labeled.select(
         F.col(lang_col).alias("__lang"),  # fixed internal name: any lang_col works
-        F.coalesce(F.col(text_col), F.lit("")).alias("__text"),
+        F.coalesce(F.col("text"), F.lit("")).alias("__text"),
     ).mapInPandas(counts, "__lang string, bucket int, c long")
     rows = (
         partials.groupBy("__lang", "bucket")
@@ -234,11 +234,9 @@ def _score_hashed(
 
 
 def with_langid(
-    df: DataFrame,
-    text_col: str = "text",
-    artifact: tuple[list[str], np.ndarray] | None = None,
+    df: DataFrame, artifact: tuple[list[str], np.ndarray] | None = None
 ) -> DataFrame:
-    """Append ``lang`` / ``lang_prob`` columns via a batched Arrow UDF
+    """Append ``lang`` / ``lang_prob`` columns for ``text`` via a batched Arrow UDF
     (model loaded once per executor python worker, broadcast artifact;
     r9 — hashes straight off the Arrow string buffers, see
     ngram._batch_hashes_from_arrow; bit-identical to the former pandas
@@ -264,7 +262,7 @@ def with_langid(
             ["lang", "lang_prob"],
         )
 
-    out = df.withColumn("_lid", _langid(F.col(text_col)))
+    out = df.withColumn("_lid", _langid(F.col("text")))
     return (
         out.withColumn("lang", F.col("_lid.lang"))
         .withColumn("lang_prob", F.col("_lid.lang_prob"))

@@ -6,8 +6,8 @@ it (``src/label_lines_with_LLM.py:381-438``, ``code_to_language``).  Here
 the table is flattened to code → name and exposed as a broadcast
 ``create_map`` literal — the canonical tiny-dimension pattern (a map
 literal lives in the plan itself; no join, no shuffle).  Unknown codes
-resolve to NULL and can be defaulted with ``coalesce`` (the reference
-raises ValueError; a relational operator must stay total).
+resolve to ``"Unknown"`` (the reference raises ValueError; a relational
+operator must stay total).
 """
 
 from __future__ import annotations
@@ -86,9 +86,6 @@ def _name_map():
     return _NAME_MAP
 
 
-def lang_name_expr(code: Column, default: str | None = "Unknown") -> Column:
-    """Map literal lookup; unknown codes → ``default`` (NULL if None)."""
-    looked = F.element_at(_name_map(), code)
-    if default is None:
-        return looked
-    return F.coalesce(looked, F.lit(default))
+def lang_name_expr(code: Column) -> Column:
+    """Map literal lookup; unknown codes → ``"Unknown"``."""
+    return F.coalesce(F.element_at(_name_map(), code), F.lit("Unknown"))

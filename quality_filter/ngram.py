@@ -174,7 +174,7 @@ def train_counts(corpus: list[str]) -> np.ndarray:
     return counts
 
 
-def log_profile(counts: np.ndarray, alpha: float = 0.5) -> np.ndarray:
-    """Additive-smoothed log-probability profile over buckets."""
+def log_profile(counts: np.ndarray) -> np.ndarray:
+    """Additive-smoothed (+0.5) log-probability profile over buckets."""
     total = counts.sum()
-    return np.log((counts + alpha) / (total + alpha * DIM))
+    return np.log((counts + 0.5) / (total + 0.5 * DIM))

@@ -42,16 +42,9 @@ def build_artifact() -> tuple[np.ndarray, np.ndarray]:
     return lp3, lp2
 
 
-def score_batch(
-    texts: pd.Series,
-    lp3: np.ndarray,
-    lp2: np.ndarray,
-    hashed: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
-) -> pd.Series:
-    """``hashed`` — optional precomputed ``(h3, h2, offsets)`` for the
-    same texts (shared hash pass of the fused scoring UDF)."""
-    vals = texts.fillna("").tolist()
-    h3, h2, offsets = hashed if hashed is not None else ngram._batch_hashes(vals)
+def score_batch(texts: pd.Series, lp3: np.ndarray, lp2: np.ndarray) -> pd.Series:
+    """``logppl`` of one pandas batch of texts."""
+    h3, h2, offsets = ngram._batch_hashes(texts.fillna("").tolist())
     return pd.Series(_ppl_hashed(h3, h2, offsets, lp3, lp2))
 
 
@@ -74,10 +67,8 @@ def _ppl_hashed(
     return np.round(logppl, 3)
 
 
-def train_artifact(
-    corpus: DataFrame, text_col: str = "text"
-) -> tuple[np.ndarray, np.ndarray]:
-    """Train the trigram LM on a DataFrame corpus — the distributed
+def train_artifact(corpus: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Train the trigram LM on a DataFrame corpus's ``text`` — the distributed
     counterpart of ``build_artifact`` (which uses the embedded seed
     corpus).  Each Arrow batch bincounts its hashed trigram/context
     buckets locally and emits only NONZERO (bucket, c3, c2) partials, so
@@ -86,7 +77,7 @@ def train_artifact(
     DIM-bounded model rows (model-sized, never corpus-sized — the
     guards.py policy).  Training on the embedded seed corpus through
     this path is bit-identical to ``build_artifact`` (pinned by test)."""
-    rows = _counts_partials(corpus, text_col).collect()  # <= DIM rows
+    rows = _counts_partials(corpus).collect()  # <= DIM rows
     c3 = np.zeros(ngram.DIM, dtype=np.float64)
     c2 = np.zeros(ngram.DIM, dtype=np.float64)
     for r in rows:
@@ -97,7 +88,7 @@ def train_artifact(
     return lp3, lp2
 
 
-def _counts_partials(corpus: DataFrame, text_col: str) -> DataFrame:
+def _counts_partials(corpus: DataFrame) -> DataFrame:
     from quality_filter.shipping import ensure_shipped
 
     ensure_shipped(corpus.sparkSession)
@@ -113,19 +104,19 @@ def _counts_partials(corpus: DataFrame, text_col: str) -> DataFrame:
             yield pd.DataFrame({"bucket": nz, "c3": c3[nz], "c2": c2[nz]})
 
     partials = corpus.select(
-        F.coalesce(F.col(text_col), F.lit("")).alias("__text")
+        F.coalesce(F.col("text"), F.lit("")).alias("__text")
     ).mapInPandas(counts, "bucket int, c3 long, c2 long")
     return partials.groupBy("bucket").agg(
         F.sum("c3").alias("c3"), F.sum("c2").alias("c2")
     )
 
 
-def write_model(corpus: DataFrame, path: str, text_col: str = "text") -> None:
+def write_model(corpus: DataFrame, path: str) -> None:
     """Train and PERSIST the LM as a (bucket, c3, c2) parquet table —
     fully distributed (the training job never collects to the driver;
     raw counts are stored so ``SMOOTH_K`` can change at load time).
     Load with ``read_model``."""
-    _counts_partials(corpus, text_col).write.mode("overwrite").parquet(path)
+    _counts_partials(corpus).write.mode("overwrite").parquet(path)
 
 
 def read_model(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
@@ -143,11 +134,9 @@ def read_model(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
 
 
 def with_perplexity(
-    df: DataFrame,
-    text_col: str = "text",
-    artifact: tuple[np.ndarray, np.ndarray] | None = None,
+    df: DataFrame, artifact: tuple[np.ndarray, np.ndarray] | None = None
 ) -> DataFrame:
-    """Append a ``logppl`` column (double, bits per byte).  ``artifact``
+    """Append a ``logppl`` column (double, bits per byte) for ``text``.  ``artifact``
     swaps in a corpus-trained model from ``train_artifact`` (default:
     the embedded multilingual seed model).  r9: batched Arrow UDF
     hashing straight off the Arrow string buffers
@@ -167,7 +156,7 @@ def with_perplexity(
         h3, h2, offsets = ngram._batch_hashes_from_arrow(arr)
         return pa.array(_ppl_hashed(h3, h2, offsets, lp3, lp2), type=pa.float64())
 
-    return df.withColumn("logppl", _ppl(F.col(text_col)))
+    return df.withColumn("logppl", _ppl(F.col("text")))
 
 
 def keep_by_perplexity(threshold: float) -> Column:

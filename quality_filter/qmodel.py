@@ -48,9 +48,9 @@ def feature_cols() -> list[str]:
     return [_PFX + c for c in FEATURE_COLS]
 
 
-def doc_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_quality_features(df: DataFrame) -> DataFrame:
     """Append the ``_qf_``-prefixed Gopher quality + repetition metric
-    columns (doubles) in one scan-shaped pass.  Input columns — including
+    columns (doubles) of ``text`` in one scan-shaped pass.  Input columns — including
     any that share a metric's public name, e.g. ``word_count`` on an
     already-audited table — pass through byte-identical."""
     from quality_filter.textstats import (
@@ -78,12 +78,12 @@ def doc_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     shelved = {
         c: f"{_PFX}shelf_{c}"
         for c in FEATURE_COLS + _GATE_FLAG_COLS
-        if c in df.columns and c != text_col
+        if c in df.columns and c != "text"
     }
     work = df
     for c, tmp in shelved.items():
         work = work.withColumnRenamed(c, tmp)
-    work = with_gopher_repetition(with_gopher_flags(work, text_col), text_col)
+    work = with_gopher_repetition(with_gopher_flags(work))
     for c in FEATURE_COLS:
         work = work.withColumn(_PFX + c, F.col(c).cast("double")).drop(c)
     work = work.drop(*_GATE_FLAG_COLS)
@@ -95,7 +95,6 @@ def doc_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 def train_quality_classifier(
     df: DataFrame,
     label_col: str,
-    text_col: str = "text",
     max_iter: int = 50,
     reg_param: float = 0.0,
 ):
@@ -111,7 +110,7 @@ def train_quality_classifier(
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import StandardScaler, VectorAssembler
 
-    feats = doc_quality_features(df, text_col).withColumn(
+    feats = doc_quality_features(df).withColumn(
         "_label", F.col(label_col).cast("double")
     )
     pipe = Pipeline(stages=[
@@ -177,17 +176,15 @@ def load_quality_classifier(path: str):
     return PipelineModel.load(path)
 
 
-def score_quality(
-    model, df: DataFrame, text_col: str = "text", out_col: str = "quality_prob"
-) -> DataFrame:
-    """Append ``out_col`` = P(label=1) for every document.  Pure-JVM
+def score_quality(model, df: DataFrame) -> DataFrame:
+    """Append ``quality_prob`` = P(label=1) for every document.  Pure-JVM
     transform (feature projection + one dot product per row); the
     original columns pass through unchanged."""
     from pyspark.ml.functions import vector_to_array
 
-    scored = model.transform(doc_quality_features(df, text_col))
+    scored = model.transform(doc_quality_features(df))
     keep = [c for c in df.columns]
     return scored.select(
         *keep,
-        vector_to_array(F.col("probability")).getItem(1).alias(out_col),
+        vector_to_array(F.col("probability")).getItem(1).alias("quality_prob"),
     )

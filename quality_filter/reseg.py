@@ -78,12 +78,9 @@ def segments_expr(text: Column) -> Column:
     return F.aggregate(sentences_expr(text), acc0, merge, finish)
 
 
-def resegment(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One row per packed segment: (id, seg_idx, segment)."""
-    segs = df.select(
-        F.col(id_col),
-        F.posexplode(segments_expr(F.coalesce(F.col(text_col), F.lit("")))).alias(
-            "seg_idx", "segment"
-        ),
+def resegment(df: DataFrame) -> DataFrame:
+    """One row per packed segment of ``text``: (doc_id, seg_idx, segment)."""
+    text = F.coalesce(F.col("text"), F.lit(""))
+    return df.select(
+        "doc_id", F.posexplode(segments_expr(text)).alias("seg_idx", "segment")
     )
-    return segs

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from quality_filter.guards import bounded_collect
 
 _MIX = 2654435761  # Knuth multiplicative hash constant
+SEED = 42  # the seeded-random family's Spark seed
 
 
 def deterministic_bucket(key, buckets: int = 1000):
@@ -36,33 +37,23 @@ def deterministic_bucket(key, buckets: int = 1000):
     )
 
 
-def deterministic_split(
-    df: DataFrame, key: str, weights: tuple[float, ...] = (0.7, 0.15, 0.15),
-    names: tuple[str, ...] = ("train", "val", "test"),
-) -> DataFrame:
-    """R2: reproducible train/val/test split via integer mixing (replaces
-    ``train_test_split(stratify=...)``, ``src/prep_data_for_training.py:62-120``
-    — at 10^12 rows stratification converges to the weights by LLN)."""
-    assert len(weights) == len(names) and abs(sum(weights) - 1) < 1e-9
+def deterministic_split(df: DataFrame, key: str) -> DataFrame:
+    """R2: reproducible 70/15/15 train/val/test split via integer mixing
+    (replaces ``train_test_split(stratify=...)``,
+    ``src/prep_data_for_training.py:62-120`` — at 10^12 rows
+    stratification converges to the weights by LLN)."""
     b = deterministic_bucket(key)
-    cases = []
-    acc = 0.0
-    for w, name in zip(weights[:-1], names[:-1]):
-        acc += w * 1000
-        cases.append((acc, name))
-    expr = F.lit(names[-1])
-    for threshold, name in reversed(cases):  # innermost-out ⇒ first-match-wins
-        expr = F.when(b < threshold, F.lit(name)).otherwise(expr)
-    return df.withColumn("split", expr)
+    split = F.when(b < 700, "train").when(b < 850, "val").otherwise("test")
+    return df.withColumn("split", split)
 
 
-def sample_uniform(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
+def sample_uniform(df: DataFrame, n: int) -> DataFrame:
     """R1: uniform n-row sample (``src/sample_data.py:6``)."""
-    return df.orderBy(F.rand(seed)).limit(n)
+    return df.orderBy(F.rand(SEED)).limit(n)
 
 
 def downsample_label(
-    df: DataFrame, label_col: str, label: str, fraction: float, seed: int = 42
+    df: DataFrame, label_col: str, label: str, fraction: float
 ) -> DataFrame:
     """R3: keep ``fraction`` of rows with ``label``, all others
     (``src/prep_data_for_training.py:123-128``)."""
@@ -73,14 +64,14 @@ def downsample_label(
         )
     ]
     fractions = {l: (fraction if l == label else 1.0) for l in labels}
-    return df.sampleBy(label_col, fractions, seed)
+    return df.sampleBy(label_col, fractions, SEED)
 
 
 def stratified_split_sampled(
-    df: DataFrame, label_col: str, train: float = 0.7, val: float = 0.15, seed: int = 42
+    df: DataFrame, label_col: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """R2 sampled variant: per-label fractions via sampleBy, remainder by
-    anti-join on a row fingerprint.  Label vocabulary must be bounded
+    """R2 sampled variant: 70/15/15 per-label fractions via sampleBy,
+    remainder by anti-join on a row fingerprint.  Label vocabulary must be bounded
     (≤ ``guards.MAX_DRIVER_CARDINALITY``) — the per-label fraction map is driver
     state by construction (``sampleBy`` takes a dict)."""
     labels = [
@@ -91,9 +82,9 @@ def stratified_split_sampled(
     ]
     key = F.xxhash64(*[F.col(c) for c in df.columns])
     with_key = df.withColumn("_k", key)
-    tr = with_key.sampleBy(label_col, {l: train for l in labels}, seed)
+    tr = with_key.sampleBy(label_col, {l: 0.7 for l in labels}, SEED)
     rest = with_key.join(tr.select("_k"), "_k", "left_anti")
-    va = rest.sampleBy(label_col, {l: val / (1 - train) for l in labels}, seed + 1)
+    va = rest.sampleBy(label_col, {l: 0.15 / (1 - 0.7) for l in labels}, SEED + 1)
     te = rest.join(va.select("_k"), "_k", "left_anti")
     return tr.drop("_k"), va.drop("_k"), te.drop("_k")
 
@@ -103,7 +94,7 @@ def shard(df: DataFrame, key: str, n_shards: int, shard_idx: int) -> DataFrame:
     return df.filter(F.pmod(F.xxhash64(F.col(key)), F.lit(n_shards)) == shard_idx)
 
 
-def seeded_shuffle(df: DataFrame, seed: int = 42) -> DataFrame:
+def seeded_shuffle(df: DataFrame) -> DataFrame:
     """R4: deterministic global shuffle order (``src/train_classifier.py:175``)."""
-    return df.orderBy(F.rand(seed))
+    return df.orderBy(F.rand(SEED))
 

@@ -16,13 +16,11 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "quality_filter",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cores, 8)
+    shuffle_partitions = max(2 * cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)

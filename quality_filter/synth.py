@@ -188,6 +188,11 @@ _DOC_BOILERPLATE = (
     "subscribe to our newsletter for all of the updates and have the "
     "latest news delivered to be read with your morning coffee."
 )
+# planted page fractions (1 in N) and the generator's partition count
+SOUP_EVERY = 16
+BRACE_EVERY = 32
+BOILER_EVERY = 4
+DOC_PARTS = 64
 
 
 def synth_documents(
@@ -195,31 +200,27 @@ def synth_documents(
     n_docs: int,
     seed: int = 42,
     dup_every: int = 23,
-    soup_every: int = 16,
-    brace_every: int = 32,
-    boiler_every: int = 4,
-    parts: int = 64,
 ) -> DataFrame:
     """Deterministic distributed pre-training document corpus
     (``doc_id, source, text``) for gate/dedup/corpus benchmarks: natural-ish
     multi-line prose with blank-line paragraph breaks, where most pages
     survive the C4/Gopher gates and the planted fractions exercise every
     corpus-build stage — ``dup_every`` exact-duplicate pairs (doc k ≡ doc
-    k−1), ``soup_every`` stopword-free word-soup pages (Gopher stopword
-    rule drops), ``brace_every`` pages containing ``{`` (C4 page rule
-    drops), ``boiler_every`` pages ending in a shared boilerplate
+    k−1), ``SOUP_EVERY`` stopword-free word-soup pages (Gopher stopword
+    rule drops), ``BRACE_EVERY`` pages containing ``{`` (C4 page rule
+    drops), ``BOILER_EVERY`` pages ending in a shared boilerplate
     paragraph (paragraph-dedup work).  Pure ``spark.range`` + Catalyst
     expressions: zero driver data, any size, same seed → same bytes."""
     pool = F.array(*[F.lit(w) for w in _DOC_WORDS])
     content_pool = F.array(*[F.lit(w) for w in _DOC_WORDS[8:]])
-    ids = spark.range(0, n_docs, 1, parts)
+    ids = spark.range(0, n_docs, 1, DOC_PARTS)
     is_dup = (F.col("id") % dup_every == 0) & (F.col("id") > 0)
     cid = F.when(is_dup, F.col("id") - 1).otherwise(F.col("id"))
 
     def h(*cols):
         return F.xxhash64(F.lit(seed), cid, *cols)
 
-    is_soup = F.pmod(h(F.lit("soup")), F.lit(soup_every)) == 0
+    is_soup = F.pmod(h(F.lit("soup")), F.lit(SOUP_EVERY)) == 0
     active_pool = F.when(is_soup, content_pool).otherwise(pool)
     pool_n = F.size(active_pool)
     n_lines = (F.pmod(h(F.lit("nl")), F.lit(16)) + 8).cast("int")  # 8..23
@@ -243,11 +244,11 @@ def synth_documents(
     lines = F.transform(F.sequence(F.lit(0), n_lines - 1), line_expr)
     text = F.array_join(lines, "\n")
     text = F.when(
-        F.pmod(h(F.lit("boiler")), F.lit(boiler_every)) == 0,
+        F.pmod(h(F.lit("boiler")), F.lit(BOILER_EVERY)) == 0,
         F.concat(text, F.lit("\n\n" + _DOC_BOILERPLATE)),
     ).otherwise(text)
     text = F.when(
-        F.pmod(h(F.lit("brace")), F.lit(brace_every)) == 0,
+        F.pmod(h(F.lit("brace")), F.lit(BRACE_EVERY)) == 0,
         F.concat(text, F.lit("\nconfig = { unparsed }")),
     ).otherwise(text)
     source = F.concat(

@@ -47,7 +47,6 @@ def consolidate_labels(
     spark: SparkSession,
     labels: list[str],
     n_clusters: int,
-    seed: int = 42,
     review_fn=None,
 ) -> dict[str, str]:
     """Cluster synonym-ish labels; return {label: replacement}.
@@ -63,14 +62,14 @@ def consolidate_labels(
 
     vecs = _label_vectors(labels)
     # project to a dense low-dim space for MLlib (hash dim is 32k-sparse)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     proj = rng.randn(vecs.shape[1], 32)
     dense = vecs @ proj
     df = spark.createDataFrame(
         [(lab, Vectors.dense(dense[i])) for i, lab in enumerate(labels)],
         ["label", "features"],
     )
-    km = BisectingKMeans(k=n_clusters, seed=seed, featuresCol="features")
+    km = BisectingKMeans(k=n_clusters, seed=42, featuresCol="features")
     model = km.fit(df)
     pred = model.transform(df).select("label", "prediction").collect()
     centers = model.clusterCenters()
@@ -191,10 +190,8 @@ def fake_accepting_reviewer(prompts: list[str]) -> list[str]:
     return outs
 
 
-def apply_label_map(
-    df: DataFrame, mapping: dict[str, str], label_col: str = "label"
-) -> DataFrame:
-    """J3: broadcast replacement-map lookup with identity fallback.
+def apply_label_map(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
+    """J3: broadcast replacement-map lookup on ``label`` with identity fallback.
     None keys are skipped (None breaks the deterministic sort, and
     ``element_at(map, NULL)`` could never match them anyway — NULL
     labels fall through to the identity fallback)."""
@@ -202,22 +199,20 @@ def apply_label_map(
     for k, v in sorted((k, v) for k, v in mapping.items() if k is not None):
         pairs += [F.lit(k), F.lit(v)]
     m = F.create_map(*pairs) if pairs else F.create_map()
-    return df.withColumn(
-        label_col,
-        F.coalesce(F.element_at(m, F.col(label_col)), F.col(label_col)),
-    )
+    label = F.col("label")
+    return df.withColumn("label", F.coalesce(F.element_at(m, label), label))
 
 
-def class_weights(df: DataFrame, label_col: str = "label") -> dict[str, float]:
+def class_weights(df: DataFrame) -> dict[str, float]:
     """G5: n_samples / (n_classes * count_per_class)
     (``src/train_classifier.py:98-106``).  The per-class counts are a
     vocabulary-style driver pull — bounded by the label taxonomy — so the
     collect goes through the shared cardinality guard."""
     from quality_filter.guards import bounded_collect
 
-    counts = {r[label_col]: r["n"] for r in bounded_collect(
-        df.groupBy(label_col).agg(F.count(F.lit(1)).alias("n")),
-        f"label column {label_col!r}",
+    counts = {r["label"]: r["n"] for r in bounded_collect(
+        df.groupBy("label").agg(F.count(F.lit(1)).alias("n")),
+        "label column 'label'",
     )}
     n_samples = sum(counts.values())
     n_classes = len(counts)

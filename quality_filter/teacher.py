@@ -69,7 +69,6 @@ def label_lines_with_teacher(
     text_col: str = "text",
     language: str = "English",
     lines_per_batch: int = 20,
-    valid_labels: list[str] | None = None,
     prompt: str = "condensed",
 ) -> DataFrame:
     """Label a line-grained table with a teacher model.
@@ -78,8 +77,8 @@ def label_lines_with_teacher(
     or sparse (order is what matters).  ``generate_fn`` maps a list of
     prompt strings to the same number of raw model outputs; it is
     pickled to executors, so per-worker clients should lazy-init inside
-    it.  ``valid_labels=None`` uses the reference's fixed 9-label
-    taxonomy; anything the teacher emits outside it coerces to Clean
+    it.  Labels are the reference's fixed 9-label taxonomy; anything
+    the teacher emits outside it coerces to Clean
     (ref :341-366).  ``prompt`` is 'condensed' (CLASSIFY_TEMPLATE) or
     'verbatim' (byte-compatible replay of src/prompts.py:129).
 
@@ -95,7 +94,6 @@ def label_lines_with_teacher(
         raise ValueError(f"prompt must be 'condensed' or 'verbatim', got {prompt!r}")
     if lines_per_batch < 1:
         raise ValueError(f"lines_per_batch must be >= 1, got {lines_per_batch}")
-    valid = list(LABELS) if valid_labels is None else list(valid_labels)
     ensure_shipped(lines.sparkSession)
 
     # -- 1. EVEN batches per document (ref ``batched``, :130-132:
@@ -183,7 +181,7 @@ def label_lines_with_teacher(
         ).alias("_label_raw"),
     )
     label = F.coalesce(F.col("_label_raw"), F.lit("Clean"))
-    coerced = F.when(label.isin(valid), label).otherwise(F.lit("Clean"))
+    coerced = F.when(label.isin(list(LABELS)), label).otherwise(F.lit("Clean"))
     return exploded.select(
         id_col, idx_col, text_col, coerced.alias("label")
     )

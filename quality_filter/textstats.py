@@ -43,12 +43,12 @@ def quality_score_expr(text: Column, words: Column | None = None) -> Column:
     )
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """Append ``quality_score``; the word array is materialized in its
     own column first so the five references inside the score share one
     split (CollapseProject keeps a non-cheap multiply-referenced alias
     materialized), then dropped."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     return (
         df.withColumn("_qs_words", F.split(F.lower(text), r"\s+"))
         .withColumn(
@@ -86,7 +86,7 @@ def _nonempty_words(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda w: w != F.lit(""))
 
 
-def with_gopher_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_gopher_flags(df: DataFrame) -> DataFrame:
     """Gopher quality-rule metrics + keep decision per document.
 
     Adds ``word_count``, ``mean_word_len``, ``symbol_ratio`` (# / ellipsis
@@ -102,7 +102,7 @@ def with_gopher_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     UDF the way langid does.  All ratios are exact-int divisions cast to
     double, so results are bit-stable across engines and partitionings.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     words = _nonempty_words(text)
     wc = F.size(words)
     wc1 = F.greatest(F.lit(1), wc).cast("double")
@@ -170,7 +170,7 @@ C4_MIN_WORDS_PER_LINE = 5
 C4_MIN_LINES = 3
 
 
-def c4_line_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
+def c4_line_filter(df: DataFrame) -> DataFrame:
     """C4 cleaning as one narrow projection + filter: per-line keep rule
     evaluated inside array HOFs (no explode → no shuffle, doc order and
     partitioning preserved), then the page-level gates.  Returns kept
@@ -182,7 +182,7 @@ def c4_line_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
     exchanges; the line explode/reassemble alternative would shuffle
     every byte of the corpus twice for identical output.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     lines = F.split(text, r"\n")
     kept = F.filter(
         lines,
@@ -230,7 +230,7 @@ def _dup_fracs(units: Column) -> tuple[Column, Column]:
     return dup_frac, dup_char_frac
 
 
-def with_gopher_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_gopher_repetition(df: DataFrame) -> DataFrame:
     """Gopher duplicate-line/paragraph metrics + keep decision.
 
     Lines are newline-separated non-empty strings; paragraphs are
@@ -239,7 +239,7 @@ def with_gopher_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     and ``repetition_keep`` (all four under the frozen GOPHER_MAX_*
     thresholds).  Same scale shape as the other gates: one narrow
     projection, exact-int divisions, zero exchanges."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     lines = F.filter(F.split(text, r"\n"), lambda ln: ln != F.lit(""))
     paras = F.filter(F.split(text, _PARA_SPLIT_RE), lambda p: p != F.lit(""))
     dl, dlc = _dup_fracs(lines)
@@ -259,7 +259,7 @@ def with_gopher_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("repetition_keep", keep)
 
 
-def gopher_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_filter(df: DataFrame) -> DataFrame:
     """The composed Gopher corpus gate: keep documents passing ALL quality
     rules (with_gopher_flags) and all repetition rules
     (with_gopher_repetition).  One scan-shaped pass; both metric sets
@@ -267,7 +267,7 @@ def gopher_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
     the input schema (``with_gopher_flags`` and ``with_gopher_repetition``
     keep the per-rule metric columns for auditing)."""
     in_cols = df.columns
-    out = with_gopher_repetition(with_gopher_flags(df, text_col), text_col)
+    out = with_gopher_repetition(with_gopher_flags(df))
     keep = F.col("gopher_keep") & F.col("repetition_keep")
     return out.filter(keep).select(*in_cols)
 

@@ -15,8 +15,7 @@ from quality_filter.synth import synth_transcripts
 def spark():
     spark = get_spark(
         "quality_filter_tests",
-        cores=4,
-        shuffle_partitions=8,
+        cores=4,  # 8 shuffle partitions (2 × cores)
         extra_conf={"spark.driver.memory": "4g"},
     )
     yield spark

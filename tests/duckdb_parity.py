@@ -677,10 +677,10 @@ def q_perplexity_turns(spark, sf_dir):
     logppl than trigram-alien junk for EVERY doc."""
     from quality_filter.perplexity import with_perplexity
 
-    docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("coherent"))
+    docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("text"))
     junk = F.lit("zq xv kj wf pg qz vx jk fw gp qqz vvx kkj wwf ppg")
-    d1 = with_perplexity(docs, "coherent").withColumnRenamed("logppl", "ppl_c")
-    d2 = with_perplexity(d1.withColumn("junk", junk), "junk").withColumnRenamed(
+    d1 = with_perplexity(docs).withColumnRenamed("logppl", "ppl_c")
+    d2 = with_perplexity(d1.withColumn("text", junk)).withColumnRenamed(
         "logppl", "ppl_j"
     )
     return d2.select(
@@ -1145,7 +1145,7 @@ def q_eval_report(spark, sf_dir):
         )
     )
     pairs = t.withColumn("prediction", pred)
-    return eval_report(pairs, label_col="label", pred_col="prediction")
+    return eval_report(pairs)
 
 
 @_register("eval_summary", _eval_summary_sql())
@@ -1163,7 +1163,7 @@ def q_eval_summary(spark, sf_dir):
         )
     )
     pairs = t.withColumn("prediction", pred)
-    return eval_summary(pairs, label_col="label", pred_col="prediction")
+    return eval_summary(pairs)
 
 
 @_register("cohen_kappa", None)  # oracle attached below via _register_kappa
@@ -1639,7 +1639,7 @@ def q_langid_train_score(spark, sf_dir):
     from quality_filter.langid import train_profiles, with_langid
 
     corpus = _train_corpus_spark(spark, sf_dir)
-    artifact = train_profiles(corpus, text_col="text", lang_col="lang_label")
+    artifact = train_profiles(corpus, lang_col="lang_label")
     docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("text"))
     return with_langid(docs, artifact=artifact).select(
         "doc_id", "lang", "lang_prob"

@@ -164,6 +164,27 @@ def test_run_leaves_session_overwrite_mode_alone(spark, transcripts, tmpdir):
     assert sorted(r[BUCKET_COL] for r in written.collect()) == [0, 1, 2, 3]
 
 
+@pytest.mark.parametrize(
+    "n_buckets, buckets_per_batch, name",
+    [(0, 4, "n_buckets"), (-2, 4, "n_buckets"), (16, 0, "buckets_per_batch")],
+)
+def test_bucket_counts_below_one_raise(
+    spark, transcripts, tmpdir, n_buckets, buckets_per_batch, name
+):
+    """A bucket count below 1 fails loudly before anything is read or
+    written (n_buckets <= 0 used to process nothing and return [], and
+    buckets_per_batch=0 raised range()'s own error)."""
+    import os
+
+    with pytest.raises(ValueError, match=f"^{name} must be >= 1"):
+        run_checkpointed(
+            spark, transcripts, _pipeline, f"{tmpdir}/out", f"{tmpdir}/manifest",
+            "bad", n_buckets=n_buckets, buckets_per_batch=buckets_per_batch,
+        )
+    assert not os.path.exists(f"{tmpdir}/out")
+    assert not os.path.exists(f"{tmpdir}/manifest")
+
+
 def test_bucket_rerun_replaces_not_duplicates(spark, transcripts, tmpdir):
     out, manifest = f"{tmpdir}/out", f"{tmpdir}/manifest"
     run_checkpointed(

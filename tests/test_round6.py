@@ -40,12 +40,17 @@ def test_occupancy_guard_leaves_nothing_persisted(spark):
     rows = [(i, f"alpha bravo charlie delta echo{i} fox{i * 3}") for i in range(50)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sig = minhash_signatures(docs)
-    # other tests in the shared session may hold legitimate checkpoints;
-    # assert the GUARD adds none (delta, not absolute zero)
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # other tests in the shared session may hold legitimate checkpoints,
+    # and the context cleaner may drop some of them meanwhile: assert that
+    # no RDD the GUARD's calls create stays persisted
+    before = persisted()
     for _ in range(3):
         lsh_candidates(sig, max_bucket_size=5).count()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert persisted() - before == set()
 
 
 def test_guard_capped_set_matches_r5_design(spark):
@@ -117,6 +122,20 @@ def test_segment_size_must_cover_k(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="segment_size"):
         duplicated_span_marks(df, k=5, segment_size=3).collect()
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_k_below_one_raises(spark, k):
+    """``corpus --substring-k 0`` reaches this: it used to fail inside
+    Spark with xxhash64's WRONG_NUM_ARGS instead of naming k."""
+    from quality_filter.dedup import duplicated_span_marks, substring_dedup
+
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    for grams in ("window", "hof"):
+        with pytest.raises(ValueError, match="^k must be >= 1"):
+            duplicated_span_marks(df, k=k, grams=grams)
+        with pytest.raises(ValueError, match="^k must be >= 1"):
+            substring_dedup(df, k=k, grams=grams)
 
 
 # -- MinHash banding S-curve (docs/minhash_tuning.md) ------------------------

@@ -100,14 +100,14 @@ def test_sampled_family_runs(spark):
     df = spark.createDataFrame(
         [(i, "Clean" if i % 5 else "Junk") for i in range(1000)], "id long, label string"
     )
-    assert sample_uniform(df, 10, seed=1).count() == 10
-    down = downsample_label(df, "label", "Clean", 0.1, seed=1)
+    assert sample_uniform(df, 10).count() == 10
+    down = downsample_label(df, "label", "Clean", 0.1)
     counts = {r["label"]: r["n"] for r in down.groupBy("label").agg(F.count("*").alias("n")).collect()}
     assert counts["Junk"] == 200 and counts["Clean"] < 200
-    tr, va, te = stratified_split_sampled(df, "label", seed=3)
+    tr, va, te = stratified_split_sampled(df, "label")
     assert tr.count() + va.count() + te.count() == 1000
     assert shard(df, "id", 5, 0).count() + sum(shard(df, "id", 5, i).count() for i in range(1, 5)) == 1000
-    assert seeded_shuffle(df, 1).first() is not None
+    assert seeded_shuffle(df).first() is not None
 
 
 # --- io --------------------------------------------------------------------
@@ -117,14 +117,14 @@ def test_jsonl_roundtrip_unicode(spark, tmpdir):
         [(1, "héllo wörld 中文"), (2, 'quotes "and" backslash \\')],
         "id long, text string",
     )
-    write_jsonl(df, f"{tmpdir}/out", single_file=True)
+    write_jsonl(df, f"{tmpdir}/out")
     back = read_jsonl(spark, f"{tmpdir}/out", T.StructType([
         T.StructField("id", T.LongType()), T.StructField("text", T.StringType())]))
     got = {r["id"]: r["text"] for r in back.collect()}
     assert got == {1: "héllo wörld 中文", 2: 'quotes "and" backslash \\'}
     # ensure_ascii=False equivalence: raw bytes contain the unicode chars
     import glob
-    raw = open(glob.glob(f"{tmpdir}/out/part-*")[0], "rb").read()
+    raw = b"".join(open(f, "rb").read() for f in glob.glob(f"{tmpdir}/out/part-*"))
     assert "héllo".encode() in raw and "中文".encode() in raw
 
 
@@ -145,13 +145,13 @@ def test_compressed_roundtrip(spark, tmpdir):
 
     codec, ext, magic = "zstd", ".zst", b"\x28\xb5\x2f\xfd"
     try:
-        write_jsonl(df, f"{tmpdir}/z", compression=codec, single_file=True)
+        write_jsonl(df, f"{tmpdir}/z", compression=codec)
     except Exception:
         codec, ext, magic = "gzip", ".gz", b"\x1f\x8b"
-        write_jsonl(df, f"{tmpdir}/z", compression=codec, single_file=True)
+        write_jsonl(df, f"{tmpdir}/z", compression=codec)
     files = glob.glob(f"{tmpdir}/z/part-*")
-    assert files and files[0].endswith(ext), files
-    assert open(files[0], "rb").read(len(magic)) == magic
+    assert files and all(f.endswith(ext) for f in files), files
+    assert all(open(f, "rb").read(len(magic)) == magic for f in files)
     back = read_jsonl(spark, f"{tmpdir}/z", schema)
     got = {r["id"]: r["text"] for r in back.collect()}
     assert len(got) == 100 and got[7] == "zeile 7 mit ünïcode 中文"

@@ -13,10 +13,11 @@ Plain AST scans, so they need no linter package.
 - Every top-level def and class of the package is run by something too:
   its name is used as code by something the CLI, the benchmark or an
   owned module reaches, or ``UNREACHED_DEF_OWNERS`` names why it stays.
-- Every defaulted parameter of a top-level def in the ``PARAM_LINTED``
-  modules is set by something: a call in the CLI, the benchmark or the
-  package passes it, or ``UNSET_PARAM_OWNERS`` names the test it is the
-  seam or oracle for.  A parameter with one value in use is a constant.
+- Every defaulted parameter of a top-level def of the package is set by
+  something: a call in the CLI, the benchmark or the package passes it,
+  or ``UNSET_PARAM_OWNERS`` names the test files it is the seam or oracle
+  for, and one of them passes it a value other than its default.  A
+  parameter with one value in use is a constant.
 """
 
 from __future__ import annotations
@@ -72,28 +73,58 @@ UNREACHED_DEF_OWNERS = {
 }
 
 
-# Modules whose defaulted parameters must each be passed by some caller.
-PARAM_LINTED = {
-    "checkpoint", "cluster", "corpus", "dedup", "pipeline", "rules", "scoring",
-    "scrub",
-}
-
-# Defaulted parameters of those modules that no call in the CLI, the
-# benchmark or the package passes, and the test each is the seam or the
-# oracle of.
+# Defaulted parameters that no call in the CLI, the benchmark or the
+# package passes: why each stays, then the test files that pass it a value
+# other than its default (the seam or the oracle it serves).
 UNSET_PARAM_OWNERS = {
-    "cluster.connected_components.max_iter": "the non-convergence test "
-    "(test_cluster.py::test_connected_components_max_iter_bounds_label_changing_rounds)",
-    "dedup.lsh_candidates.max_bucket_size": "small caps at test scale, None "
-    "the self-join oracle (test_round5.py, test_round6.py)",
-    "dedup.duplicated_span_marks.grams": "'hof' is the oracle of the window "
-    "marks (test_round5.py, test_round6.py)",
-    "dedup.duplicated_span_marks.segment_size": "the segment seam of the "
-    "giant-document test (test_round6.py)",
-    "dedup.substring_dedup.grams": "'hof' is the oracle of the giant-document "
-    "test (test_round6.py)",
-    "dedup.substring_dedup.segment_size": "the segment seam of the "
-    "giant-document test (test_round6.py)",
+    "cli.main.argv": ("the CLI's own tests drive it in-process",
+                      "test_cli.py", "test_corpus.py", "test_qmodel.py",
+                      "test_teacher.py"),
+    "cluster.connected_components.max_iter": (
+        "the non-convergence test", "test_cluster.py"),
+    "dedup.lsh_candidates.max_bucket_size": (
+        "small caps at test scale, None the self-join oracle",
+        "test_round5.py", "test_round6.py"),
+    "dedup.duplicated_span_marks.grams": (
+        "'hof' is the oracle of the window marks",
+        "test_round5.py", "test_round6.py"),
+    "dedup.duplicated_span_marks.segment_size": (
+        "the segment seam of the giant-document test", "test_round6.py"),
+    "dedup.substring_dedup.grams": (
+        "'hof' is the oracle of the giant-document test", "test_round6.py"),
+    "dedup.substring_dedup.segment_size": (
+        "the segment seam of the giant-document test", "test_round6.py"),
+    "docmodel.doc_gates.doc_score_max": ("SURVEY P1", "test_docmodel.py"),
+    "docmodel.doc_gates.require_robots_allowed": (
+        "SURVEY S7", "test_docmodel.py"),
+    "io.write_jsonl.compression": (
+        "SURVEY S12: the compressed round trip",
+        "test_textstats_sampling_io.py"),
+    "langid.score_batch.hashed": (
+        "the shared-hash path of the oracle", "test_round6.py"),
+    "langid.train_profiles.lang_col": (
+        "any label column trains the same model",
+        "test_round7.py", "duckdb_parity.py"),
+    "langid.with_langid.artifact": (
+        "scores with a corpus-trained model",
+        "test_corpus.py", "duckdb_parity.py"),
+    "perplexity.with_perplexity.artifact": (
+        "scores with a corpus-trained model",
+        "test_corpus.py", "duckdb_parity.py"),
+    "qmodel.train_quality_classifier.max_iter": (
+        "each L-BFGS iteration is a Spark job: fewer at test scale",
+        "test_qmodel.py", "duckdb_parity.py"),
+    "qmodel.train_quality_classifier.reg_param": (
+        "the margin-separated training world", "duckdb_parity.py"),
+    "sampling.deterministic_bucket.buckets": (
+        "the 1-of-5 shard case", "duckdb_parity.py"),
+    "synth.synth_transcripts.max_turns": (
+        "the shared fixture's and the F1 gate's conversation lengths",
+        "conftest.py", "test_f1_gate.py"),
+    "synth.synth_transcripts.with_truth": (
+        "the planted language is the langid oracle", "test_scorers.py"),
+    "taxonomy.consolidate_labels.review_fn": (
+        "the reviewer is the model-call seam", "test_teacher.py"),
 }
 
 
@@ -325,28 +356,60 @@ def test_every_def_is_reached_or_owned():
     assert stale == [], f"UNREACHED_DEF_OWNERS lists reached or deleted {stale}"
 
 
-def _defaulted_params(node: ast.FunctionDef) -> list[str]:
+def _defaults(node: ast.FunctionDef) -> dict[str, ast.expr]:
+    """Defaulted parameter → its default expression."""
     args = node.args
     positional = args.posonlyargs + args.args
-    names = [a.arg for a in positional[len(positional) - len(args.defaults):]]
-    return names + [
-        a.arg for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None
-    ]
+    defaults = dict(zip(
+        [a.arg for a in positional[len(positional) - len(args.defaults):]],
+        args.defaults,
+    ))
+    defaults.update(
+        (a.arg, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None
+    )
+    return defaults
+
+
+def _package_imports(tree: ast.Module, modules: set[str]) -> dict[str, tuple]:
+    """Local name → (package module, def name, or None for the module
+    itself) of every package import in ``tree``."""
+    targets = {}
+    for node in _imports(tree):
+        for a in node.names:
+            if isinstance(node, ast.Import):
+                parts = a.name.split(".")
+                if a.asname and parts[0] == "quality_filter" and len(parts) == 2:
+                    targets[a.asname] = (parts[1], None)
+            elif node.module == "quality_filter" and a.name in modules:
+                targets[a.asname or a.name] = (a.name, None)
+            elif (node.module or "").startswith("quality_filter."):
+                targets[a.asname or a.name] = (node.module.split(".")[1], a.name)
+    return targets
+
+
+def _functions(package: dict[str, str]) -> dict[str, list]:
+    """Def name → [(``module.def``, node)] over the top-level functions."""
+    functions: dict[str, list] = {}
+    for module, source in package.items():
+        for node in ast.parse(source).body:
+            if isinstance(node, ast.FunctionDef):
+                functions.setdefault(node.name, []).append((f"{module}.{node.name}", node))
+    return functions
 
 
 def _call_facts(module: str, source: str, functions: dict, free: bool):
     """(``module.def.param`` key a call passes, the key it depends on or
-    None) for every call in ``source`` of a top-level package function.
-    A call matches every def of the called name (import aliases
-    resolved).  An argument that is just a defaulted parameter of the
+    None, whether the value passed is the default) for every call in
+    ``source`` of a top-level package function.  A call through a package
+    import (``M.f`` with ``M`` a module, or ``f`` imported from one)
+    matches that module's def; any other call matches every def of the
+    called name.  An argument that is just a defaulted parameter of the
     enclosing top-level def is a pass-through: it depends on that
     parameter, unless ``free`` (the CLI and the benchmark, whose values
     count)."""
     tree = ast.parse(source)
-    alias = {
-        a.asname: a.name for node in _imports(tree) if isinstance(node, ast.ImportFrom)
-        for a in node.names if a.asname
-    }
+    modules = {key.split(".")[0] for defs in functions.values() for key, _ in defs}
+    targets = _package_imports(tree, modules)
     enclosing = {}  # call → the top-level def it sits in
     for node in tree.body:
         if isinstance(node, ast.FunctionDef):
@@ -356,10 +419,22 @@ def _call_facts(module: str, source: str, functions: dict, free: bool):
         if not isinstance(call, ast.Call):
             continue
         f = call.func
-        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if isinstance(f, ast.Name):
+            in_module, name = targets.get(f.id, (None, f.id))
+            if name is None:  # a module called as a function
+                continue
+        elif isinstance(f, ast.Attribute):
+            in_module, item = targets.get(getattr(f.value, "id", None), (None, None))
+            name = f.attr
+            if item is not None:  # an attribute of an imported def
+                in_module = None
+        else:
+            continue
         outer = None if free else enclosing.get(call)
-        for key, node in functions.get(alias.get(name, name), ()):
-            defaulted = _defaulted_params(node)
+        for key, node in functions.get(name, ()):
+            if in_module is not None and key.split(".")[0] != in_module:
+                continue
+            defaults = _defaults(node)
             positional = [a.arg for a in node.args.posonlyargs + node.args.args]
             passed = []  # (param, value or None for a starred argument)
             for i, arg in enumerate(call.args):
@@ -370,34 +445,31 @@ def _call_facts(module: str, source: str, functions: dict, free: bool):
                     passed.append((positional[i], arg))
             for kw in call.keywords:
                 if kw.arg is None:
-                    passed += [(p, None) for p in defaulted]
+                    passed += [(p, None) for p in defaults]
                 else:
                     passed.append((kw.arg, kw.value))
             for param, value in passed:
-                if param not in defaulted:
+                if param not in defaults:
                     continue
                 via = None
                 if (
                     outer is not None and isinstance(value, ast.Name)
-                    and value.id in _defaulted_params(outer)
+                    and value.id in _defaults(outer)
                 ):
                     via = f"{module}.{outer.name}.{value.id}"
-                yield f"{key}.{param}", via
+                is_default = value is not None and (
+                    ast.dump(value) == ast.dump(defaults[param])
+                )
+                yield f"{key}.{param}", via, is_default
 
 
-def unset_params(
-    package: dict[str, str], entry_sources: list[str], linted: set[str]
-) -> set[str]:
+def unset_params(package: dict[str, str], entry_sources: list[str]) -> set[str]:
     """``module.def.param`` of the defaulted parameters of the top-level
-    defs of the ``linted`` modules that no call passes: not a call in
+    defs of ``package`` that no call passes: not a call in
     ``entry_sources`` (the benchmark) or in the CLI, nor a call elsewhere
     in ``package`` unless it passes a parameter of its own enclosing def
     that is itself passed (computed to a fixed point)."""
-    functions: dict[str, list] = {}
-    for module, source in package.items():
-        for node in ast.parse(source).body:
-            if isinstance(node, ast.FunctionDef):
-                functions.setdefault(node.name, []).append((f"{module}.{node.name}", node))
+    functions = _functions(package)
     facts = [
         fact for src in entry_sources
         for fact in _call_facts("<entry>", src, functions, free=True)
@@ -408,25 +480,37 @@ def unset_params(
     grew = True
     while grew:
         grew = False
-        for key, via in facts:
+        for key, via, _ in facts:
             if key not in passed and (via is None or via in passed):
                 passed.add(key)
                 grew = True
     every = {
         f"{key}.{p}" for defs in functions.values() for key, node in defs
-        if key.split(".")[0] in linted for p in _defaulted_params(node)
+        for p in _defaults(node)
     }
     return every - passed
 
 
 def unset_param_problems(
-    package: dict[str, str], entry_sources: list[str], linted: set[str],
-    owners: dict[str, str],
-) -> tuple[list[str], list[str]]:
+    package: dict[str, str], entry_sources: list[str], owners: dict[str, tuple],
+    tests: dict[str, str],
+) -> tuple[list[str], list[str], list[str]]:
     """(unset parameters no owner names, owner entries that name a passed
-    or deleted parameter)."""
-    unset = unset_params(package, entry_sources, linted)
-    return sorted(unset - owners.keys()), sorted(owners.keys() - unset)
+    or deleted parameter, owner entries none of whose test files — by
+    name in ``tests`` — passes the parameter a value other than its
+    default: a test that passes the default is no seam)."""
+    unset = unset_params(package, entry_sources)
+    functions = _functions(package)
+    seams = {
+        (key, name) for name, source in tests.items()
+        for key, _, is_default in _call_facts(name, source, functions, free=True)
+        if not is_default
+    }
+    unseamed = [
+        key for key, (_, *files) in owners.items()
+        if not any((key, f) in seams for f in files)
+    ]
+    return sorted(unset - owners.keys()), sorted(owners.keys() - unset), sorted(unseamed)
 
 
 def test_param_scan_flags_an_unset_param():
@@ -446,23 +530,44 @@ def test_param_scan_flags_an_unset_param():
         "b": "def use(x):\n    return kwonly(x, flag=x)\n",
     }
     bench = ["from quality_filter.a import helper\nhelper(0, extra=5)\n"]
-    unset = unset_params(package, bench, {"a"})
+    unset = unset_params(package, bench)
     # run.width is never passed, so helper.size and deep.size, which only
     # its pass-through sets, are unset too; run.mode comes from the CLI
     assert unset == {"a.run.width", "a.run.seam", "a.helper.size", "a.deep.size"}
-    owners = {"a.run.seam": "a test seam", "a.deep.size": "an oracle", "a.gone.p": "x"}
-    orphans, stale = unset_param_problems(package, bench, {"a"}, owners)
+    tests = {
+        "test_a.py": "from quality_filter.a import run\nrun(0, seam=3)\n",
+        # the default passed is no seam
+        "test_b.py": "import quality_filter.a as A\nA.deep(0, size=1)\n",
+        # a call through another module's import is not a call of a.deep
+        "test_c.py": "from quality_filter import b\nb.deep(0, size=9)\n",
+    }
+    owners = {
+        "a.run.seam": ("a test seam", "test_a.py"),
+        "a.deep.size": ("an oracle", "test_b.py", "test_c.py"),
+        "a.gone.p": ("deleted", "test_a.py"),
+    }
+    orphans, stale, unseamed = unset_param_problems(package, bench, owners, tests)
     assert orphans == ["a.helper.size", "a.run.width"]
     assert stale == ["a.gone.p"]
+    assert unseamed == ["a.deep.size", "a.gone.p"]
+    # the same owner is a seam once a named file passes another value
+    tests["test_b.py"] = "from quality_filter.a import deep as d\nd(0, size=2)\n"
+    assert unset_param_problems(package, bench, owners, tests)[2] == ["a.gone.p"]
 
 
 def test_every_defaulted_param_is_passed_or_owned():
     package = {p.stem: p.read_text() for p in PACKAGE.glob("*.py")}
-    orphans, stale = unset_param_problems(
-        package, [p.read_text() for p in BENCHMARK], PARAM_LINTED, UNSET_PARAM_OWNERS
+    tests = {p.name: p.read_text() for p in TESTS.glob("*.py")}
+    orphans, stale, unseamed = unset_param_problems(
+        package, [p.read_text() for p in BENCHMARK], UNSET_PARAM_OWNERS, tests
     )
     assert orphans == [], (
         f"no caller in the CLI, perfbench or the package passes {orphans}: "
         "make each a constant, or name the test it serves in UNSET_PARAM_OWNERS"
     )
     assert stale == [], f"UNSET_PARAM_OWNERS lists passed or deleted {stale}"
+    assert unseamed == [], (
+        f"no test file that UNSET_PARAM_OWNERS names passes {unseamed} a "
+        "value other than its default: make each a constant, or name the "
+        "test that does"
+    )
