@@ -10,8 +10,8 @@ conversation/agent transcripts:
 
 The reference's "line" of a document maps 1:1 to the "turn" of a
 conversation here.  All hot-path operators are pure Catalyst expressions;
-the only Python on executors is vectorized Arrow/pandas UDFs (language ID,
-perplexity).
+the only Python on executors is the vectorized Arrow scorer UDF
+(``scoring.with_scores``: language ID and perplexity).
 """
 
 from quality_filter.labels import LABELS, CLEAN, parse_labels

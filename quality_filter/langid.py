@@ -1,5 +1,6 @@
-"""fastText-style character/byte n-gram language ID as a vectorized
-pandas UDF with a broadcast model artifact.
+"""fastText-style character/byte n-gram language ID: the model artifact,
+its distributed trainer and the batch scoring core that
+``scoring.with_scores`` runs inside its Arrow UDF.
 
 The reference *consumes* per-line language codes (``seg_langs`` /
 ``lang``+``prob``, read at ``src/classifier_inference_pipeline.py:111,115``,
@@ -18,7 +19,6 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
 
 from quality_filter import ngram
 
@@ -126,7 +126,7 @@ def train_profiles(
     collect — same guards-compliant shape as
     ``perplexity.train_artifact``.  Training on the embedded seed corpus
     through this path is bit-identical to ``build_artifact`` (pinned by
-    test).  Use with ``with_langid(artifact=…)``."""
+    test).  Score with ``scoring.with_scores(artifacts=…)``."""
     spark = corpus.sparkSession
     from quality_filter.guards import bounded_collect
     from quality_filter.shipping import ensure_shipped
@@ -148,8 +148,8 @@ def train_profiles(
 
         for pdf in batches:
             for lang, grp in pdf.groupby("__lang", sort=True):
-                hashes, _ = ng.batch_trigram_hashes(
-                    grp["__text"].fillna("").tolist()
+                hashes, _, _ = ng.batch_hashes(
+                    pa.array(grp["__text"], type=pa.string())
                 )
                 c = np.bincount(hashes, minlength=ng.DIM)
                 nz = np.flatnonzero(c)
@@ -175,27 +175,6 @@ def train_profiles(
     return langs, np.ascontiguousarray(profiles, dtype=np.float32)
 
 
-def score_batch(
-    texts: pd.Series,
-    langs: list[str],
-    profiles: np.ndarray,
-    hashed: tuple[np.ndarray, np.ndarray] | None = None,
-) -> pd.DataFrame:
-    """Vectorized langid over one Arrow batch → DataFrame(lang, lang_prob).
-
-    ``hashed`` — optional precomputed ``(trigram_hashes, offsets)`` for
-    the same texts (the fused langid+perplexity UDF hashes the batch
-    once and shares it; results are identical by the determinism
-    contract of ``ngram._batch_hashes``)."""
-    vals = texts.fillna("").tolist()
-    if hashed is None:
-        hashes, offsets = ngram.batch_trigram_hashes(vals)
-    else:
-        hashes, offsets = hashed
-    lang_out, prob_out = _score_hashed(hashes, offsets, len(vals), langs, profiles)
-    return pd.DataFrame({"lang": lang_out, "lang_prob": prob_out})
-
-
 def _score_hashed(
     hashes: np.ndarray,
     offsets: np.ndarray,
@@ -203,8 +182,8 @@ def _score_hashed(
     langs: list[str],
     profiles: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Core of ``score_batch`` on precomputed hashes (shared by the
-    pandas and arrow UDF paths; bit-identical by construction)."""
+    """(lang, lang_prob) per row from a batch's trigram hashes
+    (``ngram.batch_hashes``)."""
     counts = (offsets[1:] - offsets[:-1]).astype(np.float64)
     n_langs = profiles.shape[0]
     # Per-language 1-D gather (from an L2-resident 128 KiB profile row)
@@ -231,40 +210,3 @@ def _score_hashed(
     lang_out[short] = UNKNOWN
     prob_out = np.where(short, 0.0, np.round(prob_out, 3))
     return lang_out, prob_out
-
-
-def with_langid(
-    df: DataFrame, artifact: tuple[list[str], np.ndarray] | None = None
-) -> DataFrame:
-    """Append ``lang`` / ``lang_prob`` columns for ``text`` via a batched Arrow UDF
-    (model loaded once per executor python worker, broadcast artifact;
-    r9 — hashes straight off the Arrow string buffers, see
-    ngram._batch_hashes_from_arrow; bit-identical to the former pandas
-    path).  ``artifact`` swaps in a corpus-trained model from
-    ``train_profiles`` (default: the embedded multilingual seed model)."""
-    spark = df.sparkSession
-    from quality_filter.shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    langs, profiles = build_artifact() if artifact is None else artifact
-    bc = spark.sparkContext.broadcast((langs, profiles))
-
-    @arrow_udf("struct<lang:string, lang_prob:double>")
-    def _langid(arr: pa.Array) -> pa.Array:
-        langs_, profiles_ = bc.value
-        h3, _, offsets = ngram._batch_hashes_from_arrow(arr)
-        lang_out, prob_out = _score_hashed(h3, offsets, len(arr), langs_, profiles_)
-        return pa.StructArray.from_arrays(
-            [
-                pa.array(lang_out, type=pa.string()),
-                pa.array(prob_out, type=pa.float64()),
-            ],
-            ["lang", "lang_prob"],
-        )
-
-    out = df.withColumn("_lid", _langid(F.col("text")))
-    return (
-        out.withColumn("lang", F.col("_lid.lang"))
-        .withColumn("lang_prob", F.col("_lid.lang_prob"))
-        .drop("_lid")
-    )

@@ -3,91 +3,42 @@ scorers.
 
 Replaces the reference's GPU model invocations
 (``src/classifier_inference_pipeline.py:61-89``) with hashed byte-trigram
-linear models evaluated in numpy over whole Arrow batches: the entire
-batch's UTF-8 bytes are concatenated once, rolling trigram hashes are
-computed with three shifted vector ops, and per-row sums come from
-``np.add.reduceat`` — no per-row Python in the scoring math.
+linear models evaluated in numpy over whole Arrow batches: the hashes are
+read straight off a string array's UTF-8 data buffer, rolling trigram
+hashes are computed with three shifted vector ops, and per-row sums come
+from ``np.add.reduceat`` — no per-row Python in the scoring math.
 
-Determinism: each row is prefixed with two NUL pad bytes, so every trigram
-(including the two pad-crossing ones) is a pure function of that row's own
-bytes — results are independent of batch composition / partitioning.
+Determinism: each row is read as if prefixed with two NUL pad bytes, so
+every trigram (including the two pad-crossing ones) is a pure function of
+that row's own bytes — results are independent of batch composition /
+partitioning.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 DIM = 1 << 15  # hash buckets
 _MASK = DIM - 1
 _MUL = 65599  # classic sdbm-style rolling multiplier
 
 
-def _batch_hashes(
-    texts: list[str] | "np.ndarray",
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Internal: compacted (trigram_hashes, context_bigram_hashes, offsets)
-    for a batch.  Row i owns span ``[offsets[i], offsets[i+1])`` of both
-    hash arrays; every row contributes exactly ``len(utf8_bytes)``
-    positions thanks to the 2-byte NUL prefix (position j's trigram covers
-    bytes j-2..j, its context bigram bytes j-2..j-1)."""
-    bufs = []
-    lengths = np.empty(len(texts), dtype=np.int64)
-    for i, t in enumerate(texts):
-        b = (t or "").encode("utf-8")
-        lengths[i] = len(b)
-        bufs.append(b"\x00\x00" + b)
-    if not bufs:
-        z = np.empty(0, dtype=np.int32)
-        return z, z, np.zeros(1, dtype=np.int64)
-    # int32 end to end: masking commutes with the rolling multiply
-    # (mod 2^15 is a ring hom, and 2^15 | 2^32 so even a WRAPPING int32
-    # product preserves the low 15 bits — numpy integer overflow is
-    # defined two's-complement wrap, and `& _MASK` reads exactly those
-    # low bits), and halving the hash-stream width halves the scorers'
-    # dominant memory traffic.  h3 reuses h2 as its prefix state.
-    blob = np.frombuffer(b"".join(bufs), dtype=np.uint8).astype(np.int32)
-    h2 = (blob[:-2] * _MUL + blob[1:-1]) & _MASK
-    h3 = (h2 * _MUL + blob[2:]) & _MASK
-    # row i's positions start at its padded start; padded regions of the
-    # NEXT row would otherwise bleed in, so compact to per-row spans.
-    # The layout makes the drop set tiny and exact: between consecutive
-    # rows there are exactly two pad positions, ends[i] and ends[i]+1
-    # (the final row has none — the hash arrays stop at its last byte),
-    # so two scatter writes build the mask with no per-position pass.
-    padded = lengths + 2
-    starts = np.zeros(len(texts), dtype=np.int64)
-    np.cumsum(padded[:-1], out=starts[1:])
-    ends = starts + lengths
-    keep = np.ones(h3.shape[0], dtype=bool)
-    keep[ends[:-1]] = False
-    keep[ends[:-1] + 1] = False
-    offsets = np.empty(len(texts) + 1, dtype=np.int64)
-    offsets[0] = 0
-    np.cumsum(lengths, out=offsets[1:])
-    return h3[keep], h2[keep], offsets
+def batch_hashes(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Compacted ``(trigram_hashes, context_bigram_hashes, offsets)`` of a
+    pyarrow String/LargeString array (chunked or sliced; nulls read as "").
+    Row i owns span ``[offsets[i], offsets[i+1])`` of both hash arrays;
+    every row contributes exactly ``len(utf8_bytes)`` positions thanks to
+    the 2-byte NUL prefix (position j's trigram covers bytes j-2..j, its
+    context bigram bytes j-2..j-1).  Callers holding Python strings pass
+    ``pa.array(texts, type=pa.string())``.
 
-
-def batch_trigram_hashes(texts: list[str] | "np.ndarray") -> tuple[np.ndarray, np.ndarray]:
-    """Hash all byte trigrams of a batch of strings → (hashes, offsets)."""
-    h3, _, offsets = _batch_hashes(texts)
-    return h3, offsets
-
-
-def _batch_hashes_from_arrow(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """``_batch_hashes`` computed directly from a pyarrow String/LargeString
-    array's buffers — bit-identical output (nulls read as ""), with ZERO
-    per-row Python: the UTF-8 bytes already sit concatenated in the Arrow
-    data buffer, so the former str-materialize → re-encode → join round
-    trip (three full copies of the batch text plus one Python object per
-    row) collapses into numpy ops over the existing buffer (r9).
-
-    The global rolling hash uses each row's last-two-bytes context at the
-    two positions that should see the NUL-pad context instead; those are
+    No per-row Python: the UTF-8 bytes already sit concatenated in the
+    Arrow data buffer, so the hashes are numpy ops over that buffer.  The
+    global rolling hash uses each row's last-two-bytes context at the two
+    positions that should see the NUL-pad context instead; those are
     fixed up by two vectorized scatter writes per batch (first and second
-    position of every non-empty row), which is exactly the per-row
-    prefix semantics of ``_batch_hashes``."""
-    import pyarrow as pa
-
+    position of every non-empty row)."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     o_dtype = np.int64 if pa.types.is_large_string(arr.type) else np.int32
@@ -119,6 +70,12 @@ def _batch_hashes_from_arrow(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     pb = np.empty(blob.shape[0] + 2, dtype=np.int32)
     pb[:2] = 0
     pb[2:] = blob
+    # int32 end to end: masking commutes with the rolling multiply
+    # (mod 2^15 is a ring hom, and 2^15 | 2^32 so even a WRAPPING int32
+    # product preserves the low 15 bits — numpy integer overflow is
+    # defined two's-complement wrap, and `& _MASK` reads exactly those
+    # low bits), and halving the hash-stream width halves the scorers'
+    # dominant memory traffic.  h3 reuses h2 as its prefix state.
     h2 = (pb[:-2] * _MUL + pb[1:-1]) & _MASK
     h3 = (h2 * _MUL + blob) & _MASK
     # per-row context fixups (see docstring): positions relative to base
@@ -169,9 +126,8 @@ def segment_sums(values: np.ndarray, offsets: np.ndarray) -> np.ndarray:
 
 def train_counts(corpus: list[str]) -> np.ndarray:
     """Hashed trigram counts of a corpus (float64[DIM])."""
-    hashes, _ = batch_trigram_hashes(corpus)
-    counts = np.bincount(hashes, minlength=DIM).astype(np.float64)
-    return counts
+    hashes, _, _ = batch_hashes(pa.array(corpus, type=pa.string()))
+    return np.bincount(hashes, minlength=DIM).astype(np.float64)
 
 
 def log_profile(counts: np.ndarray) -> np.ndarray:

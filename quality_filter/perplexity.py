@@ -1,4 +1,6 @@
-"""KenLM-style byte-trigram perplexity scorer as a vectorized pandas UDF.
+"""KenLM-style byte-trigram perplexity: the language model artifact, its
+distributed trainer and persistence, the batch scoring core that
+``scoring.with_scores`` runs inside its Arrow UDF, and the ``logppl`` gate.
 
 The reference's doc-quality gate consumes an upstream score
 (``doc_scores[0] < 5``, ``src/salvage_low_quality_data.py:246``) it never
@@ -19,7 +21,6 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
 
 from quality_filter import ngram
 from quality_filter.langid import SEED_CORPORA
@@ -30,22 +31,33 @@ LOG2 = float(np.log(2.0))
 
 
 def build_artifact() -> tuple[np.ndarray, np.ndarray]:
-    """(lp3[DIM], lp2[DIM]): log(c3+k) and log(c2+k*256) over hashed
-    trigram / context-bigram buckets of the full multilingual seed corpus."""
+    """(lp3[DIM], lp2[DIM]) over hashed trigram / context-bigram buckets
+    of the full multilingual seed corpus."""
     corpus = [s for sents in SEED_CORPORA.values() for s in sents]
-    h3, h2, _ = ngram._batch_hashes(corpus)
-    c3 = np.bincount(h3, minlength=ngram.DIM).astype(np.float64)
-    c2 = np.bincount(h2, minlength=ngram.DIM).astype(np.float64)
+    h3, h2, _ = ngram.batch_hashes(pa.array(corpus, type=pa.string()))
+    return _smoothed(
+        np.bincount(h3, minlength=ngram.DIM).astype(np.float64),
+        np.bincount(h2, minlength=ngram.DIM).astype(np.float64),
+    )
+
+
+def _smoothed(c3: np.ndarray, c2: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The (lp3, lp2) artifact of trigram / context-bigram counts:
+    log(c3+k) and log(c2+k*256)."""
     # float32 halves lookup memory traffic; accumulation stays float64
     lp3 = np.log(c3 + SMOOTH_K).astype(np.float32)
     lp2 = np.log(c2 + SMOOTH_K * 256.0).astype(np.float32)
     return lp3, lp2
 
 
-def score_batch(texts: pd.Series, lp3: np.ndarray, lp2: np.ndarray) -> pd.Series:
-    """``logppl`` of one pandas batch of texts."""
-    h3, h2, offsets = ngram._batch_hashes(texts.fillna("").tolist())
-    return pd.Series(_ppl_hashed(h3, h2, offsets, lp3, lp2))
+def _from_count_rows(rows) -> tuple[np.ndarray, np.ndarray]:
+    """The artifact of collected ``(bucket, c3, c2)`` count rows (≤ DIM)."""
+    c3 = np.zeros(ngram.DIM, dtype=np.float64)
+    c2 = np.zeros(ngram.DIM, dtype=np.float64)
+    for r in rows:
+        c3[r["bucket"]] = r["c3"]
+        c2[r["bucket"]] = r["c2"]
+    return _smoothed(c3, c2)
 
 
 def _ppl_hashed(
@@ -55,8 +67,7 @@ def _ppl_hashed(
     lp3: np.ndarray,
     lp2: np.ndarray,
 ) -> np.ndarray:
-    """Core of ``score_batch`` on precomputed hashes (shared by the
-    pandas and arrow UDF paths; bit-identical by construction)."""
+    """``logppl`` per row from a batch's hashes (``ngram.batch_hashes``)."""
     i3 = h3.astype(np.intp, copy=False)  # intp: fast-path fancy index
     i2 = h2.astype(np.intp, copy=False)
     per_pos = lp3[i3] - lp2[i2]  # log P(byte | 2-byte context)
@@ -77,15 +88,7 @@ def train_artifact(corpus: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     DIM-bounded model rows (model-sized, never corpus-sized — the
     guards.py policy).  Training on the embedded seed corpus through
     this path is bit-identical to ``build_artifact`` (pinned by test)."""
-    rows = _counts_partials(corpus).collect()  # <= DIM rows
-    c3 = np.zeros(ngram.DIM, dtype=np.float64)
-    c2 = np.zeros(ngram.DIM, dtype=np.float64)
-    for r in rows:
-        c3[r["bucket"]] = r["c3"]
-        c2[r["bucket"]] = r["c2"]
-    lp3 = np.log(c3 + SMOOTH_K).astype(np.float32)
-    lp2 = np.log(c2 + SMOOTH_K * 256.0).astype(np.float32)
-    return lp3, lp2
+    return _from_count_rows(_counts_partials(corpus).collect())  # <= DIM rows
 
 
 def _counts_partials(corpus: DataFrame) -> DataFrame:
@@ -97,7 +100,7 @@ def _counts_partials(corpus: DataFrame) -> DataFrame:
         from quality_filter import ngram as ng
 
         for pdf in batches:
-            h3, h2, _ = ng._batch_hashes(pdf["__text"].fillna("").tolist())
+            h3, h2, _ = ng.batch_hashes(pa.array(pdf["__text"], type=pa.string()))
             c3 = np.bincount(h3, minlength=ng.DIM)
             c2 = np.bincount(h2, minlength=ng.DIM)
             nz = np.flatnonzero(c3 | c2)
@@ -122,41 +125,7 @@ def write_model(corpus: DataFrame, path: str) -> None:
 def read_model(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
     """Load a ``write_model`` table into the broadcastable (lp3, lp2)
     artifact (one model-sized collect, ≤ DIM rows)."""
-    rows = spark.read.parquet(path).collect()
-    c3 = np.zeros(ngram.DIM, dtype=np.float64)
-    c2 = np.zeros(ngram.DIM, dtype=np.float64)
-    for r in rows:
-        c3[r["bucket"]] = r["c3"]
-        c2[r["bucket"]] = r["c2"]
-    lp3 = np.log(c3 + SMOOTH_K).astype(np.float32)
-    lp2 = np.log(c2 + SMOOTH_K * 256.0).astype(np.float32)
-    return lp3, lp2
-
-
-def with_perplexity(
-    df: DataFrame, artifact: tuple[np.ndarray, np.ndarray] | None = None
-) -> DataFrame:
-    """Append a ``logppl`` column (double, bits per byte) for ``text``.  ``artifact``
-    swaps in a corpus-trained model from ``train_artifact`` (default:
-    the embedded multilingual seed model).  r9: batched Arrow UDF
-    hashing straight off the Arrow string buffers
-    (ngram._batch_hashes_from_arrow) — bit-identical to the former
-    pandas path."""
-    spark = df.sparkSession
-    from quality_filter.shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    bc = spark.sparkContext.broadcast(
-        build_artifact() if artifact is None else artifact
-    )
-
-    @arrow_udf("double")
-    def _ppl(arr: pa.Array) -> pa.Array:
-        lp3, lp2 = bc.value
-        h3, h2, offsets = ngram._batch_hashes_from_arrow(arr)
-        return pa.array(_ppl_hashed(h3, h2, offsets, lp3, lp2), type=pa.float64())
-
-    return df.withColumn("logppl", _ppl(F.col("text")))
+    return _from_count_rows(spark.read.parquet(path).collect())
 
 
 def keep_by_perplexity(threshold: float) -> Column:

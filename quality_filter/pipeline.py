@@ -22,9 +22,12 @@ Reference semantics (all re-expressed as declarative Catalyst plans):
 - empty-doc drop — P4 (``src/filter_by_quality_label.py:188``).
 
 Per-conversation aggregates (trim bounds, document length, document
-language) are attached to every turn with a window over ``conv_id``: one
-shuffle, and the upstream subtree — scorer UDFs included — is evaluated
-exactly once in the same pass as the rows it attaches to.  Spark's
+language) are attached to every turn with windows over ``conv_id``, and
+the upstream subtree — the scorer UDF included — is evaluated exactly
+once in the same pass as the rows it attaches to.  Each cleaning
+pipeline shuffles the turn rows at most once: every window partitions on
+``conv_id`` (the document-language mass on ``(conv_id, lang)``, which a
+``conv_id`` partitioning satisfies), so they share one exchange.  Spark's
 WindowExec spills giant groups to disk, so skewed conversations are
 slow-but-safe.
 """
@@ -110,9 +113,12 @@ def with_document_lang(df: DataFrame) -> DataFrame:
     lang code.
 
     One linear pass — sum mass over (conv_id, lang), then
-    max(struct(mass, lang)) over conv_id.  The upstream subtree (langid
-    pandas UDF included) is evaluated exactly ONCE; costs two window
-    shuffles of the turn rows.
+    max(struct(mass, lang)) over conv_id.  The upstream subtree (the
+    scorer UDF included) is evaluated exactly ONCE.  On input already
+    partitioned by ``conv_id`` (salvage runs it after its pre-gate window)
+    both windows reuse that exchange, and their ``(conv_id, lang)`` sort
+    serves the ``conv_id`` windows after them; on unpartitioned input the
+    two windows shuffle once each.
     """
     w1 = Window.partitionBy("conv_id", "lang")
     w2 = Window.partitionBy("conv_id")
@@ -273,26 +279,42 @@ def salvage_pipeline(
     min_doc_length: int = DEFAULT_MIN_DOC_LENGTH,
 ) -> DataFrame:
     """The salvage path (``src/salvage_low_quality_data.py:176-259``)
-    over the transcript schema: doc length pre-gate → score → Clean ∧
+    over the transcript schema: score → doc length pre-gate → Clean ∧
     score>0.9 ∧ lang==document_lang → filter/trim → min-length post-gate.
 
     The transcript schema carries no document score, so the reference's
     ``doc_scores[0] < 5`` pre-gate is not applied here; on doc-shaped
     records it is ``docmodel.doc_gates(doc_score_max=)``.
 
-    Requires per-turn ``lang``/``lang_prob`` columns (from
-    ``quality_filter.langid``) already present, or they will be computed.
+    Per-turn ``lang``/``lang_prob`` columns already present (an upstream
+    language ID, as the reference consumes) are used as they are; when
+    both are absent ``scoring.with_scores`` computes them.  One without
+    the other is a ``ValueError``.
+
+    The scorer UDF runs before every window: Spark's Arrow UDF node does
+    not pass on its child's partitioning, so a UDF between two windows
+    would make the windows after it shuffle again.  The pre-gate,
+    document-language, trim and post-gate windows then share one
+    ``conv_id`` exchange — at the price of scoring the turns of
+    conversations the pre-gate drops.
     """
     if mode not in ("filter", "trim"):
         raise ValueError("Must choose either 'trim' or 'filter'")
-    # doc pre-gate: original doc length >= min_doc_length
-    work = apply_min_doc_length(df, min_doc_length)
-    scored = score_turns(work)
-    if "lang" not in scored.columns:
-        from quality_filter.langid import with_langid
+    lang_cols = {"lang", "lang_prob"} & set(df.columns)
+    if len(lang_cols) == 1:
+        (missing,) = {"lang", "lang_prob"} - lang_cols
+        raise ValueError(
+            f"salvage input has {lang_cols.pop()!r} but no {missing!r}: "
+            "pass both language columns or neither"
+        )
+    scored = score_turns(df)
+    if not lang_cols:
+        from quality_filter.scoring import with_scores
 
-        scored = with_langid(scored)
-    scored = with_document_lang(scored)
+        scored = with_scores(scored).drop("logppl")
+    # doc pre-gate: original doc length >= min_doc_length.  Its window
+    # is the first, so the exchange partitions on conv_id alone.
+    scored = with_document_lang(apply_min_doc_length(scored, min_doc_length))
     if mode == "filter":
         out = apply_filter_mode(scored, keep_by_salvage())
     else:

@@ -1,13 +1,14 @@
-"""Combined one-pass UDF scoring: language ID + perplexity in a single
+"""The package's one scorer UDF: language ID + perplexity in a single
 Arrow transfer.
 
-Two chained pandas UDFs each serialize the ``text`` column to the Python
+Two chained UDFs would each serialize the ``text`` column to the Python
 worker; at 10^12-turn scale that doubles the Arrow IPC volume of the hot
-path.  This module fuses both scorers into one SCALAR_ITER UDF emitting
-``struct<lang, lang_prob, logppl>`` — one serialize, one worker pass,
-both broadcast artifacts resident together (the UDF analog of the
-reference's single classify pass per batch,
-``src/classifier_inference_pipeline.py:37-124``).
+path.  ``with_scores`` runs both scorers in one Arrow UDF emitting
+``struct<lang, lang_prob, logppl>`` — one serialize, one worker pass, one
+hash pass shared by both models, both broadcast artifacts resident
+together (the UDF analog of the reference's single classify pass per
+batch, ``src/classifier_inference_pipeline.py:37-124``).  The CLI's
+``score`` and ``salvage`` jobs run it.
 """
 
 from __future__ import annotations
@@ -21,29 +22,29 @@ from quality_filter import langid as L
 from quality_filter import perplexity as X
 
 
-def with_scores(df: DataFrame) -> DataFrame:
+def with_scores(df: DataFrame, artifacts: tuple | None = None) -> DataFrame:
     """Append ``lang``, ``lang_prob``, ``logppl`` in a single UDF stage:
     the fused full n-gram langid + perplexity Arrow pass (one serialize,
-    both artifacts resident)."""
+    both artifacts resident).  ``artifacts`` is a ``(langid, perplexity)``
+    pair of trained models — ``langid.train_profiles`` and
+    ``perplexity.train_artifact``/``read_model`` — and defaults to the
+    embedded multilingual seed models."""
     spark = df.sparkSession
     from quality_filter.shipping import ensure_shipped
 
     ensure_shipped(spark)
-    bc = spark.sparkContext.broadcast((L.build_artifact(), X.build_artifact()))
+    if artifacts is None:
+        artifacts = (L.build_artifact(), X.build_artifact())
+    bc = spark.sparkContext.broadcast(artifacts)
 
     @arrow_udf("struct<lang:string, lang_prob:double, logppl:double>")
     def _score(arr: pa.Array) -> pa.Array:
         from quality_filter import ngram
 
         (langs, profiles), (lp3, lp2) = bc.value
-        # r9: hash straight off the Arrow string buffers — the batch's
-        # UTF-8 bytes already sit concatenated in the data buffer, so
-        # the former pandas path's str-materialize → re-encode → join
-        # round trip (three text copies + one Python object per row)
-        # disappears; outputs are bit-identical
-        # (ngram._batch_hashes_from_arrow contract, pinned by test).
-        # Both scorers consume the same hash arrays.
-        h3, h2, offsets = ngram._batch_hashes_from_arrow(arr)
+        # hash straight off the Arrow string buffers; both scorers
+        # consume the same hash arrays
+        h3, h2, offsets = ngram.batch_hashes(arr)
         lang_out, prob_out = L._score_hashed(h3, offsets, len(arr), langs, profiles)
         logppl = X._ppl_hashed(h3, h2, offsets, lp3, lp2)
         return pa.StructArray.from_arrays(

@@ -2,7 +2,7 @@
 
 Local-mode settings mirror what the production job would set per executor:
 AQE on (runtime coalescing + skew handling), Arrow on (the langid /
-perplexity scorers are pandas UDFs), shuffle partitions sized to cores
+perplexity scorer is an Arrow UDF), shuffle partitions sized to cores
 rather than the 200 default.
 """
 

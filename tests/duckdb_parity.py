@@ -617,7 +617,7 @@ def q_lang_code_names(spark, sf_dir):
     )
 
 
-# -- deterministic seed-language text: lets the REAL pandas-UDF scorers be
+# -- deterministic seed-language text: lets the REAL scorer UDF be
 #    oracle-checked (the oracle states the expected prediction; the Spark
 #    side must earn it through the actual model) --------------------------
 
@@ -643,6 +643,15 @@ def _seed_text_col():
     return F.concat_ws(" ", s1, s2)
 
 
+def _local_hashes(texts: list[str]):
+    """``ngram.batch_hashes`` of a local list of texts (oracle side)."""
+    import pyarrow as pa
+
+    from quality_filter import ngram
+
+    return ngram.batch_hashes(pa.array(texts, type=pa.string()))
+
+
 def _langid_expected_sql() -> str:
     langs = _seed_langs()
     arr = "[" + ", ".join(f"'{l}'" for l in langs) + "]"
@@ -654,14 +663,14 @@ def _langid_expected_sql() -> str:
 
 @_register("langid_turns", _langid_expected_sql())
 def q_langid_turns(spark, sf_dir):
-    """M5: the real n-gram langid pandas UDF over deterministic
+    """M5: the real n-gram langid (the scorer UDF) over deterministic
     known-language text (two seed sentences per doc).  The oracle states
     the expected language arithmetically; any misprediction or confidence
     collapse by the actual model breaks the match."""
-    from quality_filter.langid import with_langid
+    from quality_filter.scoring import with_scores
 
     docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("text"))
-    out = with_langid(docs)
+    out = with_scores(docs)
     return out.select(
         "doc_id", "lang", (F.col("lang_prob") > 0.5).alias("high_conf")
     )
@@ -672,15 +681,15 @@ def q_langid_turns(spark, sf_dir):
     "SELECT doc_id, true AS coherent_lower FROM documents",
 )
 def q_perplexity_turns(spark, sf_dir):
-    """M6: the real trigram-LM perplexity pandas UDF, oracle-checked as a
-    separation assertion: natural seed text must score strictly lower
+    """M6: the real trigram-LM perplexity (the scorer UDF), oracle-checked
+    as a separation assertion: natural seed text must score strictly lower
     logppl than trigram-alien junk for EVERY doc."""
-    from quality_filter.perplexity import with_perplexity
+    from quality_filter.scoring import with_scores
 
     docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("text"))
     junk = F.lit("zq xv kj wf pg qz vx jk fw gp qqz vvx kkj wwf ppg")
-    d1 = with_perplexity(docs).withColumnRenamed("logppl", "ppl_c")
-    d2 = with_perplexity(d1.withColumn("text", junk)).withColumnRenamed(
+    d1 = with_scores(docs).select("doc_id", F.col("logppl").alias("ppl_c"))
+    d2 = with_scores(d1.withColumn("text", junk)).withColumnRenamed(
         "logppl", "ppl_j"
     )
     return d2.select(
@@ -697,8 +706,6 @@ def _ppl_expected_sql() -> str:
     on a separation boolean."""
     import math
 
-    import pandas as pd
-
     from quality_filter import perplexity
     from quality_filter.langid import SEED_CORPORA
 
@@ -712,7 +719,8 @@ def _ppl_expected_sql() -> str:
         sents = SEED_CORPORA[langs[r % len(langs)]]
         n = len(sents)
         texts.append(sents[r % n] + " " + sents[(r * 7 + 3) % n])
-    vals = perplexity.score_batch(pd.Series(texts), lp3, lp2)
+    h3, h2, off = _local_hashes(texts)
+    vals = perplexity._ppl_hashed(h3, h2, off, lp3, lp2)
     cases = " ".join(
         f"WHEN {r} THEN {float(v)!r}" for r, v in enumerate(vals)
     )
@@ -724,14 +732,14 @@ def _ppl_expected_sql() -> str:
 
 @_register("perplexity_values", _ppl_expected_sql())
 def q_perplexity_values(spark, sf_dir):
-    """M6 value parity: the REAL trigram-LM pandas UDF over deterministic
+    """M6 value parity: the REAL trigram-LM scorer UDF over deterministic
     seed text; the oracle states every expected logppl arithmetically
     (computed from the same frozen artifact), so any drift in hashing,
     smoothing, rounding, or the Arrow path breaks the match."""
-    from quality_filter.perplexity import with_perplexity
+    from quality_filter.scoring import with_scores
 
     docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("text"))
-    return with_perplexity(docs).select("doc_id", "logppl")
+    return with_scores(docs).select("doc_id", "logppl")
 
 
 def _salvage_e2e_sql() -> str:
@@ -771,12 +779,13 @@ def _salvage_e2e_sql() -> str:
 
 @_register("salvage_langid_e2e", _salvage_e2e_sql())
 def q_salvage_langid_e2e(spark, sf_dir):
-    """Salvage end-to-end with the REAL langid UDF: seed-sentence turns →
-    rule scoring → with_langid → with_document_lang (skew-safe max_by) →
+    """Salvage end-to-end with the REAL scorer UDF: seed-sentence turns →
+    rule scoring → with_scores → with_document_lang (skew-safe max_by) →
     composite salvage keep.  Conversations are single-language by
     construction, so the oracle can assert the full composite output."""
-    from quality_filter.langid import SEED_CORPORA, with_langid
+    from quality_filter.langid import SEED_CORPORA
     from quality_filter.pipeline import with_document_lang
+    from quality_filter.scoring import with_scores
 
     langs = _seed_langs()
     sents_arr = F.array(
@@ -811,7 +820,7 @@ def q_salvage_langid_e2e(spark, sf_dir):
         "doc_id", "conv_id", F.col("u.turn_idx").alias("turn_idx"), F.col("u.text").alias("text")
     )
     scored = score_turns(turns)
-    lid = with_langid(scored)
+    lid = with_scores(scored)
     docl = with_document_lang(lid)
     out = apply_filter_mode(docl, keep_by_salvage())
     return out.select("doc_id", "turn_idx", "lang")
@@ -1598,7 +1607,6 @@ def _train_corpus_spark(spark, sf_dir) -> DataFrame:
 
 def _trained_langid_sql() -> str:
     import numpy as np
-    import pandas as pd
 
     from quality_filter import langid, ngram
 
@@ -1607,19 +1615,20 @@ def _trained_langid_sql() -> str:
     li = {l: i for i, l in enumerate(langs)}
     cmat = np.zeros((len(langs), ngram.DIM), dtype=np.float64)
     for _, lang, text in rows:
-        h, _off = ngram.batch_trigram_hashes([text])
+        h, _, _off = _local_hashes([text])
         cmat[li[lang]] += np.bincount(h, minlength=ngram.DIM)
     profiles = np.ascontiguousarray(
         np.stack([ngram.log_profile(cmat[i]) for i in range(len(langs))]),
         dtype=np.float32,
     )
-    preds = langid.score_batch(pd.Series([t for _, _, t in rows]), langs, profiles)
+    h3, _, off = _local_hashes([t for _, _, t in rows])
+    pred_lang, pred_prob = langid._score_hashed(h3, off, len(rows), langs, profiles)
     m = len(rows)
     lang_cases = " ".join(
-        f"WHEN {r} THEN '{preds['lang'][r]}'" for r in range(m)
+        f"WHEN {r} THEN '{pred_lang[r]}'" for r in range(m)
     )
     prob_cases = " ".join(
-        f"WHEN {r} THEN {float(preds['lang_prob'][r])!r}" for r in range(m)
+        f"WHEN {r} THEN {float(pred_prob[r])!r}" for r in range(m)
     )
     return (
         f"SELECT doc_id, CASE CAST(doc_id % {m} AS INT) {lang_cases} END AS lang, "
@@ -1634,33 +1643,35 @@ def q_langid_train_score(spark, sf_dir):
     (langid.train_profiles — mapInPandas nonzero partials → map-side
     combinable sum → model-sized guarded collect) over the planted labeled
     world, then score the documents table with the trained artifact
-    through the production pandas-UDF path.  Uses a non-default label
+    through the production scorer UDF.  Uses a non-default label
     column name (lang_label) on purpose."""
-    from quality_filter.langid import train_profiles, with_langid
+    from quality_filter import perplexity
+    from quality_filter.langid import train_profiles
+    from quality_filter.scoring import with_scores
 
     corpus = _train_corpus_spark(spark, sf_dir)
     artifact = train_profiles(corpus, lang_col="lang_label")
     docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("text"))
-    return with_langid(docs, artifact=artifact).select(
+    artifacts = (artifact, perplexity.build_artifact())
+    return with_scores(docs, artifacts=artifacts).select(
         "doc_id", "lang", "lang_prob"
     )
 
 
 def _trained_ppl_sql() -> str:
     import numpy as np
-    import pandas as pd
 
     from quality_filter import ngram, perplexity
 
     texts = [t for _, _, t in _train_world_rows()]
-    h3, h2, _ = ngram._batch_hashes(texts)
+    h3, h2, off = _local_hashes(texts)
     c3 = np.zeros(ngram.DIM, dtype=np.float64)
     c2 = np.zeros(ngram.DIM, dtype=np.float64)
     c3 += np.bincount(h3, minlength=ngram.DIM)
     c2 += np.bincount(h2, minlength=ngram.DIM)
     lp3 = np.log(c3 + perplexity.SMOOTH_K).astype(np.float32)
     lp2 = np.log(c2 + perplexity.SMOOTH_K * 256.0).astype(np.float32)
-    vals = perplexity.score_batch(pd.Series(texts), lp3, lp2)
+    vals = perplexity._ppl_hashed(h3, h2, off, lp3, lp2)
     m = len(texts)
     cases = " ".join(f"WHEN {r} THEN {float(v)!r}" for r, v in enumerate(vals))
     return (
@@ -1674,14 +1685,16 @@ def q_perplexity_lm_roundtrip(spark, sf_dir):
     """M6 train→persist→reload→score round trip: perplexity.write_model
     trains the trigram LM fully distributed and persists raw
     (bucket, c3, c2) counts as parquet; read_model reloads + smooths;
-    the production pandas UDF scores the documents table with the
+    the production scorer UDF scores the documents table with the
     reloaded artifact.  The oracle is an independent local numpy
     replication, so any drift in training, persistence, smoothing, or
     the Arrow scoring path breaks the match."""
     import shutil
     import tempfile
 
-    from quality_filter.perplexity import read_model, with_perplexity, write_model
+    from quality_filter import langid
+    from quality_filter.perplexity import read_model, write_model
+    from quality_filter.scoring import with_scores
 
     corpus = _train_corpus_spark(spark, sf_dir).select("text")
     path = tempfile.mkdtemp(prefix="qf_r7_lm_")
@@ -1691,7 +1704,8 @@ def q_perplexity_lm_roundtrip(spark, sf_dir):
     finally:
         shutil.rmtree(path, ignore_errors=True)
     docs = _docs(spark, sf_dir).select("doc_id", _seed_text_col().alias("text"))
-    return with_perplexity(docs, artifact=artifact).select("doc_id", "logppl")
+    artifacts = (langid.build_artifact(), artifact)
+    return with_scores(docs, artifacts=artifacts).select("doc_id", "logppl")
 
 
 # ---------------------------------------------------------------------------

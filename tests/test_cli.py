@@ -68,10 +68,11 @@ def test_cli_salvage_min_doc_length_passthrough(spark, tmpdir):
     """--min-doc-length 1 must disable the gate (not silently remap to
     250), and the salvage default must be 250."""
     from quality_filter.cli import main
-    from quality_filter.langid import with_langid
 
-    df = with_langid(synth_transcripts(spark, n_convs=40, seed=9))
-    df.write.mode("overwrite").parquet(f"{tmpdir}/in")
+    # raw transcripts: the salvage job computes the language itself
+    synth_transcripts(spark, n_convs=40, seed=9).write.mode("overwrite").parquet(
+        f"{tmpdir}/in"
+    )
 
     main(["salvage", "--data-path", f"{tmpdir}/in",
           "--save-path", f"{tmpdir}/out1", "--filter", "--min-doc-length", "1"])

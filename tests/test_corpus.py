@@ -190,10 +190,11 @@ def test_train_artifact_matches_embedded_build(spark):
 def test_corpus_trained_model_scores(spark):
     """A model trained on natural text assigns lower logppl to natural
     text than to symbol junk when scoring with the trained artifact."""
-    from quality_filter.langid import SEED_CORPORA
-    from quality_filter.perplexity import train_artifact, with_perplexity
+    from quality_filter import langid
+    from quality_filter.perplexity import train_artifact
+    from quality_filter.scoring import with_scores
 
-    sents = [s for ss in SEED_CORPORA.values() for s in ss]
+    sents = [s for ss in langid.SEED_CORPORA.values() for s in ss]
     corpus = spark.createDataFrame(
         [(i, s) for i, s in enumerate(sents)], "i long, text string"
     )
@@ -204,16 +205,18 @@ def test_corpus_trained_model_scores(spark):
         "doc_id long, text string",
     )
     got = {r["doc_id"]: r["logppl"] for r in
-           with_perplexity(probe, artifact=art).collect()}
+           with_scores(probe, artifacts=(langid.build_artifact(), art)).collect()}
     assert got[1] < got[2]
 
 
 def test_train_profiles_matches_embedded_build(spark):
     """Distributed langid training on the embedded labeled seed corpus is
     bit-identical to build_artifact(); a model trained this way predicts
-    held-in languages through with_langid(artifact=...)."""
+    held-in languages through with_scores(artifacts=...)."""
     import numpy as np
-    from quality_filter.langid import SEED_CORPORA, build_artifact, train_profiles, with_langid
+    from quality_filter import perplexity
+    from quality_filter.langid import SEED_CORPORA, build_artifact, train_profiles
+    from quality_filter.scoring import with_scores
 
     rows = [(lang, s) for lang, ss in SEED_CORPORA.items() for s in ss]
     df = spark.createDataFrame(rows, "lang string, text string").repartition(8)
@@ -226,7 +229,9 @@ def test_train_profiles_matches_embedded_build(spark):
         [(1, "the committee reviewed the proposal and agreed to proceed with it")],
         "doc_id long, text string",
     )
-    got = with_langid(probe, artifact=(langs, profiles)).collect()[0]
+    got = with_scores(
+        probe, artifacts=((langs, profiles), perplexity.build_artifact())
+    ).collect()[0]
     assert got["lang"] == "en"
 
 

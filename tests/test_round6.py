@@ -1,5 +1,5 @@
 """Round-6 regression tests: lazy occupancy guard, segment-salted substring
-dedup, MinHash banding S-curve, scorer fast-path bit-identity."""
+dedup, MinHash banding S-curve."""
 
 from __future__ import annotations
 
@@ -182,92 +182,3 @@ def test_minhash_scurve_recall_matches_theory(spark):
         )
     # the curve must actually be S-shaped over the three points
     assert results["lo"][2] < results["mid"][2] < results["hi"][2]
-
-
-# -- scorer fast-path bit-identity (round-6 ngram/langid rework) -------------
-
-def test_batch_hashes_match_slow_reference_adversarial():
-    """The int32/early-mask/scatter-keep rolling-hash pipeline is pinned
-    bit-for-bit against a transliteration of the pre-r6 int64 per-row
-    implementation on adversarial inputs (empty, None-as-empty, 1-byte,
-    NUL bytes, multi-byte UTF-8, a 100k-char run)."""
-    import numpy as np
-
-    from quality_filter import ngram
-
-    def slow_reference(texts):
-        MUL, MASK = 65599, ngram.DIM - 1
-        h3s, h2s, offs = [], [], [0]
-        for t in texts:
-            b = b"\x00\x00" + (t or "").encode("utf-8")
-            bs = list(b)
-            row3, row2 = [], []
-            for j in range(len(bs) - 2):
-                row2.append((bs[j] * MUL + bs[j + 1]) & MASK)
-                row3.append(((bs[j] * MUL + bs[j + 1]) * MUL + bs[j + 2]) & MASK)
-            h3s.extend(row3)
-            h2s.extend(row2)
-            offs.append(offs[-1] + len(bs) - 2)
-        return (np.array(h3s, dtype=np.int64), np.array(h2s, dtype=np.int64),
-                np.array(offs, dtype=np.int64))
-
-    texts = ["", "a", "ab", "abc", "é", "汉字", "x" * 100000,
-             "\x00weird\x00", "mixed é 汉 ascii", None, ""]
-    vals = [t or "" for t in texts]
-    e3, e2, eo = slow_reference(vals)
-    h3, h2, off = ngram._batch_hashes(vals)
-    assert np.array_equal(e3, h3) and np.array_equal(e2, h2)
-    assert np.array_equal(eo, off)
-    assert ngram._batch_hashes([])[2].tolist() == [0]
-
-
-def test_langid_per_language_gather_matches_block_reduceat():
-    """The per-language 1-D gather + 1-D reduceat scoring path is pinned
-    bit-for-bit against the pre-r6 (N, L) axis-0 block reduceat on a
-    mixed batch, including the shared-hash fused-UDF entry point."""
-    import numpy as np
-    import pandas as pd
-
-    from quality_filter import langid as L
-    from quality_filter import ngram
-
-    langs, profiles = L.build_artifact()
-    rng = np.random.RandomState(11)
-    words = ["the", "der", "les", "datos", "kettu", "数据", "отчет", "ß"]
-    texts = pd.Series(
-        [" ".join(rng.choice(words, rng.randint(0, 40))) for _ in range(500)]
-        + ["", "ab", None]
-    )
-    out = L.score_batch(texts, langs, profiles)
-
-    # pre-r6 block formulation over the same hashes
-    vals = texts.fillna("").tolist()
-    hashes, offsets = ngram.batch_trigram_hashes(vals)
-    profiles_t = np.ascontiguousarray(profiles.T)
-    gathered = profiles_t[hashes.astype(np.intp)]
-    per_row = np.zeros((len(vals), len(langs)), dtype=np.float64)
-    nonempty = offsets[:-1] < offsets[1:]
-    if gathered.shape[0] and nonempty.any():
-        per_row[nonempty] = np.add.reduceat(
-            gathered, offsets[:-1][nonempty], axis=0, dtype=np.float64
-        )[: int(nonempty.sum())]
-    counts = (offsets[1:] - offsets[:-1]).astype(np.float64)
-    mean_lp = per_row / np.maximum(counts, 1.0)[:, None]
-    z = mean_lp * L.SHARPNESS
-    z -= z.max(axis=1, keepdims=True)
-    ez = np.exp(z)
-    probs = ez / ez.sum(axis=1, keepdims=True)
-    best = probs.argmax(axis=1)
-    exp_lang = np.array(langs, dtype=object)[best]
-    exp_prob = probs[np.arange(len(vals)), best]
-    short = counts < L.MIN_BYTES
-    exp_lang[short] = L.UNKNOWN
-    exp_prob = np.where(short, 0.0, np.round(exp_prob, 3))
-
-    assert list(out["lang"]) == list(exp_lang)
-    assert np.array_equal(out["lang_prob"].to_numpy(), exp_prob)
-    shared = L.score_batch(texts, langs, profiles, hashed=(hashes, offsets))
-    assert list(shared["lang"]) == list(out["lang"])
-    assert np.array_equal(
-        shared["lang_prob"].to_numpy(), out["lang_prob"].to_numpy()
-    )

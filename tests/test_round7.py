@@ -1,38 +1,6 @@
-"""Round-7 pins: trainer label-column handling, cardinality guard,
-single-pass corpus accounting."""
+"""Round-7 pins: single-pass corpus accounting, fused-gate parity."""
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
-
-
-def test_train_profiles_nondefault_lang_col(spark):
-    """ADVICE r6 (medium): train_profiles used to crash for any
-    lang_col != 'lang' (hardcoded pandas column name vs schema string).
-    Any label column name must produce the identical artifact."""
-    from quality_filter.langid import SEED_CORPORA, train_profiles
-
-    rows = [(lang, s) for lang, ss in SEED_CORPORA.items() for s in ss]
-    base = spark.createDataFrame(rows, "lang string, text string").repartition(4)
-    langs_a, prof_a = train_profiles(base)
-    renamed = base.withColumnRenamed("lang", "language")
-    langs_b, prof_b = train_profiles(renamed, lang_col="language")
-    assert langs_a == langs_b
-    assert np.array_equal(prof_a, prof_b)
-
-
-def test_train_profiles_label_cardinality_guard(spark):
-    """ADVICE r6: a garbage high-cardinality label column must fail loudly
-    BEFORE the model-sized collect, via the shared driver-pull guard."""
-    from quality_filter.guards import MAX_DRIVER_CARDINALITY
-    from quality_filter.langid import train_profiles
-
-    junk = spark.range(MAX_DRIVER_CARDINALITY + 1).select(
-        F.concat(F.lit("l"), F.col("id")).alias("lang"),
-        F.lit("some text").alias("text"),
-    )
-    with pytest.raises(ValueError, match="label vocabulary"):
-        train_profiles(junk)
 
 
 def _acc_instrumented_corpus(spark, acc):

@@ -2,86 +2,16 @@
 INTERNALS only — these tests pin output identity against the slower
 construction each change replaced.
 
-1. ``ngram._batch_hashes_from_arrow`` (zero-copy Arrow-buffer hashing for
-   the fused scorer UDF) is bit-identical to ``ngram._batch_hashes`` on
-   adversarial inputs: nulls, empties, unicode, embedded NULs, sliced
-   arrays, large_string, chunked arrays.
-2. ``rules.clean_fastpath_scored`` (the fused remove-all filter+score
+1. ``rules.clean_fastpath_scored`` (the fused remove-all filter+score
    lane) is row-identical to the general lane's Clean rows,
    ``score_turns(df).filter(label == 'Clean')``.
-3. ``scoring.with_scores`` (now an arrow_udf off the string buffers)
-   matches the pandas ``score_batch`` reference path value-exactly.
-4. The ``_has_digit`` guard rewrite is exactly the former ``[0-9]``
+2. The fused first round of ``cluster.connected_components`` converges
+   to the component minimum.
+3. The ``_has_digit`` guard rewrite is exactly the former ``[0-9]``
    regex probe.
 """
 
 from __future__ import annotations
-
-import random
-import sys
-from pathlib import Path
-
-import numpy as np
-import pyarrow as pa
-import pytest
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from quality_filter import ngram
-
-
-def _random_texts(n: int, seed: int) -> list:
-    rng = random.Random(seed)
-    out = []
-    for _ in range(n):
-        r = rng.random()
-        if r < 0.08:
-            out.append(None)
-        elif r < 0.16:
-            out.append("")
-        else:
-            out.append(
-                "".join(
-                    chr(rng.randint(1, 0x10FF))
-                    for _ in range(rng.randint(1, 120))
-                )
-            )
-    return out
-
-
-def _assert_same(texts, arr):
-    a3, a2, ao = ngram._batch_hashes([t if t is not None else "" for t in texts])
-    b3, b2, bo = ngram._batch_hashes_from_arrow(arr)
-    assert np.array_equal(a3, b3)
-    assert np.array_equal(a2, b2)
-    assert np.array_equal(ao, bo)
-
-
-@pytest.mark.parametrize("typ", [pa.string(), pa.large_string()])
-def test_arrow_hashes_bit_identical(typ):
-    cases = [
-        [],
-        [""],
-        [None],
-        ["a"], ["ab"], ["abc"],
-        ["héllo wörld", "", None, "x", "yy", "zzz", "mixed ünïcödé"],
-        ["\x00\x00embedded\x00", "tab\tnl\n", "🎉emoji🎉"],
-        ["long " * 500, "s"],
-        _random_texts(300, seed=9),
-    ]
-    for texts in cases:
-        _assert_same(texts, pa.array(texts, type=typ))
-
-
-def test_arrow_hashes_sliced_and_chunked():
-    texts = _random_texts(200, seed=3)
-    arr = pa.array(texts, type=pa.string())
-    # slices exercise the non-gapless gather path (offset != 0)
-    _assert_same(texts[5:150], arr.slice(5, 145))
-    ch = pa.chunked_array([
-        pa.array(texts[:80]), pa.array(texts[80:]),
-    ])
-    _assert_same(texts, ch)
 
 
 def test_clean_fastpath_scored_matches_two_pass(spark, transcripts):
@@ -96,50 +26,6 @@ def test_clean_fastpath_scored_matches_two_pass(spark, transcripts):
     a = sorted(map(tuple, two_pass.collect()))
     b = sorted(map(tuple, fused.collect()))
     assert a and a == b
-
-
-def test_with_scores_arrow_matches_pandas_reference(spark, transcripts):
-    import pandas as pd
-
-    from quality_filter import langid as L
-    from quality_filter import perplexity as X
-    from quality_filter.scoring import with_scores
-
-    rows = (
-        with_scores(transcripts.select("conv_id", "turn_idx", "text"))
-        .select("conv_id", "turn_idx", "text", "lang", "lang_prob", "logppl")
-        .collect()
-    )
-    texts = pd.Series([r["text"] for r in rows])
-    langs, profiles = L.build_artifact()
-    lp3, lp2 = X.build_artifact()
-    ref = L.score_batch(texts, langs, profiles)
-    ref["logppl"] = X.score_batch(texts, lp3, lp2)
-    for i, r in enumerate(rows):
-        assert r["lang"] == ref["lang"][i]
-        assert r["lang_prob"] == ref["lang_prob"][i]
-        assert r["logppl"] == ref["logppl"][i]
-
-
-def test_with_langid_and_perplexity_arrow_match_reference(spark, transcripts):
-    import pandas as pd
-
-    from quality_filter import langid as L
-    from quality_filter import perplexity as X
-
-    base = transcripts.select("conv_id", "turn_idx", "text")
-    rows = X.with_perplexity(L.with_langid(base)).select(
-        "text", "lang", "lang_prob", "logppl"
-    ).collect()
-    texts = pd.Series([r["text"] for r in rows])
-    langs, profiles = L.build_artifact()
-    ref = L.score_batch(texts, langs, profiles)
-    lp3, lp2 = X.build_artifact()
-    ref["logppl"] = X.score_batch(texts, lp3, lp2)
-    for i, r in enumerate(rows):
-        assert r["lang"] == ref["lang"][i]
-        assert r["lang_prob"] == ref["lang_prob"][i]
-        assert r["logppl"] == ref["logppl"][i]
 
 
 def test_cc_fused_first_round_chain_and_empty(spark):

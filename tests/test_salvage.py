@@ -1,5 +1,7 @@
 """Salvage pipeline parity: Clean ∧ score>0.9 ∧ lang==document_lang with
-doc pre/post length gates (``src/salvage_low_quality_data.py:176-259``)."""
+doc pre/post length gates (``src/salvage_low_quality_data.py:176-259``),
+on input that carries an upstream ``lang``/``lang_prob`` and on raw
+transcripts that the pipeline scores itself."""
 
 from __future__ import annotations
 
@@ -7,14 +9,14 @@ from collections import defaultdict
 
 import pytest
 
-from quality_filter.langid import with_langid
 from quality_filter.pipeline import salvage_pipeline
+from quality_filter.scoring import with_scores
 from tests import oracle
 
 
 @pytest.fixture(scope="module")
 def langid_transcripts(spark, transcripts):
-    df = with_langid(transcripts).cache()
+    df = with_scores(transcripts).drop("logppl").cache()
     df.count()
     return df
 
@@ -53,16 +55,11 @@ def _oracle_salvage(rows, mode, min_doc_length):
     return expect
 
 
-@pytest.mark.parametrize("mode", ["filter", "trim"])
-@pytest.mark.parametrize("min_len", [1, 250])
-def test_salvage_matches_oracle(spark, langid_transcripts, mode, min_len):
-    rows = langid_transcripts.collect()
-    expect = _oracle_salvage(rows, mode, min_len)
+def _assert_matches_oracle(src, langid_rows, mode, min_len):
+    expect = _oracle_salvage(langid_rows, mode, min_len)
     got = {
         (r["conv_id"], r["turn_idx"]): r
-        for r in salvage_pipeline(
-            langid_transcripts, mode=mode, min_doc_length=min_len
-        ).collect()
+        for r in salvage_pipeline(src, mode=mode, min_doc_length=min_len).collect()
     }
     assert set(got) == set(expect), (
         len(got),
@@ -72,6 +69,50 @@ def test_salvage_matches_oracle(spark, langid_transcripts, mode, min_len):
     for key, row in got.items():
         assert row["label"] == expect[key].label
         assert row["clean_score"] == expect[key].clean_score
+        assert (row["lang"], row["lang_prob"]) == (expect[key].lang, expect[key].lang_prob)
+
+
+@pytest.mark.parametrize("mode", ["filter", "trim"])
+@pytest.mark.parametrize("min_len", [1, 250])
+def test_salvage_matches_oracle(spark, langid_transcripts, mode, min_len):
+    """Input that already carries ``lang``/``lang_prob``."""
+    rows = langid_transcripts.collect()
+    _assert_matches_oracle(langid_transcripts, rows, mode, min_len)
+
+
+@pytest.mark.parametrize("mode", ["filter", "trim"])
+@pytest.mark.parametrize("min_len", [1, 250])
+def test_salvage_raw_input_matches_oracle(
+    spark, transcripts, langid_transcripts, mode, min_len
+):
+    """Raw transcripts, as the CLI reads them: the pipeline scores the
+    language itself.  The oracle takes ``lang``/``lang_prob`` from
+    ``with_scores`` on the same rows."""
+    rows = langid_transcripts.collect()
+    _assert_matches_oracle(transcripts, rows, mode, min_len)
+
+
+@pytest.mark.parametrize("mode", ["filter", "trim"])
+def test_salvage_plans_one_exchange(spark, transcripts, langid_transcripts, mode):
+    """Every window of salvage partitions on conv_id and shares one
+    exchange of the turn rows, whether the pipeline scores the language
+    itself or reads it from the input."""
+    for src in (transcripts, langid_transcripts):
+        plan = (
+            salvage_pipeline(src, mode=mode)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+@pytest.mark.parametrize("present", ["lang", "lang_prob"])
+def test_salvage_rejects_half_present_language(spark, langid_transcripts, present):
+    """One language column without the other is a loud error that names
+    the missing column, not an unresolved column deep in the plan."""
+    missing = {"lang", "lang_prob"} - {present}
+    half = langid_transcripts.drop(*missing)
+    with pytest.raises(ValueError, match=f"no '{missing.pop()}'"):
+        salvage_pipeline(half)
 
 
 def test_document_lang_skew_safe_plan_and_result(spark):

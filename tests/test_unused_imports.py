@@ -54,15 +54,12 @@ UNREACHED_DEF_OWNERS = {
     "io.merge_freq_tables": "SURVEY G1",
     "io.read_jsonl_repair": "SURVEY S13",
     "io.repair_stringified_array": "SURVEY S13",
-    "langid.score_batch": "oracle of scoring.with_scores (test_round9.py)",
     "langid.train_profiles": "SURVEY M5",
     "llmprep.generate_labels_prompt_verbatim_expr": "SURVEY M3",
     "llmprep.synonyms_prompt_verbatim_expr": "SURVEY M3",
     "perplexity.keep_by_perplexity": "SURVEY M6",
     "perplexity.read_model": "SURVEY M6",
-    "perplexity.score_batch": "oracle of scoring.with_scores (test_round9.py)",
     "perplexity.train_artifact": "SURVEY M6",
-    "perplexity.with_perplexity": "SURVEY M6",
     "perplexity.write_model": "SURVEY M6",
     "teacher.fake_structured_teacher": "SURVEY M2: the CLI names it in the "
     "--teacher default string",
@@ -100,17 +97,9 @@ UNSET_PARAM_OWNERS = {
     "io.write_jsonl.compression": (
         "SURVEY S12: the compressed round trip",
         "test_textstats_sampling_io.py"),
-    "langid.score_batch.hashed": (
-        "the shared-hash path of the oracle", "test_round6.py"),
     "langid.train_profiles.lang_col": (
         "any label column trains the same model",
-        "test_round7.py", "duckdb_parity.py"),
-    "langid.with_langid.artifact": (
-        "scores with a corpus-trained model",
-        "test_corpus.py", "duckdb_parity.py"),
-    "perplexity.with_perplexity.artifact": (
-        "scores with a corpus-trained model",
-        "test_corpus.py", "duckdb_parity.py"),
+        "test_scorers.py", "duckdb_parity.py"),
     "qmodel.train_quality_classifier.max_iter": (
         "each L-BFGS iteration is a Spark job: fewer at test scale",
         "test_qmodel.py", "duckdb_parity.py"),
@@ -118,6 +107,9 @@ UNSET_PARAM_OWNERS = {
         "the margin-separated training world", "duckdb_parity.py"),
     "sampling.deterministic_bucket.buckets": (
         "the 1-of-5 shard case", "duckdb_parity.py"),
+    "scoring.with_scores.artifacts": (
+        "scores with corpus-trained models",
+        "test_corpus.py", "duckdb_parity.py"),
     "synth.synth_transcripts.max_turns": (
         "the shared fixture's and the F1 gate's conversation lengths",
         "conftest.py", "test_f1_gate.py"),
